@@ -404,7 +404,8 @@ object Bench {
       def one(stages: Int): Double = {
         def t(): Double = {
           val t0 = System.nanoTime()
-          run(graft.operators.Curation.curateCompleteStaged(spark, sfDir, stages))
+          run(graft.operators.Curation.curateCompleteStaged(spark, sfDir, stages,
+            minCosine = graft.operators.Curation.CompleteMinCosine))
           val secs = (System.nanoTime() - t0) / 1e9
           dropLingeringBlocks()
           secs

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.GraftLocalFs
+
 /** Session factory for the engine.
   *
   * Tuned for the contest harness (single JVM, `local[32]`, 128 GiB) but every
@@ -13,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   *     partition coalescing at 100 TB where static planning guesses wrong;
   *   - UTC session timezone so event-time semantics match the oracle
   *     (reference pins Flink `table.local-time-zone` implicitly via container
-  *     TZ; see SURVEY.md §7.4 risk 6).
+  *     TZ; see SURVEY.md §7.4 risk 6);
+  *   - `file:` paths go through [[graft.sources.GraftLocalFs]], which sets
+  *     permissions and reads symlinks in the JVM where Hadoop without
+  *     `libhadoop` spawns `chmod`/`readlink` for every checkpoint file
+  *     (OPERATIONS.md, "Streaming jobs"). Other schemes are untouched.
   */
 object GraftSession {
 
@@ -22,6 +28,9 @@ object GraftSession {
     * only.
     */
   def tune(spark: SparkSession): SparkSession = {
+    // First, before any conf access below can create the shared state
+    // (whose warehouse-path lookup caches the session's `file:` FileSystem).
+    GraftLocalFs.register(spark.sparkContext.hadoopConfiguration)
     // The driver-generated events table stores TIMESTAMP(NANOS) parquet,
     // which Spark's vectorized reader rejects by default. Read nanos as
     // Long and convert in Tables.events.
@@ -63,8 +72,8 @@ object GraftSession {
   }
 
   def build(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession
-      .builder()
+    val s = GraftLocalFs.Impls
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config("spark.hadoop." + k, v) }
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

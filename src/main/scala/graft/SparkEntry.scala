@@ -257,8 +257,10 @@ object SparkEntry {
     "q_curation_passages" -> ((s, d) => Curation.curateWithPassages(s, d)),
     // THE complete chain: redact -> quality -> decontam -> exact ->
     // neardup -> semantic (demo thresholds as q_semantic_dedup)
-    "q_curation_complete" -> ((s, d) => Curation.curateComplete(s, d, minCosine = 0.3)),
-    "q_curation_complete_stats" -> ((s, d) => Curation.curationStatsComplete(s, d, minCosine = 0.3)),
+    "q_curation_complete" -> ((s, d) =>
+      Curation.curateComplete(s, d, minCosine = Curation.CompleteMinCosine)),
+    "q_curation_complete_stats" -> ((s, d) =>
+      Curation.curationStatsComplete(s, d, minCosine = Curation.CompleteMinCosine)),
     // per-(lang, source) hygiene funnel over the full chain (round 9)
     "q_source_funnel" -> ((s, d) => Curation.sourceFunnel(s, d)),
     // Corpus hygiene + shaping (round 5): decontamination, PII scrubbing,

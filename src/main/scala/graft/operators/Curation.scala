@@ -322,6 +322,12 @@ object Curation {
       .orderBy("doc_id")
   }
 
+  /** Semantic-stage cosine of the registered `q_curation_complete(_stats)`
+    * queries (the demo threshold `q_semantic_dedup` uses); the bench's
+    * per-stage attribution of [[curateCompleteStaged]] times the same plan.
+    */
+  val CompleteMinCosine = 0.3
+
   /** THE complete curation pass — every stage this engine implements, as
     * the one operator a training-data owner runs end to end:
     *

@@ -359,13 +359,16 @@ class PlanSpec extends AnyFunSuite {
     val pinned = Set("q_packing_stats", "q_pack_sequences",
       "q_spike_events", "q_type_distribution")
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      // release only what this query's planning persisted: other suites'
+      // blocks on the shared session are not this test's to drop
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
       val hasGlobalWindow = plan.collectFirst {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
             if w.partitionSpec.isEmpty => w
       }.isDefined
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).foreach(id =>
+        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
       if (hasGlobalWindow) Some(name) else None
     }.toSet
     assert(offenders == pinned,
