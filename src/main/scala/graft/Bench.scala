@@ -1,9 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import java.sql.Timestamp
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.DataStreamWriter
+
+import graft.operators.Artifacts
+import graft.streaming.StreamingFeatures
 
 /** Benchmark main (driver contract): run every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR, print one full JSON line with per-query seconds,
+  * then a compact summary as the last stdout line.
   *
   * A warmup pass at sf0.001 runs first so JVM/JIT/codegen compilation is
   * not billed to whichever query happens to execute first; timings then
@@ -44,6 +55,9 @@ object Bench {
       (only.isEmpty || only(name)) &&
         (scaleOnlyNames.isEmpty || scaleOnlyNames(name))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the full line's file, and its SF-tagged sibling (see the write below)
+    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
+    val tagged = out.resolveSibling(s"bench_${Paths.get(sfDir).getFileName}.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -52,19 +66,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftSession.tune(spark)
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb: run the streaming gates on the
-    // RocksDB state-store provider with changelog checkpointing (ships
-    // with Spark, no extra jar) — the A/B arm for the docs-gate stateful
-    // dedup stage's per-micro-batch fixed cost (r18 verdict ask #3).
-    // Default (unset) keeps the HDFS-backed provider, so the driver's
-    // bench is unaffected; the probe artifact records both arms.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-    }
     spark.sparkContext.setLogLevel("WARN")
 
     // noop sink evaluates the FULL plan (count() would let Catalyst prune
@@ -101,12 +102,7 @@ object Bench {
       require(!scaleOnly && only.isEmpty,
         "SPARK_GRAFT_ADMISSION_ONLY=1 conflicts with " +
           "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      val (admRate, admRuns, admErr) = admissionGateRate(spark, sfDir)
-      val admRunsJson = admRuns.mkString("[", ",", "]")
-      val admErrJson = if (admErr == null) "null" else JsonText.escape(admErr)
-      val admStagesJson = lastAdmissionStages
-        .map { case (k, v) => JsonText.escape(k) + ":" + v }
-        .mkString("{", ",", "}")
+      val adm = admissionGateRate(spark, sfDir)
       // standalone BPE-gate sizing probe (r16 verdict ask #4): fused
       // native expression at the realistic 128-merge table and the
       // registered 8-merge one, the retained fold spelling at 8 (its
@@ -114,21 +110,14 @@ object Bench {
       // replay, so the attributed per-row marginal is a number in the
       // artifact: 1000·(1/rate − 1/passthrough)
       val bpeJson = {
-        def one(tag: String, nMerges: Int, fused: Boolean): (String, Double) = {
-          val (r, runs, e) = bpeGateRate(spark, sfDir, nMerges, fused)
-          val ej = if (e == null) "null" else JsonText.escape(e)
-          (s""""bpe_gate_${tag}_rows_per_sec":$r,"bpe_gate_${tag}_runs":${
-            runs.mkString("[", ",", "]")},"bpe_gate_${tag}_error":$ej""", r)
-        }
-        val (pJ, pR) = one("passthrough", 0, fused = true)
-        val (f128J, f128R) = one("fused128", 128, fused = true)
-        val (f8J, _) = one("fused8", 8, fused = true)
-        val (fold8J, _) = one("fold8", 8, fused = false)
-        val marginal =
-          if (pR > 0 && f128R > 0)
-            math.round((1000.0 / f128R - 1000.0 / pR) * 10000.0) / 10000.0
-          else -1.0
-        s"""$pJ,$f128J,$f8J,$fold8J,"bpe_fused128_marginal_ms_per_row":$marginal"""
+        val pass = bpeGateRate(spark, sfDir, 0, fused = true)
+        val f128 = bpeGateRate(spark, sfDir, 128, fused = true)
+        val f8 = bpeGateRate(spark, sfDir, 8, fused = true)
+        val fold8 = bpeGateRate(spark, sfDir, 8, fused = false)
+        Seq(pass.json("bpe_gate_passthrough"), f128.json("bpe_gate_fused128"),
+          f8.json("bpe_gate_fused8"), fold8.json("bpe_gate_fold8"),
+          s""""bpe_fused128_marginal_ms_per_row":${marginalMs(f128, pass)}""")
+          .mkString(",")
       }
       // SPARK_GRAFT_ADMISSION_SCALE=N (r15 verdict ask #6): re-run the
       // admission composite over an N× replicated corpus with the six
@@ -151,35 +140,29 @@ object Bench {
               .createTempDirectory("graft_gates_scale").toString
             try {
               writeScaledDocTables(spark, sfDir, dir, f)
-              val (aR, aRuns, aErr) = admissionGateRate(spark, dir)
-              val aStages = lastAdmissionStages
-                .map { case (k, v) => JsonText.escape(k) + ":" + v }
-                .mkString("{", ",", "}")
-              val (wBase, _, wBaseErr) =
-                winnowGateRate(spark, sfDir, censusFromCorpus = true)
-              val (wScaled, _, wScaledErr) =
-                winnowGateRate(spark, dir, censusFromCorpus = true)
+              val a = admissionGateRate(spark, dir)
               // the Bloom-census escape hatch at the production 2²⁷-bit
               // sizing, same corpus-census growth (r16 verdict ask #5):
               // flat base→scaled here is the measured form of "past
               // tens of millions of fps, switch to the Bloom census"
-              val (wbBase, _, wbBaseErr) =
-                winnowGateRate(spark, sfDir, censusFromCorpus = true, bloom = true)
-              val (wbScaled, _, wbScaledErr) =
-                winnowGateRate(spark, dir, censusFromCorpus = true, bloom = true)
-              def errJs(e: String) = if (e == null) "null" else JsonText.escape(e)
-              s""","admission_scale":{"factor":$f,"admission_gate_rows_per_sec":$aR,"admission_gate_runs":${aRuns.mkString("[", ",", "]")},"admission_gate_error":${errJs(aErr)},"admission_stage_rows_per_sec":$aStages,"winnow_census_gate_base":$wBase,"winnow_census_gate_base_error":${errJs(wBaseErr)},"winnow_census_gate_scaled":$wScaled,"winnow_census_gate_scaled_error":${errJs(wScaledErr)},"winnow_bloom_gate_base":$wbBase,"winnow_bloom_gate_base_error":${errJs(wbBaseErr)},"winnow_bloom_gate_scaled":$wbScaled,"winnow_bloom_gate_scaled_error":${errJs(wbScaledErr)}}"""
+              val winnow = Seq(
+                "winnow_census_gate_base" -> winnowGateRate(spark, sfDir, censusFromCorpus = true),
+                "winnow_census_gate_scaled" -> winnowGateRate(spark, dir, censusFromCorpus = true),
+                "winnow_bloom_gate_base" ->
+                  winnowGateRate(spark, sfDir, censusFromCorpus = true, bloom = true),
+                "winnow_bloom_gate_scaled" ->
+                  winnowGateRate(spark, dir, censusFromCorpus = true, bloom = true))
+                .map { case (k, r) => s""""$k":${r.rowsPerSec},"${k}_error":${r.errorJson}""" }
+              s""","admission_scale":{"factor":$f,${a.json("admission_gate")},"admission_stage_rows_per_sec":${a.stagesJson},${winnow.mkString(",")}}"""
             } finally {
               graft.operators.Artifacts.deleteRecursively(
                 java.nio.file.Paths.get(dir))
             }
           } catch { case t: Throwable =>
-            s""","admission_scale_error":${JsonText.escape(
-              t.getClass.getSimpleName + ": " +
-                String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))}"""
+            s""","admission_scale_error":${JsonText.escape(errorText(t))}"""
           }
         }.getOrElse("")
-      println(s"""{"metric":"admission_only","admission_gate_rows_per_sec":$admRate,"admission_gate_runs":$admRunsJson,"admission_gate_error":$admErrJson,"admission_stage_rows_per_sec":$admStagesJson,$bpeJson,"sf":${JsonText.escape(sfDir)}$scaledJson}""")
+      println(s"""{"metric":"admission_only",${adm.json("admission_gate")},"admission_stage_rows_per_sec":${adm.stagesJson},$bpeJson,"sf":${JsonText.escape(sfDir)}$scaledJson}""")
       spark.stop()
       return
     }
@@ -196,19 +179,15 @@ object Bench {
       require(!scaleOnly && only.isEmpty,
         "SPARK_GRAFT_GATES_ONLY=1 conflicts with " +
           "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      def blob(tag: String, r: (Double, Seq[Double], String)): String = {
-        val (rate, runs, err) = r
-        val ej = if (err == null) "null" else JsonText.escape(err)
-        s""""${tag}_rows_per_sec":$rate,"${tag}_runs":${runs.mkString("[", ",", "]")},"${tag}_error":$ej"""
-      }
+      val docs = docsGateRate(spark, sfDir)
       val parts = Seq(
-        blob("docs_gate", docsGateRate(spark, sfDir)),
-        s""""docs_gate_stage_rows_per_sec":${stagesJson(lastDocsGateStages)}""",
-        blob("scrub_gate", scrubGateRate(spark, sfDir)),
-        blob("winnow_gate", winnowGateRate(spark, sfDir)),
-        blob("winnow_bloom_gate", winnowGateRate(spark, sfDir, bloom = true)),
-        blob("text_gate", textGateRate(spark, sfDir)),
-        blob("stream_ingest", streamIngestRate(spark, sfDir)))
+        docs.json("docs_gate"),
+        s""""docs_gate_stage_rows_per_sec":${docs.stagesJson}""",
+        scrubGateRate(spark, sfDir).json("scrub_gate"),
+        winnowGateRate(spark, sfDir).json("winnow_gate"),
+        winnowGateRate(spark, sfDir, bloom = true).json("winnow_bloom_gate"),
+        textGateRate(spark, sfDir).json("text_gate"),
+        streamIngestRate(spark, sfDir).json("stream_ingest"))
       println(s"""{"metric":"gates_only",${parts.mkString(",")},"sf":${JsonText.escape(sfDir)}}""")
       spark.stop()
       return
@@ -223,10 +202,9 @@ object Bench {
       require(!scaleOnly && only.isEmpty,
         "SPARK_GRAFT_DOCS_ONLY=1 conflicts with " +
           "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      val (rate, runs, err) = docsGateRate(spark, sfDir)
-      val ej = if (err == null) "null" else JsonText.escape(err)
+      val docs = docsGateRate(spark, sfDir)
       val batchJson = docsGateBatchProfile(spark, sfDir)
-      println(s"""{"metric":"docs_only","docs_gate_rows_per_sec":$rate,"docs_gate_runs":${runs.mkString("[", ",", "]")},"docs_gate_error":$ej,"docs_gate_stage_rows_per_sec":${stagesJson(lastDocsGateStages)},"docs_gate_batch_rows_per_sec":$batchJson,"sf":${JsonText.escape(sfDir)}}""")
+      println(s"""{"metric":"docs_only",${docs.json("docs_gate")},"docs_gate_stage_rows_per_sec":${docs.stagesJson},"docs_gate_batch_rows_per_sec":$batchJson,"sf":${JsonText.escape(sfDir)}}""")
       spark.stop()
       return
     }
@@ -303,32 +281,10 @@ object Bench {
     // still exceeds the band the query lands in `anomalous` (name →
     // prior seconds) so window inflation is machine-flagged in the
     // artifact instead of judge-inferred.
-    val priorQueries: Map[String, Double] = try {
-      // the SF-TAGGED sibling, never plain bench.json: a smoke run at
-      // another SF overwrites the plain file, and a band read from the
-      // wrong SF would flag every query (or none)
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
-      val prev = out.resolveSibling(
-        s"bench_${java.nio.file.Paths.get(sfDir).getFileName}.json")
-      if (!java.nio.file.Files.exists(prev)) Map.empty
-      else {
-        val parsed = "\"queries\":\\{([^}]*)\\}".r
-          .findFirstMatchIn(new String(java.nio.file.Files.readAllBytes(prev), "UTF-8"))
-          .map(m => "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r.findAllMatchIn(m.group(1))
-            .flatMap(mm => scala.util.Try(mm.group(1) -> mm.group(2).toDouble).toOption)
-            .toMap)
-          .getOrElse(Map.empty[String, Double])
-        // a prior file that exists but yields nothing means the scrape
-        // failed (the capture stops at the first '}', so a nested brace
-        // or escaped quote in a query name would silently disarm the
-        // band) — say so, loudly, instead of looking like "no prior"
-        // (r17 advice)
-        if (parsed.isEmpty) System.err.println(
-          s"anomaly band DISARMED: $prev exists but its queries map parsed empty")
-        parsed
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
+    // The band reads the SF-TAGGED sibling, never plain bench.json: a
+    // smoke run at another SF overwrites the plain file, and a band read
+    // from the wrong SF would flag every query (or none).
+    val priorQueries = priorBand(tagged, "anomaly band")
     val anomalous = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = SparkEntry.queries
@@ -338,11 +294,7 @@ object Bench {
       def timed(): Option[Double] = {
         val t0 = System.nanoTime()
         val r = try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case t: Throwable =>
-          lastErr = (t.getClass.getSimpleName + ": " +
-            String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-          None
-        }
+        catch { case t: Throwable => lastErr = errorText(t); None }
         dropLingeringBlocks()
         r
       }
@@ -369,12 +321,9 @@ object Bench {
           Some(name -> math.min(t1, timed().getOrElse(t1)))
       }
     }
-    val anomalousJson = anomalous.map { case (k, v) =>
-      JsonText.escape(k) + ":" + v }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v) => JsonText.escape(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => JsonText.escape(k) + ":" + JsonText.escape(v) }
-      .mkString("{", ",", "}")
+    val anomalousJson = jsonMap(anomalous)
+    val qs = jsonMap(results)
+    val errJson = jsonMap(errors.map { case (k, v) => k -> JsonText.escape(v) })
     val total = if (results.nonEmpty) results.values.sum else 0.0
     calibration("post_queries") = calibrate()
     // scale-only wins over the filtered early-return (r14 advice: the
@@ -412,43 +361,13 @@ object Bench {
         }
         math.round(math.min(t(), t()) * 1000.0) / 1000.0
       }
-      try Seq("text" -> one(1), "neardup" -> one(2), "complete" -> one(3))
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      catch { case scala.util.control.NonFatal(t) =>
-        s"""{"error":${JsonText.escape(t.getClass.getSimpleName + ": " +
-          String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(120))}}"""
-      }
+      try jsonMap(Seq("text" -> one(1), "neardup" -> one(2), "complete" -> one(3)))
+      catch { case NonFatal(t) => errorJson(t) }
     }
-    val (ingest, ingestRuns, ingestErr) = streamIngestRate(spark, sfDir)
-    val runsJson = ingestRuns.mkString("[", ",", "]")
-    val ingestErrJson =
-      if (ingestErr == null) "null" else JsonText.escape(ingestErr)
-    val (gateRate, gateRuns, gateErr) = docsGateRate(spark, sfDir)
-    val gateRunsJson = gateRuns.mkString("[", ",", "]")
-    val gateErrJson =
-      if (gateErr == null) "null" else JsonText.escape(gateErr)
-    val gateStagesJson = stagesJson(lastDocsGateStages)
-    val (scrubRate, scrubRuns, scrubErr) = scrubGateRate(spark, sfDir)
-    val scrubRunsJson = scrubRuns.mkString("[", ",", "]")
-    val scrubErrJson =
-      if (scrubErr == null) "null" else JsonText.escape(scrubErr)
-    val (winnowRate, winnowRuns, winnowErr) = winnowGateRate(spark, sfDir)
-    val winnowRunsJson = winnowRuns.mkString("[", ",", "]")
-    val winnowErrJson =
-      if (winnowErr == null) "null" else JsonText.escape(winnowErr)
-    val (textRate, textRuns, textErr) = textGateRate(spark, sfDir)
-    val textRunsJson = textRuns.mkString("[", ",", "]")
-    val textErrJson =
-      if (textErr == null) "null" else JsonText.escape(textErr)
-    val (admRate, admRuns, admErr) = admissionGateRate(spark, sfDir)
-    val admRunsJson = admRuns.mkString("[", ",", "]")
-    val admErrJson = if (admErr == null) "null" else JsonText.escape(admErr)
-    val admStagesJson = lastAdmissionStages
-      .map { case (k, v) => JsonText.escape(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val (featRate, featRuns, featMatch, featErr) = featurePipelineRate(spark, sfDir)
-    val featRunsJson = featRuns.mkString("[", ",", "]")
-    val featErrJson = if (featErr == null) "null" else JsonText.escape(featErr)
+    val gates = gateRateFields(spark, sfDir)
+    val measured = gates.map { case (f, rate) => (f, rate, rate()) }
+    // in gateRateFields order
+    val Seq(ingest, docs, scrub, winnow, text, adm, feat) = measured.map(_._3)
     calibration("post_streams") = calibrate()
     // Self-correcting stream-rate headline (r17 verdict ask #2): the
     // prior full run's gate rates arm a band; any rate now measuring
@@ -456,61 +375,31 @@ object Bench {
     // SPARK_GRAFT_GATES_ONLY adjudication of r17, automated in-process)
     // whose number publishes beside the official one — a degraded run's
     // artifact then needs zero judge reconciliation.
-    val priorRates: Map[String, Double] = try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
-      val prev = out.resolveSibling(
-        s"bench_${java.nio.file.Paths.get(sfDir).getFileName}.json")
-      if (!java.nio.file.Files.exists(prev)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(prev), "UTF-8")
-        GateRateFields.flatMap { f =>
-          ("\"" + f + "\":([-0-9][0-9.eE+-]*)").r.findFirstMatchIn(txt)
-            .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
-            .map(f -> _)
-        }.toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
-    val gateMeasured: Map[String, Double] = Map(
-      "stream_ingest_rows_per_sec" -> ingest,
-      "docs_gate_rows_per_sec" -> gateRate,
-      "scrub_gate_rows_per_sec" -> scrubRate,
-      "winnow_gate_rows_per_sec" -> winnowRate,
-      "text_gate_rows_per_sec" -> textRate,
-      "admission_gate_rows_per_sec" -> admRate,
-      "feature_pipeline_rows_per_sec" -> featRate)
-    val windowFlagged = GateRateFields.filter { f =>
-      gateMeasured.get(f).exists(m => m > 0 &&
-        priorRates.get(f).exists(p => p > 0 && m < p / GateRateBandFactor))
+    val priorRates = priorArtifact(tagged).fold(Map.empty[String, Double]) { txt =>
+      gates.flatMap { case (f, _) =>
+        ("\"" + f + "\":([-0-9][0-9.eE+-]*)").r.findFirstMatchIn(txt)
+          .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
+          .map(f -> _)
+      }.toMap
     }
-    val isolatedRates: Seq[(String, Double)] = windowFlagged.map { f =>
+    val windowFlagged = measured.filter { case (f, _, r) =>
+      r.rowsPerSec > 0 &&
+        priorRates.get(f).exists(p => p > 0 && r.rowsPerSec < p / GateRateBandFactor)
+    }
+    val isolatedRates = windowFlagged.map { case (f, rate, _) =>
       System.gc()
-      val r = f match {
-        case "stream_ingest_rows_per_sec" => streamIngestRate(spark, sfDir)._1
-        case "docs_gate_rows_per_sec" => docsGateRate(spark, sfDir)._1
-        case "scrub_gate_rows_per_sec" => scrubGateRate(spark, sfDir)._1
-        case "winnow_gate_rows_per_sec" => winnowGateRate(spark, sfDir)._1
-        case "text_gate_rows_per_sec" => textGateRate(spark, sfDir)._1
-        case "admission_gate_rows_per_sec" => admissionGateRate(spark, sfDir)._1
-        case _ => featurePipelineRate(spark, sfDir)._1
-      }
-      f -> r
+      (f + "_isolated") -> rate().rowsPerSec
     }
     val windowFlaggedJson =
-      windowFlagged.map(JsonText.escape).mkString("[", ",", "]")
-    val isolatedJson = isolatedRates
-      .map { case (k, v) => JsonText.escape(k + "_isolated") + ":" + v }
-      .mkString("{", ",", "}")
-    val gateBandsJson = GateRateFields
-      .flatMap(f => priorRates.get(f).map(p => JsonText.escape(f) + ":" + p))
-      .mkString("{", ",", "}")
+      windowFlagged.map(w => JsonText.escape(w._1)).mkString("[", ",", "]")
+    val isolatedJson = jsonMap(isolatedRates)
+    val gateBandsJson = jsonMap(gates.flatMap { case (f, _) => priorRates.get(f).map(f -> _) })
     val bloomJson = bloomAssemblyProbe(spark, sfDir)
     val sketchJson = sketchSizingProbe(spark, sfDir)
     val scaleJson = scaleProbe(spark, sfDir, results, run,
       () => dropLingeringBlocks(), scaleFactors)
     calibration("post_scale") = calibrate()
-    val calJson = calibration.map { case (k, v) => JsonText.escape(k) + ":" + v }
-      .mkString("{", ",", "}")
+    val calJson = jsonMap(calibration)
     // Cross-round calibration ledger (r10 verdict ask #7): the prior
     // run's measured calibration band travels IN the artifact, so
     // host-load comparisons are one JSON away instead of requiring the
@@ -518,21 +407,10 @@ object Bench {
     // literal goes stale the first round someone forgets): the band is
     // lifted from the previous target/bench.json — still unwritten at
     // this point — with the r10 measurement as the genesis fallback.
-    val calibrationRef = try {
-      val prev = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
-      val band =
-        if (!java.nio.file.Files.exists(prev)) None
-        else "\"calibration\":\\{([^}]*)\\}".r
-          .findFirstMatchIn(new String(java.nio.file.Files.readAllBytes(prev), "UTF-8"))
-          .map(m => "[0-9]+\\.[0-9]+".r.findAllIn(m.group(1))
-            .map(_.toDouble).toSeq)
-          .filter(_.nonEmpty)
-      band.map(b => s"""{"source":"previous bench.json","band_sec":[${b.min},${b.max}]}""")
-        .getOrElse("""{"source":"genesis (r10)","band_sec":[0.379,0.417]}""")
-    } catch { case scala.util.control.NonFatal(_) =>
-      """{"source":"genesis (r10)","band_sec":[0.379,0.417]}"""
-    }
+    val calibrationRef = priorArtifact(out)
+      .map(priorMap(_, "calibration").values).filter(_.nonEmpty)
+      .map(b => s"""{"source":"previous bench.json","band_sec":[${b.min},${b.max}]}""")
+      .getOrElse("""{"source":"genesis (r10)","band_sec":[0.379,0.417]}""")
     // banded headline (r17 verdict ask #2a): each anomalous query's
     // measured seconds substituted by its prior-band value — the total
     // a non-degraded window would have published (r17's 392.1 s
@@ -540,24 +418,20 @@ object Bench {
     val totalBanded =
       if (results.isEmpty) 0.0
       else results.map { case (k, v) => anomalous.getOrElse(k, v) }.sum
-    val json = s"""{"metric":"total","value":$total,"total_banded":$totalBanded,"unit":"sec","queries":$qs,"errors":$errJson,"anomalous":$anomalousJson,"gate_rate_bands":$gateBandsJson,"window_flagged":$windowFlaggedJson,"gate_rates_isolated":$isolatedJson,"sf":${JsonText.escape(sfDir)},"stream_ingest_rows_per_sec":$ingest,"ingest_runs":$runsJson,"ingest_error":$ingestErrJson,"docs_gate_rows_per_sec":$gateRate,"docs_gate_runs":$gateRunsJson,"docs_gate_error":$gateErrJson,"docs_gate_stage_rows_per_sec":$gateStagesJson,"scrub_gate_rows_per_sec":$scrubRate,"scrub_gate_runs":$scrubRunsJson,"scrub_gate_error":$scrubErrJson,"winnow_gate_rows_per_sec":$winnowRate,"winnow_gate_runs":$winnowRunsJson,"winnow_gate_error":$winnowErrJson,"text_gate_rows_per_sec":$textRate,"text_gate_runs":$textRunsJson,"text_gate_error":$textErrJson,"admission_gate_rows_per_sec":$admRate,"admission_gate_runs":$admRunsJson,"admission_gate_error":$admErrJson,"admission_stage_rows_per_sec":$admStagesJson,"feature_pipeline_rows_per_sec":$featRate,"feature_pipeline_runs":$featRunsJson,"feature_pipeline_match":$featMatch,"feature_pipeline_error":$featErrJson,"curation_stage_sec":$curationStagesJson,"calibration":$calJson,"calibration_ref":$calibrationRef,"bloom_assembly":$bloomJson,"sketch_sizing":$sketchJson,"scale":$scaleJson}"""
+    val json = s"""{"metric":"total","value":$total,"total_banded":$totalBanded,"unit":"sec","queries":$qs,"errors":$errJson,"anomalous":$anomalousJson,"gate_rate_bands":$gateBandsJson,"window_flagged":$windowFlaggedJson,"gate_rates_isolated":$isolatedJson,"sf":${JsonText.escape(sfDir)},${ingest.json("stream_ingest", "ingest")},${docs.json("docs_gate")},"docs_gate_stage_rows_per_sec":${docs.stagesJson},${scrub.json("scrub_gate")},${winnow.json("winnow_gate")},${text.json("text_gate")},${adm.json("admission_gate")},"admission_stage_rows_per_sec":${adm.stagesJson},${feat.json("feature_pipeline")},"curation_stage_sec":$curationStagesJson,"calibration":$calJson,"calibration_ref":$calibrationRef,"bloom_assembly":$bloomJson,"sketch_sizing":$sketchJson,"scale":$scaleJson}"""
     println(json)
     // The driver captures only a bounded tail of stdout (r7 recovered 20
     // of ~70 per-query times from it), so the FULL line also lands in a
     // file. The stdout print stays the contract; the file write must
     // never fail the bench.
     try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
-      if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out, json.getBytes("UTF-8"))
+      if (out.getParent != null) Files.createDirectories(out.getParent)
+      Files.write(out, json.getBytes("UTF-8"))
       // SF-tagged sibling: a later smoke run at another SF overwrites
       // target/bench.json but not this copy — the r11 full sf0.1 map
       // was lost to exactly that clobber. Round-end archival copies
       // this file to a checked-in BENCH_FULL_r<N>.json.
-      val tagged = out.resolveSibling(
-        s"bench_${java.nio.file.Paths.get(sfDir).getFileName}.json")
-      java.nio.file.Files.write(tagged, json.getBytes("UTF-8"))
+      Files.write(tagged, json.getBytes("UTF-8"))
     } catch {
       // NonFatal only: an OOM/interrupt mid-write must propagate, not
       // leave the bench continuing in an undefined state (r8 advice)
@@ -580,7 +454,7 @@ object Bench {
           !scaleJson.startsWith("{\"error\"")
         s"""{"factor":$f,"clean":$clean}"""
       }
-    println(s"""{"metric":"total","value":$total,"total_banded":$totalBanded,"unit":"sec","sf":${JsonText.escape(sfDir)},"n_queries":${results.size},"n_errors":${errors.size},"anomalous":$anomalousJson,"window_flagged":$windowFlaggedJson,"gate_rates_isolated":$isolatedJson,"stream_ingest_rows_per_sec":$ingest,"docs_gate_rows_per_sec":$gateRate,"docs_gate_stage_rows_per_sec":$gateStagesJson,"scrub_gate_rows_per_sec":$scrubRate,"winnow_gate_rows_per_sec":$winnowRate,"text_gate_rows_per_sec":$textRate,"admission_gate_rows_per_sec":$admRate,"feature_pipeline_rows_per_sec":$featRate,"feature_pipeline_match":$featMatch,"curation_stage_sec":$curationStagesJson,"calibration":$calJson,"calibration_ref":$calibrationRef,"bloom_assembly":$bloomJson,"sketch_sizing":$sketchJson,"scale":$scaleSummary,"full":"target/bench.json"}""")
+    println(s"""{"metric":"total","value":$total,"total_banded":$totalBanded,"unit":"sec","sf":${JsonText.escape(sfDir)},"n_queries":${results.size},"n_errors":${errors.size},"anomalous":$anomalousJson,"window_flagged":$windowFlaggedJson,"gate_rates_isolated":$isolatedJson,"stream_ingest_rows_per_sec":${ingest.rowsPerSec},"docs_gate_rows_per_sec":${docs.rowsPerSec},"docs_gate_stage_rows_per_sec":${docs.stagesJson},"scrub_gate_rows_per_sec":${scrub.rowsPerSec},"winnow_gate_rows_per_sec":${winnow.rowsPerSec},"text_gate_rows_per_sec":${text.rowsPerSec},"admission_gate_rows_per_sec":${adm.rowsPerSec},"feature_pipeline_rows_per_sec":${feat.rowsPerSec},"feature_pipeline_match":${feat.matched.contains(true)},"curation_stage_sec":$curationStagesJson,"calibration":$calJson,"calibration_ref":$calibrationRef,"bloom_assembly":$bloomJson,"sketch_sizing":$sketchJson,"scale":$scaleSummary,"full":"target/bench.json"}""")
     spark.stop()
   }
 
@@ -777,15 +651,6 @@ object Bench {
     */
   private val ResidueLcm = 840L
 
-  /** The one measurement discipline every streaming gate shares
-    * (extracted r11 — the r10 warmup hardening had to be applied twice
-    * because two gates carried their own copies): `warmups` untimed
-    * passes absorb stream-init/state-store/codegen cost, then the
-    * MEDIAN of five timed passes is reported, each pass starting from a
-    * GC'd heap so the batch suite's collection debt lands between
-    * passes, not inside one. Returns (median, all five sorted) — the
-    * per-pass spread ships in the artifact beside the median.
-    */
   /** Per-query seconds below which the main loop buys a third run and
     * reports the median (r15 verdict ask #3) — 2 s is where scheduling
     * jitter stops dominating single-shot timings on this host.
@@ -800,26 +665,53 @@ object Bench {
     */
   private val AnomalyFactor = 3.0
 
-  /** The headline stream-rate fields carrying a prior-round band (r17
-    * verdict ask #2): a rate landing more than [[GateRateBandFactor]]×
-    * UNDER its prior value triggers one in-process isolated re-run —
-    * the gates-only adjudication the r17 judge had to request manually,
-    * automated — published beside the official number with the
-    * `window_flagged` marker.
+  /** `<SimpleName>: <message>`, whitespace runs collapsed and the
+    * message cut to 200 characters: the error text of every failed
+    * query, rate and probe in the artifact.
     */
-  private val GateRateFields = Seq(
-    "stream_ingest_rows_per_sec", "docs_gate_rows_per_sec",
-    "scrub_gate_rows_per_sec", "winnow_gate_rows_per_sec",
-    "text_gate_rows_per_sec",
-    "admission_gate_rows_per_sec", "feature_pipeline_rows_per_sec")
+  private[graft] def errorText(t: Throwable): String =
+    t.getClass.getSimpleName + ": " +
+      String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200)
 
-  private val GateRateBandFactor = 2.0
+  /** A failed probe's `{"error":…}` object. */
+  private def errorJson(t: Throwable): String =
+    s"""{"error":${JsonText.escape(errorText(t))}}"""
 
-  private def medianOfFive(warmups: Int)(onePass: () => Double): (Double, Seq[Double]) = {
-    (1 to warmups).foreach(_ => onePass())
-    val rates = (1 to 5).map { _ => System.gc(); onePass() }.sorted
-    (rates(2), rates)
-  }
+  /** A JSON object of name → value, values printed as they are. */
+  private def jsonMap(m: Iterable[(String, Any)]): String =
+    m.map { case (k, v) => JsonText.escape(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** The text of a previous run's artifact at `path`, if there is one:
+    * the reader behind the per-query and scale bands, the gate-rate
+    * bands and the calibration reference.
+    */
+  private def priorArtifact(path: Path): Option[String] =
+    try if (Files.exists(path)) Some(new String(Files.readAllBytes(path), "UTF-8")) else None
+    catch { case NonFatal(_) => None }
+
+  /** The `"<key>":{…}` object of an artifact as name → number. The
+    * capture stops at the first '}', so a nested brace or an escaped
+    * quote in a name ends the map early.
+    */
+  private def priorMap(txt: String, key: String): Map[String, Double] =
+    ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(txt)
+      .map(m => "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r.findAllMatchIn(m.group(1))
+        .flatMap(mm => scala.util.Try(mm.group(1) -> mm.group(2).toDouble).toOption)
+        .toMap)
+      .getOrElse(Map.empty)
+
+  /** The per-query band (name → prior seconds) from the `queries` map of
+    * the artifact at `path`. A file that exists but yields nothing means
+    * the scrape failed and the band is disarmed: say so, loudly, instead
+    * of looking like "no prior" (r17 advice).
+    */
+  private def priorBand(path: Path, band: String): Map[String, Double] =
+    priorArtifact(path).fold(Map.empty[String, Double]) { txt =>
+      val parsed = priorMap(txt, "queries")
+      if (parsed.isEmpty)
+        System.err.println(s"$band DISARMED: $path exists but its queries map parsed empty")
+      parsed
+    }
 
   /** Fixed-work single-threaded CPU loop (2·10⁸ xorshift64 steps),
     * timed: the host-load proxy recorded at section boundaries (r9
@@ -868,10 +760,7 @@ object Bench {
       val b20 = time(1L << 20)
       val b27 = time(1L << 27)
       s"""{"bits20_sec":$b20,"bits27_sec":$b27}"""
-    } catch { case t: Throwable =>
-      s"""{"error":${JsonText.escape(t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))}}"""
-    }
+    } catch { case t: Throwable => errorJson(t) }
 
   /** Production-sizing probe for the portable sketches (r13 verdict ask
     * #8): the registered queries run deliberately TINY (CMS width 16,
@@ -899,10 +788,7 @@ object Bench {
       val hllSec = (System.nanoTime() - t1) / 1e9
       val hllErrMicros = math.round(hll.getDouble(0) * 1e6)
       s"""{"cms_width":65536,"cms_sec":$cmsSec,"cms_max_overcount":${cms.getLong(0)},"cms_vocab_rows":${cms.getLong(1)},"hll_m":16384,"hll_sec":$hllSec,"hll_max_abs_err_micros":$hllErrMicros,"hll_groups":${hll.getLong(1)}}"""
-    } catch { case t: Throwable =>
-      s"""{"error":${JsonText.escape(t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))}}"""
-    }
+    } catch { case t: Throwable => errorJson(t) }
 
   /** The comma list of probe factors (r8 verdict ask #4): "10"
     * per-round default; "10,30" on demand makes the two-point
@@ -965,9 +851,7 @@ object Bench {
         // an interrupted probe must not clobber the last good archive
         // with its error blob (a killed r9 run did exactly that)
         val clobbersGood = j.startsWith("{\"error\"") &&
-          java.nio.file.Files.exists(out) &&
-          !new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-            .startsWith("{\"error\"")
+          priorArtifact(out).exists(!_.startsWith("{\"error\""))
         if (clobbersGood) {
           System.err.println(s"$out: probe errored, keeping prior artifact")
         } else {
@@ -1055,26 +939,7 @@ object Bench {
         // (name → prior seconds) instead of reaching the archive
         // unflagged. Band source: the same-factor archive this probe
         // also writes.
-        val priorScale: Map[String, Double] = try {
-          val prev = java.nio.file.Paths.get(scaleArchivePath(sfDir, factor))
-          if (!java.nio.file.Files.exists(prev)) Map.empty
-          else {
-            val parsed = "\"queries\":\\{([^}]*)\\}".r
-              .findFirstMatchIn(
-                new String(java.nio.file.Files.readAllBytes(prev), "UTF-8"))
-              .map(m => "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r
-                .findAllMatchIn(m.group(1))
-                .flatMap(mm =>
-                  scala.util.Try(mm.group(1) -> mm.group(2).toDouble).toOption)
-                .toMap)
-              .getOrElse(Map.empty[String, Double])
-            if (parsed.isEmpty) System.err.println(
-              s"scale band DISARMED: $prev exists but its queries map parsed empty")
-            parsed
-          }
-        } catch { case scala.util.control.NonFatal(_) =>
-          Map.empty[String, Double]
-        }
+        val priorScale = priorBand(Paths.get(scaleArchivePath(sfDir, factor)), "scale band")
         val anomalousScale =
           scala.collection.mutable.LinkedHashMap[String, Double]()
         val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -1093,11 +958,7 @@ object Bench {
             def onceTimed(): Option[Double] = {
               val s0 = System.nanoTime()
               val r = try { run(fn(spark, dir)); Some((System.nanoTime() - s0) / 1e9) }
-              catch { case t: Throwable =>
-                lastErr = (t.getClass.getSimpleName + ": " +
-                  String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-                None
-              }
+              catch { case t: Throwable => lastErr = errorText(t); None }
               dropBlocks()
               r
             }
@@ -1139,11 +1000,7 @@ object Bench {
             val rows = df.collect()
             dropBlocks()
             rows.map(r => JsonText.escape(r.getString(0)) + ":" + r.getLong(1)).toSeq
-          } catch { case t: Throwable =>
-            errors(label) = t.getClass.getSimpleName + ": " +
-              String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200)
-            Seq.empty
-          }
+          } catch { case t: Throwable => errors(label) = errorText(t); Seq.empty }
         // at a big factor the text-sketch tracker is excluded: its TRUTH
         // side is the exact PPJoin pair list, whose size is quadratic in
         // dup-pile depth (the same answer-growth that excludes
@@ -1174,15 +1031,13 @@ object Bench {
         }
         val recallBaseJson = baseRecallCache("json")
 
-        val qJson = timed.map { case (k, v) => JsonText.escape(k) + ":" + v }
-          .mkString("{", ",", "}")
+        val qJson = jsonMap(timed)
         val ratioJson = timed.flatMap { case (k, v) =>
           base.get(k).filter(_ > 0).map { b =>
             JsonText.escape(k) + ":" + (math.round(v / (b * factor) * 1000.0) / 1000.0)
           }
         }.mkString("{", ",", "}")
-        val rowsJson = rowsScaled.map { case (k, v) =>
-          JsonText.escape(k) + ":" + v }.mkString("{", ",", "}")
+        val rowsJson = jsonMap(rowsScaled)
         val baseRowsJson = timed.flatMap { case (k, _) =>
           baseRowsCache.get(k).map(v => JsonText.escape(k) + ":" + v)
         }.mkString("{", ",", "}")
@@ -1193,153 +1048,242 @@ object Bench {
           baseRowsCache.get(k).filter(_ > 0).map(b =>
             JsonText.escape(k) + ":" + (math.round(v.toDouble / b * 1000.0) / 1000.0))
         }.mkString("{", ",", "}")
-        val errJson = errors.map { case (k, v) =>
-          JsonText.escape(k) + ":" + JsonText.escape(v) }.mkString("{", ",", "}")
+        val errJson = jsonMap(errors.map { case (k, v) => k -> JsonText.escape(v) })
         val skippedJson = skipped.map(JsonText.escape).mkString("[", ",", "]")
-        val anomalousScaleJson = anomalousScale.map { case (k, v) =>
-          JsonText.escape(k) + ":" + v }.mkString("{", ",", "}")
+        val anomalousScaleJson = jsonMap(anomalousScale)
         s"""{"factor":$factor,"write_sec":$writeSec,"queries":$qJson,"scaling":$ratioJson,"rows":$rowsJson,"base_rows":$baseRowsJson,"rows_growth":$growthJson,"anomalous":$anomalousScaleJson,"recall":$recallJson,"recall_base":$recallBaseJson,"skipped":$skippedJson,"errors":$errJson}"""
       } finally {
         // the ~factor× replicated parquet must not outlive the probe on
         // ANY exit path (an escape before cleanup used to leak it)
         graft.operators.Artifacts.deleteRecursively(java.nio.file.Paths.get(dir))
       }
-    } catch { case t: Throwable =>
-      s"""{"error":${JsonText.escape(t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))}}"""
+    } catch { case t: Throwable => errorJson(t) }
+  }
+
+  // ---- Stream-replay harness ----------------------------------------
+  //
+  // Every stream rate Bench publishes is one replay measured one way:
+  // a fixed set of rows, fed through a fresh MemoryStream in fixed
+  // micro-batch chunks ([[streamPass]]); untimed warm-ups, then the
+  // median of five GC'd timed passes ([[measure]]); a failure is -1.0
+  // plus its error text ([[guarded]]). Staged gates add cumulative-
+  // prefix rates ([[prefixRates]]).
+
+  /** A measured stream rate: the median rows/s, the five timed passes
+    * sorted (the per-pass spread ships beside the median), and the error
+    * text, null when the measurement ran. A failure is
+    * `Rate(-1.0, Nil, <errorText>)`, never a silent sentinel. `stages`
+    * holds a staged gate's per-prefix rates, `matched` the feature
+    * pipeline's sink check.
+    */
+  private[graft] final case class Rate(rowsPerSec: Double, runs: Seq[Double], error: String,
+      stages: Seq[(String, Double)] = Nil, matched: Option[Boolean] = None) {
+    def errorJson: String = if (error == null) "null" else JsonText.escape(error)
+    def stagesJson: String = jsonMap(stages)
+    def json(tag: String): String = json(tag, tag)
+    /** `"<tag>_rows_per_sec"`, then `"<runsTag>_runs"`, `"<runsTag>_match"`
+      * when set, and `"<runsTag>_error"`.
+      */
+    def json(tag: String, runsTag: String): String =
+      s""""${tag}_rows_per_sec":$rowsPerSec,"${runsTag}_runs":${runs.mkString("[", ",", "]")},""" +
+        matched.fold("")(m => s""""${runsTag}_match":$m,""") +
+        s""""${runsTag}_error":$errorJson"""
+  }
+
+  /** `body`, or the failed [[Rate]] of whatever it throws. */
+  private def guarded(body: => Rate): Rate =
+    try body catch { case t: Throwable => Rate(-1.0, Nil, errorText(t)) }
+
+  /** The discipline every stream rate shares (r9–r11): `setup` builds
+    * the replay and any census or model, untimed, and yields one pass;
+    * `warmups` untimed passes absorb stream-init/state-store/codegen
+    * cost, then the MEDIAN of five timed passes is reported, each pass
+    * starting from a GC'd heap so the batch suite's collection debt
+    * lands between passes, not inside one. The median is two-sided on
+    * purpose: stream noise (GC pauses mid-batch, state-store flushes) is
+    * not one-sided the way batch scheduling noise is.
+    */
+  private[graft] def measure(warmups: Int)(setup: => () => Double): Rate =
+    guarded(medianOfFive(warmups)(setup))
+
+  private def medianOfFive(warmups: Int)(pass: () => Double): Rate = {
+    (1 to warmups).foreach(_ => pass())
+    val runs = (1 to 5).map { _ => System.gc(); pass() }.sorted
+    Rate(runs(2), runs, null)
+  }
+
+  /** Per-stage attribution (r14 verdict ask #4): for each named
+    * cumulative prefix, one warm-up pass (codegen and stream init for
+    * that prefix), then the median of three (r15 advice: the marginals
+    * difference CONSECUTIVE prefix rates, so single-pass noise could push
+    * a cheap stage's marginal negative). Every prefix uses this one
+    * estimator, so the marginals difference uniformly.
+    */
+  private[graft] def prefixRates(prefixes: Seq[(String, () => Double)]): Seq[(String, Double)] =
+    prefixes.map { case (name, pass) =>
+      pass()
+      name -> Seq.fill(3)(pass()).sorted.apply(1)
+    }
+
+  /** One replay pass: a fresh MemoryStream with `columns`, a fresh
+    * temporary checkpoint, and the writer `sink` builds on the stream
+    * frame (the [[noop]] sink, or a foreachBatch into real sinks). Each
+    * chunk is one addData + processAllAvailable, so every pass runs the
+    * SAME micro-batch boundaries and hence the same state commits (a
+    * fire-all-then-drain shape races addData against batch planning,
+    * which was the dominant term of r10's 2.5× per-pass spread).
+    * `flush` is one more chunk that is not counted as rows. Returns
+    * rows/s rounded to 0.1. The query stops and the checkpoint is
+    * deleted on every exit.
+    */
+  private[graft] def streamPass[T: Encoder](spark: SparkSession, columns: Seq[String],
+      chunks: Seq[Seq[T]], flush: Seq[T] = Nil)(
+      sink: DataFrame => DataStreamWriter[Row]): Double = {
+    val stream = MemoryStream[T](spark)
+    val writer = sink(stream.toDF().toDF(columns: _*))
+    val ckpt = Files.createTempDirectory("graft_replay")
+    val q = writer.option("checkpointLocation", ckpt.toString).start()
+    try {
+      val rows = chunks.map(_.size).sum
+      val t0 = System.nanoTime()
+      (if (flush.isEmpty) chunks else chunks :+ flush).foreach { c =>
+        stream.addData(c)
+        q.processAllAvailable()
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      math.round(rows / secs * 10.0) / 10.0
+    } finally {
+      q.stop()
+      Artifacts.deleteRecursively(ckpt)
     }
   }
 
-  /** Streaming-ingest throughput vs BASELINE.md's 536 msg/s target: drive
-    * the full watermarked 20-min feature pipeline (tag → window → pivot →
-    * append sink) from a MemoryStream replay of the events table.
-    *
-    * Measurement discipline (this was the suite's least repeatable number
-    * for three rounds — 6,549 → 1,511 → 7,686 rows/s with no change to the
-    * measured path, while every batch query got min-of-2):
-    *   - the replay is capped at [[IngestReplayRows]] time-ordered rows, so
-    *     driver memory is bounded at ANY scale factor (the old unbounded
-    *     `collect()` capped the measurable SF) and every round feeds the
-    *     pipeline an identically-sized workload;
-    *   - one untimed warmup pass absorbs state-store/codegen/stream-init
-    *     cost, then the MEDIAN of five timed passes is reported (raised
-    *     from three, r9 verdict ask #4: the r9 ingest number fell 2.7×
-    *     with a 2.6× spread on untouched code — a wider sample plus the
-    *     calibration field below separates host load from regression) —
-    *     a two-sided estimator, because streaming throughput noise (GC
-    *     pauses mid-batch, state-store flush timing) is not one-sided
-    *     the way batch scheduling noise is. The per-pass rates are
-    *     emitted alongside so a swing is visible as spread, not silence;
-    *   - a failure reports `-1` WITH the error string (`ingest_error`),
-    *     never a silent sentinel.
-    */
-  private val IngestReplayRows = 250000
+  /** The noop writer: the full plan runs, nothing is kept. */
+  private def noop(df: DataFrame): DataStreamWriter[Row] =
+    df.writeStream.outputMode("append").format("noop")
 
-  /** Streaming-hygiene throughput: docs/s through the FULL corpus gate
-    * ([[graft.streaming.StreamingFeatures.curateDocsFullStream]]: PII
-    * redaction → static-benchmark decontam → quality gate → in-horizon
-    * dedup → split label) — the event-side ingest metric's corpus twin,
-    * so the LLM-pipeline streaming story carries a measured number too.
-    * Same discipline as [[streamIngestRate]]: fixed-size replay (the
-    * sf docs ×[[GateReplicas]], replica-token prefix preserving the dup
-    * rate, monotone ingest times so the horizon state stays bounded),
-    * fixed micro-batch boundaries, one warmup pass, median of five
-    * (r9 verdict ask #4: the wider sample pins host noise).
-    * Replay is capped at [[GateBaseDocs]]·[[GateReplicas]] rows so the
-    * metric's workload (and driver memory) is identical at any SF.
+  /** The doc gates' replay: the first [[GateBaseDocs]] sf docs by
+    * doc_id (the `base` that census-backed gates freeze), replicated
+    * [[GateReplicas]]× with a replica-token prefix and monotone 1 s
+    * ingest times. The workload (and driver memory) is identical at any
+    * SF; every original gram re-occurs shifted in each replica, so the
+    * dup rate is preserved and gates do real work on every replica; the
+    * monotone times keep the docs gate's horizon state bounded. Replayed
+    * in [[DocChunk]]-row micro-batches.
     */
-  private val GateReplicas = 4
-  private val GateBaseDocs = 2000
-
-  /** Per-stage cumulative-prefix rates from the last [[docsGateRate]]
-    * run (stage name → rows/s), published as
-    * `docs_gate_stage_rows_per_sec` — the [[lastAdmissionStages]]
-    * discipline applied to the hygiene chain (r17 verdict ask #1: the
-    * docs gate was the slowest streaming rate by ~19× and the only one
-    * with no attribution). `replay` is the bare harness (stream →
-    * noop, no gate), so "how much of the composite is harness" is a
-    * field in the artifact, not an inference from the admission
-    * probe's different pipeline.
-    */
-  private var lastDocsGateStages: Seq[(String, Double)] = Seq.empty
-
-  /** The docs-gate replay corpus: GateBaseDocs sf docs × GateReplicas
-    * with the replica-token prefix and monotone 1 s ingest times —
-    * shared by the composite rate, the per-stage attribution, and the
-    * batch-size profile.
-    */
-  private def docsGateReplayRows(spark: SparkSession,
-      sfDir: String): Array[(Long, java.sql.Timestamp, String)] = {
+  private def replayDocs(spark: SparkSession,
+      sfDir: String): (Array[(Long, String)], Seq[(Long, Timestamp, String)]) = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = graft.Tables.documents(spark, sfDir)
+    val base = Tables.documents(spark, sfDir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
       .orderBy("doc_id").limit(GateBaseDocs)
       .as[(Long, String)].collect()
-    Array.tabulate(base.length * GateReplicas) { i =>
+    (base, Vector.tabulate(base.length * GateReplicas) { i =>
       val r = i / base.length
       val (id, t) = base(i % base.length)
-      (id * GateReplicas + r,
-        new java.sql.Timestamp(1465876800000L + i * 1000L),
+      (id * GateReplicas + r, new Timestamp(1465876800000L + i * 1000L),
         if (r == 0) t else s"r$r $t")
-    }
+    })
   }
 
-  /** One timed replay of the hygiene-chain prefix `stages` (0 = bare
-    * harness) at the given micro-batch chunk size → rows/s.
+  private val GateReplicas = 4
+  private val GateBaseDocs = 2000
+  private val DocChunk = 5000
+  private val DocColumns = Seq("doc_id", "text")
+
+  /** The event replay of the ingest and feature-pipeline rates: the
+    * click/view rows in (ts, event_id) order, capped at
+    * [[EventReplayRows]] so driver memory is bounded at ANY scale factor
+    * and every round feeds an identically-sized workload. (ts, event_id)
+    * is a unique sort key: without the tie-break, rows tied on ts at the
+    * cutoff would be an arbitrary subset per execution.
     */
-  private def docsGateOnePass(spark: SparkSession,
-      rows: Array[(Long, java.sql.Timestamp, String)],
-      stages: Int, chunk: Int): Double = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  private def replayEvents(spark: SparkSession,
+      sfDir: String): Seq[(String, Timestamp, String)] = {
+    import org.apache.spark.sql.functions._
     import spark.implicits._
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)](spark)
-    val sdf = stream.toDF().toDF("doc_id", "ingest_time", "text")
-    val bench = Seq("alpha beta gamma").toDF("shingle")
-    val gated =
-      if (stages == 0) sdf
-      else graft.streaming.StreamingFeatures
-        .curateDocsFullStream(sdf, bench, stages = stages)
-    val ckpt = java.nio.file.Files.createTempDirectory("docsgate")
-    val q = gated.writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val t0 = System.nanoTime()
-      rows.grouped(chunk).foreach { c =>
-        stream.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      math.round(rows.length / secs * 10.0) / 10.0
-    } finally {
-      q.stop()
-      graft.operators.Artifacts.deleteRecursively(ckpt)
-    }
+    Tables.events(spark, sfDir)
+      .filter(col("event_type").isin("click", "view"))
+      .select(col("user_id").cast("string"), col("ts"), col("event_type"),
+        col("event_id"))
+      .orderBy("ts", "event_id").limit(EventReplayRows)
+      .drop("event_id")
+      .as[(String, Timestamp, String)].collect().toSeq
   }
 
-  private def docsGateRate(
-      spark: SparkSession, sfDir: String): (Double, Seq[Double], String) = {
-    lastDocsGateStages = Seq.empty
-    try {
-      val rows = docsGateReplayRows(spark, sfDir)
-      // per-stage attribution, the admissionGateRate discipline: one
-      // warmup + median-of-three per cumulative prefix; prefix 0 is
-      // the bare replay harness
-      val stageNames =
-        Seq("replay", "pii", "decontam", "quality", "dedup", "split")
-      lastDocsGateStages = stageNames.zipWithIndex.map { case (nm, i) =>
-        docsGateOnePass(spark, rows, i, 5000)
-        val rs = (1 to 3).map(_ => docsGateOnePass(spark, rows, i, 5000)).sorted
-        nm -> rs(1)
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(
-        () => docsGateOnePass(spark, rows, 5, 5000))
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
+  private val EventReplayRows = 250000
+  private val EventColumns = Seq("uuid", "event_time", "tag")
+
+  /** The headline stream rates, in artifact order. Each carries a
+    * prior-round band (r17 verdict ask #2): a rate landing more than
+    * [[GateRateBandFactor]]× UNDER its prior value triggers one
+    * in-process isolated re-run (the gates-only adjudication, automated),
+    * published beside the official number with the `window_flagged`
+    * marker.
+    */
+  private def gateRateFields(spark: SparkSession, sfDir: String): Seq[(String, () => Rate)] =
+    Seq(
+      "stream_ingest_rows_per_sec" -> (() => streamIngestRate(spark, sfDir)),
+      "docs_gate_rows_per_sec" -> (() => docsGateRate(spark, sfDir)),
+      "scrub_gate_rows_per_sec" -> (() => scrubGateRate(spark, sfDir)),
+      "winnow_gate_rows_per_sec" -> (() => winnowGateRate(spark, sfDir)),
+      "text_gate_rows_per_sec" -> (() => textGateRate(spark, sfDir)),
+      "admission_gate_rows_per_sec" -> (() => admissionGateRate(spark, sfDir)),
+      "feature_pipeline_rows_per_sec" -> (() => featurePipelineRate(spark, sfDir)))
+
+  private val GateRateBandFactor = 2.0
+
+  /** Marginal ms/row of a gate over the bare replay,
+    * 1000·(1/rate − 1/passthrough); -1.0 unless both rates ran.
+    */
+  private def marginalMs(gate: Rate, pass: Rate): Double =
+    if (pass.rowsPerSec > 0 && gate.rowsPerSec > 0)
+      math.round((1000.0 / gate.rowsPerSec - 1000.0 / pass.rowsPerSec) * 10000.0) / 10000.0
+    else -1.0
+
+  /** Streaming-ingest throughput vs BASELINE.md's 536 msg/s target: the
+    * full watermarked 20-min feature pipeline (tag → window → pivot →
+    * append sink) over the event replay in 50k-row chunks. TWO warm-ups
+    * (r10 verdict ask #6): with one, the first timed pass still ran ~3×
+    * under the rest, stream-init/JIT cost leaking into the sample.
+    */
+  private def streamIngestRate(spark: SparkSession, sfDir: String): Rate =
+    measure(warmups = 2) {
+      import spark.implicits._
+      val chunks = replayEvents(spark, sfDir).grouped(50000).toSeq
+      () => streamPass(spark, EventColumns, chunks)(sdf =>
+        noop(StreamingFeatures.windowedCounts(sdf, "20 minutes")))
+    }
+
+  /** Streaming-hygiene throughput: docs/s through the FULL corpus gate
+    * ([[StreamingFeatures.curateDocsFullStream]]: PII redaction →
+    * static-benchmark decontam → quality gate → in-horizon dedup → split
+    * label), the ingest metric's corpus twin. Its stages are the
+    * cumulative-prefix rates of [[DocsGateStages]] (r17 verdict ask #1:
+    * the docs gate was the slowest stream rate by ~19× and the only one
+    * with no attribution); `replay` is the bare harness (stream → noop,
+    * no gate), so "how much of the composite is harness" is a field in
+    * the artifact.
+    */
+  private def docsGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
+    val chunks = replayDocs(spark, sfDir)._2.grouped(DocChunk).toSeq
+    val pass = (stages: Int) => () => docsGatePass(spark, chunks, stages)
+    val stages = prefixRates(DocsGateStages.zipWithIndex.map { case (nm, i) => nm -> pass(i) })
+    measure(warmups = 1)(pass(5)).copy(stages = stages)
+  }
+
+  private val DocsGateStages = Seq("replay", "pii", "decontam", "quality", "dedup", "split")
+
+  /** One pass of the hygiene-chain prefix `stages` (0 = bare replay). */
+  private def docsGatePass(spark: SparkSession,
+      chunks: Seq[Seq[(Long, Timestamp, String)]], stages: Int): Double = {
+    import spark.implicits._
+    streamPass(spark, Seq("doc_id", "ingest_time", "text"), chunks) { sdf =>
+      noop(if (stages == 0) sdf
+        else StreamingFeatures.curateDocsFullStream(
+          sdf, Seq("alpha beta gamma").toDF("shingle"), stages = stages))
     }
   }
 
@@ -1355,395 +1299,143 @@ object Bench {
     */
   private def docsGateBatchProfile(spark: SparkSession, sfDir: String): String =
     try {
-      val rows = docsGateReplayRows(spark, sfDir)
-      Seq(1000, 2000, 4000, 8000).map { c =>
-        docsGateOnePass(spark, rows, 5, c)
-        val rs = (1 to 3).map(_ => docsGateOnePass(spark, rows, 5, c)).sorted
-        s""""b$c":${rs(1)}"""
-      }.mkString("{", ",", "}")
-    } catch { case t: Throwable =>
-      s"""{"error":${JsonText.escape(t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))}}"""
+      val rows = replayDocs(spark, sfDir)._2
+      jsonMap(prefixRates(Seq(1000, 2000, 4000, 8000).map { c =>
+        val chunks = rows.grouped(c).toSeq
+        s"b$c" -> (() => docsGatePass(spark, chunks, 5))
+      }))
+    } catch { case t: Throwable => errorJson(t) }
+
+  /** A (doc_id, text) gate's rate over the doc replay through the noop
+    * sink, one warm-up. `gate` receives the base docs first (untimed
+    * setup) for the gates whose frozen census is built from exactly
+    * what is replayed. Thresholds that drop nothing, where wanted, are
+    * the caller's (the admission discipline: every doc pays the full
+    * scoring cost).
+    */
+  private def replayGateRate(spark: SparkSession, sfDir: String)(
+      gate: Array[(Long, String)] => DataFrame => DataFrame): Rate =
+    measure(warmups = 1) {
+      import spark.implicits._
+      val (base, rows) = replayDocs(spark, sfDir)
+      val gated = gate(base)
+      val chunks = docTexts(rows)
+      () => streamPass(spark, DocColumns, chunks)(sdf => noop(gated(sdf)))
     }
 
-  /** Streaming span-scrub gate throughput: docs/s through
-    * [[graft.streaming.StreamingFeatures.spanScrubGateStream]] ALONE —
-    * the measured point for its documented O(n · |census|) per-token
-    * worst case (r8 verdict ask #6; docs_gate times the whole hygiene
-    * chain, so the scrub stage's own cost was asserted, not measured).
-    * The frozen census is built from exactly the replayed base docs
-    * (the gate's lockstep contract) and eagerly checkpointed so the
+  /** The (doc_id, text) projection of the doc replay, in [[DocChunk]]s. */
+  private def docTexts(rows: Seq[(Long, Timestamp, String)]): Seq[Seq[(Long, String)]] =
+    rows.map { case (id, _, t) => (id, t) }.grouped(DocChunk).toSeq
+
+  /** Span-scrub gate throughput: docs/s through
+    * [[StreamingFeatures.spanScrubGateStream]] ALONE, the measured point
+    * for its documented O(n · |census|) per-token worst case (r8 verdict
+    * ask #6). The frozen census is built from exactly the replayed base
+    * docs (the gate's lockstep contract) and eagerly checkpointed, so the
     * static side of the stream-static join is materialized once, not
-    * re-aggregated per micro-batch. Replicas carry the replica-token
-    * prefix: every original gram re-occurs shifted, so the gate does
-    * real scrub work on every replica, not a no-op pass. Same
-    * discipline as [[docsGateRate]]: fixed-size replay, fixed
-    * micro-batch boundaries, one warmup pass, median of five (r9 ask #4).
+    * re-aggregated per micro-batch.
     */
-  private def scrubGateRate(
-      spark: SparkSession, sfDir: String): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
+  private def scrubGateRate(spark: SparkSession, sfDir: String): Rate =
+    replayGateRate(spark, sfDir) { base =>
+      import spark.implicits._
       val census = graft.operators.Dedup.duplicateNgramHashesFrom(
         spark.createDataset(base.toSeq).toDF("doc_id", "text"),
         graft.operators.Dedup.DefaultCoverageN,
         graft.operators.Dedup.DefaultCoverageMinDocs)
         .localCheckpoint()
-      def onePass(): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val sdf = stream.toDF().toDF("doc_id", "text")
-        val gated = graft.streaming.StreamingFeatures
-          .spanScrubGateStream(sdf, census)
-        val ckpt = java.nio.file.Files.createTempDirectory("scrubgate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
+      sdf => StreamingFeatures.spanScrubGateStream(sdf, census)
     }
-  }
 
-  /** Streaming MassiveText text-gate throughput: docs/s through the
-    * composed stateless [[graft.streaming.StreamingFeatures
-    * .gopherGateStream]] → repetitionGateStream pair ALONE (r18) — the
-    * measured point for the published rule-set + repetition filters as
-    * an admission front. Both gates are stateless (no state store, no
-    * static side, no shuffle), so the expected shape is scan-bound
-    * within a few × of the bare replay ceiling; this metric exists to
-    * catch a regression to anything interpreted or super-linear in doc
-    * length in either gate's column spellings.
+  /** MassiveText text-gate throughput: docs/s through the composed
+    * stateless [[StreamingFeatures.gopherGateStream]] →
+    * repetitionGateStream pair ALONE (r18). Both gates are stateless (no
+    * state store, no static side, no shuffle), so the expected shape is
+    * scan-bound within a few × of the bare replay; this rate catches a
+    * regression to anything interpreted or super-linear in doc length.
     */
-  private def textGateRate(
-      spark: SparkSession, sfDir: String): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
-      def onePass(): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val sdf = stream.toDF().toDF("doc_id", "text")
-        val gated = graft.streaming.StreamingFeatures.repetitionGateStream(
-          graft.streaming.StreamingFeatures.gopherGateStream(sdf))
-        val ckpt = java.nio.file.Files.createTempDirectory("textgate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
+  private def textGateRate(spark: SparkSession, sfDir: String): Rate =
+    replayGateRate(spark, sfDir)(_ => sdf =>
+      StreamingFeatures.repetitionGateStream(StreamingFeatures.gopherGateStream(sdf)))
+
+  /** Winnow-gate throughput: docs/s through
+    * [[StreamingFeatures.winnowGateStream]] ALONE, the measured point for
+    * the per-doc fingerprint fold (catches a regression to anything
+    * super-linear in doc length). The census holds the winnow
+    * fingerprints of exactly the replayed base docs, eagerly
+    * checkpointed; winnow fp hashes are position-free, so every replica
+    * re-fingerprints fully and probes a census it mostly hits.
+    * `censusFromCorpus` draws the census from the WHOLE corpus at
+    * `sfDir` instead (r15 verdict ask #6: the census is the gate's only
+    * corpus-sized state). `bloom` swaps in
+    * [[StreamingFeatures.winnowGateStreamBloom]] at the production
+    * 2²⁷-bit sizing (r16 verdict ask #5).
+    */
+  private def winnowGateRate(spark: SparkSession, sfDir: String,
+      censusFromCorpus: Boolean = false, bloom: Boolean = false): Rate =
+    replayGateRate(spark, sfDir) { base =>
+      import spark.implicits._
+      val censusDocs =
+        if (censusFromCorpus) Tables.documents(spark, sfDir).select("doc_id", "text")
+        else spark.createDataset(base.toSeq).toDF("doc_id", "text")
+      val census = graft.operators.TextAnalytics.winnowFpsOf(
+        censusDocs,
+        graft.operators.TextAnalytics.WinnowK,
+        graft.operators.TextAnalytics.WinnowW)
+        .select("fp").localCheckpoint()
+      sdf =>
+        if (bloom) StreamingFeatures.winnowGateStreamBloom(sdf, census, numBits = 1L << 27)
+        else StreamingFeatures.winnowGateStream(sdf, census)
     }
-  }
 
-  /** Streaming winnow-gate throughput: docs/s through
-    * [[graft.streaming.StreamingFeatures.winnowGateStream]] ALONE — the
-    * measured point for the per-doc fingerprint fold (the r12 ring-
-    * buffer `aggregate` rewrite of the array form; this metric exists
-    * to catch a regression to anything super-linear in doc length).
-    * Census = the winnow fingerprints of exactly the replayed base docs
-    * (the gate's lockstep contract), built with the batch window form
-    * and eagerly checkpointed so the one-row sorted-census aggregate is
-    * materialized once. Replicas carry the replica-token prefix: a
-    * prefix only SHIFTS gram positions and winnow fp hashes are
-    * position-free, so every replica re-fingerprints fully and probes a
-    * census it mostly hits — the gate does its real work (fp fold +
-    * O(log s) probes) on every row, and drops replicas like the
-    * boilerplate they are. Same discipline as [[docsGateRate]]:
-    * fixed-size replay, fixed micro-batch boundaries, one warmup pass,
-    * median of five.
-    */
   /** Composed admission-pipeline throughput: docs/s through
-    * [[graft.streaming.StreamingFeatures.admissionGateStream]] — all six
-    * artifact-loaded gates in sequence. Artifacts are trained ONCE per
-    * probe via [[graft.operators.Artifacts.exportAll]] on the sf corpus
-    * (outside the timed passes — the nightly-export shape). Verdict
-    * thresholds are set so NO stage drops (minFrac > 1, minShared maxed,
-    * budget/score bounds open): every doc pays every stage's full
-    * scoring cost, so the number reads as the per-doc cost of the whole
-    * admission chain rather than of whichever early gate happens to
-    * drop the replicas — except the quality gate, which keeps its real
-    * defaults (cheap, and a pipeline without it is not the shipped
-    * composition).
+    * [[StreamingFeatures.admissionGateStream]], all six artifact-loaded
+    * gates in sequence. Artifacts are trained ONCE per probe via
+    * [[graft.operators.Artifacts.exportAll]] on the sf corpus, outside
+    * the timed passes (the nightly-export shape). Thresholds are set so
+    * NO stage drops, except the quality gate's real defaults: every doc
+    * pays every stage's full scoring cost. Its stages are the
+    * cumulative-prefix rates of [[AdmissionStages]], the attribution that
+    * turns "the composite is the slowest gate" into "THIS stage owns the
+    * cost" (r14 verdict ask #4).
     */
-  /** Per-stage cumulative-prefix rates from the last
-    * [[admissionGateRate]] run (stage name → rows/s), published into
-    * the artifact as `admission_stage_rows_per_sec` — the attribution
-    * that turns "the composite is the fleet's slowest gate" into
-    * "THIS stage owns the cost" (r14 verdict ask #4).
-    */
-  private var lastAdmissionStages: Seq[(String, Double)] = Seq.empty
-
-  /** stage-name → rate map as a JSON object (shared by the admission
-    * and docs-gate attribution emitters).
-    */
-  private def stagesJson(stages: Seq[(String, Double)]): String =
-    stages.map { case (k, v) => JsonText.escape(k) + ":" + v }
-      .mkString("{", ",", "}")
-
-  private def admissionGateRate(
-      spark: SparkSession, sfDir: String): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
+  private def admissionGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
     import spark.implicits._
-    // reset FIRST (r15 advice): if the attribution loop below throws,
-    // the artifact must publish an empty stage map, not the previous
-    // run's stale one
-    lastAdmissionStages = Seq.empty
+    val artDir = Files.createTempDirectory("graft_admission_models")
     try {
-      val artDir = java.nio.file.Files
-        .createTempDirectory("graft_admission_models").toString
-      try {
-      graft.operators.Artifacts.exportAll(spark, sfDir, artDir)
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
-      def onePass(stages: Int): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val gated = graft.streaming.StreamingFeatures.admissionGateStream(
-          stream.toDF().toDF("doc_id", "text"), spark, artDir,
+      Artifacts.exportAll(spark, sfDir, artDir.toString)
+      val chunks = docTexts(replayDocs(spark, sfDir)._2)
+      val pass = (stages: Int) => () => streamPass(spark, DocColumns, chunks)(sdf =>
+        noop(StreamingFeatures.admissionGateStream(sdf, spark, artDir.toString,
           maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
           maxTokens = Long.MaxValue,
           decontamMinFrac = 1.1, winnowMinShared = Int.MaxValue,
-          stages = stages)
-        val ckpt = java.nio.file.Files.createTempDirectory("admgate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      // per-stage attribution (r14 verdict ask #4): one warmup + one
-      // timed pass per cumulative prefix (quality, +bloom, +winnow,
-      // +dsir, +perplexity, +bpe) — the marginal rows/s drop between
-      // consecutive prefixes locates which gate owns the composite's
-      // cost. All six prefixes use the SAME single-pass estimator so
-      // the marginals difference uniformly (the r15 review: omitting
-      // the 6th left the dominant stage's marginal to be inferred
-      // across two different estimators); the full 6-stage composite
-      // below stays the headline measured the established
-      // median-of-five way.
-      val stageNames =
-        Seq("quality", "bloom", "winnow", "dsir", "perplexity", "bpe")
-      lastAdmissionStages = stageNames.zipWithIndex.map { case (nm, i) =>
-        onePass(i + 1) // warmup (codegen + stream init for this prefix)
-        // median-of-three per prefix (r15 advice): the marginals
-        // difference CONSECUTIVE prefix rates, so single-pass noise
-        // could push a cheap stage's marginal negative
-        val rs = (1 to 3).map(_ => onePass(i + 1)).sorted
-        nm -> rs(1)
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass(6))
-      (median, rates, null)
-      } finally {
-        // six trained model parquets must not outlive the probe (the
-        // probeAtFactor discipline — every other temp dir here cleans up)
-        graft.operators.Artifacts.deleteRecursively(java.nio.file.Paths.get(artDir))
-      }
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-    }
+          stages = stages)))
+      val stages = prefixRates(AdmissionStages.zipWithIndex.map { case (nm, i) => nm -> pass(i + 1) })
+      measure(warmups = 1)(pass(6)).copy(stages = stages)
+    } finally Artifacts.deleteRecursively(artDir)
   }
 
-  /** `bloom = true` swaps the sorted-census gate for
-    * [[graft.streaming.StreamingFeatures.winnowGateStreamBloom]] at the
-    * production 2²⁷-bit sizing — the documented flat-cost escape hatch
-    * for frozen corpora whose fp census outgrows the sorted-array
-    * broadcast, measured by the admission-scale probe (r16 verdict ask
-    * #5) beside the census gate's growth.
+  private val AdmissionStages = Seq("quality", "bloom", "winnow", "dsir", "perplexity", "bpe")
+
+  /** Standalone BPE-gate throughput: docs/s through
+    * [[StreamingFeatures.bpeBudgetGateStream]] ALONE at a chosen
+    * merge-table size and form (r16 verdict ask #4). The fold spelling
+    * is not probed at 128 merges: its expression tree is the documented
+    * ~10² ceiling. `nMerges = 0` is the bare replay, so a marginal ms/row
+    * is computable inside the artifact. Merge tables come from the
+    * zero-jobs-per-merge sampled learner on the sf corpus.
     */
-  /** Standalone BPE-gate throughput — docs/s through
-    * [[graft.streaming.StreamingFeatures.bpeBudgetGateStream]] ALONE,
-    * at a caller-chosen merge-table size and form (r16 verdict ask #4's
-    * done-criterion: the fused native expression's marginal at a
-    * realistically sized ≥128-merge table, beside the retained fold
-    * spelling at the registered 8-merge sizing — the fold form is NOT
-    * probed at 128, its expression tree is the documented ~10²
-    * ceiling). `nMerges = 0` probes the bare replay (passthrough
-    * projection, no gate) so a marginal ms/row is computable inside
-    * the artifact: 1000·(1/rate − 1/passthrough). Merge tables come
-    * from the zero-jobs-per-merge sampled learner on the sf corpus.
-    * Same discipline as [[winnowGateRate]]: fixed-size replay, fixed
-    * micro-batch boundaries, one warmup pass, median of five.
-    */
-  private def bpeGateRate(
-      spark: SparkSession, sfDir: String,
-      nMerges: Int, fused: Boolean): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
+  private def bpeGateRate(spark: SparkSession, sfDir: String,
+      nMerges: Int, fused: Boolean): Rate =
+    replayGateRate(spark, sfDir) { _ =>
       val merges: Seq[(String, String)] =
         if (nMerges == 0) Seq.empty
         else graft.operators.Bpe.learnSampled(spark, sfDir, nMerges = nMerges)
-      def onePass(): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val sdf = stream.toDF().toDF("doc_id", "text")
-        val gated =
-          if (nMerges == 0) sdf
-          else if (fused) graft.streaming.StreamingFeatures
-            .bpeBudgetGateStream(sdf, merges, Long.MaxValue)
-          else graft.streaming.StreamingFeatures
-            .bpeBudgetGateStreamFold(sdf, merges, Long.MaxValue)
-        val ckpt = java.nio.file.Files.createTempDirectory("bpegate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
+      sdf =>
+        if (nMerges == 0) sdf
+        else if (fused) StreamingFeatures.bpeBudgetGateStream(sdf, merges, Long.MaxValue)
+        else StreamingFeatures.bpeBudgetGateStreamFold(sdf, merges, Long.MaxValue)
     }
-  }
-
-  /** Generic standalone-gate replay: the shared (doc_id, text) harness
-    * of [[bpeGateRate]] applied to any stateless gate transform —
-    * median-of-five rows/s with one warmup, non-dropping thresholds the
-    * caller's responsibility (the admission discipline: every doc pays
-    * the full scoring cost).
-    */
-  private def replayGateRate(spark: SparkSession, sfDir: String,
-      gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
-      def onePass(): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val gated = gate(stream.toDF().toDF("doc_id", "text"))
-        val ckpt = java.nio.file.Files.createTempDirectory("modelgate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-    }
-  }
 
   /** Model-size sizing probe (r17 verdict ask #7): each artifact-driven
     * admission stage re-measured standalone at a demo-adjacent and a
@@ -1759,39 +1451,28 @@ object Bench {
     * non-dropping so every doc pays every stage's full scoring cost.
     */
   private def modelSizingProbe(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamingFeatures
     val parts = scala.collection.mutable.ArrayBuffer[String]()
-    def blob(tag: String, r: (Double, Seq[Double], String)): Double = {
-      val (rate, runs, err) = r
-      val ej = if (err == null) "null" else JsonText.escape(err)
-      parts += s""""${tag}_rows_per_sec":$rate,"${tag}_runs":${runs.mkString("[", ",", "]")},"${tag}_error":$ej"""
-      rate
-    }
-    val pass = blob("passthrough", replayGateRate(spark, sfDir, df => df))
-    def marginal(tag: String, rate: Double): Unit =
-      parts += s""""${tag}_marginal_ms_per_row":${
-        if (pass > 0 && rate > 0)
-          math.round((1000.0 / rate - 1000.0 / pass) * 10000.0) / 10000.0
-        else -1.0}"""
+    val pass = replayGateRate(spark, sfDir)(_ => df => df)
+    parts += pass.json("passthrough")
+    def withMarginal(tag: String, r: Rate): Unit =
+      parts += r.json(tag) + s""","${tag}_marginal_ms_per_row":${marginalMs(r, pass)}"""
+    def failed(tag: String, t: Throwable): Unit =
+      parts += s""""${tag}_error":${JsonText.escape(errorText(t))}"""
     // Bloom decontam at the registered and production bit sizings —
     // the bitset array grows 128×, the per-token probe count does not
     val digests = try {
       Some(graft.operators.Decontam.benchmarkDigests(spark, sfDir)
         .localCheckpoint())
-    } catch { case scala.util.control.NonFatal(t) =>
-      parts += s""""bloom_error":${JsonText.escape(String.valueOf(t.getMessage).take(200))}"""
-      None
-    }
+    } catch { case NonFatal(t) => failed("bloom", t); None }
     digests.foreach { d =>
       Seq(20, 27).foreach { bits =>
         val numBits = 1L << bits
         val bloom = graft.operators.Decontam
           .bloomFrom(d, numBits, graft.operators.Decontam.DefaultBloomK)
           .localCheckpoint()
-        val r = blob(s"bloom_bits$bits", replayGateRate(spark, sfDir, df =>
+        withMarginal(s"bloom_bits$bits", replayGateRate(spark, sfDir)(_ => df =>
           StreamingFeatures.bloomDecontamGateStreamLoaded(df, bloom, numBits,
             graft.operators.Decontam.DefaultBloomK, minFrac = 1.1)))
-        marginal(s"bloom_bits$bits", r)
       }
     }
     // bigram perplexity at 256 vs 4096 model buckets — the dense model
@@ -1800,310 +1481,138 @@ object Bench {
       try {
         val model = graft.operators.Perplexity
           .referenceNlpBigram(spark, sfDir, nBuckets = nb).localCheckpoint()
-        val r = blob(s"perplexity_buckets$nb", replayGateRate(spark, sfDir,
-          df => StreamingFeatures.perplexityGateStreamBigram(df, model,
-            Long.MaxValue, nb)))
-        marginal(s"perplexity_buckets$nb", r)
-      } catch { case scala.util.control.NonFatal(t) =>
-        parts += s""""perplexity_buckets${nb}_error":${JsonText.escape(String.valueOf(t.getMessage).take(200))}"""
-      }
+        withMarginal(s"perplexity_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
+          StreamingFeatures.perplexityGateStreamBigram(df, model, Long.MaxValue, nb)))
+      } catch { case NonFatal(t) => failed(s"perplexity_buckets$nb", t) }
     }
     // DSIR at 256 vs 4096 model buckets — same dense-array shape
     Seq(256, 4096).foreach { nb =>
       try {
         val model = graft.operators.Dsir
           .logRatios(spark, sfDir, nBuckets = nb).localCheckpoint()
-        val r = blob(s"dsir_buckets$nb", replayGateRate(spark, sfDir,
-          df => StreamingFeatures.dsirGateStream(df, model,
-            Long.MinValue, nb)))
-        marginal(s"dsir_buckets$nb", r)
-      } catch { case scala.util.control.NonFatal(t) =>
-        parts += s""""dsir_buckets${nb}_error":${JsonText.escape(String.valueOf(t.getMessage).take(200))}"""
-      }
+        withMarginal(s"dsir_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
+          StreamingFeatures.dsirGateStream(df, model, Long.MinValue, nb)))
+      } catch { case NonFatal(t) => failed(s"dsir_buckets$nb", t) }
     }
     // fused BPE at 2⁷ vs 2¹⁰ merges — the bounded per-task memo means
     // deeper tables pay at memo-miss time only
-    Seq(128, 1024).foreach { m =>
-      val r = blob(s"bpe_merges$m", bpeGateRate(spark, sfDir, m, fused = true))
-      marginal(s"bpe_merges$m", r)
-    }
+    Seq(128, 1024).foreach(m =>
+      withMarginal(s"bpe_merges$m", bpeGateRate(spark, sfDir, m, fused = true)))
     parts.mkString(",")
-  }
-
-  private def winnowGateRate(
-      spark: SparkSession, sfDir: String,
-      censusFromCorpus: Boolean = false,
-      bloom: Boolean = false): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      val base = graft.Tables.documents(spark, sfDir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id").limit(GateBaseDocs)
-        .as[(Long, String)].collect()
-      val rows: Array[(Long, String)] =
-        Array.tabulate(base.length * GateReplicas) { i =>
-          val r = i / base.length
-          val (id, t) = base(i % base.length)
-          (id * GateReplicas + r, if (r == 0) t else s"r$r $t")
-        }
-      // census source: the replayed base docs (the established per-row
-      // metric — census size fixed at any corpus), or the WHOLE corpus
-      // at `sfDir` for the gate-rate scale probe (r15 verdict ask #6:
-      // the census is the winnow gate's only corpus-sized state, so the
-      // scale question is "does per-row cost hold when the census
-      // grows 10×", which the fixed-census form cannot ask)
-      val censusDocs =
-        if (censusFromCorpus)
-          graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-        else spark.createDataset(base.toSeq).toDF("doc_id", "text")
-      val census = graft.operators.TextAnalytics.winnowFpsOf(
-        censusDocs,
-        graft.operators.TextAnalytics.WinnowK,
-        graft.operators.TextAnalytics.WinnowW)
-        .select("fp").localCheckpoint()
-      def onePass(): Double = {
-        val stream = MemoryStream[(Long, String)](spark)
-        val sdf = stream.toDF().toDF("doc_id", "text")
-        val gated =
-          if (bloom) graft.streaming.StreamingFeatures
-            .winnowGateStreamBloom(sdf, census, numBits = 1L << 27)
-          else graft.streaming.StreamingFeatures
-            .winnowGateStream(sdf, census)
-        val ckpt = java.nio.file.Files.createTempDirectory("winnowgate")
-        val q = gated.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(5000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      val (median, rates) = medianOfFive(warmups = 1)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-    }
   }
 
   /** End-to-end feature-pipeline replay (r10 verdict ask #8) — the E2
     * lifecycle of SURVEY §3 as a MEASURED number instead of a spec: the
-    * S13-style time-ordered event replay driven through the complete
-    * 20-min feature pipeline (tag → watermark → window → union-pivot)
-    * into BOTH reference sinks per micro-batch — the Postgres-twin
-    * PK-upsert (live embedded Derby, the portable UPDATE-then-INSERT
-    * writer) and the Redis-twin KV hash write (partition-parallel HSET).
-    * Reported as rows/s over the full replay INCLUDING the final
-    * watermark flush, median of five with two untimed warmups (the
-    * ingest discipline), plus `feature_pipeline_match`: after the last
-    * timed pass, the Derby table and the KV store are read back and
-    * compared EXACTLY against the registered batch `q_features_20m`
-    * frame ([[graft.operators.FeatureJobs.windowedFeatures]]) — the
-    * replay carries every click/view row at the bench SF (capped at
-    * [[FeaturePipelineMaxRows]]; under the cap the subset IS the whole
-    * table, so batch-vs-streaming equality is the registered-query
-    * check the r10 verdict asked for; over the cap the comparison runs
-    * against the same aggregation of exactly the replayed rows).
+    * time-ordered event replay driven through the complete 20-min
+    * feature pipeline (tag → watermark → window → union-pivot) into BOTH
+    * reference sinks per micro-batch — the Postgres-twin PK-upsert (live
+    * embedded Derby, the portable UPDATE-then-INSERT writer) and the
+    * Redis-twin KV hash write (partition-parallel HSET), in 10k-row
+    * chunks, two warm-ups (the ingest discipline), rows/s over the full
+    * replay INCLUDING the final watermark flush. Each pass writes its own
+    * Derby database; the last one is kept for `matched`: the Derby table
+    * and the KV store read back and compared EXACTLY against the
+    * registered batch `q_features_20m` frame
+    * ([[graft.operators.FeatureJobs.windowedFeatures]]) while the replay
+    * holds the whole click/view table, else against the same aggregation
+    * of exactly the replayed rows.
     *
     * Windows close deterministically: replay order is (ts, event_id) —
-    * monotone event time — and a far-future sentinel row advances the
-    * watermark past every real window at close (the ReplayE2ESpec
-    * device); the sentinel's own window never closes, so it never
-    * reaches a sink. `window_end` ships to Derby as the `yyyyMMddHHmm`
-    * key string (the Redis key grammar) — timezone-proof across the
-    * JDBC round trip, and the same PK identity as a TIMESTAMP column.
+    * monotone event time — and a far-future sentinel, the uncounted flush
+    * chunk, advances the watermark past every real window at close (the
+    * ReplayE2ESpec device); the sentinel's own window never closes, so it
+    * never reaches a sink. `window_end` ships to Derby as the
+    * `yyyyMMddHHmm` key string (the Redis key grammar) — timezone-proof
+    * across the JDBC round trip, and the same PK identity as a TIMESTAMP
+    * column.
     */
-  private val FeaturePipelineMaxRows = 250000
-
-  private def featurePipelineRate(spark: SparkSession,
-      sfDir: String): (Double, Seq[Double], String, String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.{DataFrame, Row}
+  private def featurePipelineRate(spark: SparkSession, sfDir: String): Rate = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    try {
+    val rate = guarded {
       System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-      val rows = graft.Tables.events(spark, sfDir)
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").cast("string"), col("ts"), col("event_type"),
-          col("event_id"))
-        .orderBy("ts", "event_id").limit(FeaturePipelineMaxRows)
-        .drop("event_id")
-        .as[(String, java.sql.Timestamp, String)].collect()
-      if (rows.isEmpty) return (-1.0, Seq.empty, "false", "no click/view rows")
-      val maxTs = rows.iterator.map(_._2.getTime).max
-      val sentinel = ("__sentinel__",
-        new java.sql.Timestamp(maxTs + 30L * 24 * 3600 * 1000), "click")
-      var passN = 0
-      def onePass(): Double = {
-        passN += 1
-        val url = s"jdbc:derby:memory:graftfeat$passN;create=true"
-        val conn = java.sql.DriverManager.getConnection(url)
-        try conn.createStatement().execute(
-          """CREATE TABLE features_20m (uuid VARCHAR(64) NOT NULL,
-            | window_key VARCHAR(12) NOT NULL, clicks BIGINT, views BIGINT,
-            | PRIMARY KEY (uuid, window_key))""".stripMargin)
-        finally conn.close()
-        graft.sources.Sinks.InMemoryKV.clear()
-        val stream = MemoryStream[(String, java.sql.Timestamp, String)](spark)
-        val sdf = stream.toDF().toDF("uuid", "event_time", "tag")
-        val features =
-          graft.streaming.StreamingFeatures.windowedCounts(sdf, "20 minutes")
-        val ckpt = java.nio.file.Files.createTempDirectory("featpipe")
-        val q = features.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // both reference sinks per micro-batch, off one closed-window
-            // frame: PK-upsert (idempotent under redelivery) + KV HSET
-            graft.sources.Sinks.jdbcUpsertBatchPortable(
-              batch.select(col("uuid"),
-                date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
-                col("clicks"), col("views")),
-              url, "features_20m", Seq("uuid", "window_key"))
-            graft.streaming.StreamingFeatures.redisRows(batch)
-              .foreachPartition { it: Iterator[Row] =>
-                val kv = graft.sources.Sinks.InMemoryKV
-                it.foreach(r =>
-                  kv.hset(r.getString(0), r.getMap[String, String](1).toMap))
+      val rows = replayEvents(spark, sfDir)
+      if (rows.isEmpty) Rate(-1.0, Nil, "no click/view rows")
+      else {
+        val maxTs = rows.iterator.map(_._2.getTime).max
+        val sentinel = ("__sentinel__",
+          new Timestamp(maxTs + 30L * 24 * 3600 * 1000), "click")
+        val chunks = rows.grouped(10000).toSeq
+        var passN = 0
+        def dropDb(n: Int): Unit =
+          try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:graftfeat$n;drop=true")
+          catch { case _: java.sql.SQLException => () } // 08006 = success
+        val timed = medianOfFive(warmups = 2) { () =>
+          passN += 1
+          val url = s"jdbc:derby:memory:graftfeat$passN;create=true"
+          val conn = java.sql.DriverManager.getConnection(url)
+          try conn.createStatement().execute(
+            """CREATE TABLE features_20m (uuid VARCHAR(64) NOT NULL,
+              | window_key VARCHAR(12) NOT NULL, clicks BIGINT, views BIGINT,
+              | PRIMARY KEY (uuid, window_key))""".stripMargin)
+          finally conn.close()
+          graft.sources.Sinks.InMemoryKV.clear()
+          val r = streamPass(spark, EventColumns, chunks, flush = Seq(sentinel)) { sdf =>
+            StreamingFeatures.windowedCounts(sdf, "20 minutes")
+              .writeStream.outputMode("append")
+              .foreachBatch { (batch: DataFrame, _: Long) =>
+                // both reference sinks per micro-batch, off one closed-window
+                // frame: PK-upsert (idempotent under redelivery) + KV HSET
+                graft.sources.Sinks.jdbcUpsertBatchPortable(
+                  batch.select(col("uuid"),
+                    date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
+                    col("clicks"), col("views")),
+                  url, "features_20m", Seq("uuid", "window_key"))
+                StreamingFeatures.redisRows(batch)
+                  .foreachPartition { it: Iterator[Row] =>
+                    val kv = graft.sources.Sinks.InMemoryKV
+                    it.foreach(r =>
+                      kv.hset(r.getString(0), r.getMap[String, String](1).toMap))
+                  }
               }
           }
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(10000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          stream.addData(sentinel) // flush: close every real window
-          q.processAllAvailable()
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          graft.operators.Artifacts.deleteRecursively(ckpt)
+          if (passN <= 6) dropDb(passN) // keep the LAST pass's DB for the check
+          r
         }
+        // Under the cap the expectation is the registered q_features_20m
+        // frame (the r10 verdict's batch≡streaming check); over it, the
+        // SAME aggregation over exactly the replayed rows (the window
+        // straddling the cutoff carries partial counts in both sides
+        // equally, so equality — including the KV map — still holds on a
+        // correct pipeline).
+        val expectedDf =
+          if (rows.length < EventReplayRows)
+            graft.operators.FeatureJobs.windowedFeatures(spark, sfDir, "20 minutes")
+              .select(col("user_id").cast("string").as("uuid"),
+                col("window_end"), col("clicks"), col("views"))
+          else
+            spark.createDataset(rows).toDF(EventColumns: _*)
+              .groupBy(window(col("event_time"), "20 minutes").as("w"), col("uuid"))
+              .agg(count(when(col("tag") === "click", 1)).as("clicks"),
+                count(when(col("tag") === "view", 1)).as("views"))
+              .select(col("uuid"), col("w.end").as("window_end"),
+                col("clicks"), col("views"))
+        val expected = expectedDf
+          .select(col("uuid"),
+            date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
+            col("clicks"), col("views"))
+          .collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+          .toSet
+        val derby = graft.sources.Sinks.jdbcTable(spark,
+            s"jdbc:derby:memory:graftfeat$passN", "features_20m")
+          .collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+          .toSet
+        val expectedKv = expected.map { case (u, w, c, v) =>
+          s"feat:user:{$u}:$w" ->
+            Map("click20m" -> c.toString, "view20m" -> v.toString)
+        }.toMap
+        val kv = graft.sources.Sinks.InMemoryKV.data.toMap
+        dropDb(passN)
+        timed.copy(matched = Some(derby == expected && kv == expectedKv))
       }
-      def dropDb(n: Int): Unit =
-        try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:graftfeat$n;drop=true")
-        catch { case _: java.sql.SQLException => () } // 08006 = success
-      val (median, rates) = medianOfFive(warmups = 2) { () =>
-        val r = onePass()
-        if (passN <= 6) dropDb(passN) // keep the LAST pass's DB for the check
-        r
-      }
-      // Equality on the final pass's sinks. Under the cap the replay IS
-      // the whole click/view table and the expectation is the registered
-      // q_features_20m frame (the r10 verdict's batch≡streaming check);
-      // over the cap the expectation is the SAME aggregation over
-      // exactly the replayed rows (the window straddling the cutoff
-      // carries partial counts in both sides equally, so equality —
-      // including the KV map — still holds on a correct pipeline).
-      val expectedDf =
-        if (rows.length < FeaturePipelineMaxRows)
-          graft.operators.FeatureJobs.windowedFeatures(spark, sfDir, "20 minutes")
-            .select(col("user_id").cast("string").as("uuid"),
-              col("window_end"), col("clicks"), col("views"))
-        else
-          spark.createDataset(rows.toIndexedSeq).toDF("uuid", "event_time", "tag")
-            .groupBy(window(col("event_time"), "20 minutes").as("w"), col("uuid"))
-            .agg(count(when(col("tag") === "click", 1)).as("clicks"),
-              count(when(col("tag") === "view", 1)).as("views"))
-            .select(col("uuid"), col("w.end").as("window_end"),
-              col("clicks"), col("views"))
-      val expected = expectedDf
-        .select(col("uuid"),
-          date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
-          col("clicks"), col("views"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val derby = graft.sources.Sinks.jdbcTable(spark,
-          s"jdbc:derby:memory:graftfeat$passN", "features_20m")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val expectedKv = expected.map { case (u, w, c, v) =>
-        s"feat:user:{$u}:$w" ->
-          Map("click20m" -> c.toString, "view20m" -> v.toString)
-      }.toMap
-      val kv = graft.sources.Sinks.InMemoryKV.data.toMap
-      dropDb(passN)
-      val matched = derby == expected && kv == expectedKv
-      (median, rates, matched.toString, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, "false", t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
     }
-  }
-
-  private def streamIngestRate(
-      spark: SparkSession, sfDir: String): (Double, Seq[Double], String) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    try {
-      // (ts, event_id) is a unique sort key: without the tie-break, rows
-      // tied on ts at the 250k cutoff would be an arbitrary subset per
-      // execution — workload drift in the one metric hardened for
-      // repeatability
-      val rows = graft.Tables.events(spark, sfDir)
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").cast("string"), col("ts"), col("event_type"),
-          col("event_id"))
-        .orderBy("ts", "event_id").limit(IngestReplayRows)
-        .drop("event_id")
-        .as[(String, java.sql.Timestamp, String)].collect()
-      def onePass(): Double = {
-        val stream = MemoryStream[(String, java.sql.Timestamp, String)](spark)
-        val sdf = stream.toDF().toDF("uuid", "event_time", "tag")
-        val features =
-          graft.streaming.StreamingFeatures.windowedCounts(sdf, "20 minutes")
-        val ckpt = java.nio.file.Files.createTempDirectory("ingest")
-        val q = features.writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          val t0 = System.nanoTime()
-          // one processAllAvailable per chunk: every pass runs the SAME
-          // micro-batch boundaries (5 × 50k) and hence the same state
-          // commits. The old fire-all-then-drain shape raced addData
-          // against background batch planning, so batch count — and with
-          // it state-store flush work — varied per pass; that race was
-          // the dominant term of the reported 2.5× per-pass spread.
-          rows.grouped(50000).foreach { chunk =>
-            stream.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          math.round(rows.length / secs * 10.0) / 10.0
-        } finally {
-          q.stop()
-          // state-store deltas for a 250k replay are sizable and four
-          // passes run per bench — don't leave them in /tmp
-          graft.operators.Artifacts.deleteRecursively(ckpt)
-        }
-      }
-      // TWO untimed warmup passes (r10 verdict ask #6): with one, the
-      // first timed pass still ran ~3× under the rest (r10: 4,112 vs
-      // 12–12.4K rows/s) — stream-init/JIT cost was leaking into the
-      // sample and the median was doing the filtering that warmup
-      // should. Target: r11 ingest_runs spread within ~1.3×.
-      val (median, rates) = medianOfFive(warmups = 2)(() => onePass())
-      (median, rates, null)
-    } catch { case t: Throwable =>
-      (-1.0, Seq.empty, t.getClass.getSimpleName + ": " +
-        String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200))
-    }
+    rate.copy(matched = Some(rate.matched.contains(true)))
   }
 }
