@@ -18,7 +18,8 @@ import graft.streaming.StreamingFeatures
   *
   * A warmup pass at sf0.001 runs first so JVM/JIT/codegen compilation is
   * not billed to whichever query happens to execute first; timings then
-  * reflect steady-state engine cost.
+  * reflect steady-state engine cost. The isolated and iteration forms of
+  * the stream-rate section are [[Probe]] subcommands.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -59,170 +60,7 @@ object Bench {
     val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
     val tagged = out.resolveSibling(s"bench_${Paths.get(sfDir).getFileName}.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
-
-    // noop sink evaluates the FULL plan (count() would let Catalyst prune
-    // projections and eliminate final sorts, timing a bare scan for
-    // projection-only queries)
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Several similarity/dedup queries materialize intermediates via lazy
-    // localCheckpoint; their blocks are freed by the ContextCleaner only
-    // when the JVM gets around to GC-ing the RDD references. Under the
-    // bench's back-to-back load that lag lets dead blocks pile up and
-    // bleed block-manager/GC pressure into UNRELATED queries (r3 saw
-    // untouched queries swing 5x). Dropping every persisted RDD between
-    // queries makes each measurement start from a clean block manager;
-    // correctness is unaffected because every timed run rebuilds its
-    // DataFrames (and checkpoints) from scratch. blocking = true: the
-    // call sits OUTSIDE every timed region, so waiting here is free —
-    // async removal would let the cleanup run inside the next query's
-    // timed window, which is the exact bleed being eliminated.
-    def dropLingeringBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-
-    // SPARK_GRAFT_ADMISSION_ONLY=1: run ONLY the composed admission
-    // gate (median-of-five composite + the r15 per-stage attribution)
-    // and print one JSON line — the iteration mode for optimizing the
-    // fleet's slowest gate, which should not pay the ~85 min full pass
-    // per experiment (the SPARK_GRAFT_SCALE_ONLY precedent).
-    if (sys.env.get("SPARK_GRAFT_ADMISSION_ONLY").contains("1")) {
-      // refuse conflicting mode requests loudly — the r14-advice class
-      // of bug where one early-return silently wins (a stale
-      // ADMISSION_ONLY in the shell must not swallow a requested
-      // multi-hour scale probe or a query filter)
-      require(!scaleOnly && only.isEmpty,
-        "SPARK_GRAFT_ADMISSION_ONLY=1 conflicts with " +
-          "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      val adm = admissionGateRate(spark, sfDir)
-      // standalone BPE-gate sizing probe (r16 verdict ask #4): fused
-      // native expression at the realistic 128-merge table and the
-      // registered 8-merge one, the retained fold spelling at 8 (its
-      // tree growth forbids 128 — the point of the fuse), and the bare
-      // replay, so the attributed per-row marginal is a number in the
-      // artifact: 1000·(1/rate − 1/passthrough)
-      val bpeJson = {
-        val pass = bpeGateRate(spark, sfDir, 0, fused = true)
-        val f128 = bpeGateRate(spark, sfDir, 128, fused = true)
-        val f8 = bpeGateRate(spark, sfDir, 8, fused = true)
-        val fold8 = bpeGateRate(spark, sfDir, 8, fused = false)
-        Seq(pass.json("bpe_gate_passthrough"), f128.json("bpe_gate_fused128"),
-          f8.json("bpe_gate_fused8"), fold8.json("bpe_gate_fold8"),
-          s""""bpe_fused128_marginal_ms_per_row":${marginalMs(f128, pass)}""")
-          .mkString(",")
-      }
-      // SPARK_GRAFT_ADMISSION_SCALE=N (r15 verdict ask #6): re-run the
-      // admission composite over an N× replicated corpus with the six
-      // frozen artifacts REBUILT at that scale, plus the winnow census
-      // gate with the census drawn from the WHOLE corpus at both sizes
-      // — the measured form of the 100 TB claim that the scan-side
-      // stage cost is corpus-independent (the replayed rows are the
-      // same 2000×4 base docs either way; only the model state grows).
-      // env parse + probe body each degrade to an error field instead
-      // of aborting the whole admission_only run (r16 advice: the
-      // per-metric error-blob discipline the other rates follow)
-      val scaledJson = sys.env.get("SPARK_GRAFT_ADMISSION_SCALE")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption.orElse {
-          System.err.println(s"SPARK_GRAFT_ADMISSION_SCALE: not an int: '$v'")
-          None
-        })
-        .filter(_ > 1).map { f =>
-          try {
-            val dir = java.nio.file.Files
-              .createTempDirectory("graft_gates_scale").toString
-            try {
-              writeScaledDocTables(spark, sfDir, dir, f)
-              val a = admissionGateRate(spark, dir)
-              // the Bloom-census escape hatch at the production 2²⁷-bit
-              // sizing, same corpus-census growth (r16 verdict ask #5):
-              // flat base→scaled here is the measured form of "past
-              // tens of millions of fps, switch to the Bloom census"
-              val winnow = Seq(
-                "winnow_census_gate_base" -> winnowGateRate(spark, sfDir, censusFromCorpus = true),
-                "winnow_census_gate_scaled" -> winnowGateRate(spark, dir, censusFromCorpus = true),
-                "winnow_bloom_gate_base" ->
-                  winnowGateRate(spark, sfDir, censusFromCorpus = true, bloom = true),
-                "winnow_bloom_gate_scaled" ->
-                  winnowGateRate(spark, dir, censusFromCorpus = true, bloom = true))
-                .map { case (k, r) => s""""$k":${r.rowsPerSec},"${k}_error":${r.errorJson}""" }
-              s""","admission_scale":{"factor":$f,${a.json("admission_gate")},"admission_stage_rows_per_sec":${a.stagesJson},${winnow.mkString(",")}}"""
-            } finally {
-              graft.operators.Artifacts.deleteRecursively(
-                java.nio.file.Paths.get(dir))
-            }
-          } catch { case t: Throwable =>
-            s""","admission_scale_error":${JsonText.escape(errorText(t))}"""
-          }
-        }.getOrElse("")
-      println(s"""{"metric":"admission_only",${adm.json("admission_gate")},"admission_stage_rows_per_sec":${adm.stagesJson},$bpeJson,"sf":${JsonText.escape(sfDir)}$scaledJson}""")
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_GATES_ONLY=1: run ONLY the standalone streaming gate
-    // rates (docs hygiene chain, span scrub, winnow census, ingest) and
-    // print one JSON line — the isolation mode for adjudicating a
-    // degraded full-run streams section (r17: the full run recorded an
-    // UNTOUCHED scrub gate 2.8× under its band with flat calibration —
-    // the same window-inflation class the per-query anomaly band
-    // catches, but the gate section had no re-probe mode; the
-    // SPARK_GRAFT_ADMISSION_ONLY precedent).
-    if (sys.env.get("SPARK_GRAFT_GATES_ONLY").contains("1")) {
-      require(!scaleOnly && only.isEmpty,
-        "SPARK_GRAFT_GATES_ONLY=1 conflicts with " +
-          "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      val docs = docsGateRate(spark, sfDir)
-      val parts = Seq(
-        docs.json("docs_gate"),
-        s""""docs_gate_stage_rows_per_sec":${docs.stagesJson}""",
-        scrubGateRate(spark, sfDir).json("scrub_gate"),
-        winnowGateRate(spark, sfDir).json("winnow_gate"),
-        winnowGateRate(spark, sfDir, bloom = true).json("winnow_bloom_gate"),
-        textGateRate(spark, sfDir).json("text_gate"),
-        streamIngestRate(spark, sfDir).json("stream_ingest"))
-      println(s"""{"metric":"gates_only",${parts.mkString(",")},"sf":${JsonText.escape(sfDir)}}""")
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_DOCS_ONLY=1: run ONLY the docs hygiene gate (composite
-    // + the r18 per-stage attribution) — the iteration mode for
-    // optimizing its dominant stage (the SPARK_GRAFT_ADMISSION_ONLY
-    // precedent; the full gates-only pass pays four other gates' five-
-    // pass medians per experiment).
-    if (sys.env.get("SPARK_GRAFT_DOCS_ONLY").contains("1")) {
-      require(!scaleOnly && only.isEmpty,
-        "SPARK_GRAFT_DOCS_ONLY=1 conflicts with " +
-          "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      val docs = docsGateRate(spark, sfDir)
-      val batchJson = docsGateBatchProfile(spark, sfDir)
-      println(s"""{"metric":"docs_only",${docs.json("docs_gate")},"docs_gate_stage_rows_per_sec":${docs.stagesJson},"docs_gate_batch_rows_per_sec":$batchJson,"sf":${JsonText.escape(sfDir)}}""")
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_MODELS_ONLY=1: per-stage standalone gate rates at two
-    // MODEL sizes each (r17 verdict ask #7) — the admission attribution
-    // measured demo-sized artifacts; this probe scales the models
-    // (Bloom bits, perplexity/DSIR buckets, BPE merges) rather than the
-    // corpus, so the OPERATIONS.md knob table carries measured slopes
-    // instead of extrapolations.
-    if (sys.env.get("SPARK_GRAFT_MODELS_ONLY").contains("1")) {
-      require(!scaleOnly && only.isEmpty,
-        "SPARK_GRAFT_MODELS_ONLY=1 conflicts with " +
-          "SPARK_GRAFT_SCALE_ONLY / a query-filter arg — unset one")
-      println(s"""{"metric":"models_only",${modelSizingProbe(spark, sfDir)},"sf":${JsonText.escape(sfDir)}}""")
-      spark.stop()
-      return
-    }
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
 
     val warmupDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmupDir).isDirectory) {
@@ -230,7 +68,7 @@ object Bench {
         .filter { case (name, _) => selected(name) }
         .foreach { case (_, fn) =>
           try run(fn(spark, warmupDir)) catch { case _: Throwable => () }
-          dropLingeringBlocks()
+          dropBlocks(spark)
         }
     }
 
@@ -295,7 +133,7 @@ object Bench {
         val t0 = System.nanoTime()
         val r = try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
         catch { case t: Throwable => lastErr = errorText(t); None }
-        dropLingeringBlocks()
+        dropBlocks(spark)
         r
       }
       // a sample is suspect when it exceeds the prior-round band AND an
@@ -330,9 +168,7 @@ object Bench {
     // filter used to exit first and silently skip the requested probe);
     // with both set the probe runs over the intersection `selected` built
     if (scaleOnly) {
-      val scaleJson = scaleProbe(spark, sfDir, results, run,
-        () => dropLingeringBlocks(), scaleFactors,
-        only = only)
+      val scaleJson = scaleProbe(spark, sfDir, results, scaleFactors, only = only)
       println(s"""{"metric":"scale_only","value":$total,"unit":"sec","base_queries":$qs,"base_errors":$errJson,"sf":${JsonText.escape(sfDir)},"scale":$scaleJson}""")
       spark.stop()
       return
@@ -356,7 +192,7 @@ object Bench {
           run(graft.operators.Curation.curateCompleteStaged(spark, sfDir, stages,
             minCosine = graft.operators.Curation.CompleteMinCosine))
           val secs = (System.nanoTime() - t0) / 1e9
-          dropLingeringBlocks()
+          dropBlocks(spark)
           secs
         }
         math.round(math.min(t(), t()) * 1000.0) / 1000.0
@@ -372,7 +208,7 @@ object Bench {
     // Self-correcting stream-rate headline (r17 verdict ask #2): the
     // prior full run's gate rates arm a band; any rate now measuring
     // >2× UNDER its prior triggers one isolated re-run (the manual
-    // SPARK_GRAFT_GATES_ONLY adjudication of r17, automated in-process)
+    // `graft.Probe gates` adjudication of r17, automated in-process)
     // whose number publishes beside the official one — a degraded run's
     // artifact then needs zero judge reconciliation.
     val priorRates = priorArtifact(tagged).fold(Map.empty[String, Double]) { txt =>
@@ -396,8 +232,7 @@ object Bench {
     val gateBandsJson = jsonMap(gates.flatMap { case (f, _) => priorRates.get(f).map(f -> _) })
     val bloomJson = bloomAssemblyProbe(spark, sfDir)
     val sketchJson = sketchSizingProbe(spark, sfDir)
-    val scaleJson = scaleProbe(spark, sfDir, results, run,
-      () => dropLingeringBlocks(), scaleFactors)
+    val scaleJson = scaleProbe(spark, sfDir, results, scaleFactors)
     calibration("post_scale") = calibrate()
     val calJson = jsonMap(calibration)
     // Cross-round calibration ledger (r10 verdict ask #7): the prior
@@ -657,6 +492,30 @@ object Bench {
     */
   private val MedianRepeatCutoverSec = 2.0
 
+  /** Runs `df` into the noop sink: the FULL plan is evaluated (count()
+    * would let Catalyst prune projections and eliminate final sorts,
+    * timing a bare scan for projection-only queries).
+    */
+  private[graft] def run(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Unpersists every persistent RDD of the session, waiting for the
+    * removal. Several similarity/dedup queries materialize intermediates
+    * via lazy localCheckpoint; their blocks are freed by the
+    * ContextCleaner only when the JVM gets around to GC-ing the RDD
+    * references. Under back-to-back load that lag lets dead blocks pile
+    * up and bleed block-manager/GC pressure into UNRELATED queries (r3
+    * saw untouched queries swing 5x), so measurements call this between
+    * queries to start each one from a clean block manager. Correctness
+    * is unaffected because every run builds its DataFrames (and
+    * checkpoints) anew. Blocking: the call sits OUTSIDE every
+    * timed region, so waiting is free, while async removal would run
+    * inside the next query's timed window. Only for a session that runs
+    * one query at a time.
+    */
+  private[graft] def dropBlocks(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
   /** Multiplier over the prior full run's per-query seconds above which
     * a first sample is treated as window-inflated: re-sampled to a
     * median and, if it persists, flagged `anomalous` in the artifact
@@ -674,11 +533,11 @@ object Bench {
       String.valueOf(t.getMessage).replaceAll("\\s+", " ").take(200)
 
   /** A failed probe's `{"error":…}` object. */
-  private def errorJson(t: Throwable): String =
+  private[graft] def errorJson(t: Throwable): String =
     s"""{"error":${JsonText.escape(errorText(t))}}"""
 
   /** A JSON object of name → value, values printed as they are. */
-  private def jsonMap(m: Iterable[(String, Any)]): String =
+  private[graft] def jsonMap(m: Iterable[(String, Any)]): String =
     m.map { case (k, v) => JsonText.escape(k) + ":" + v }.mkString("{", ",", "}")
 
   /** The text of a previous run's artifact at `path`, if there is one:
@@ -752,8 +611,7 @@ object Bench {
         .localCheckpoint() // isolate assembly cost from the corpus scan
       def time(numBits: Long): Double = {
         val t0 = System.nanoTime()
-        graft.operators.Decontam.bloomFrom(digests, numBits, 7)
-          .write.format("noop").mode("overwrite").save()
+        run(graft.operators.Decontam.bloomFrom(digests, numBits, 7))
         (System.nanoTime() - t0) / 1e9
       }
       time(1L << 20) // warmup: codegen + shuffle-path init, not billed
@@ -816,8 +674,6 @@ object Bench {
 
   private def scaleProbe(spark: SparkSession, sfDir: String,
       base: Map[String, Double],
-      run: org.apache.spark.sql.DataFrame => Unit,
-      dropBlocks: () => Unit,
       factors: Seq[Int],
       only: Set[String] = Set.empty): String = {
     // the FIRST factor's JSON stays the `scale` field (driver contract
@@ -831,7 +687,7 @@ object Bench {
     val baseRowsCache = scala.collection.mutable.LinkedHashMap[String, Long]()
     val baseRecallCache = scala.collection.mutable.LinkedHashMap[String, String]()
     val jsons = factors.map(f =>
-      f -> probeAtFactor(spark, sfDir, base, run, dropBlocks, f,
+      f -> probeAtFactor(spark, sfDir, base, f,
         baseRowsCache, baseRecallCache, only))
     // EVERY factor archives (r17 verdict ask #4; previously the first
     // factor of a full run lived only in the per-round `scale` field):
@@ -881,11 +737,11 @@ object Bench {
   /** Replicate the two document-modality tables `factor`× into `dir`
     * with the shared id stride and the replica-token text prefix — the
     * document half of [[probeAtFactor]]'s corpus materializer, shared
-    * with the gate-rate scale probe (r15 verdict ask #6), which needs
+    * with `Probe admission N` (r15 verdict ask #6), which needs
     * documents + embeddings (everything the admission artifacts train
     * on) but not events.
     */
-  private def writeScaledDocTables(spark: SparkSession, sfDir: String,
+  private[graft] def writeScaledDocTables(spark: SparkSession, sfDir: String,
       dir: String, factor: Int): Unit = {
     import org.apache.spark.sql.functions._
     val reps = spark.range(factor).select(col("id").cast("long").as("r"))
@@ -907,9 +763,7 @@ object Bench {
   }
 
   private def probeAtFactor(spark: SparkSession, sfDir: String,
-      base: Map[String, Double],
-      run: org.apache.spark.sql.DataFrame => Unit,
-      dropBlocks: () => Unit, factor: Int,
+      base: Map[String, Double], factor: Int,
       baseRowsCache: scala.collection.mutable.Map[String, Long],
       baseRecallCache: scala.collection.mutable.Map[String, String],
       only: Set[String] = Set.empty): String = {
@@ -929,7 +783,7 @@ object Bench {
             col("event_type"), col("value"), col("props"))
           .write.mode("overwrite").parquet(s"$dir/events.parquet")
         val writeSec = (System.nanoTime() - t0) / 1e9
-        dropBlocks()
+        dropBlocks(spark)
 
         // prior same-factor per-query band (r17 verdict ask #4): the
         // sf-suite anomaly discipline applied to the scale sections —
@@ -959,7 +813,7 @@ object Bench {
               val s0 = System.nanoTime()
               val r = try { run(fn(spark, dir)); Some((System.nanoTime() - s0) / 1e9) }
               catch { case t: Throwable => lastErr = errorText(t); None }
-              dropBlocks()
+              dropBlocks(spark)
               r
             }
             var times = (1 to 2).flatMap(_ => onceTimed())
@@ -984,7 +838,7 @@ object Bench {
                 if (!baseRowsCache.contains(name))
                   baseRowsCache(name) = fn(spark, sfDir).count()
               } catch { case scala.util.control.NonFatal(_) => () }
-              dropBlocks()
+              dropBlocks(spark)
               Some(name -> times.min)
             }
           }
@@ -998,7 +852,7 @@ object Bench {
             df: => org.apache.spark.sql.DataFrame): Seq[String] =
           try {
             val rows = df.collect()
-            dropBlocks()
+            dropBlocks(spark)
             rows.map(r => JsonText.escape(r.getString(0)) + ":" + r.getLong(1)).toSeq
           } catch { case t: Throwable => errors(label) = errorText(t); Seq.empty }
         // at a big factor the text-sketch tracker is excluded: its TRUTH
@@ -1171,7 +1025,7 @@ object Bench {
     * monotone times keep the docs gate's horizon state bounded. Replayed
     * in [[DocChunk]]-row micro-batches.
     */
-  private def replayDocs(spark: SparkSession,
+  private[graft] def replayDocs(spark: SparkSession,
       sfDir: String): (Array[(Long, String)], Seq[(Long, Timestamp, String)]) = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -1219,7 +1073,7 @@ object Bench {
   /** The headline stream rates, in artifact order. Each carries a
     * prior-round band (r17 verdict ask #2): a rate landing more than
     * [[GateRateBandFactor]]× UNDER its prior value triggers one
-    * in-process isolated re-run (the gates-only adjudication, automated),
+    * in-process isolated re-run (the `Probe gates` adjudication, automated),
     * published beside the official number with the `window_flagged`
     * marker.
     */
@@ -1238,7 +1092,7 @@ object Bench {
   /** Marginal ms/row of a gate over the bare replay,
     * 1000·(1/rate − 1/passthrough); -1.0 unless both rates ran.
     */
-  private def marginalMs(gate: Rate, pass: Rate): Double =
+  private[graft] def marginalMs(gate: Rate, pass: Rate): Double =
     if (pass.rowsPerSec > 0 && gate.rowsPerSec > 0)
       math.round((1000.0 / gate.rowsPerSec - 1000.0 / pass.rowsPerSec) * 10000.0) / 10000.0
     else -1.0
@@ -1249,7 +1103,7 @@ object Bench {
     * (r10 verdict ask #6): with one, the first timed pass still ran ~3×
     * under the rest, stream-init/JIT cost leaking into the sample.
     */
-  private def streamIngestRate(spark: SparkSession, sfDir: String): Rate =
+  private[graft] def streamIngestRate(spark: SparkSession, sfDir: String): Rate =
     measure(warmups = 2) {
       import spark.implicits._
       val chunks = replayEvents(spark, sfDir).grouped(50000).toSeq
@@ -1267,7 +1121,7 @@ object Bench {
     * no gate), so "how much of the composite is harness" is a field in
     * the artifact.
     */
-  private def docsGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
+  private[graft] def docsGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
     val chunks = replayDocs(spark, sfDir)._2.grouped(DocChunk).toSeq
     val pass = (stages: Int) => () => docsGatePass(spark, chunks, stages)
     val stages = prefixRates(DocsGateStages.zipWithIndex.map { case (nm, i) => nm -> pass(i) })
@@ -1277,7 +1131,7 @@ object Bench {
   private val DocsGateStages = Seq("replay", "pii", "decontam", "quality", "dedup", "split")
 
   /** One pass of the hygiene-chain prefix `stages` (0 = bare replay). */
-  private def docsGatePass(spark: SparkSession,
+  private[graft] def docsGatePass(spark: SparkSession,
       chunks: Seq[Seq[(Long, Timestamp, String)]], stages: Int): Double = {
     import spark.implicits._
     streamPass(spark, Seq("doc_id", "ingest_time", "text"), chunks) { sdf =>
@@ -1287,25 +1141,6 @@ object Bench {
     }
   }
 
-  /** Micro-batch-size profile of the FULL hygiene chain (r17 verdict
-    * ask #1's adjudication arm): the per-stage attribution put the
-    * post-fuse residual on the STATEFUL dedup stage, whose state-store
-    * exchange + per-partition commit is a fixed cost per micro-batch —
-    * a hypothesis this probe measures directly by replaying the same
-    * 8k rows at 1k/2k/4k/8k chunk sizes. Rate rising with chunk size =
-    * the cost is per-batch fixed and amortizes at production batch
-    * sizes (millions of rows per trigger at 100 TB ingest), not
-    * per-row work this repo could fuse away.
-    */
-  private def docsGateBatchProfile(spark: SparkSession, sfDir: String): String =
-    try {
-      val rows = replayDocs(spark, sfDir)._2
-      jsonMap(prefixRates(Seq(1000, 2000, 4000, 8000).map { c =>
-        val chunks = rows.grouped(c).toSeq
-        s"b$c" -> (() => docsGatePass(spark, chunks, 5))
-      }))
-    } catch { case t: Throwable => errorJson(t) }
-
   /** A (doc_id, text) gate's rate over the doc replay through the noop
     * sink, one warm-up. `gate` receives the base docs first (untimed
     * setup) for the gates whose frozen census is built from exactly
@@ -1313,7 +1148,7 @@ object Bench {
     * the caller's (the admission discipline: every doc pays the full
     * scoring cost).
     */
-  private def replayGateRate(spark: SparkSession, sfDir: String)(
+  private[graft] def replayGateRate(spark: SparkSession, sfDir: String)(
       gate: Array[(Long, String)] => DataFrame => DataFrame): Rate =
     measure(warmups = 1) {
       import spark.implicits._
@@ -1335,7 +1170,7 @@ object Bench {
     * static side of the stream-static join is materialized once, not
     * re-aggregated per micro-batch.
     */
-  private def scrubGateRate(spark: SparkSession, sfDir: String): Rate =
+  private[graft] def scrubGateRate(spark: SparkSession, sfDir: String): Rate =
     replayGateRate(spark, sfDir) { base =>
       import spark.implicits._
       val census = graft.operators.Dedup.duplicateNgramHashesFrom(
@@ -1353,7 +1188,7 @@ object Bench {
     * scan-bound within a few × of the bare replay; this rate catches a
     * regression to anything interpreted or super-linear in doc length.
     */
-  private def textGateRate(spark: SparkSession, sfDir: String): Rate =
+  private[graft] def textGateRate(spark: SparkSession, sfDir: String): Rate =
     replayGateRate(spark, sfDir)(_ => sdf =>
       StreamingFeatures.repetitionGateStream(StreamingFeatures.gopherGateStream(sdf)))
 
@@ -1370,7 +1205,7 @@ object Bench {
     * [[StreamingFeatures.winnowGateStreamBloom]] at the production
     * 2²⁷-bit sizing (r16 verdict ask #5).
     */
-  private def winnowGateRate(spark: SparkSession, sfDir: String,
+  private[graft] def winnowGateRate(spark: SparkSession, sfDir: String,
       censusFromCorpus: Boolean = false, bloom: Boolean = false): Rate =
     replayGateRate(spark, sfDir) { base =>
       import spark.implicits._
@@ -1398,7 +1233,7 @@ object Bench {
     * turns "the composite is the slowest gate" into "THIS stage owns the
     * cost" (r14 verdict ask #4).
     */
-  private def admissionGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
+  private[graft] def admissionGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
     import spark.implicits._
     val artDir = Files.createTempDirectory("graft_admission_models")
     try {
@@ -1425,7 +1260,7 @@ object Bench {
     * is computable inside the artifact. Merge tables come from the
     * zero-jobs-per-merge sampled learner on the sf corpus.
     */
-  private def bpeGateRate(spark: SparkSession, sfDir: String,
+  private[graft] def bpeGateRate(spark: SparkSession, sfDir: String,
       nMerges: Int, fused: Boolean): Rate =
     replayGateRate(spark, sfDir) { _ =>
       val merges: Seq[(String, String)] =
@@ -1436,70 +1271,6 @@ object Bench {
         else if (fused) StreamingFeatures.bpeBudgetGateStream(sdf, merges, Long.MaxValue)
         else StreamingFeatures.bpeBudgetGateStreamFold(sdf, merges, Long.MaxValue)
     }
-
-  /** Model-size sizing probe (r17 verdict ask #7): each artifact-driven
-    * admission stage re-measured standalone at a demo-adjacent and a
-    * production-shaped MODEL size — Bloom 2²⁰ vs 2²⁷ bits, bigram
-    * perplexity 256 vs 4096 buckets, DSIR 256 vs 4096 buckets, fused
-    * BPE 2⁷ vs 2¹⁰ merges — over the same fixed replay, with a
-    * passthrough row so each rate carries its marginal ms/row. The
-    * architectural claim being measured: every one of these gates is a
-    * per-token probe into a dense array / bitset / bounded memo, so
-    * the per-row cost should be FLAT in model size (the model grows the
-    * broadcast once, not the inner loop) — a measured slope replaces
-    * the OPERATIONS.md extrapolation either way. Thresholds are set
-    * non-dropping so every doc pays every stage's full scoring cost.
-    */
-  private def modelSizingProbe(spark: SparkSession, sfDir: String): String = {
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    val pass = replayGateRate(spark, sfDir)(_ => df => df)
-    parts += pass.json("passthrough")
-    def withMarginal(tag: String, r: Rate): Unit =
-      parts += r.json(tag) + s""","${tag}_marginal_ms_per_row":${marginalMs(r, pass)}"""
-    def failed(tag: String, t: Throwable): Unit =
-      parts += s""""${tag}_error":${JsonText.escape(errorText(t))}"""
-    // Bloom decontam at the registered and production bit sizings —
-    // the bitset array grows 128×, the per-token probe count does not
-    val digests = try {
-      Some(graft.operators.Decontam.benchmarkDigests(spark, sfDir)
-        .localCheckpoint())
-    } catch { case NonFatal(t) => failed("bloom", t); None }
-    digests.foreach { d =>
-      Seq(20, 27).foreach { bits =>
-        val numBits = 1L << bits
-        val bloom = graft.operators.Decontam
-          .bloomFrom(d, numBits, graft.operators.Decontam.DefaultBloomK)
-          .localCheckpoint()
-        withMarginal(s"bloom_bits$bits", replayGateRate(spark, sfDir)(_ => df =>
-          StreamingFeatures.bloomDecontamGateStreamLoaded(df, bloom, numBits,
-            graft.operators.Decontam.DefaultBloomK, minFrac = 1.1)))
-      }
-    }
-    // bigram perplexity at 256 vs 4096 model buckets — the dense model
-    // array grows 16×, the per-pair bucket+lookup does not
-    Seq(256, 4096).foreach { nb =>
-      try {
-        val model = graft.operators.Perplexity
-          .referenceNlpBigram(spark, sfDir, nBuckets = nb).localCheckpoint()
-        withMarginal(s"perplexity_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
-          StreamingFeatures.perplexityGateStreamBigram(df, model, Long.MaxValue, nb)))
-      } catch { case NonFatal(t) => failed(s"perplexity_buckets$nb", t) }
-    }
-    // DSIR at 256 vs 4096 model buckets — same dense-array shape
-    Seq(256, 4096).foreach { nb =>
-      try {
-        val model = graft.operators.Dsir
-          .logRatios(spark, sfDir, nBuckets = nb).localCheckpoint()
-        withMarginal(s"dsir_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
-          StreamingFeatures.dsirGateStream(df, model, Long.MinValue, nb)))
-      } catch { case NonFatal(t) => failed(s"dsir_buckets$nb", t) }
-    }
-    // fused BPE at 2⁷ vs 2¹⁰ merges — the bounded per-task memo means
-    // deeper tables pay at memo-miss time only
-    Seq(128, 1024).foreach(m =>
-      withMarginal(s"bpe_merges$m", bpeGateRate(spark, sfDir, m, fused = true)))
-    parts.mkString(",")
-  }
 
   /** End-to-end feature-pipeline replay (r10 verdict ask #8) — the E2
     * lifecycle of SURVEY §3 as a MEASURED number instead of a spec: the

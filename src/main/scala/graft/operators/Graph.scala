@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed exact connected components — the alternating
@@ -48,27 +49,20 @@ object Graph {
     * or round count.
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-
     // r19 (verdict ask #1 — the q_simhash_components in-suite blow-up):
     // every round eagerly checkpoints a fresh edge frame, and the
     // SUPERSEDED round's blocks previously lingered until the
     // ContextCleaner GC'd the dead Dataset reference — under mid-suite
     // block-manager/GC pressure those dead blocks bleed into the live
     // rounds (the exact r3 cross-query pattern, here WITHIN one query's
-    // iteration). Track each round's newly persisted RDDs by diffing
-    // the context's persistent-RDD ids around the checkpoint call (the
-    // checkpointed internal RDD is not reachable from the Dataset API)
-    // and drop them the moment the next round is materialized and
-    // compared. Sound because the engine's driver mains run one query
-    // at a time (Bench/Verify are single-threaded), so the diff can
-    // only see this loop's own checkpoints.
+    // iteration). Each round's checkpointed RDD is the one under the
+    // checkpointed Dataset's own LogicalRDD, and it is dropped the
+    // moment the next round is materialized and compared. Taken from
+    // that plan, never from the context's persistent-RDD set, so a
+    // concurrent query on the same session keeps its own blocks.
     def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
       val cp = df.localCheckpoint()
-      (cp, sc.getPersistentRDDs.collect {
-        case (id, r) if !before.contains(id) => r }.toSeq)
+      (cp, cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
     }
 
     // canonical start: point every edge from the larger to the smaller

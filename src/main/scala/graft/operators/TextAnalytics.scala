@@ -1871,19 +1871,21 @@ object TextAnalytics {
     // (per-cell won by ~10% warm) because under parallelism-first AQE
     // the per-cell window passes ran as concurrent stages on idle
     // cores; with r19's size-driven partition coalescing the verdict's
-    // predicted inversion holds at BOTH core counts (Probe
-    // winnow_cascade, medians: 8 cores 7.32 → 6.74 s, 32 cores 6.56 →
-    // 6.27 s; rows_identical asserted per run, and the per-cell arm
-    // stays below as the probe's independent spelling).
+    // predicted inversion holds at BOTH core counts (r19 A/B, medians:
+    // 8 cores 7.32 → 6.74 s, 32 cores 6.56 → 6.27 s, rows identical on
+    // every run). The per-cell spelling below stays as the independent
+    // spelling CorpusOpsSpec checks the cascade against.
     winnowTuningCascade(spark, dir, grid, minShared)
 
   /** The pre-r19 per-cell spelling of [[winnowTuning]] — retained as
-    * the probe's independent arm (graft.Probe "winnow_cascade" asserts
-    * row-identity against the cascade every run) and as the fallback
-    * for k groups whose w axis is not a doubling chain. One
-    * tokenize+hash pass per k, shared by every w cell (the r11 bench
-    * caught the naive per-cell form re-hashing the corpus five times);
-    * then one window pass per cell.
+    * the independent spelling the registered cascade is checked against
+    * (CorpusOpsSpec asserts row identity on the registered grid and on a
+    * non-doubling one). The cascade does not call it: its fallback for k
+    * groups whose w axis is not a doubling chain is its own branch, kept
+    * separate so the two spellings stay independent. One tokenize+hash
+    * pass per k, shared by every w cell (the r11 bench caught the naive
+    * per-cell form re-hashing the corpus five times); then one window
+    * pass per cell.
     */
   private[graft] def winnowTuningPerCell(spark: SparkSession, dir: String,
       grid: Seq[(Int, Int)] = WinnowGrid,

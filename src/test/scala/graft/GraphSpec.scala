@@ -63,6 +63,25 @@ class GraphSpec extends AnyFunSuite {
       .get(id).foreach(_.unpersist(blocking = false)))
   }
 
+  /** Min-id component labels by union-find, for every node of `edges`
+    * that has an edge other than a self-loop.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val proper = edges.filter(e => e._1 != e._2)
+    val nodes = proper.flatMap(e => Seq(e._1, e._2)).distinct
+    val parent = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    proper.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(x => x -> find(x)).toMap
+  }
+
   test("components equal union-find on a seeded random graph") {
     // sparse regime (edges < nodes) maximizes component count and path
     // length — the shapes the alternating-star rounds must handle
@@ -70,19 +89,25 @@ class GraphSpec extends AnyFunSuite {
     val n = 300
     val edges = Seq.fill(260)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter(e => e._1 != e._2)
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    val parent = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      r
+    assert(components(edges) == unionFind(edges))
+  }
+
+  test("two CC calls on one session from two threads keep each other's checkpoints") {
+    // each round releases only the checkpoint under its own Dataset's
+    // plan: a release chosen by diffing the session's persistent RDDs
+    // also frees the other thread's live round, whose next read then
+    // fails for want of its checkpoint blocks
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val rnd = new scala.util.Random(7)
+    val random = Seq.fill(260)((1000L + rnd.nextInt(300), 1000L + rnd.nextInt(300)))
+      .filter(e => e._1 != e._2)
+    val runs = Seq(path, random).map(edges => Future(edges -> components(edges)))
+    Await.result(Future.sequence(runs), 5.minutes).foreach { case (edges, got) =>
+      assert(got == unionFind(edges))
     }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val oracle = nodes.map(x => x -> find(x)).toMap
-    assert(components(edges) == oracle)
   }
 
   test("simhash components match a union-find oracle and only coarsen the star partition") {

@@ -352,10 +352,10 @@ class PlanSpec extends AnyFunSuite {
     // runtime warning source is the IVF centroid SEED (row_number over
     // an `orderBy.limit(nCells)` frame, ≤ 16 rows — Similarity's
     // codebook builder, materialized behind a checkpoint boundary so it
-    // never appears in a registered query's final plan; graft.Probe
-    // window_audit enumerates both classes). Any NEW query landing a
-    // partition-less window fails this set equality and must either
-    // partition it or justify itself here.
+    // never appears in a registered query's final plan). This test is
+    // the enumeration: it walks every registered query's optimized plan.
+    // Any NEW query landing a partition-less window fails this set
+    // equality and must either partition it or justify itself here.
     val pinned = Set("q_packing_stats", "q_pack_sequences",
       "q_spike_events", "q_type_distribution")
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
@@ -373,5 +373,22 @@ class PlanSpec extends AnyFunSuite {
     }.toSet
     assert(offenders == pinned,
       s"single-partition-window set drifted: got $offenders, pinned $pinned")
+  }
+
+  test("text gates land each fused census once in the optimized plan") {
+    // r19: filter pushdown inlined a deterministic census into the
+    // Filter condition once per field reference (multi x18, gopherstats
+    // x12 before the stream gates passed pushable = false, x1/x1 after);
+    // FilterExec has no subexpression elimination, so each copy re-ran
+    // the whole per-document sweep
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.StreamingFeatures
+    val docs = Tables.documents(spark, sf)
+      .filter(col("text").isNotNull)
+      .select("doc_id", "text")
+    val plan = StreamingFeatures.repetitionGateStream(
+      StreamingFeatures.gopherGateStream(docs)).queryExecution.optimizedPlan.toString
+    assert("ngramrepstatsmulti".r.findAllIn(plan).size == 1, plan)
+    assert("gopherstats".r.findAllIn(plan).size == 1, plan)
   }
 }
