@@ -7,11 +7,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.functions.{TextHashes, VectorFunctions}
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions at session build
-  * (`--conf spark.sql.extensions=graft.GraftExtensions`), the idiomatic
-  * deployment path. [[TextHashes.register]] remains for sessions we don't
-  * construct (the verify driver's).
+/** SparkSessionExtensions entry point and the engine's one SQL function
+  * registry: registers the native expressions as SQL functions at session
+  * build (`--conf spark.sql.extensions=graft.GraftExtensions`). The
+  * engine's own queries use the Column API and need no registration.
   *
   * ```
   * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()

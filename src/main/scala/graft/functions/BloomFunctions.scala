@@ -1,10 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Kernel.{argCheck, call, Bigint, BigintArray, Str}
 
 /** Bloom-filter primitives over 64-bit digests, as native codegen'd
   * Catalyst expressions (the repo's zero-UDF rule) — the membership
@@ -31,13 +35,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * compatibility consequence (r10 advice): the fmix64 pre-finalizer
   * landed in round 10 and moved EVERY probe position, so a filter's
   * words and its probes must come from the same code version — no
-  * persisted-filter compatibility across that boundary. No consumer
-  * persists filters today (every registered path builds and probes
-  * in-session; the streaming gate's plan literal is rebuilt at each
-  * gate construction); anyone adding a persisted-filter path must
-  * version the filter artifact alongside this hash family. There is
-  * no cross-engine twin to match (which is also why every consumer
-  * registers rows-only).
+  * persisted-filter compatibility across that boundary: persisted
+  * filters ([[graft.operators.Artifacts]]) carry
+  * [[TextHashes.HashFamilyVersion]] and refuse to load across a
+  * family change.
   *
   * The filter itself is a dense little-endian bitset: word w =
   * bits [64w, 64w+64), bit j of word w = position 64w + j. Built in
@@ -54,6 +55,10 @@ object BloomFunctions {
     * sizings.
     */
   val MaxNumBits: Long = 1L << 37
+
+  private def sizing(numBits: Long, k: Int): Option[String] =
+    argCheck(numBits >= 64 && numBits <= MaxNumBits && k >= 1 && k <= 64,
+      s"requires 64 <= numBits <= $MaxNumBits and 1 <= k <= 64, got ($numBits, $k)")
 
   /** MurmurHash3's 64-bit finalizer (public domain, Austin Appleby):
     * two xor-shift/multiply rounds → full avalanche. Applied to every
@@ -111,10 +116,10 @@ object BloomFunctions {
 
   /** Plain-array twin of [[bloomContains]] for the broadcast probe path
     * (a Broadcast ships a JVM long[], not Catalyst ArrayData). Same
-    * formula line-for-line — the literal-vs-broadcast equality spec
-    * pins the two against drift.
+    * formula line-for-line — BloomSpec's column-versus-broadcast
+    * equality spec pins the two against drift.
     */
-  def bloomContainsWords(words: Array[Long], v: Long, numBits: Long, k: Int): Boolean = {
+  def bloomContainsWords(v: Long, words: Array[Long], numBits: Long, k: Int): Boolean = {
     val m = fmix64(v)
     val h2 = (m >>> 32) | 1L
     var p = m
@@ -129,98 +134,39 @@ object BloomFunctions {
     true
   }
 
-  /** Above this filter size the streaming gates switch from a plan
-    * literal to an `sc.broadcast` handle: a literal is serialized into
-    * EVERY task of every micro-batch (free at the registered 2²⁰ =
-    * 128 KB, but 16 MB/task at the 2²⁷ production ceiling), while a
-    * torrent broadcast ships each executor one copy once. Below the
-    * threshold the literal stays preferable — no broadcast-manager
-    * bookkeeping, and the value is visible in the plan for debugging.
-    */
-  val BroadcastThresholdBits: Long = 1L << 25
-
   /** `bloom_positions(digest)` → ARRAY<BIGINT> (see [[bloomPositions]]).
     * numBits/k are construction-time constants, baked into the
     * generated code as literals.
     */
   case class BloomPositions64(child: Expression, numBits: Long, k: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numBits < 64 || numBits > MaxNumBits || k < 1 || k > 64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_positions requires 64 <= numBits <= $MaxNumBits and 1 <= k <= 64, got ($numBits, $k)")
-      else if (child.dataType == LongType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bloom_positions requires bigint input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      bloomPositions(input.asInstanceOf[Long], numBits, k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.bloomPositions($c, ${numBits}L, $k);")
-    override protected def withNewChildInternal(newChild: Expression): BloomPositions64 =
-      copy(child = newChild)
+      extends Kernel.Unary("bloom_positions", Bigint, ArrayType(LongType, containsNull = false)) {
+    override protected def argError = sizing(numBits, k)
+    protected def kernel = call(BloomFunctions, "bloomPositions", numBits, k)
+    override protected def withNewChildInternal(c: Expression): BloomPositions64 = copy(child = c)
   }
 
   /** `bloom_contains(words, digest)` → BOOLEAN (see [[bloomContains]]). */
-  case class BloomContains64(left: Expression, right: Expression,
-      numBits: Long, k: Int) extends BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numBits < 64 || numBits > MaxNumBits || k < 1 || k > 64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_contains requires 64 <= numBits <= $MaxNumBits and 1 <= k <= 64, got ($numBits, $k)")
-      else (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), LongType) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"bloom_contains requires (array<bigint>, bigint), got $other")
-      }
-    override protected def nullSafeEval(a: Any, v: Any): Any =
-      bloomContains(a.asInstanceOf[ArrayData], v.asInstanceOf[Long], numBits, k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, v) =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.bloomContains($a, $v, ${numBits}L, $k);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): BloomContains64 =
-      copy(left = newLeft, right = newRight)
+  case class BloomContains64(left: Expression, right: Expression, numBits: Long, k: Int)
+      extends Kernel.Binary("bloom_contains", BigintArray, Bigint, BooleanType) {
+    override protected def argError = sizing(numBits, k)
+    protected def kernel = call(BloomFunctions, "bloomContains", numBits, k)
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomContains64 =
+      copy(left = l, right = r)
   }
 
   /** `bloom_contains_bc(digest)` → BOOLEAN — [[BloomContains64]] with
-    * the bitset behind an `sc.broadcast` handle instead of a plan
-    * literal (see [[BroadcastThresholdBits]] for when). The expression
-    * itself carries only the lightweight Broadcast reference; codegen
-    * resolves `.value()` ONCE into a mutable member at operator init,
-    * so the per-row probe reads a plain long[] exactly as the literal
-    * path reads its ArrayData — same formula, same early exit
-    * ([[bloomContainsWords]]).
+    * the bitset behind an `sc.broadcast` handle instead of a column:
+    * the form frozen gate state takes. The expression carries only the
+    * lightweight Broadcast reference, resolved once per generated-code
+    * instance ([[Kernel]]), so the per-row probe reads a plain long[] —
+    * same formula, same early exit ([[bloomContainsWords]]).
     */
-  case class BloomContainsBroadcast64(child: Expression,
-      words: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      numBits: Long, k: Int) extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numBits < 64 || numBits > MaxNumBits || k < 1 || k > 64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_contains_bc requires 64 <= numBits <= $MaxNumBits and 1 <= k <= 64, got ($numBits, $k)")
-      else if (child.dataType == LongType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bloom_contains_bc requires bigint input, got ${child.dataType}")
-    override protected def nullSafeEval(v: Any): Any =
-      bloomContainsWords(words.value, v.asInstanceOf[Long], numBits, k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftBloomBc", words,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftBloomWords",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.bloomContainsWords($arr, $c, ${numBits}L, $k);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BloomContainsBroadcast64 =
-      copy(child = newChild)
+  case class BloomContainsBroadcast64(child: Expression, words: Broadcast[Array[Long]],
+      numBits: Long, k: Int) extends Kernel.Unary("bloom_contains_bc", Bigint, BooleanType) {
+    override protected def argError = sizing(numBits, k)
+    protected def kernel = call(BloomFunctions, "bloomContainsWords", words, numBits, k)
+    override protected def withNewChildInternal(c: Expression): BloomContainsBroadcast64 =
+      copy(child = c)
   }
 
   /** Dense little-endian bitset from the SPARSE (word-index, word)
@@ -269,27 +215,18 @@ object BloomFunctions {
     * (word-index, word) pairs.
     */
   case class DenseBitset64(child: Expression, numWords: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numWords < 1 || numWords > MaxDenseWords)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dense_bitset requires 1 <= numWords <= $MaxDenseWords, got $numWords")
-      else child.dataType match {
-        case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-            if s.length == 2 && s.forall(_.dataType == LongType) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"dense_bitset requires array<struct<bigint, bigint>>, got $other")
-      }
-    override protected def nullSafeEval(input: Any): Any =
-      denseBitset(input.asInstanceOf[ArrayData], numWords)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.denseBitset($c, $numWords);")
-    override protected def withNewChildInternal(newChild: Expression): DenseBitset64 =
-      copy(child = newChild)
+      extends Kernel.Unary("dense_bitset", IndexWordPairs, ArrayType(LongType, containsNull = false)) {
+    override protected def argError = argCheck(numWords >= 1 && numWords <= MaxDenseWords,
+      s"requires 1 <= numWords <= $MaxDenseWords, got $numWords")
+    protected def kernel = call(BloomFunctions, "denseBitset", numWords)
+    override protected def withNewChildInternal(c: Expression): DenseBitset64 = copy(child = c)
+  }
+
+  private val IndexWordPairs = new Kernel.In("array<struct<bigint, bigint>>") {
+    def accepts(t: DataType): Boolean = t match {
+      case ArrayType(s: StructType, _) => s.length == 2 && s.forall(_.dataType == LongType)
+      case _ => false
+    }
   }
 
   /** Digest family selectors for [[shingleHits]] — which 64-bit digest
@@ -307,166 +244,58 @@ object BloomFunctions {
     * per-element `filter(shingles, probe)` higher-order functions —
     * HOFs never codegen, and each window allocated a concat'd string).
     *
-    * Exact semantics of the algebra it replaces, via the byte-span
-    * identity [[TextHashes.ngramHashes64]] proved: splitting on every
-    * 0x20 and rejoining a window with single spaces is the identity on
-    * the original substring, so each window IS a byte span of the
-    * input — no window string is materialized. Distinctness matches
-    * `array_distinct` (byte equality via UTF8String views into the
-    * span); each distinct shingle probes ONCE, exactly like probing
-    * the distinct array. Digests: [[FamilyFingerprint62]] →
+    * Exact semantics of the algebra it replaces: the census is
+    * [[TextHashes.spanCensus]] (each distinct shingle a byte-span view,
+    * probed ONCE, exactly like probing the distinct array) with a Bloom
+    * probe as the membership test. Digests: [[FamilyFingerprint62]] →
     * [[TextHashes.fingerprint62]] over the span (the artifact-serving
     * gate's batch family), [[FamilyXxhash64]] → Spark's `xxhash64`
     * seed 42 over the span bytes (the self-building gate's family).
-    *
-    * Returns total·2³² + hits packed in one BIGINT (both counts are
-    * bounded by the token count of a ≤ 2³¹-byte string, so the packing
-    * is exact); fewer than n tokens → 0 (total 0, hits 0).
+    * Returns total·2³² + hits packed in one BIGINT; fewer than n
+    * tokens → 0.
     */
-  def shingleHits(s: org.apache.spark.unsafe.types.UTF8String, n: Int,
-      words: Array[Long], numBits: Long, k: Int, family: Int): Long = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
-    if (nTok < n) return 0L
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
-    val nWin = nTok - n + 1
-    val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](
-      nWin * 2)
-    var total = 0L
-    var hits = 0L
-    var w = 0
-    while (w < nWin) {
-      val s0 = starts(w)
-      val e = if (w + n < nTok) starts(w + n) - 1 else len
-      val span = org.apache.spark.unsafe.types.UTF8String
-        .fromAddress(base, off + s0, e - s0)
-      if (seen.add(span)) {
-        total += 1
-        val digest =
-          if (family == FamilyFingerprint62) TextHashes.fingerprint62(span)
-          else org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashUnsafeBytes(base, off + s0, e - s0, 42L)
-        if (bloomContainsWords(words, digest, numBits, k)) hits += 1
-      }
-      w += 1
-    }
-    (total << 32) | hits
-  }
+  def shingleHits(s: UTF8String, n: Int,
+      words: Array[Long], numBits: Long, k: Int, family: Int): Long =
+    TextHashes.spanCensus(s, n, span => bloomContainsWords(
+      if (family == FamilyFingerprint62) TextHashes.fingerprint62(span)
+      else XXH64.hashUnsafeBytes(span.getBaseObject, span.getBaseOffset, span.numBytes, 42L),
+      words, numBits, k))
 
-  /** `shingle_hits(text)` → BIGINT total·2³² + hits (see
-    * [[shingleHits]]) with the bitset carried as a plain constructor
-    * array — the same task-serialization class as the literal probe
-    * (below [[BroadcastThresholdBits]]).
+  /** `shingle_hits_bc(text)` → BIGINT total·2³² + hits (see
+    * [[shingleHits]]), the bitset behind an `sc.broadcast` handle like
+    * [[BloomContainsBroadcast64]]'s.
     */
-  case class BloomShingleHits(child: Expression, words: Array[Long],
-      n: Int, numBits: Long, k: Int, family: Int) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numBits < 64 || numBits > MaxNumBits || k < 1 || k > 64 || n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hits requires 64 <= numBits <= $MaxNumBits, 1 <= k <= 64, n >= 1, got ($numBits, $k, $n)")
-      else if (family != FamilyFingerprint62 && family != FamilyXxhash64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hits: unknown digest family $family")
-      else if (child.dataType == org.apache.spark.sql.types.StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_hits requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      shingleHits(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        n, words, numBits, k, family)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val arr = ctx.addReferenceObj("graftShingleWords", words, "long[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.shingleHits($c, $n, $arr, ${numBits}L, $k, $family);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BloomShingleHits =
-      copy(child = newChild)
-  }
-
-  /** [[BloomShingleHits]] with the bitset behind an `sc.broadcast`
-    * handle — the at/above-[[BroadcastThresholdBits]] form, same
-    * resolve-once pattern as [[BloomContainsBroadcast64]].
-    */
-  case class BloomShingleHitsBroadcast(child: Expression,
-      words: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      n: Int, numBits: Long, k: Int, family: Int) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (numBits < 64 || numBits > MaxNumBits || k < 1 || k > 64 || n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hits_bc requires 64 <= numBits <= $MaxNumBits, 1 <= k <= 64, n >= 1, got ($numBits, $k, $n)")
-      else if (family != FamilyFingerprint62 && family != FamilyXxhash64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hits_bc: unknown digest family $family")
-      else if (child.dataType == org.apache.spark.sql.types.StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_hits_bc requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      shingleHits(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        n, words.value, numBits, k, family)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftShingleBc", words,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftShingleWords",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.BloomFunctions$$.MODULE$$.shingleHits($c, $n, $arr, ${numBits}L, $k, $family);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BloomShingleHitsBroadcast =
-      copy(child = newChild)
+  case class BloomShingleHitsBroadcast(child: Expression, words: Broadcast[Array[Long]],
+      n: Int, numBits: Long, k: Int, family: Int)
+      extends Kernel.Unary("shingle_hits_bc", Str, LongType) {
+    override protected def argError =
+      sizing(numBits, k).orElse(argCheck(n >= 1, s"requires n >= 1, got $n"))
+        .orElse(argCheck(family == FamilyFingerprint62 || family == FamilyXxhash64,
+          s"unknown digest family $family"))
+    protected def kernel = call(BloomFunctions, "shingleHits", n, words, numBits, k, family)
+    override protected def withNewChildInternal(c: Expression): BloomShingleHitsBroadcast =
+      copy(child = c)
   }
 
   /** Column-API entry points. */
   def bloomPositionsCol(digest: Column, numBits: Long, k: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BloomPositions64(org.apache.spark.sql.GraftShim.expression(digest), numBits, k))
+    column(BloomPositions64(expression(digest), numBits, k))
   def bloomContainsCol(words: Column, digest: Column, numBits: Long, k: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BloomContains64(org.apache.spark.sql.GraftShim.expression(words),
-        org.apache.spark.sql.GraftShim.expression(digest), numBits, k))
-  def bloomContainsBroadcastCol(
-      words: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      digest: Column, numBits: Long, k: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BloomContainsBroadcast64(
-        org.apache.spark.sql.GraftShim.expression(digest), words, numBits, k))
+    column(BloomContains64(expression(words), expression(digest), numBits, k))
+  def bloomContainsBroadcastCol(words: Broadcast[Array[Long]], digest: Column,
+      numBits: Long, k: Int): Column =
+    column(BloomContainsBroadcast64(expression(digest), words, numBits, k))
   def denseBitsetCol(pairs: Column, numWords: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      DenseBitset64(org.apache.spark.sql.GraftShim.expression(pairs), numWords))
+    column(DenseBitset64(expression(pairs), numWords))
 
-  /** [[shingleHits]] with the literal-vs-broadcast switch applied at
-    * the [[BroadcastThresholdBits]] boundary — the one factory both
-    * streaming decontam gates call.
+  /** [[shingleHits]] over a frozen bitset — the one factory both
+    * streaming decontam gates call. The bitset always ships as an
+    * `sc.broadcast` (one copy per executor, whatever its size).
     */
-  def shingleHitsCol(spark: org.apache.spark.sql.SparkSession,
-      text: Column, n: Int, words: Array[Long], numBits: Long, k: Int,
-      family: Int): Column =
-    if (numBits >= BroadcastThresholdBits)
-      org.apache.spark.sql.GraftShim.column(
-        BloomShingleHitsBroadcast(org.apache.spark.sql.GraftShim.expression(text),
-          spark.sparkContext.broadcast(words), n, numBits, k, family))
-    else
-      org.apache.spark.sql.GraftShim.column(
-        BloomShingleHits(org.apache.spark.sql.GraftShim.expression(text),
-          words, n, numBits, k, family))
+  def shingleHitsCol(spark: SparkSession, text: Column, n: Int, words: Array[Long],
+      numBits: Long, k: Int, family: Int): Column =
+    column(BloomShingleHitsBroadcast(expression(text), spark.sparkContext.broadcast(words),
+      n, numBits, k, family))
 
   // ------------------------------------------------ oracle interpolation
 

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.GraftShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native BPE re-segmentation counter — the production form of the
@@ -55,8 +55,8 @@ object BpeSegment {
   private val MemoCap = 1 << 16
 
   /** The merge table compiled to parallel arrays + the lazy memo. One
-    * instance rides the serialized plan (the
-    * [[TextHashes.BucketScoreSum]] reference-object device); each task
+    * instance rides the serialized plan (a kernel argument, see
+    * [[Kernel]]); each task
     * deserializes its own copy, so the memo is per-task warm state —
     * ConcurrentHashMap only for safety if an execution mode shares it.
     */
@@ -167,26 +167,14 @@ object BpeSegment {
     * content-neutral 0-and-pass rule around it).
     */
   case class BpeTokenCount(child: Expression, counter: Counter)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpe_token_count requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      counter.countDoc(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("graftBpeCounter", counter,
-        classOf[Counter].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countDoc($c);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
-      copy(child = newChild)
+      extends Kernel.Unary("bpe_token_count", Kernel.Str, LongType) {
+    protected def kernel = Kernel.call(BpeSegment, "tokenCount", counter)
+    override protected def withNewChildInternal(c: Expression): BpeTokenCount = copy(child = c)
   }
 
+  /** [[BpeTokenCount]]'s kernel: the counter's [[Counter.countDoc]]. */
+  def tokenCount(s: UTF8String, counter: Counter): Long = counter.countDoc(s)
+
   def bpeTokenCountCol(text: Column, merges: Seq[(String, String)]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BpeTokenCount(org.apache.spark.sql.GraftShim.expression(text),
-        new Counter(merges)))
+    column(BpeTokenCount(expression(text), new Counter(merges)))
 }

@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -184,17 +184,4 @@ object SketchAggregates {
   def misraGries(col: Column, numCounters: Int): Column =
     GraftShim.column(
       MisraGriesAgg(GraftShim.expression(col), numCounters).toAggregateExpression())
-
-  /** SQL registration (mirrors BloomFunctions/TextHashes convention). */
-  def registerAll(spark: SparkSession): Unit = {
-    GraftShim.registerFunction(spark, "misra_gries", { args =>
-      val m = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) =>
-          v.asInstanceOf[Int]
-        case other => throw new IllegalArgumentException(
-          s"misra_gries numCounters must be an int literal, got $other")
-      }
-      MisraGriesAgg(args.head, m).toAggregateExpression()
-    })
-  }
 }

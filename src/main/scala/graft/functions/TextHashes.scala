@@ -1,11 +1,16 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.GraftShim.{column, expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Kernel.{argCheck, call, Bigint, BigintArray, Str, StrArray}
 
 /** Native Catalyst expressions for the text-pipeline extensions (document
   * fingerprinting, SimHash near-dup). Implemented as `Expression`s rather
@@ -63,23 +68,12 @@ object TextHashes {
   }
 
   /** `portable_fold(str, mult)` → BIGINT (see [[portableFold]]). */
-  case class PortableFold(child: Expression, mult: Long) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (mult < 1 || mult >= FoldM)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"portable_fold: mult must be in [1, 2^31), got $mult")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"portable_fold requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      portableFold(input.asInstanceOf[UTF8String], mult)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.portableFold($c, ${mult}L);")
-    override protected def withNewChildInternal(newChild: Expression): PortableFold =
-      copy(child = newChild)
+  case class PortableFold(child: Expression, mult: Long)
+      extends Kernel.Unary("portable_fold", Str, LongType) {
+    override protected def argError =
+      argCheck(mult >= 1 && mult < FoldM, s"mult must be in [1, 2^31), got $mult")
+    protected def kernel = call(TextHashes, "portableFold", mult)
+    override protected def withNewChildInternal(c: Expression): PortableFold = copy(child = c)
   }
 
   /** 62-bit portable document fingerprint: two independent portable
@@ -91,20 +85,11 @@ object TextHashes {
     * Replaces reference fingerprinting use cases
     * (content identity, novelty diffing) with an oracle-checkable form.
     */
-  case class PortableFingerprint(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"fingerprint62 requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      fingerprint62(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.fingerprint62($c);")
-    override protected def withNewChildInternal(newChild: Expression): PortableFingerprint =
-      copy(child = newChild)
+  case class PortableFingerprint(child: Expression)
+      extends Kernel.Unary("fingerprint62", Str, LongType) {
+    protected def kernel = call(TextHashes, "fingerprint62")
+    override protected def withNewChildInternal(c: Expression): PortableFingerprint =
+      copy(child = c)
   }
 
   /** Both folds in one pass over the code points (see
@@ -198,62 +183,23 @@ object TextHashes {
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** `minhash_sigs(array<bigint>, k)` → ARRAY<BIGINT> (see [[minhashSigs]]). */
-  case class MinHashSigs(child: Expression, k: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (k < 1 || k > MaxK)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sigs: k must be in [1, $MaxK], got $k")
-      else child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"minhash_sigs requires array<bigint>, got $other")
-      }
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(input: Any): Any =
-      minhashSigs(input.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""
-           |${ev.value} = graft.functions.TextHashes$$.MODULE$$.minhashSigs($c, $k);
-           |${ev.isNull} = ${ev.value} == null;
-         """.stripMargin)
-    override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
-      copy(child = newChild)
+  case class MinHashSigs(child: Expression, k: Int)
+      extends Kernel.Unary("minhash_sigs", BigintArray, ArrayType(LongType, containsNull = false)) {
+    override protected def argError = argCheck(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
+    override protected def kernelNullable = true
+    protected def kernel = call(TextHashes, "minhashSigs", k)
+    override protected def withNewChildInternal(c: Expression): MinHashSigs = copy(child = c)
   }
 
   /** `bigram_score(str)` → BIGINT (see [[bigramScore]]). */
-  case class BigramScore(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bigram_score requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      bigramScore(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val str = ctx.freshName("str")
-        val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        s"""
-           |java.lang.String $str = $c.toString();
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $str.length() - 1; $i++) {
-           |  $acc += (($str.charAt($i) % 256) * 31 + ($str.charAt($i + 1) % 256)) % 7;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-    override protected def withNewChildInternal(newChild: Expression): BigramScore =
-      copy(child = newChild)
+  case class BigramScore(child: Expression)
+      extends Kernel.Unary("bigram_score", Str, LongType) {
+    protected def kernel = call(TextHashes, "bigramScore")
+    override protected def withNewChildInternal(c: Expression): BigramScore = copy(child = c)
   }
 
   /** Per-token SimHash bit-pattern constants: the token's portable fold
@@ -317,26 +263,10 @@ object TextHashes {
     * replays the exact fingerprint, which the 64-bit wraparound form
     * this replaced could never do.
     */
-  case class SimHashPortable(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"simhash62 requires array<string>, got $other")
-      }
-
-    override protected def nullSafeEval(input: Any): Any =
-      simhash62(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.simhash62($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): SimHashPortable =
-      copy(child = newChild)
+  case class SimHashPortable(child: Expression)
+      extends Kernel.Unary("simhash62", StrArray, LongType) {
+    protected def kernel = call(TextHashes, "simhash62")
+    override protected def withNewChildInternal(c: Expression): SimHashPortable = copy(child = c)
   }
 
   def simhash62(arr: ArrayData): Long = {
@@ -374,57 +304,19 @@ object TextHashes {
     * n tokens → empty array (the algebra form's sequence guard).
     */
   def ngramHashes64(s: UTF8String, n: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
-    if (nTok < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.emptyLongArray)
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
-    val out = new Array[Long](nTok - n + 1)
+    val t = tokenBoundaries(s)
+    val out = new Array[Long](math.max(t.count - n + 1, 0))
     var w = 0
-    while (w < out.length) {
-      val s0 = starts(w)
-      val e = if (w + n < nTok) starts(w + n) - 1 else len
-      out(w) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(base, off + s0, e - s0, 42L)
-      w += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    while (w < out.length) { out(w) = t.xxhash(w, w + n); w += 1 }
+    new GenericArrayData(out)
   }
 
   /** `ngram_hashes64(str, n)` → ARRAY<BIGINT> (see [[ngramHashes64]]). */
-  case class NgramHashes64(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_hashes64: n must be >= 1, got $n")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_hashes64 requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      ngramHashes64(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.ngramHashes64($c, $n);")
-    override protected def withNewChildInternal(newChild: Expression): NgramHashes64 =
-      copy(child = newChild)
+  case class NgramHashes64(child: Expression, n: Int)
+      extends Kernel.Unary("ngram_hashes64", Str, ArrayType(LongType, containsNull = false)) {
+    override protected def argError = argCheck(n >= 1, s"n must be >= 1, got $n")
+    protected def kernel = call(TextHashes, "ngramHashes64", n)
+    override protected def withNewChildInternal(c: Expression): NgramHashes64 = copy(child = c)
   }
 
   /** Per-document word-n-gram repetition census in ONE compiled pass —
@@ -457,22 +349,21 @@ object TextHashes {
     * (the relational form emits no (doc, n) row — gate callers treat
     * NULL as "cannot be repetitive").
     */
-  def ngramRepStats(s: UTF8String,
-      n: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    val (starts, nTok, _) = tokenBoundaries(s)
-    gramCensus(s.getBaseObject, s.getBaseOffset, starts, nTok, n)
-  }
+  def ngramRepStats(s: UTF8String, n: Int): InternalRow = gramCensus(tokenBoundaries(s), n)
 
-  /** One token-boundary pass shared by [[ngramRepStats]] and
-    * [[ngramRepStatsMulti]]: `starts(j)` = byte index of token j's
-    * first byte, with the sentinel `starts(nTok) = len + 1` so
-    * end-of-token-j is uniformly `starts(j+1) − 1`; also returns the
-    * token count and the NON-SPACE codepoint count (UTF-8 continuation
-    * bytes 10xxxxxx excluded — `length(replace(s, ' ', ''))` exactly),
-    * which the multi form ships so callers drop their separate
-    * replace/length pass over the text.
+  /** The token scanner every span kernel shares: tokens split on every
+    * 0x20 byte with empty tokens kept (Spark's `split(s, " ")`), found in
+    * two passes over the bytes — count the spaces, then record where each
+    * token starts. 0x20 never occurs inside a UTF-8 multibyte sequence,
+    * so splitting on every space and rejoining a run of tokens with
+    * single spaces is the identity on the original substring: tokens
+    * [i, j) ARE one byte span of the input, hashed or compared in place
+    * with no window string materialized. The counting pass also counts
+    * the NON-SPACE code points (UTF-8 continuation bytes 10xxxxxx
+    * excluded — `length(replace(s, ' ', ''))` exactly), which
+    * [[ngramRepStatsMulti]] ships so callers drop their own pass for it.
     */
-  private def tokenBoundaries(s: UTF8String): (Array[Int], Int, Int) = {
+  def tokenBoundaries(s: UTF8String): Tokens = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val len = s.numBytes
@@ -485,8 +376,7 @@ object TextHashes {
       if ((b & 0xC0) != 0x80) cps += 1
       i += 1
     }
-    val nTok = spaces + 1
-    val starts = new Array[Int](nTok + 1)
+    val starts = new Array[Int](spaces + 2)
     var t = 1
     i = 0
     while (i < len) {
@@ -495,8 +385,62 @@ object TextHashes {
       }
       i += 1
     }
-    starts(nTok) = len + 1
-    (starts, nTok, cps - spaces)
+    starts(spaces + 1) = len + 1
+    new Tokens(s, starts, cps - spaces)
+  }
+
+  /** The tokens of one text (see [[tokenBoundaries]]): `starts(j)` is
+    * token j's first byte, and the sentinel `starts(count) = len + 1`
+    * makes the end of token j uniformly `starts(j + 1) − 1`.
+    */
+  final class Tokens(s: UTF8String, starts: Array[Int], val nonSpaceChars: Int) {
+    val count: Int = starts.length - 1
+    def start(j: Int): Int = starts(j)
+    def end(j: Int): Int = starts(j + 1) - 1
+    /** Tokens [i, j) as a zero-copy view of the text's bytes. */
+    def span(i: Int, j: Int): UTF8String =
+      UTF8String.fromAddress(s.getBaseObject, s.getBaseOffset + starts(i), end(j - 1) - starts(i))
+    /** Spark's `xxhash64` (seed 42) of tokens [i, j), read in place. */
+    def xxhash(i: Int, j: Int): Long =
+      XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + starts(i),
+        end(j - 1) - starts(i), 42L)
+  }
+
+  /** [[portableFold]](·, 31) of every token — the winnow and bucket-score
+    * token hash (a fold over zero bytes is 0, so empty tokens hash 0).
+    */
+  private def tokenFolds(t: Tokens): Array[Long] = {
+    val th = new Array[Long](t.count)
+    var i = 0
+    while (i < th.length) { th(i) = portableFold(t.span(i, i + 1), 31); i += 1 }
+    th
+  }
+
+  /** The distinct-shingle census shared by the decontam gates: each
+    * DISTINCT n-token span (byte equality, exactly `array_distinct` over
+    * the algebra's shingle array) is tested ONCE with `member`, exactly
+    * like `array_intersect(distinct_shingles, bench)` or a probe of the
+    * distinct array. Returns total·2³² + hits packed in one BIGINT (both
+    * counts are bounded by the token count of a ≤ 2³¹-byte string, so the
+    * packing is exact); fewer than n tokens → 0.
+    */
+  def spanCensus(s: UTF8String, n: Int, member: UTF8String => Boolean): Long = {
+    val t = tokenBoundaries(s)
+    val nWin = t.count - n + 1
+    if (nWin <= 0) return 0L
+    val seen = new java.util.HashSet[UTF8String](nWin * 2)
+    var total = 0L
+    var hits = 0L
+    var w = 0
+    while (w < nWin) {
+      val span = t.span(w, w + n)
+      if (seen.add(span)) {
+        total += 1
+        if (member(span)) hits += 1
+      }
+      w += 1
+    }
+    (total << 32) | hits
   }
 
   /** The census half of [[ngramRepStats]] over a prepared boundary
@@ -504,16 +448,13 @@ object TextHashes {
     * IDENTICAL count/tie-break algorithm (the multi form cannot diverge
     * from the spec-pinned single-n results by construction).
     */
-  private def gramCensus(base: AnyRef, off: Long, starts: Array[Int],
-      nTok: Int, n: Int): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    val ng = nTok - n + 1
+  private def gramCensus(t: Tokens, n: Int): GenericInternalRow = {
+    val ng = t.count - n + 1
     if (ng <= 0) return null
     val counts = new java.util.HashMap[UTF8String, Array[Int]](ng * 2)
     var g = 0
     while (g < ng) {
-      val s0 = starts(g)
-      val e = starts(g + n) - 1
-      val gram = UTF8String.fromAddress(base, off + s0, e - s0)
+      val gram = t.span(g, g + n)
       val c = counts.get(gram)
       if (c == null) counts.put(gram, Array(1)) else c(0) += 1
       g += 1
@@ -537,8 +478,7 @@ object TextHashes {
         }
       }
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](ng.toLong, topC, topGlen, dupC))
+    new GenericInternalRow(Array[Any](ng.toLong, topC, topGlen, dupC))
   }
 
   /** Per-document Gopher rule-set census in ONE compiled pass — the
@@ -561,9 +501,7 @@ object TextHashes {
     * form paid one interpreted regex filter per token (`rlike`) plus
     * one `array_contains` sweep per stopword.
     */
-  def gopherStats(s: UTF8String,
-      stop: java.util.HashMap[UTF8String, Integer]):
-      org.apache.spark.sql.catalyst.InternalRow = {
+  def gopherStats(s: UTF8String, stop: java.util.HashMap[UTF8String, Integer]): InternalRow = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val len = s.numBytes
@@ -612,89 +550,47 @@ object TextHashes {
     }
     // n_chars is the NON-SPACE codepoint count (length(replace(t,' ','')))
     val nChars = chars - (nTok - 1)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nTok, nChars, hashes, ellipsis, alphaToks, stopHits))
+    new GenericInternalRow(Array[Any](nTok, nChars, hashes, ellipsis, alphaToks, stopHits))
   }
 
   /** Result schema of [[gopherStats]]. */
-  val GopherStatsType: DataType = org.apache.spark.sql.types.StructType(
+  val GopherStatsType: DataType = StructType(
     Seq("n_tokens", "n_chars", "hash_count", "ellipsis_count",
-      "alpha_tokens", "stop_hits").map(f =>
-      org.apache.spark.sql.types.StructField(f,
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
+      "alpha_tokens", "stop_hits").map(StructField(_, IntegerType, nullable = false)))
 
-  /** `gopher_stats(str)` → STRUCT (see [[gopherStats]]). `pushable =
-    * false` marks the expression non-deterministic to the OPTIMIZER
-    * only (evaluation is pure): the guide-§4.4 device that stops filter
-    * pushdown from inlining one copy of the census per field reference
-    * into a Filter condition, where no subexpression elimination runs —
-    * the streaming gates' filter(verdict) shape paid 12 census evals
-    * per row that way (measured, r19). Batch spellings keep the
-    * deterministic default so their filters still push to the scan.
+  /** `gopher_stats(str)` → STRUCT (see [[gopherStats]]); the stopword →
+    * bit-index map is the read-only shared reference, all per-row state
+    * is local. `pushable`: see [[Kernel.Pushable]].
     */
   case class GopherStats(child: Expression, stopwords: Seq[String],
       pushable: Boolean = true)
-      extends UnaryExpression {
-    override lazy val deterministic: Boolean = pushable && child.deterministic
-    override def dataType: DataType = GopherStatsType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (stopwords.isEmpty || stopwords.size > 64 ||
-          stopwords.contains("") || stopwords.exists(_.contains(" ")))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          "gopher_stats requires 1..64 stopwords without \"\" or spaces")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gopher_stats requires string input, got ${child.dataType}")
-    // the word → bit-index map is the read-only shared reference (the
-    // QualityVerdict stopSet device); all per-row state is local
-    @transient private lazy val stopMap = {
+      extends Kernel.Unary("gopher_stats", Str, GopherStatsType) with Kernel.Pushable {
+    override protected def argError = argCheck(stopwords.nonEmpty && stopwords.size <= 64 &&
+      !stopwords.contains("") && !stopwords.exists(_.contains(" ")),
+      "requires 1..64 stopwords without \"\" or spaces")
+    protected def kernel = {
       val m = new java.util.HashMap[UTF8String, Integer](stopwords.size * 2)
       stopwords.zipWithIndex.foreach { case (w, i) =>
         m.put(UTF8String.fromString(w), Integer.valueOf(i)) }
-      m
+      call(TextHashes, "gopherStats", m)
     }
-    override protected def nullSafeEval(input: Any): Any =
-      gopherStats(input.asInstanceOf[UTF8String], stopMap)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val mapRef = ctx.addReferenceObj("graftGopherStops", stopMap,
-        "java.util.HashMap")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.gopherStats($c, $mapRef);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): GopherStats =
-      copy(child = newChild)
+    override protected def withNewChildInternal(c: Expression): GopherStats = copy(child = c)
   }
 
   /** Result schema of [[ngramRepStats]]. */
-  val NgramRepStatsType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_grams", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("top_c", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("top_glen",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("dup_c", LongType, nullable = false)))
+  val NgramRepStatsType: DataType = StructType(Seq(
+    StructField("n_grams", LongType, nullable = false),
+    StructField("top_c", LongType, nullable = false),
+    StructField("top_glen", IntegerType, nullable = false),
+    StructField("dup_c", LongType, nullable = false)))
 
   /** `ngram_rep_stats(str, n)` → STRUCT (see [[ngramRepStats]]). */
-  case class NgramRepStats(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = NgramRepStatsType
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_rep_stats: n must be >= 1, got $n")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_rep_stats requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      ngramRepStats(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = graft.functions.TextHashes$$.MODULE$$.ngramRepStats($c, $n);
-        |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-    override protected def withNewChildInternal(newChild: Expression): NgramRepStats =
-      copy(child = newChild)
+  case class NgramRepStats(child: Expression, n: Int)
+      extends Kernel.Unary("ngram_rep_stats", Str, NgramRepStatsType) {
+    override protected def argError = argCheck(n >= 1, s"n must be >= 1, got $n")
+    override protected def kernelNullable = true
+    protected def kernel = call(TextHashes, "ngramRepStats", n)
+    override protected def withNewChildInternal(c: Expression): NgramRepStats = copy(child = c)
   }
 
   /** Multi-n word-n-gram repetition census in ONE compiled pass (r19):
@@ -711,63 +607,38 @@ object TextHashes {
     * codepoint count. Same per-document in-heap memory contract as
     * [[ngramRepStats]], summed over the requested sizes.
     */
-  def ngramRepStatsMulti(s: UTF8String,
-      ns: Array[Int]): org.apache.spark.sql.catalyst.InternalRow = {
-    val (starts, nTok, nChars) = tokenBoundaries(s)
+  def ngramRepStatsMulti(s: UTF8String, ns: Array[Int]): InternalRow = {
+    val t = tokenBoundaries(s)
     val out = new Array[Any](ns.length + 1)
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
     var j = 0
-    while (j < ns.length) {
-      out(j) = gramCensus(base, off, starts, nTok, ns(j))
-      j += 1
-    }
-    out(ns.length) = nChars
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+    while (j < ns.length) { out(j) = gramCensus(t, ns(j)); j += 1 }
+    out(ns.length) = t.nonSpaceChars
+    new GenericInternalRow(out)
   }
 
   /** Result schema of [[ngramRepStatsMulti]] at the given gram sizes. */
   def ngramRepStatsMultiType(ns: Seq[Int]): DataType =
-    org.apache.spark.sql.types.StructType(
-      ns.map(n => org.apache.spark.sql.types.StructField(
-        s"s$n", NgramRepStatsType, nullable = true)) :+
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.IntegerType, nullable = false))
+    StructType(ns.map(n => StructField(s"s$n", NgramRepStatsType, nullable = true)) :+
+      StructField("n_chars", IntegerType, nullable = false))
 
   /** `ngram_rep_stats_multi(str, ns)` → STRUCT (see
     * [[ngramRepStatsMulti]]). `ns` is a Seq (not Array) so expression
     * equality/canonicalization sees value equality — optimizer copies
     * of this node stay CSE-mergeable (the BpeSegment.Counter lesson).
+    * `pushable = false` is the [[Kernel.Pushable]] device: without it the
+    * multi landed text_gate at 2.1k rows/s against 4.6k.
     */
   case class NgramRepStatsMulti(child: Expression, ns: Seq[Int],
       pushable: Boolean = true)
-      extends UnaryExpression {
-    // pushable = false: the GopherStats guide-§4.4 device (see there) —
-    // optimizer-only non-determinism so the stream gates' verdict
-    // filter reads the materialized struct instead of inlining ~18
-    // copies of this census into the Filter condition (measured: the
-    // unguarded multi landed text_gate at 2.1k rows/s vs 4.6k before)
-    override lazy val deterministic: Boolean = pushable && child.deterministic
-    override def dataType: DataType = ngramRepStatsMultiType(ns)
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (ns.isEmpty || ns.exists(_ < 1) || ns.distinct.size != ns.size)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_rep_stats_multi: ns must be distinct and >= 1, got $ns")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_rep_stats_multi requires string input, got ${child.dataType}")
-    @transient private lazy val nsArr: Array[Int] = ns.toArray
-    override protected def nullSafeEval(input: Any): Any =
-      ngramRepStatsMulti(input.asInstanceOf[UTF8String], nsArr)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val nsRef = ctx.addReferenceObj("graftRepNs", nsArr, "int[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.ngramRepStatsMulti($c, $nsRef);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): NgramRepStatsMulti =
-      copy(child = newChild)
+      extends Kernel.Unary("ngram_rep_stats_multi", Str, ngramRepStatsMultiType(ns))
+      with Kernel.Pushable {
+    override protected def argError = argCheck(
+      ns.nonEmpty && ns.forall(_ >= 1) && ns.distinct.size == ns.size,
+      s"ns must be distinct and >= 1, got $ns")
+    override protected def kernelNullable = true
+    protected def kernel = call(TextHashes, "ngramRepStatsMulti", ns.toArray)
+    override protected def withNewChildInternal(c: Expression): NgramRepStatsMulti =
+      copy(child = c)
   }
 
   /** Winnowing selection over a raw text value in ONE compiled pass —
@@ -792,36 +663,10 @@ object TextHashes {
     * w complete windows (ng < w) → empty array.
     */
   def winnowSelect(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
-    val ng = nTok - k + 1
-    if (ng < w) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.emptyLongArray)
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
-    val th = new Array[Long](nTok)
-    i = 0
-    while (i < nTok) {
-      val s0 = starts(i)
-      val e = if (i + 1 < nTok) starts(i + 1) - 1 else len
-      th(i) = portableFold(UTF8String.fromAddress(base, off + s0, e - s0), 31)
-      i += 1
-    }
+    val t = tokenBoundaries(s)
+    val ng = t.count - k + 1
+    if (ng < w) return new GenericArrayData(Array.emptyLongArray)
+    val th = tokenFolds(t)
     val combs = new Array[Long](ng)
     var p = 0
     while (p < ng) {
@@ -848,7 +693,7 @@ object TextHashes {
       }
       p += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    new GenericArrayData(out.toArray)
   }
 
   /** `winnow_select(text)` → ARRAY<BIGINT> of distinct packed
@@ -856,23 +701,11 @@ object TextHashes {
     * construction-time constants baked into the generated call.
     */
   case class WinnowSelectExpr(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (k < 1 || w < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_select requires k >= 1 and w >= 1, got ($k, $w)")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow_select requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      winnowSelect(input.asInstanceOf[UTF8String], k, w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.winnowSelect($c, $k, $w);")
-    override protected def withNewChildInternal(newChild: Expression): WinnowSelectExpr =
-      copy(child = newChild)
+      extends Kernel.Unary("winnow_select", Str, ArrayType(LongType, containsNull = false)) {
+    override protected def argError =
+      argCheck(k >= 1 && w >= 1, s"requires k >= 1 and w >= 1, got ($k, $w)")
+    protected def kernel = call(TextHashes, "winnowSelect", k, w)
+    override protected def withNewChildInternal(c: Expression): WinnowSelectExpr = copy(child = c)
   }
 
   /** Hashed-bucket model score of a raw text value in ONE compiled
@@ -895,80 +728,31 @@ object TextHashes {
     */
   def bucketScoreSum(s: UTF8String, model: Array[Long], order: Int,
       mult: Long, comb: Long): Long = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
+    val t = tokenBoundaries(s)
+    if (t.count < order) return 0L
+    val th = tokenFolds(t)
     val m = model.length.toLong
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
-    if (nTok < order) return 0L
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
     var sum = 0L
-    if (order == 1) {
-      i = 0
-      while (i < nTok) {
-        val s0 = starts(i)
-        val e = if (i + 1 < nTok) starts(i + 1) - 1 else len
-        val h = portableFold(UTF8String.fromAddress(base, off + s0, e - s0), 31)
-        sum += model(((h * mult) % m).toInt)
-        i += 1
-      }
-    } else {
-      val th = new Array[Long](nTok)
-      i = 0
-      while (i < nTok) {
-        val s0 = starts(i)
-        val e = if (i + 1 < nTok) starts(i + 1) - 1 else len
-        th(i) = portableFold(UTF8String.fromAddress(base, off + s0, e - s0), 31)
-        i += 1
-      }
-      i = 0
-      while (i < nTok - 1) {
-        val pair = (th(i) * comb + th(i + 1)) % FoldM
-        sum += model(((pair * mult) % m).toInt)
-        i += 1
-      }
+    var i = 0
+    while (i + order <= th.length) {
+      val h = if (order == 1) th(i) else (th(i) * comb + th(i + 1)) % FoldM
+      sum += model(((h * mult) % m).toInt)
+      i += 1
     }
     sum
   }
 
   /** `bucket_score_sum(text)` → BIGINT (see [[bucketScoreSum]]); the
     * dense model array, order and constants are baked in at
-    * construction (the [[BloomFunctions]] reference-object device).
+    * construction.
     */
   case class BucketScoreSum(child: Expression, model: Array[Long],
-      order: Int, mult: Long, comb: Long) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (model.isEmpty || (order != 1 && order != 2) || mult < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bucket_score_sum requires a non-empty model, order in {1, 2}, mult >= 1")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bucket_score_sum requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      bucketScoreSum(input.asInstanceOf[UTF8String], model, order, mult, comb)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val arr = ctx.addReferenceObj("graftBucketModel", model, "long[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.bucketScoreSum($c, $arr, $order, ${mult}L, ${comb}L);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BucketScoreSum =
-      copy(child = newChild)
+      order: Int, mult: Long, comb: Long) extends Kernel.Unary("bucket_score_sum", Str, LongType) {
+    override protected def argError =
+      argCheck(model.nonEmpty && (order == 1 || order == 2) && mult >= 1,
+        "requires a non-empty model, order in {1, 2}, mult >= 1")
+    protected def kernel = call(TextHashes, "bucketScoreSum", model, order, mult, comb)
+    override protected def withNewChildInternal(c: Expression): BucketScoreSum = copy(child = c)
   }
 
   /** The DISTINCT winnow fingerprints of a text (gram hashes, pos bits
@@ -1026,7 +810,7 @@ object TextHashes {
     var hits = 0
     var i = 0
     while (i < fps.length) {
-      if (BloomFunctions.bloomContainsWords(words, fps(i), numBits, bloomK))
+      if (BloomFunctions.bloomContainsWords(fps(i), words, numBits, bloomK))
         hits += 1
       i += 1
     }
@@ -1034,62 +818,29 @@ object TextHashes {
   }
 
   /** `winnow_census_hits(text)` → INT (see [[winnowCensusHits]]); the
-    * census rides an `sc.broadcast` handle resolved once per codegen
-    * instance (the [[BloomFunctions.BloomShingleHitsBroadcast]]
-    * device — one executor copy however many tasks probe it).
+    * census rides an `sc.broadcast` handle (one executor copy however
+    * many tasks probe it — see [[Kernel]]).
     */
   case class WinnowCensusHitsBroadcast(child: Expression, k: Int, w: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]])
-      extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (k < 1 || w < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_census_hits requires k >= 1 and w >= 1, got ($k, $w)")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow_census_hits requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      winnowCensusHits(input.asInstanceOf[UTF8String], k, w, census.value)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftWinnowCensusBc", census,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftWinnowCensus",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.winnowCensusHits($c, $k, $w, $arr);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): WinnowCensusHitsBroadcast =
-      copy(child = newChild)
+      census: Broadcast[Array[Long]])
+      extends Kernel.Unary("winnow_census_hits", Str, IntegerType) {
+    override protected def argError =
+      argCheck(k >= 1 && w >= 1, s"requires k >= 1 and w >= 1, got ($k, $w)")
+    protected def kernel = call(TextHashes, "winnowCensusHits", k, w, census)
+    override protected def withNewChildInternal(c: Expression): WinnowCensusHitsBroadcast =
+      copy(child = c)
   }
 
   /** `winnow_bloom_hits(text)` → INT (see [[winnowBloomHits]]). */
   case class WinnowBloomHitsBroadcast(child: Expression, k: Int, w: Int,
-      words: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      numBits: Long, bloomK: Int) extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (k < 1 || w < 1 || numBits < 64 || bloomK < 1 || bloomK > 64)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_bloom_hits requires k,w >= 1, numBits >= 64, 1 <= bloomK <= 64, got ($k, $w, $numBits, $bloomK)")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow_bloom_hits requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      winnowBloomHits(input.asInstanceOf[UTF8String], k, w, words.value,
-        numBits, bloomK)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftWinnowBloomBc", words,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftWinnowBloom",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.winnowBloomHits($c, $k, $w, $arr, ${numBits}L, $bloomK);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): WinnowBloomHitsBroadcast =
-      copy(child = newChild)
+      words: Broadcast[Array[Long]], numBits: Long, bloomK: Int)
+      extends Kernel.Unary("winnow_bloom_hits", Str, IntegerType) {
+    override protected def argError = argCheck(
+      k >= 1 && w >= 1 && numBits >= 64 && bloomK >= 1 && bloomK <= 64,
+      s"requires k,w >= 1, numBits >= 64, 1 <= bloomK <= 64, got ($k, $w, $numBits, $bloomK)")
+    protected def kernel = call(TextHashes, "winnowBloomHits", k, w, words, numBits, bloomK)
+    override protected def withNewChildInternal(c: Expression): WinnowBloomHitsBroadcast =
+      copy(child = c)
   }
 
   /** Fused streaming span scrub — the whole
@@ -1106,40 +857,19 @@ object TextHashes {
     * every separator the split consumed was exactly one space.
     */
   def spanScrub(s: UTF8String, n: Int, census: Array[Long]): UTF8String = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
+    val t = tokenBoundaries(s)
+    val nTok = t.count
     val ng = nTok - n + 1
     if (ng <= 0 || census.length == 0) return s
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
     val pref = new Array[Int](ng + 1)
     var w = 0
     while (w < ng) {
-      val s0 = starts(w)
-      val e = if (w + n < nTok) starts(w + n) - 1 else len
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(base, off + s0, e - s0, 42L)
       pref(w + 1) = pref(w) +
-        (if (java.util.Arrays.binarySearch(census, h) >= 0) 1 else 0)
+        (if (java.util.Arrays.binarySearch(census, t.xxhash(w, w + n)) >= 0) 1 else 0)
       w += 1
     }
     if (pref(ng) == 0) return s
-    val bytes = new Array[Byte](len)
+    val bytes = new Array[Byte](s.numBytes)
     var outLen = 0
     var first = true
     var j = 0
@@ -1149,9 +879,9 @@ object TextHashes {
       val dropped = hi >= lo && pref(hi + 1) - pref(lo) > 0
       if (!dropped) {
         if (!first) { bytes(outLen) = 0x20; outLen += 1 }
-        val s0 = starts(j)
-        val e = if (j + 1 < nTok) starts(j + 1) - 1 else len
-        org.apache.spark.unsafe.Platform.copyMemory(base, off + s0, bytes,
+        val s0 = t.start(j)
+        val e = t.end(j)
+        org.apache.spark.unsafe.Platform.copyMemory(s.getBaseObject, s.getBaseOffset + s0, bytes,
           org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + outLen, e - s0)
         outLen += e - s0
         first = false
@@ -1162,33 +892,14 @@ object TextHashes {
   }
 
   /** `span_scrub(text)` → STRING (see [[spanScrub]]); the sorted dup
-    * census rides an `sc.broadcast` handle (the
-    * [[WinnowCensusHitsBroadcast]] device).
+    * census rides an `sc.broadcast` handle.
     */
-  case class SpanScrubBroadcast(child: Expression, n: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]])
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"span_scrub requires n >= 1, got $n")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"span_scrub requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      spanScrub(input.asInstanceOf[UTF8String], n, census.value)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftScrubBc", census,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftScrubCensus",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.spanScrub($c, $n, $arr);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): SpanScrubBroadcast =
-      copy(child = newChild)
+  case class SpanScrubBroadcast(child: Expression, n: Int, census: Broadcast[Array[Long]])
+      extends Kernel.Unary("span_scrub", Str, StringType) {
+    override protected def argError = argCheck(n >= 1, s"requires n >= 1, got $n")
+    protected def kernel = call(TextHashes, "spanScrub", n, census)
+    override protected def withNewChildInternal(c: Expression): SpanScrubBroadcast =
+      copy(child = c)
   }
 
   /** Fused n-gram census stats for the streaming coverage gate: the
@@ -1213,29 +924,12 @@ object TextHashes {
     * (see [[ngramCensusStats]]).
     */
   case class NgramCensusStatsBroadcast(child: Expression, n: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]])
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_census_stats requires n >= 1, got $n")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_census_stats requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      ngramCensusStats(input.asInstanceOf[UTF8String], n, census.value)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftNgramCensusBc", census,
-        "org.apache.spark.broadcast.Broadcast")
-      val arr = ctx.addMutableState("long[]", "graftNgramCensus",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.ngramCensusStats($c, $n, $arr);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): NgramCensusStatsBroadcast =
-      copy(child = newChild)
+      census: Broadcast[Array[Long]])
+      extends Kernel.Unary("ngram_census_stats", Str, LongType) {
+    override protected def argError = argCheck(n >= 1, s"requires n >= 1, got $n")
+    protected def kernel = call(TextHashes, "ngramCensusStats", n, census)
+    override protected def withNewChildInternal(c: Expression): NgramCensusStatsBroadcast =
+      copy(child = c)
   }
 
   /** Fused quality-gate verdict — the
@@ -1253,29 +947,14 @@ object TextHashes {
     */
   def qualityVerdict(s: UTF8String, minTokens: Int, minRatio: Double,
       stop: java.util.HashSet[UTF8String]): Int = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
+    val t = tokenBoundaries(s)
+    val nTok = t.count
     if (nTok < minTokens) return 0
     var nStop = 0
-    var start = 0
-    i = 0
-    while (i <= len) {
-      if (i == len ||
-          org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        if (i > start &&
-            stop.contains(UTF8String.fromAddress(base, off + start, i - start)))
-          nStop += 1
-        start = i + 1
-      }
-      i += 1
+    var j = 0
+    while (j < nTok) {
+      if (t.end(j) > t.start(j) && stop.contains(t.span(j, j + 1))) nStop += 1
+      j += 1
     }
     val ratio = math.floor(nStop.toDouble / nTok.toDouble * 10000.0 + 0.5) / 10000.0
     if (ratio >= minRatio) 1 else 0
@@ -1286,37 +965,18 @@ object TextHashes {
     * a plain reference object, no broadcast needed).
     */
   case class QualityVerdict(child: Expression, minTokens: Int,
-      minRatio: Double, stopwords: Seq[String]) extends UnaryExpression {
-    @transient private lazy val stopSet: java.util.HashSet[UTF8String] = {
-      val s = new java.util.HashSet[UTF8String]()
-      stopwords.foreach(w => s.add(UTF8String.fromString(w)))
-      s
-    }
-    override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (minTokens < 0 || stopwords.isEmpty || stopwords.contains(""))
-        // "" is rejected alongside emptiness (r17 advice): the fused
-        // scan skips zero-width tokens when counting stopword hits
-        // (i > start), while the algebra spelling's array_contains
-        // would count every empty token consecutive spaces produce —
-        // the divergence is unreachable for any real stopword list,
-        // and this check keeps it that way explicitly
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quality_verdict requires minTokens >= 0 and a non-empty stopword list without \"\"")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"quality_verdict requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      qualityVerdict(input.asInstanceOf[UTF8String], minTokens, minRatio, stopSet)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val setRef = ctx.addReferenceObj("graftStopSet", stopSet,
-        "java.util.HashSet")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.qualityVerdict($c, $minTokens, $minRatio, $setRef);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): QualityVerdict =
-      copy(child = newChild)
+      minRatio: Double, stopwords: Seq[String])
+      extends Kernel.Unary("quality_verdict", Str, IntegerType) {
+    // "" is rejected alongside emptiness (r17 advice): the fused scan
+    // skips zero-width tokens when counting stopword hits, while the
+    // algebra spelling's array_contains would count every empty token
+    // consecutive spaces produce — the divergence is unreachable for any
+    // real stopword list, and this check keeps it that way explicitly
+    override protected def argError =
+      argCheck(minTokens >= 0 && stopwords.nonEmpty && !stopwords.contains(""),
+        "requires minTokens >= 0 and a non-empty stopword list without \"\"")
+    protected def kernel = call(TextHashes, "qualityVerdict", minTokens, minRatio, utf8Set(stopwords))
+    override protected def withNewChildInternal(c: Expression): QualityVerdict = copy(child = c)
   }
 
   /** Distinct word-n-gram census + EXACT-set hit count of a raw text in
@@ -1335,82 +995,29 @@ object TextHashes {
     * `array_intersect(distinct_shingles, bench_set)`. Returns
     * total·2³² + hits packed in one BIGINT; fewer than n tokens → 0.
     */
-  def shingleSetHits(s: UTF8String, n: Int,
-      bench: java.util.HashSet[UTF8String]): Long = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
-    }
-    val nTok = spaces + 1
-    if (nTok < n) return 0L
-    val starts = new Array[Int](nTok)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        starts(t) = i + 1; t += 1
-      }
-      i += 1
-    }
-    val nWin = nTok - n + 1
-    val seen = new java.util.HashSet[UTF8String](nWin * 2)
-    var total = 0L
-    var hits = 0L
-    var w = 0
-    while (w < nWin) {
-      val s0 = starts(w)
-      val e = if (w + n < nTok) starts(w + n) - 1 else len
-      val span = UTF8String.fromAddress(base, off + s0, e - s0)
-      if (seen.add(span)) {
-        total += 1
-        if (bench.contains(span)) hits += 1
-      }
-      w += 1
-    }
-    (total << 32) | hits
-  }
+  def shingleSetHits(s: UTF8String, n: Int, bench: java.util.HashSet[UTF8String]): Long =
+    spanCensus(s, n, bench.contains)
 
   /** `shingle_set_hits(text)` → BIGINT total·2³² + hits (see
     * [[shingleSetHits]]); the benchmark shingles are baked in at
     * construction as a case-class Seq (value equality → semanticEquals
-    * and CSE work), compiled once per task into a HashSet of
-    * UTF8Strings. Rides task serialization like
-    * [[BloomFunctions.BloomShingleHits]]'s words array — the exact-set
+    * and CSE work), compiled once per expression instance into a
+    * HashSet of UTF8Strings. Rides task serialization — the exact-set
     * gate's documented contract is a broadcast-sized benchmark (an
     * eval suite, tens of MB); a benchmark past that belongs in the
     * Bloom gate, whose bitset spends ~10 bits/gram.
     */
   case class ShingleSetHits(child: Expression, n: Int, shingles: Seq[String])
-      extends UnaryExpression {
-    @transient private lazy val benchSet: java.util.HashSet[UTF8String] = {
-      val s = new java.util.HashSet[UTF8String](shingles.size * 2)
-      shingles.foreach(w => s.add(UTF8String.fromString(w)))
-      s
-    }
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (n < 1)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_set_hits requires n >= 1, got $n")
-      else if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_set_hits requires string input, got ${child.dataType}")
-    override protected def nullSafeEval(input: Any): Any =
-      shingleSetHits(input.asInstanceOf[UTF8String], n, benchSet)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val setRef = ctx.addReferenceObj("graftBenchSet", benchSet,
-        "java.util.HashSet")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.shingleSetHits($c, $n, $setRef);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): ShingleSetHits =
-      copy(child = newChild)
+      extends Kernel.Unary("shingle_set_hits", Str, LongType) {
+    override protected def argError = argCheck(n >= 1, s"requires n >= 1, got $n")
+    protected def kernel = call(TextHashes, "shingleSetHits", n, utf8Set(shingles))
+    override protected def withNewChildInternal(c: Expression): ShingleSetHits = copy(child = c)
+  }
+
+  private def utf8Set(words: Seq[String]): java.util.HashSet[UTF8String] = {
+    val set = new java.util.HashSet[UTF8String](words.size * 2)
+    words.foreach(w => set.add(UTF8String.fromString(w)))
+    set
   }
 
   /** Binary-search membership over an ASCENDING-sorted array<bigint>:
@@ -1439,109 +1046,46 @@ object TextHashes {
 
   /** `sorted_contains(sortedArr, v)` → BOOLEAN (see [[sortedContains]]). */
   case class SortedLongContains(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), LongType) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sorted_contains requires (array<bigint>, bigint), got $other")
-      }
-    override protected def nullSafeEval(a: Any, v: Any): Any =
-      sortedContains(a.asInstanceOf[ArrayData], v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, v) =>
-        s"${ev.value} = graft.functions.TextHashes$$.MODULE$$.sortedContains($a, $v);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): SortedLongContains =
-      copy(left = newLeft, right = newRight)
+      extends Kernel.Binary("sorted_contains", BigintArray, Bigint, BooleanType) {
+    protected def kernel = call(TextHashes, "sortedContains")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedLongContains =
+      copy(left = l, right = r)
   }
 
   /** Column-API entry points. */
   def portableFoldCol(c: Column, mult: Long = 31L): Column =
-    org.apache.spark.sql.GraftShim.column(
-      PortableFold(org.apache.spark.sql.GraftShim.expression(c), mult))
-  def fingerprint62(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      PortableFingerprint(org.apache.spark.sql.GraftShim.expression(c)))
-  def simhash62(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      SimHashPortable(org.apache.spark.sql.GraftShim.expression(c)))
-  def bigramScoreCol(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BigramScore(org.apache.spark.sql.GraftShim.expression(c)))
-  def minhashSigsCol(c: Column, k: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      MinHashSigs(org.apache.spark.sql.GraftShim.expression(c), k))
-  def ngramHashes64Col(c: Column, n: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      NgramHashes64(org.apache.spark.sql.GraftShim.expression(c), n))
-  def ngramRepStatsCol(c: Column, n: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      NgramRepStats(org.apache.spark.sql.GraftShim.expression(c), n))
-  def ngramRepStatsMultiCol(c: Column, ns: Seq[Int],
-      pushable: Boolean = true): Column =
-    org.apache.spark.sql.GraftShim.column(
-      NgramRepStatsMulti(org.apache.spark.sql.GraftShim.expression(c), ns,
-        pushable))
-  def gopherStatsCol(c: Column, stopwords: Seq[String],
-      pushable: Boolean = true): Column =
-    org.apache.spark.sql.GraftShim.column(
-      GopherStats(org.apache.spark.sql.GraftShim.expression(c), stopwords,
-        pushable))
+    column(PortableFold(expression(c), mult))
+  def fingerprint62(c: Column): Column = column(PortableFingerprint(expression(c)))
+  def simhash62(c: Column): Column = column(SimHashPortable(expression(c)))
+  def bigramScoreCol(c: Column): Column = column(BigramScore(expression(c)))
+  def minhashSigsCol(c: Column, k: Int): Column = column(MinHashSigs(expression(c), k))
+  def ngramHashes64Col(c: Column, n: Int): Column = column(NgramHashes64(expression(c), n))
+  def ngramRepStatsCol(c: Column, n: Int): Column = column(NgramRepStats(expression(c), n))
+  def ngramRepStatsMultiCol(c: Column, ns: Seq[Int], pushable: Boolean = true): Column =
+    column(NgramRepStatsMulti(expression(c), ns, pushable))
+  def gopherStatsCol(c: Column, stopwords: Seq[String], pushable: Boolean = true): Column =
+    column(GopherStats(expression(c), stopwords, pushable))
   def sortedContainsCol(sorted: Column, v: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      SortedLongContains(org.apache.spark.sql.GraftShim.expression(sorted),
-        org.apache.spark.sql.GraftShim.expression(v)))
+    column(SortedLongContains(expression(sorted), expression(v)))
   def winnowSelectCol(text: Column, k: Int, w: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      WinnowSelectExpr(org.apache.spark.sql.GraftShim.expression(text), k, w))
-  def winnowCensusHitsCol(text: Column, k: Int, w: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      WinnowCensusHitsBroadcast(
-        org.apache.spark.sql.GraftShim.expression(text), k, w, census))
-  def winnowBloomHitsCol(text: Column, k: Int, w: Int,
-      words: org.apache.spark.broadcast.Broadcast[Array[Long]],
+    column(WinnowSelectExpr(expression(text), k, w))
+  def winnowCensusHitsCol(text: Column, k: Int, w: Int, census: Broadcast[Array[Long]]): Column =
+    column(WinnowCensusHitsBroadcast(expression(text), k, w, census))
+  def winnowBloomHitsCol(text: Column, k: Int, w: Int, words: Broadcast[Array[Long]],
       numBits: Long, bloomK: Int): Column =
-    org.apache.spark.sql.GraftShim.column(
-      WinnowBloomHitsBroadcast(
-        org.apache.spark.sql.GraftShim.expression(text), k, w, words,
-        numBits, bloomK))
+    column(WinnowBloomHitsBroadcast(expression(text), k, w, words, numBits, bloomK))
   def shingleSetHitsCol(text: Column, n: Int, shingles: Seq[String]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      ShingleSetHits(org.apache.spark.sql.GraftShim.expression(text),
-        n, shingles))
+    column(ShingleSetHits(expression(text), n, shingles))
   def qualityVerdictCol(text: Column, minTokens: Int, minRatio: Double,
       stopwords: Seq[String]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      QualityVerdict(org.apache.spark.sql.GraftShim.expression(text),
-        minTokens, minRatio, stopwords))
-  def spanScrubCol(text: Column, n: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      SpanScrubBroadcast(org.apache.spark.sql.GraftShim.expression(text),
-        n, census))
-  def ngramCensusStatsCol(text: Column, n: Int,
-      census: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      NgramCensusStatsBroadcast(
-        org.apache.spark.sql.GraftShim.expression(text), n, census))
+    column(QualityVerdict(expression(text), minTokens, minRatio, stopwords))
+  def spanScrubCol(text: Column, n: Int, census: Broadcast[Array[Long]]): Column =
+    column(SpanScrubBroadcast(expression(text), n, census))
+  def ngramCensusStatsCol(text: Column, n: Int, census: Broadcast[Array[Long]]): Column =
+    column(NgramCensusStatsBroadcast(expression(text), n, census))
   def bucketScoreSumCol(text: Column, model: Array[Long], order: Int,
       mult: Long, comb: Long = 0L): Column =
-    org.apache.spark.sql.GraftShim.column(
-      BucketScoreSum(org.apache.spark.sql.GraftShim.expression(text),
-        model, order, mult, comb))
-
-  /** SQL registration, e.g. `SELECT fingerprint62(text) FROM docs`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.GraftShim.registerFunction(spark, "fingerprint62",
-      exprs => PortableFingerprint(exprs.head))
-    org.apache.spark.sql.GraftShim.registerFunction(spark, "simhash62",
-      exprs => SimHashPortable(exprs.head))
-  }
+    column(BucketScoreSum(expression(text), model, order, mult, comb))
 
   // ------------------------------------------------ oracle interpolation
 

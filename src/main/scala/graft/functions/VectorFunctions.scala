@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.GraftShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+import graft.functions.Kernel.{argCheck, call, BigintArray, FloatArray}
 
 /** Native Catalyst expressions for embedding math (similarity-search
   * extensions). Column-algebra formulations (zip_with + aggregate over
@@ -43,7 +44,7 @@ object VectorFunctions {
     val out = new Array[Long](n)
     var i = 0
     while (i < n) { out(i) = q6(v.getFloat(i).toDouble); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Integer dot product of two pre-quantized vectors — the hot loop of
@@ -152,66 +153,29 @@ object VectorFunctions {
     }
     val out = new Array[Int](filled)
     System.arraycopy(topCell, 0, out, 0, filled)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  private def requireFloatArray(e: Expression, name: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name requires array<float>, got $other")
-    }
-
-  private val helper = VectorFunctions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-
   /** `quant_dot(a, b)` → BIGINT. */
-  case class QuantizedDot(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireFloatArray(left, "quant_dot") match {
-        case TypeCheckResult.TypeCheckSuccess => requireFloatArray(right, "quant_dot")
-        case f => f
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      dotQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $helper.dotQ($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+  case class QuantizedDot(left: Expression, right: Expression)
+      extends Kernel.Binary("quant_dot", FloatArray, FloatArray, LongType) {
+    protected def kernel = call(VectorFunctions, "dotQ")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizedDot =
       copy(left = l, right = r)
   }
 
   /** `quantize_vec(v)` → ARRAY<BIGINT>: round(x·10⁶) per element. */
-  case class QuantizeVec(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireFloatArray(child, "quantize_vec")
-    override protected def nullSafeEval(v: Any): Any =
-      quantizeVec(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $helper.quantizeVec($v);")
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  case class QuantizeVec(child: Expression)
+      extends Kernel.Unary("quantize_vec", FloatArray, ArrayType(LongType, containsNull = false)) {
+    protected def kernel = call(VectorFunctions, "quantizeVec")
+    override protected def withNewChildInternal(c: Expression): QuantizeVec = copy(child = c)
   }
 
-  private def requireLongArray(e: Expression, name: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name requires array<bigint>, got $other")
-    }
-
   /** `long_dot(a, b)` → BIGINT over pre-quantized vectors. */
-  case class LongDot(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireLongArray(left, "long_dot") match {
-        case TypeCheckResult.TypeCheckSuccess => requireLongArray(right, "long_dot")
-        case f => f
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      dotL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $helper.dotL($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+  case class LongDot(left: Expression, right: Expression)
+      extends Kernel.Binary("long_dot", BigintArray, BigintArray, LongType) {
+    protected def kernel = call(VectorFunctions, "dotL")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): LongDot =
       copy(left = l, right = r)
   }
 
@@ -220,19 +184,12 @@ object VectorFunctions {
     * truncation; extend the static table for wider embeddings).
     */
   case class CosineLshKey(child: Expression, nBits: Int, offset: Int = 0)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (nBits < 1 || offset < 0 || offset + nBits > MaxBits)
-        TypeCheckResult.TypeCheckFailure(
-          s"lsh_bits: need nBits >= 1, offset >= 0, offset + nBits <= $MaxBits, " +
-            s"got ($nBits, $offset)")
-      else requireFloatArray(child, "lsh_bits")
-    override protected def nullSafeEval(v: Any): Any =
-      lshBits(v.asInstanceOf[ArrayData], nBits, offset)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $helper.lshBits($v, $nBits, $offset);")
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+      extends Kernel.Unary("lsh_bits", FloatArray, LongType) {
+    override protected def argError =
+      argCheck(nBits >= 1 && offset >= 0 && offset + nBits <= MaxBits,
+        s"need nBits >= 1, offset >= 0, offset + nBits <= $MaxBits, got ($nBits, $offset)")
+    protected def kernel = call(VectorFunctions, "lshBits", nBits, offset)
+    override protected def withNewChildInternal(c: Expression): CosineLshKey = copy(child = c)
   }
 
   /** `nearest_cells(qe, cents, k)` → ARRAY<INT>: top-k cell ids by
@@ -240,41 +197,29 @@ object VectorFunctions {
     * Codegen'd single-helper-call like the other vector expressions.
     */
   case class NearestCells(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (k < 1) TypeCheckResult.TypeCheckFailure("nearest_cells: k must be >= 1")
-      else requireLongArray(left, "nearest_cells") match {
-        case TypeCheckResult.TypeCheckSuccess => right.dataType match {
-          case ArrayType(StructType(fields), _)
-              if fields.length == 2 && fields(0).dataType == IntegerType &&
-                fields(1).dataType.isInstanceOf[ArrayType] &&
-                fields(1).dataType.asInstanceOf[ArrayType].elementType == LongType =>
-            TypeCheckResult.TypeCheckSuccess
-          case other => TypeCheckResult.TypeCheckFailure(
-            s"nearest_cells requires array<struct<int, array<bigint>>> centroids, got $other")
-        }
-        case f => f
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      nearestCells(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $helper.nearestCells($a, $b, $k);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+      extends Kernel.Binary("nearest_cells", BigintArray, Centroids,
+        ArrayType(IntegerType, containsNull = false)) {
+    override protected def argError = argCheck(k >= 1, "k must be >= 1")
+    protected def kernel = call(VectorFunctions, "nearestCells", k)
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): NearestCells =
       copy(left = l, right = r)
   }
 
-  import org.apache.spark.sql.GraftShim
+  private val Centroids = new Kernel.In("array<struct<int, array<bigint>>>") {
+    def accepts(t: DataType): Boolean = t match {
+      case ArrayType(StructType(Array(cell, StructField(_, ArrayType(LongType, _), _, _))), _) =>
+        cell.dataType == IntegerType
+      case _ => false
+    }
+  }
+
   def quantDot(a: Column, b: Column): Column =
-    GraftShim.column(QuantizedDot(GraftShim.expression(a), GraftShim.expression(b)))
-  def lshKeyCol(v: Column, nBits: Int): Column =
-    GraftShim.column(CosineLshKey(GraftShim.expression(v), nBits))
+    column(QuantizedDot(expression(a), expression(b)))
+  def lshKeyCol(v: Column, nBits: Int): Column = column(CosineLshKey(expression(v), nBits))
   def lshKeyCol(v: Column, nBits: Int, offset: Int): Column =
-    GraftShim.column(CosineLshKey(GraftShim.expression(v), nBits, offset))
-  def quantizeCol(v: Column): Column =
-    GraftShim.column(QuantizeVec(GraftShim.expression(v)))
-  def longDot(a: Column, b: Column): Column =
-    GraftShim.column(LongDot(GraftShim.expression(a), GraftShim.expression(b)))
+    column(CosineLshKey(expression(v), nBits, offset))
+  def quantizeCol(v: Column): Column = column(QuantizeVec(expression(v)))
+  def longDot(a: Column, b: Column): Column = column(LongDot(expression(a), expression(b)))
   def nearestCellsCol(v: Column, cents: Column, k: Int): Column =
-    GraftShim.column(NearestCells(GraftShim.expression(v), GraftShim.expression(cents), k))
+    column(NearestCells(expression(v), expression(cents), k))
 }

@@ -605,22 +605,14 @@ object StreamingFeatures {
     * (the bitset spends ~10 BITS/gram against the set's ~50+ bytes, so
     * the same broadcast budget reaches a ~40× larger suite). Stateless
     * and map-side: the filter is built ONCE at gate construction — a
-    * single fixed-size batch job whose one-row result becomes an
-    * ARRAY<BIGINT> literal in the stream's plan (a stream-static join
-    * would re-run bloomFrom's digest+shuffle+aggregation every
-    * micro-batch; a literal is evaluated zero times after analysis).
-    * Literal-vs-broadcast switch: a plan literal is serialized into
-    * EVERY task, not torrent-broadcast once per executor — free at the
-    * registered 2²⁰ sizing (128 KB) but a 16 MB per-task payload at the
-    * documented 2²⁷ production ceiling, so at `numBits ≥`
-    * [[graft.functions.BloomFunctions.BroadcastThresholdBits]] the gate
-    * wraps the words in `sparkContext.broadcast` and probes through
-    * [[graft.functions.BloomFunctions.BloomContainsBroadcast64]]
-    * (same formula, equality spec-pinned) — and
-    * each doc's overlap counts the shingles whose xxhash64 digest
-    * probes true (native O(k) [[graft.functions.BloomFunctions
-    * .BloomContains64]] with early exit — ~1 probe expected on clean
-    * grams). Internal temporaries are `__bloom_`-prefixed so a docs
+    * single fixed-size batch job whose one-row result ships to the
+    * executors as an `sc.broadcast` (one copy per executor at any
+    * sizing; a stream-static join would re-run bloomFrom's
+    * digest+shuffle+aggregation every micro-batch) — and each doc's
+    * overlap counts the distinct shingles whose xxhash64 digest probes
+    * true (the fused [[graft.functions.BloomFunctions.shingleHits]]
+    * census, O(k) per probe with early exit — ~1 probe expected on
+    * clean grams). Internal temporaries are `__bloom_`-prefixed so a docs
     * frame that already carries `shingles`/`overlap_frac`/`jk` columns
     * passes through untouched. Verdicts lockstep with the batch
     * [[graft.operators.Decontam.bloomContamination]] flag (same
@@ -763,25 +755,6 @@ object StreamingFeatures {
     }
   }
 
-  /** Probe-column factory shared by the Bloom gates: plan literal below
-    * [[graft.functions.BloomFunctions.BroadcastThresholdBits]] (cheap,
-    * debuggable), `sc.broadcast` handle at or above it (one copy per
-    * executor instead of per task — the 2²⁷ ceiling costs 16 MB).
-    * Literal and broadcast probes are the same formula (equality
-    * spec-pinned in BloomSpec).
-    */
-  private def bloomProbe(docs: DataFrame, bloomWords: Seq[Long],
-      numBits: Long, k: Int): Column => Column = {
-    import graft.functions.BloomFunctions
-    if (numBits >= BloomFunctions.BroadcastThresholdBits) {
-      val bc = docs.sparkSession.sparkContext.broadcast(bloomWords.toArray)
-      h => BloomFunctions.bloomContainsBroadcastCol(bc, h, numBits, k)
-    } else {
-      val bloomLit = typedLit(bloomWords)
-      h => BloomFunctions.bloomContainsCol(bloomLit, h, numBits, k)
-    }
-  }
-
   /** Streaming perplexity gate — CCNet as an online filter: score each
     * incoming doc against a STATIC reference model (the
     * [[graft.operators.Perplexity.referenceNlp]] frame, collapsed into a
@@ -883,27 +856,6 @@ object StreamingFeatures {
       .drop("jk", "boiler_set")
   }
 
-  /** Streaming span scrub — the ExactSubstr twin: rewrite each incoming
-    * doc with every token covered by a FROZEN-census duplicated n-gram
-    * window removed, in lockstep with what
-    * [[graft.operators.Dedup.dupSpanScrub]] rebuilds offline (same
-    * stride-1 hasher — the shared `ngramHashes` formula, same coverage
-    * predicate i ∈ [j−n+1, j]; for a census built from the same corpus
-    * the two texts are byte-identical, lockstep-spec'd). Stateless and
-    * map-side, the [[boilerplateGateStream]] device with 8-byte digests
-    * in place of passage strings (~an order lighter broadcast for the
-    * same census): the census collapses to ONE static row carrying the
-    * SORTED digest array, and the verdict per token is an `exists` over
-    * its ≤ n covering window starts, each probe an O(log |census|)
-    * binary search (native
-    * [[graft.functions.TextHashes.SortedLongContains]] — the
-    * `array_contains` linear scan this replaces made the worst case
-    * O(n · |census|) per token; measured on the bench's
-    * scrub_gate_rows_per_sec). Valid while the census is
-    * broadcast-sized, the documented gate bound; a census too large for
-    * that is a corpus the batch operator should scrub first. NULL text
-    * passes through NULL (total function).
-    */
   /** Streaming Gopher-rule admission gate — the stream face of
     * [[graft.operators.TextAnalytics.gopherRules]] (round 18): every
     * in-flight doc is annotated with the five rule metrics and the
@@ -916,10 +868,10 @@ object StreamingFeatures {
     * cheap-reject-first admission discipline).
     */
   def gopherGateStream(docs: DataFrame): DataFrame =
-    // pushable = false: same guide-§4.4 device as
-    // [[repetitionGateStream]] — keep the fused gopher census evaluated
-    // once in the project, not re-inlined per field reference into the
-    // Filter condition (12 copies measured without it)
+    // pushable = false (graft.functions.Kernel.Pushable): keep the fused
+    // gopher census evaluated once in the project, not re-inlined per
+    // field reference into the Filter condition (12 copies measured
+    // without it)
     graft.operators.TextAnalytics.withGopherColumns(docs, pushable = false)
       .filter(col("gopher_ok") === 1)
 
@@ -935,29 +887,35 @@ object StreamingFeatures {
     * published MassiveText filter.
     */
   def repetitionGateStream(docs: DataFrame): DataFrame =
-    // pushable = false (guide §4.4's duplicated-expensive-expression
-    // remedy, r19): without it the optimizer pushes the rep_ok filter
-    // below the annotation projects, inlining the census expression
-    // into the Filter condition once per field reference — FilterExec
-    // has no subexpression elimination, so every row paid ~18
-    // multi-censuses (measured: text_gate 4.6k → 2.1k rows/s when the
-    // r19 multi-n census landed pushable). Marked non-pushable, the
-    // census lands ONCE in a project and the filter reads the verdict
-    // column; evaluation stays pure — only the optimizer's license to
-    // duplicate is revoked.
+    // pushable = false (graft.functions.Kernel.Pushable): without it
+    // every row paid ~18 multi-censuses inlined into the Filter
+    // condition (measured: text_gate 4.6k → 2.1k rows/s when the r19
+    // multi-n census landed pushable)
     graft.operators.TextAnalytics.withRepetitionColumns(docs,
       pushable = false)
       .filter(col("rep_ok") === 1)
 
+  /** Streaming span scrub — the ExactSubstr twin: rewrite each incoming
+    * doc with every token covered by a FROZEN-census duplicated n-gram
+    * window removed, in lockstep with what
+    * [[graft.operators.Dedup.dupSpanScrub]] rebuilds offline (same
+    * stride-1 hasher — the shared `ngramHashes` formula, same coverage
+    * predicate i ∈ [j−n+1, j]; for a census built from the same corpus
+    * the two texts are byte-identical, lockstep-spec'd). Stateless and
+    * map-side: the census collapses ONCE at gate construction to the
+    * SORTED digest array (8-byte digests — ~an order lighter than the
+    * [[boilerplateGateStream]] passage strings), broadcast into the
+    * fused native rewrite ([[graft.functions.TextHashes.spanScrub]]):
+    * each window probes the census ONCE by binary search, a prefix sum
+    * turns "any hit among the covering windows" into two array reads
+    * per token, and the kept tokens rebuild in a single byte copy.
+    * Valid while the census is broadcast-sized, the documented gate
+    * bound; a census too large for that is a corpus the batch operator
+    * should scrub first. NULL text passes through NULL (total
+    * function).
+    */
   def spanScrubGateStream(docs: DataFrame, dupGrams: DataFrame,
       n: Int = graft.operators.Dedup.DefaultCoverageN): DataFrame = {
-    // shipped form (r17): the sorted census collects once at gate
-    // construction and broadcasts into the fused native rewrite
-    // ([[graft.functions.TextHashes.spanScrub]]) — each window probes
-    // the census ONCE (the join/HOF spelling re-probed every window up
-    // to n times, once per covered token) and the kept tokens rebuild
-    // in a single byte copy. NULL text stays NULL (the algebra form's
-    // `when(isNotNull, …)`).
     val census: Array[Long] = dupGrams.select(col("gh")).distinct()
       .agg(sort_array(collect_set("gh")).as("c"))
       .head().getSeq[Long](0).toArray
@@ -1336,8 +1294,8 @@ object StreamingFeatures {
     * valid input) are folded ONCE at gate construction into the
     * fixed-size dense bitset of [[graft.operators.Decontam.bloomFrom]]
     * (~10 bits/fp at the default sizing vs the census's 8 bytes/fp),
-    * and each incoming doc's fingerprint array probes natively O(k)
-    * per fp against the plan-literal words.
+    * broadcast once, and each incoming doc's fingerprints probe it
+    * natively, O(k) per fp.
     *
     * Error is one-sided in the CONSERVATIVE direction for an admission
     * gate: a Bloom false positive can only over-count shared
@@ -1346,9 +1304,7 @@ object StreamingFeatures {
     * negatives by construction: every frozen fp sets exactly the bits
     * its probe reads). Spec-pinned as exact-drop-set ⊆ bloom-drop-set
     * lockstep. NULL-text and sub-(w+k−1)-token docs have no
-    * fingerprints and PASS, as in the exact gate. Shares
-    * [[bloomDecontamGateStream]]'s literal-vs-broadcast switch at
-    * numBits ≥ 2²⁵.
+    * fingerprints and PASS, as in the exact gate.
     */
   def winnowGateStreamBloom(docs: DataFrame, frozenFps: DataFrame,
       k: Int = graft.operators.TextAnalytics.WinnowK,
@@ -1385,36 +1341,17 @@ object StreamingFeatures {
     val bloomWords: Seq[Long] = graft.operators.Decontam.bloomFrom(
       frozenFps.select(col("fp")).distinct(), numBits, bloomK)
       .head().getSeq[Long](0)
-    val probe = bloomProbe(docs, bloomWords, numBits, bloomK)
+    val bc = docs.sparkSession.sparkContext.broadcast(bloomWords.toArray)
     docs
       .withColumn("__winnow_hits",
         size(filter(
           graft.operators.TextAnalytics.winnowFpArray(col("text"), k, w),
-          h => probe(h))))
+          h => graft.functions.BloomFunctions.bloomContainsBroadcastCol(
+            bc, h, numBits, bloomK))))
       .filter(col("__winnow_hits") < minShared)
       .drop("__winnow_hits")
   }
 
-  /** Per-window streaming heavy-hitter tracking — the online twin of
-    * [[graft.operators.CorpusStats.heavyHitters]]'s candidate pass: a
-    * watermarked tumbling window whose aggregate is the
-    * [[graft.functions.SketchAggregates.MisraGriesAgg]] sketch, so each
-    * window closes with ≤ m (token, lower_bound) counters covering every
-    * token above that window's N/(m+1) share. The state store holds ONE
-    * bounded buffer per open window (the aggregate's serialized ≤ m
-    * counters — the same BinaryType buffer path percentile_approx uses
-    * in streaming), not the token domain: vocabulary-independent state,
-    * which is the whole point at ingest rates where an exact per-token
-    * windowed count would grow state with the vocabulary.
-    *
-    * Lockstep contract (spec-pinned, guarantee-based rather than
-    * hash-based — MG's sub-threshold survivors are arrival-order-
-    * dependent by design): the closed window's sketch CONTAINS every
-    * token the batch exact count puts above N/(m+1), within budget m,
-    * with every lower_bound ≤ the true count. The exact two-phase
-    * verify pass stays batch-side (it needs a second scan a stream
-    * cannot replay); downstream, run it over the sink's candidates.
-    */
   /** Streaming windowed HLL registers — the online twin of
     * [[graft.operators.Sketches.hllUserCounts]]: per closed window, the
     * m-register table of the window's distinct-user structure, emitted
@@ -1472,6 +1409,26 @@ object StreamingFeatures {
       .agg(count(lit(1)).as("n"))
       .select(col("w.end").as("window_end"), col("j"), col("bucket"), col("n"))
 
+  /** Per-window streaming heavy-hitter tracking — the online twin of
+    * [[graft.operators.CorpusStats.heavyHitters]]'s candidate pass: a
+    * watermarked tumbling window whose aggregate is the
+    * [[graft.functions.SketchAggregates.MisraGriesAgg]] sketch, so each
+    * window closes with ≤ m (token, lower_bound) counters covering every
+    * token above that window's N/(m+1) share. The state store holds ONE
+    * bounded buffer per open window (the aggregate's serialized ≤ m
+    * counters — the same BinaryType buffer path percentile_approx uses
+    * in streaming), not the token domain: vocabulary-independent state,
+    * which is the whole point at ingest rates where an exact per-token
+    * windowed count would grow state with the vocabulary.
+    *
+    * Lockstep contract (spec-pinned, guarantee-based rather than
+    * hash-based — MG's sub-threshold survivors are arrival-order-
+    * dependent by design): the closed window's sketch CONTAINS every
+    * token the batch exact count puts above N/(m+1), within budget m,
+    * with every lower_bound ≤ the true count. The exact two-phase
+    * verify pass stays batch-side (it needs a second scan a stream
+    * cannot replay); downstream, run it over the sink's candidates.
+    */
   def heavyHitterStream(docs: DataFrame,
       m: Int = graft.operators.CorpusStats.DefaultMgCounters,
       windowLen: String = "5 minutes"): DataFrame =

@@ -114,9 +114,8 @@ class BloomSpec extends AnyFunSuite {
       s"literal and broadcast probes diverged on ${both.count(p => p._1 != p._2)} digests")
     assert(both.count(_._1) >= members.size, "members must all probe true on both paths")
 
-    // the streaming gate crosses the threshold transparently: same
-    // survivor set at the registered literal sizing and at the smallest
-    // broadcast sizing (2^25 — FP-free here at n=10 grams either way)
+    // the streaming gate keeps the same survivor set at the registered
+    // 2^20 sizing and at 2^25 bits (FP-free here at n=10 grams either way)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val item = (1 to 12).map(i => s"w$i").mkString(" ")
     val texts = Seq(
@@ -135,10 +134,10 @@ class BloomSpec extends AnyFunSuite {
       q.stop()
       spark.table(s"bcgate$numBits").select("doc_id").as[Long].collect().toSet
     }
-    val litKept = gateKept(Decontam.DefaultBloomBits)       // literal path
-    val bcKept = gateKept(BloomFunctions.BroadcastThresholdBits) // broadcast path
+    val litKept = gateKept(Decontam.DefaultBloomBits) // registered sizing
+    val bcKept = gateKept(1L << 25)                   // 2^25 bits
     assert(litKept == Set(2L) && bcKept == Set(2L),
-      s"gate verdicts must agree across the literal/broadcast switch: $litKept vs $bcKept")
+      s"gate verdicts must agree across the two sizings: $litKept vs $bcKept")
   }
 
   test("fused shingle-hits equals the algebra census per doc, both digest families") {

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,15 +48,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers native expressions for SQL") {
-    // A fresh session on the shared SparkContext: clear the active/default
-    // session so getOrCreate builds a new one WITH the extensions (and do
-    // not stop it — that would stop the JVM-wide context).
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    TestSpark.withExtensions { s2 =>
       val r = s2.sql(
         "SELECT fingerprint62('abc') AS f, simhash62(array('a','b')) AS s, " +
           "quant_dot(array(cast(1.0 as float)), array(cast(2.0 as float))) AS d, " +
@@ -95,11 +86,6 @@ class ScaleSpec extends AnyFunSuite {
           "(SELECT explode(array('x','x','y','x')) AS t)").head()
       assert(mg.getStruct(0).getString(0) == "x" &&
         mg.getStruct(0).getLong(1) >= 2L, "misra_gries extension plumbing")
-    } finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p)
-      }
     }
   }
 

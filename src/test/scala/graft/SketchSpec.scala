@@ -87,17 +87,18 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes misra_gries to spark.sql") {
-    SketchAggregates.registerAll(spark)
-    spark.createDataset(Seq("a", "a", "b", "a", "c")).createOrReplaceTempView("mg_toks")
-    val out = spark.sql(
-      "SELECT explode(misra_gries(value, 2)) AS e FROM mg_toks")
-      .selectExpr("e.token", "e.lower_bound")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // a:3 of 5 > N/(m+1): must survive with a sane lower bound
-    assert(out.contains("a") && out("a") >= 1L && out("a") <= 3L && out.size <= 2)
-    // non-literal m must be rejected, not silently misparsed
-    intercept[Exception] {
-      spark.sql("SELECT misra_gries(value, length(value)) FROM mg_toks").collect()
+    TestSpark.withExtensions { s =>
+      s.createDataset(Seq("a", "a", "b", "a", "c")).createOrReplaceTempView("mg_toks")
+      val out = s.sql(
+        "SELECT explode(misra_gries(value, 2)) AS e FROM mg_toks")
+        .selectExpr("e.token", "e.lower_bound")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // a:3 of 5 > N/(m+1): must survive with a sane lower bound
+      assert(out.contains("a") && out("a") >= 1L && out("a") <= 3L && out.size <= 2)
+      // non-literal m must be rejected, not silently misparsed
+      intercept[Exception] {
+        s.sql("SELECT misra_gries(value, length(value)) FROM mg_toks").collect()
+      }
     }
   }
 

@@ -136,10 +136,9 @@ class TextHashesSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes the functions to spark.sql") {
-    TextHashes.register(spark)
-    val n = spark.sql(
+    val n = TestSpark.withExtensions(_.sql(
       "SELECT fingerprint62('abc') AS f, simhash62(array('a','b')) AS s")
-      .as[(Long, Long)].head()
+      .as[(Long, Long)].head())
     val h31 = (97L * 31 + 98) * 31 + 99
     val h131 = (97L * 131 + 98) * 131 + 99
     assert(n._1 == h131 * 2147483648L + h31)
