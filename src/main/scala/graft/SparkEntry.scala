@@ -336,18 +336,6 @@ object SparkEntry {
     "q_media_ann" -> ((s, d) => Multimodal.mediaAnn(s, d))
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted ONLY for the order-dependent
-    * sketch merges — MG survivor sets and GK summaries
-    * (q_value_percentiles_approx, q_perplexity_buckets_approx,
-    * q_perplexity_bigram_approx,
-    * q_heavy_hitter_sketch)
-    * → driver records a rows-only check; those are pinned by ScalaTest
-    * AND each now carries an oracle-green `*_guarantee` twin (r17
-    * verdict ask #5) whose constant-true verdict columns hash-mismatch
-    * iff the sketch's declared guarantee is violated — the rows-only
-    * entries are attested per round, not trusted.
-    */
   /** The rows-only sketch queries paired with the oracle-checked
     * guarantee twin that attests each one (r17 verdict ask #5): the twin
     * is hash-green iff the sketch's declared guarantee holds on this
@@ -359,6 +347,20 @@ object SparkEntry {
     "q_perplexity_buckets_approx" -> "q_perplexity_buckets_approx_guarantee",
     "q_perplexity_bigram_approx" -> "q_perplexity_bigram_approx_guarantee")
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omitted ONLY for the order-dependent
+    * sketch merges — MG survivor sets and GK summaries
+    * (q_value_percentiles_approx, q_perplexity_buckets_approx,
+    * q_perplexity_bigram_approx, q_heavy_hitter_sketch) → the
+    * correctness gate records a rows-only check; those are pinned by
+    * ScalaTest AND each carries an oracle-green `*_guarantee` twin
+    * ([[guaranteeTwins]]) whose constant-true verdict columns
+    * hash-mismatch iff the sketch's declared guarantee is violated — the
+    * rows-only entries are attested, not trusted. `OracleSqlSpec` runs
+    * every entry on DuckDB against a frozen result digest, and checks
+    * the key sets: queries = oracleSql + the guarantee twins' keys, and
+    * no key collides across the module maps this `++` merges.
+    */
   def oracleSql: Map[String, String] =
     RelationalQueries.oracles ++ EventAnalytics.oracles ++ FeatureJobs.oracles ++
       TemporalJoins.oracles ++

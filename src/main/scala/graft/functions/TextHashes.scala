@@ -1092,6 +1092,12 @@ object TextHashes {
   /** The repo-wide portable char fold as DuckDB SQL over a string
     * expression — THE one spelling every oracle generator composes (a
     * change here moves all of them and [[portableFold]] in lockstep).
+    * The `greatest(…, 0)` guard matches Spark on the EMPTY string (a
+    * token produced by consecutive spaces): Spark `ascii('') = 0` vs
+    * DuckDB `unicode('') = -1`, and DuckDB's `%` is sign-preserving, so
+    * the raw form would fold −1 where Spark folds 0. Codepoints of real
+    * chars are non-negative on both engines, so the guard is a no-op
+    * everywhere else.
     */
   def duckFold(expr: String, mult: Long = 31L): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +

@@ -453,6 +453,14 @@ object Bpe {
       s"""SELECT ${i + 1} AS merge_rank, sym_a, sym_b,
          |       sym_a || sym_b AS merged, n AS pair_count FROM $s""".stripMargin
     }.mkString("\nUNION ALL\n")
+    // tl(tok, n_sub): each word's BPE token count under the final vocab
+    val tlCte =
+      s"""tl AS (
+         |  SELECT replace(replace(w, chr(1), ''), chr(2), '') AS tok,
+         |         CAST(len(string_split(substring(w, 2, length(w) - 2),
+         |                               chr(2) || chr(1))) AS BIGINT)
+         |           AS n_sub
+         |  FROM $vFinal WHERE length(w) >= 2)""".stripMargin
     val mergesSql =
       s"""WITH $ctes
          |SELECT * FROM ($mergeRows) ORDER BY merge_rank""".stripMargin
@@ -472,12 +480,7 @@ object Bpe {
            |GROUP BY sym ORDER BY sym""".stripMargin,
       "q_bpe_compression" ->
         s"""WITH $ctes,
-           |tl AS (
-           |  SELECT replace(replace(w, chr(1), ''), chr(2), '') AS tok,
-           |         CAST(len(string_split(substring(w, 2, length(w) - 2),
-           |                               chr(2) || chr(1))) AS BIGINT)
-           |           AS n_sub
-           |  FROM $vFinal WHERE length(w) >= 2),
+           |$tlCte,
            |dt AS (
            |  SELECT source, unnest(list_filter(string_split(text, ' '),
            |                                    t -> t <> '')) AS tok
@@ -493,12 +496,7 @@ object Bpe {
            |GROUP BY dt.source ORDER BY dt.source""".stripMargin,
       "q_bpe_token_counts" ->
         s"""WITH $ctes,
-           |tl AS (
-           |  SELECT replace(replace(w, chr(1), ''), chr(2), '') AS tok,
-           |         CAST(len(string_split(substring(w, 2, length(w) - 2),
-           |                               chr(2) || chr(1))) AS BIGINT)
-           |           AS n_sub
-           |  FROM $vFinal WHERE length(w) >= 2),
+           |$tlCte,
            |dt AS (
            |  SELECT doc_id, unnest(list_filter(string_split(text, ' '),
            |                                    t -> t <> '')) AS tok

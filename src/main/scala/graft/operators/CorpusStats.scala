@@ -588,16 +588,29 @@ object CorpusStats {
       .orderBy(col("window_end"), desc("n"), asc("token"))
   }
 
+  /** `d(source, tok, c)`: each source's whitespace-token counts. */
+  private def duckSourceTokenCte: String =
+    """d AS (
+      |  SELECT source, tok, count(*) AS c
+      |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
+      |        FROM documents WHERE text IS NOT NULL)
+      |  GROUP BY source, tok)""".stripMargin
+
+  /** The exact corpus-wide token counts behind the MG heavy-hitter
+    * oracles: `c(token, n)` and the one-row total `t(n_corpus)`.
+    */
+  private def duckHeavyCtes: String =
+    """toks AS (
+      |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
+      |c AS (SELECT token, count(*) AS n FROM toks GROUP BY token),
+      |t AS (SELECT count(*) AS n_corpus FROM toks)""".stripMargin
+
   /** Entropy oracle as a named val so the datasheet oracle can embed the
     * SAME string (no self-reference into the `oracles` map during its
     * own initialization).
     */
   private val sourceEntropySql: String =
-      """WITH d AS (
-        |  SELECT source, tok, count(*) AS c
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents WHERE text IS NOT NULL)
-        |  GROUP BY source, tok),
+      s"""WITH $duckSourceTokenCte,
         |t AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot, count(*) AS v
         |      FROM d GROUP BY source),
         |s AS (
@@ -631,11 +644,7 @@ object CorpusStats {
          |  ON m.source_a = e.source AND m.source_b = e.source
          |ORDER BY e.source""".stripMargin,
     "q_source_divergence" ->
-      """WITH d AS (
-        |  SELECT source, tok, count(*) AS c
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents WHERE text IS NOT NULL)
-        |  GROUP BY source, tok),
+      s"""WITH $duckSourceTokenCte,
         |t AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM d GROUP BY source),
         |ov AS (
         |  SELECT a.source AS source_a, b.source AS source_b,
@@ -679,10 +688,7 @@ object CorpusStats {
          |WHERE n * $DefaultMgCounters > n_lang
          |ORDER BY c.lang, n DESC, token""".stripMargin,
     "q_heavy_hitters" ->
-      s"""WITH toks AS (
-         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |c AS (SELECT token, count(*) AS n FROM toks GROUP BY token),
-         |t AS (SELECT count(*) AS n_corpus FROM toks)
+      s"""WITH $duckHeavyCtes
          |SELECT token, n, n_corpus FROM c, t
          |WHERE n * $DefaultMgCounters > n_corpus
          |ORDER BY n DESC, token""".stripMargin,
@@ -690,10 +696,7 @@ object CorpusStats {
     // heavy set and asserts constant-true containment/bound flags —
     // any MG guarantee violation hash-mismatches (r17 verdict ask #5)
     "q_heavy_hitter_sketch_guarantee" ->
-      s"""WITH toks AS (
-         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |c AS (SELECT token, count(*) AS n FROM toks GROUP BY token),
-         |t AS (SELECT count(*) AS n_corpus FROM toks)
+      s"""WITH $duckHeavyCtes
          |SELECT token, n, CAST(1 AS BIGINT) AS contained,
          |       CAST(1 AS BIGINT) AS bound_ok
          |FROM c, t WHERE n * $DefaultMgCounters > n_corpus

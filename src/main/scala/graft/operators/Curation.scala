@@ -456,13 +456,57 @@ object Curation {
     s"""len(string_split(text, ' ')) >= 10
        |            AND ${TextAnalytics.duckStopRatio} >= 0.01""".stripMargin
 
-  private def duckCurate: String =
-    s"""WITH q AS (
+  /** The per-doc quality verdict, content digest and split label over
+    * `relation` as the CTE `q` — the head of every curation chain.
+    */
+  private def duckQualityCte(relation: String): String =
+    s"""q AS (
        |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
        |         CASE WHEN $duckQuality THEN 1 ELSE 0 END AS quality_ok,
        |         md5(text) AS content_md5,
        |         ${TextAnalytics.duckSplitCase} AS split
-       |  FROM documents),
+       |  FROM $relation)""".stripMargin
+
+  /** `rr(cluster_rep, rep_represented)`: whether each doc of the decision
+    * CTE `d`, taken as a cluster's representative, still stands for its
+    * content downstream (kept, or dropped only as an exact duplicate).
+    */
+  private def duckRepCte: String =
+    """rr AS (SELECT doc_id AS cluster_rep,
+      |              (drop_reason IS NULL OR drop_reason = 'duplicate')
+      |                AS rep_represented
+      |       FROM d)""".stripMargin
+
+  /** The near-dup stage over the decision CTE `d` and a simhash
+    * cluster CTE `scl`, as the CTE `nd`: a surviving doc whose cluster
+    * rep is another, still-represented doc drops as 'neardup'.
+    */
+  private def duckNeardupCtes: String =
+    s"""$duckRepCte,
+      |nd AS MATERIALIZED (
+      |  SELECT d.doc_id, d.lang, d.n_tokens, d.split, d.content_md5,
+      |         scl.cluster_rep,
+      |         coalesce(d.drop_reason,
+      |           CASE WHEN scl.cluster_rep IS NOT NULL
+      |                     AND scl.cluster_rep <> d.doc_id
+      |                     AND rr.rep_represented THEN 'neardup' END)
+      |           AS drop_reason
+      |  FROM d LEFT JOIN scl USING (doc_id)
+      |         LEFT JOIN rr ON rr.cluster_rep = scl.cluster_rep)""".stripMargin
+
+  /** The funnel columns of the stats rollups: one drop count per reason,
+    * then the kept count.
+    */
+  private def duckFunnelCols(reasons: String*): String = {
+    val column = Map("contaminated" -> "contam", "duplicate" -> "dup")
+    (reasons.map(r => s"CAST(sum(CASE WHEN drop_reason = '$r' THEN 1 ELSE 0 END)" +
+      s" AS BIGINT) AS n_${column.getOrElse(r, r)}_drop") :+
+      "CAST(sum(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept")
+      .mkString(",\n       ")
+  }
+
+  private def duckCurate: String =
+    s"""WITH ${duckQualityCte("documents")},
        |k AS (SELECT content_md5, min(doc_id) AS keep_id
        |      FROM q WHERE quality_ok = 1 GROUP BY 1),
        |d AS (SELECT q.*, CASE WHEN quality_ok = 0 THEN 'quality'
@@ -483,12 +527,7 @@ object Curation {
        |         CASE WHEN ${Decontam.duckFracExpr} >= ${Decontam.DefaultMinFrac}
        |              THEN 1 ELSE 0 END AS contaminated
        |  FROM sh LEFT JOIN ov USING (doc_id)),
-       |q AS (
-       |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
-       |         CASE WHEN $duckQuality THEN 1 ELSE 0 END AS quality_ok,
-       |         md5(text) AS content_md5,
-       |         ${TextAnalytics.duckSplitCase} AS split
-       |  FROM r),
+       |${duckQualityCte("r")},
        |qc AS (
        |  SELECT q.*, coalesce(cf.contaminated, 0) AS contaminated
        |  FROM q LEFT JOIN cf USING (doc_id)),
@@ -542,19 +581,7 @@ object Curation {
   private def duckCurateCompleteCtes: String =
     s"""$duckCurateFull,
       |${Dedup.duckSimhashClusterCtes("r")},
-      |rr AS (SELECT doc_id AS cluster_rep,
-      |              (drop_reason IS NULL OR drop_reason = 'duplicate')
-      |                AS rep_represented
-      |       FROM d),
-      |nd AS MATERIALIZED (
-      |  SELECT d.doc_id, d.lang, d.n_tokens, d.split, d.content_md5,
-      |         coalesce(d.drop_reason,
-      |           CASE WHEN scl.cluster_rep IS NOT NULL
-      |                     AND scl.cluster_rep <> d.doc_id
-      |                     AND rr.rep_represented THEN 'neardup' END)
-      |           AS drop_reason
-      |  FROM d LEFT JOIN scl USING (doc_id)
-      |         LEFT JOIN rr ON rr.cluster_rep = scl.cluster_rep),
+      |$duckNeardupCtes,
       |surv AS (SELECT DISTINCT content_md5 FROM nd WHERE drop_reason IS NULL),
       |krep AS (SELECT nd.doc_id AS keep_id,
       |                (s.content_md5 IS NOT NULL) AS keeper_represented
@@ -696,41 +723,26 @@ object Curation {
       s"""$duckCurate,
         |sem AS (SELECT vec_id AS doc_id, keep_id FROM (
         |${Similarity.oracles("q_semantic_dedup")}) ss),
-        |kr AS (SELECT doc_id AS keep_id,
-        |              (drop_reason IS NULL OR drop_reason = 'duplicate')
-        |                AS keeper_represented
-        |       FROM d),
+        |$duckRepCte,
         |fin AS (
         |  SELECT d.doc_id, d.lang, d.n_tokens, d.split, sem.keep_id,
         |         coalesce(d.drop_reason,
         |           CASE WHEN sem.keep_id IS NOT NULL
         |                     AND sem.keep_id <> d.doc_id
-        |                     AND kr.keeper_represented THEN 'semantic' END)
+        |                     AND rr.rep_represented THEN 'semantic' END)
         |           AS drop_reason
         |  FROM d LEFT JOIN sem USING (doc_id)
-        |         LEFT JOIN kr ON kr.keep_id = sem.keep_id)
+        |         LEFT JOIN rr ON rr.cluster_rep = sem.keep_id)
         |SELECT doc_id, lang, n_tokens, split, keep_id, drop_reason,
         |       CAST(drop_reason IS NULL AS INT) AS kept
         |FROM fin ORDER BY doc_id""".stripMargin,
     "q_curation_neardup" ->
       s"""$duckCurate,
         |${Dedup.duckSimhashClusterCtes("documents")},
-        |rr AS (SELECT doc_id AS cluster_rep,
-        |              (drop_reason IS NULL OR drop_reason = 'duplicate')
-        |                AS rep_represented
-        |       FROM d),
-        |fin AS (
-        |  SELECT d.doc_id, d.lang, d.n_tokens, d.split, scl.cluster_rep,
-        |         coalesce(d.drop_reason,
-        |           CASE WHEN scl.cluster_rep IS NOT NULL
-        |                     AND scl.cluster_rep <> d.doc_id
-        |                     AND rr.rep_represented THEN 'neardup' END)
-        |           AS drop_reason
-        |  FROM d LEFT JOIN scl USING (doc_id)
-        |         LEFT JOIN rr ON rr.cluster_rep = scl.cluster_rep)
+        |$duckNeardupCtes
         |SELECT doc_id, lang, n_tokens, split, cluster_rep, drop_reason,
         |       CAST(drop_reason IS NULL AS INT) AS kept
-        |FROM fin ORDER BY doc_id""".stripMargin,
+        |FROM nd ORDER BY doc_id""".stripMargin,
     "q_curation_complete" ->
       s"""$duckCurateCompleteCtes
         |SELECT doc_id, lang, n_tokens, split, drop_reason,
@@ -739,30 +751,12 @@ object Curation {
     "q_curation_complete_stats" ->
       s"""$duckCurateCompleteCtes
         |SELECT split, count(*) AS n_docs,
-        |       CAST(sum(CASE WHEN drop_reason = 'quality' THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_quality_drop,
-        |       CAST(sum(CASE WHEN drop_reason = 'contaminated' THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_contam_drop,
-        |       CAST(sum(CASE WHEN drop_reason = 'duplicate' THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_dup_drop,
-        |       CAST(sum(CASE WHEN drop_reason = 'neardup' THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_neardup_drop,
-        |       CAST(sum(CASE WHEN drop_reason = 'semantic' THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_semantic_drop,
-        |       CAST(sum(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_kept
+        |       ${duckFunnelCols("quality", "contaminated", "duplicate", "neardup", "semantic")}
         |FROM fin GROUP BY split ORDER BY split""".stripMargin,
     "q_source_funnel" ->
       s"""$duckCurateFull
          |SELECT d.lang, doc.source, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN drop_reason = 'quality' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_quality_drop,
-         |       CAST(sum(CASE WHEN drop_reason = 'contaminated' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_contam_drop,
-         |       CAST(sum(CASE WHEN drop_reason = 'duplicate' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_dup_drop,
-         |       CAST(sum(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_kept,
+         |       ${duckFunnelCols("quality", "contaminated", "duplicate")},
          |       CAST(sum(CASE WHEN drop_reason IS NULL THEN n_tokens ELSE 0 END) AS BIGINT)
          |         AS n_kept_tokens
          |FROM d JOIN documents doc USING (doc_id)
@@ -776,14 +770,7 @@ object Curation {
     "q_curation_full_stats" ->
       s"""$duckCurateFull
          |SELECT split, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN drop_reason = 'quality' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_quality_drop,
-         |       CAST(sum(CASE WHEN drop_reason = 'contaminated' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_contam_drop,
-         |       CAST(sum(CASE WHEN drop_reason = 'duplicate' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_dup_drop,
-         |       CAST(sum(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_kept
+         |       ${duckFunnelCols("quality", "contaminated", "duplicate")}
          |FROM d GROUP BY split ORDER BY split""".stripMargin,
     "q_curation" ->
       s"""$duckCurate
@@ -796,10 +783,7 @@ object Curation {
     "q_curation_passages" ->
       s"""${duckCurate.replaceFirst("WITH ", "WITH RECURSIVE ")},
          |${TextAnalytics.duckWinnowComponentCtes},
-         |rr AS (SELECT doc_id AS cluster_rep,
-         |              (drop_reason IS NULL OR drop_reason = 'duplicate')
-         |                AS rep_represented
-         |       FROM d),
+         |$duckRepCte,
          |fin AS (
          |  SELECT d.doc_id, d.lang, d.n_tokens, d.split, wlab.cluster_rep,
          |         CASE WHEN d.drop_reason IS NOT NULL THEN d.drop_reason
@@ -816,12 +800,7 @@ object Curation {
     "q_curation_stats" ->
       s"""$duckCurate
          |SELECT split, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN drop_reason = 'quality' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_quality_drop,
-         |       CAST(sum(CASE WHEN drop_reason = 'duplicate' THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_dup_drop,
-         |       CAST(sum(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_kept
+         |       ${duckFunnelCols("quality", "duplicate")}
          |FROM d GROUP BY split ORDER BY split""".stripMargin
   )
 }

@@ -89,6 +89,12 @@ object Dedup {
     */
   val DefaultKnownModulus = 4
 
+  /** DuckDB twin of the known-snapshot test `pmod(id, knownModulus) = 0`
+    * at the registered modulus.
+    */
+  private[operators] def duckIsKnown(id: String): String =
+    s"(($id % $DefaultKnownModulus) + $DefaultKnownModulus) % $DefaultKnownModulus = 0"
+
   /** Oracle-checkable demo registration of [[dedupAgainstDigests]]: the
     * frozen snapshot is the docs with `doc_id % knownModulus = 0`, the
     * batch is everything else. One scan computes every digest (lazy
@@ -1552,36 +1558,41 @@ object Dedup {
     */
   private[operators] def duckSimhashClusterCtes(relation: String): String =
     s"""${duckSimhashCtesFrom(relation)},
-      |$duckSimhashChunks,
-      |snb AS (
-      |  SELECT a.sh AS sh, min(b.rep) AS cluster_rep
-      |  FROM schunk a JOIN schunk b ON a.c = b.c AND a.ck = b.ck
-      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      |  GROUP BY a.sh),
+      |${duckSimhashNeighborCtes()},
       |scl AS (
       |  SELECT d2.doc_id, n.cluster_rep
       |  FROM ssh d2 JOIN snb n USING (sh))""".stripMargin
 
-  /** The Manku 4×16-bit chunk join over distinct fingerprints — shared
-    * by the clusters and components oracles. The Scala side moved to
-    * combination keys ([[simhashCandidateKeys]]) in round 14 for scale;
-    * the twin deliberately keeps the cheaper single-block chunks because
-    * both schemes' VERIFIED sets equal {pairs with hamming ≤ maxHamming}
-    * exactly (each guarantees all-pairs recall by pigeonhole, and both
-    * apply the same bit_count filter), so the oracle is scheme-agnostic.
+  /** The Manku 4×16-bit chunk join over the distinct fingerprints of
+    * `src(doc_id, sh)`, CTE names prefixed with `pre`: `suniq(sh, rep)`
+    * each fingerprint's min-id doc, `schunk` its four 16-bit chunks and
+    * `snb(sh, cluster_rep)` the min rep within Hamming 3 — shared by the
+    * clusters and components oracles and the media phash oracle. The
+    * Scala side uses combination keys ([[simhashCandidateKeys]]) for
+    * scale; the twin deliberately keeps the cheaper single-block
+    * chunks because both schemes' VERIFIED sets equal
+    * {pairs with hamming ≤ maxHamming} exactly (each guarantees
+    * all-pairs recall by pigeonhole, and both apply the same bit_count
+    * filter), so the oracle is scheme-agnostic.
     */
-  private[operators] def duckSimhashChunks: String =
-    s"""suniq AS MATERIALIZED (
-      |  SELECT sh, min(doc_id) AS rep FROM ssh GROUP BY sh),
-      |schunk AS MATERIALIZED (
+  private[operators] def duckSimhashNeighborCtes(pre: String = "",
+      src: String = "ssh"): String =
+    s"""${pre}suniq AS MATERIALIZED (
+      |  SELECT sh, min(doc_id) AS rep FROM $src GROUP BY sh),
+      |${pre}schunk AS MATERIALIZED (
       |  SELECT sh, rep, c, (sh >> (c * 16)) & 65535 AS ck
-      |  FROM suniq, unnest(range(0, 4)) AS u(c))""".stripMargin
+      |  FROM ${pre}suniq, unnest(range(0, 4)) AS u(c)),
+      |${pre}snb AS (
+      |  SELECT a.sh AS sh, min(b.rep) AS cluster_rep
+      |  FROM ${pre}schunk a JOIN ${pre}schunk b ON a.c = b.c AND a.ck = b.ck
+      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
+      |  GROUP BY a.sh)""".stripMargin
 
-  /** The n-gram Jaccard TRUTH pair chain (the q_ngram_jaccard predicate
-    * without its report columns), ending in `jt(doc_a, doc_b)` +
-    * `jtn(n_truth)` — shared by the tuning-sweep and recall-tracker
-    * oracles so the truth side cannot desynchronize from the
-    * q_ngram_jaccard anchor.
+  /** The n-gram Jaccard pair chain: `jpairs(doc_a, doc_b, n_a, n_b,
+    * common)` every same-lang pair sharing a 3-shingle, then the TRUTH
+    * pairs `jt(doc_a, doc_b)` at `threshold` + `jtn(n_truth)` — shared
+    * by q_ngram_jaccard and the tuning-sweep and recall-tracker oracles
+    * so the truth side cannot desynchronize from the anchor.
     */
   private def duckJaccardTruthCtes(threshold: Double = 0.5): String =
     s"""jsh AS (
@@ -1595,15 +1606,29 @@ object Dedup {
       |jex AS (
       |  SELECT doc_id, lang, len(shingles) AS n_sh, unnest(shingles) AS shingle
       |  FROM jsh),
+      |jpairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |         a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS common
+      |  FROM jex a JOIN jex b ON a.shingle = b.shingle AND a.lang = b.lang
+      |                        AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2, 3, 4),
       |jt AS MATERIALIZED (
-      |  SELECT doc_a, doc_b FROM (
-      |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |           a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS common
-      |    FROM jex a JOIN jex b ON a.shingle = b.shingle AND a.lang = b.lang
-      |                          AND a.doc_id < b.doc_id
-      |    GROUP BY 1, 2, 3, 4)
+      |  SELECT doc_a, doc_b FROM jpairs
       |  WHERE CAST(common AS DOUBLE) / (n_a + n_b - common) >= $threshold),
       |jtn AS (SELECT count(*) AS n_truth FROM jt)""".stripMargin
+
+  /** `g(doc_id, gram)`: every word n-gram occurrence at the registered
+    * coverage n — the head of both duplicated-n-gram coverage oracles.
+    */
+  private def duckCoverageGramCtes: String =
+    s"""d AS (
+      |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      |  WHERE text IS NOT NULL),
+      |g AS (
+      |  SELECT doc_id,
+      |         unnest(list_transform(range(1, len(w) - $DefaultCoverageN + 2),
+      |           i -> array_to_string(w[i : i + ${DefaultCoverageN - 1}], ' '))) AS gram
+      |  FROM d)""".stripMargin
 
   /** The recall_micros projection over a 1-row hit count CTE `h`. */
   private def duckRecallExpr(hitExpr: String): String =
@@ -1729,11 +1754,10 @@ object Dedup {
         |ORDER BY d.source""".stripMargin,
     "q_minhash_incremental" -> {
       val k = MinhashBands * MinhashRows
-      val M = DefaultKnownModulus
       s"""WITH ${duckMinhashCtes(MinhashBands, MinhashRows)},
         |mkb AS MATERIALIZED (
         |  SELECT doc_id, b, ${(0 until MinhashRows).map(r => s"r$r").mkString(", ")},
-        |         ((doc_id % $M) + $M) % $M = 0 AS is_known
+        |         ${duckIsKnown("doc_id")} AS is_known
         |  FROM mband),
         |mhit AS (
         |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS corpus_id
@@ -1757,23 +1781,18 @@ object Dedup {
         |       CAST(bb.corpus_id IS NOT NULL AS INT) AS dropped
         |FROM documents d
         |LEFT JOIN (SELECT * FROM mbest WHERE rn = 1) bb USING (doc_id)
-        |WHERE ((d.doc_id % $M) + $M) % $M <> 0
+        |WHERE NOT ${duckIsKnown("d.doc_id")}
         |ORDER BY d.doc_id""".stripMargin
     },
     "q_simhash_clusters" ->
       s"""WITH $duckSimhashCtes,
-        |$duckSimhashChunks,
-        |snb AS (
-        |  SELECT a.sh AS sh, min(b.rep) AS cluster_rep
-        |  FROM schunk a JOIN schunk b ON a.c = b.c AND a.ck = b.ck
-        |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
-        |  GROUP BY a.sh)
+        |${duckSimhashNeighborCtes()}
         |SELECT d.doc_id, n.cluster_rep, d.sh AS simhash
         |FROM ssh d JOIN snb n USING (sh)
         |ORDER BY d.doc_id""".stripMargin,
     "q_simhash_components" ->
       s"""WITH RECURSIVE $duckSimhashCtes,
-        |$duckSimhashChunks,
+        |${duckSimhashNeighborCtes()},
         |sedge AS (
         |  SELECT a.sh AS a, b.sh AS b
         |  FROM schunk a JOIN schunk b ON a.c = b.c AND a.ck = b.ck
@@ -1798,14 +1817,7 @@ object Dedup {
         |JOIN srep sr USING (component)
         |ORDER BY d.doc_id""".stripMargin,
     "q_dup_ngram_coverage" ->
-      s"""WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE text IS NOT NULL),
-        |g AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, len(w) - $DefaultCoverageN + 2),
-        |           i -> array_to_string(w[i : i + ${DefaultCoverageN - 1}], ' '))) AS gram
-        |  FROM d),
+      s"""WITH $duckCoverageGramCtes,
         |dup AS (
         |  SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM g)
         |  GROUP BY gram HAVING count(*) >= $DefaultCoverageMinDocs),
@@ -1827,14 +1839,7 @@ object Dedup {
         |FROM base LEFT JOIN cov USING (doc_id)
         |ORDER BY base.doc_id""".stripMargin,
     "q_dup_ngram_stats" ->
-      s"""WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE text IS NOT NULL),
-        |g AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, len(w) - $DefaultCoverageN + 2),
-        |           i -> array_to_string(w[i : i + ${DefaultCoverageN - 1}], ' '))) AS gram
-        |  FROM d),
+      s"""WITH $duckCoverageGramCtes,
         |census AS (
         |  SELECT gram, count(*) AS nd
         |  FROM (SELECT DISTINCT doc_id, gram FROM g) GROUP BY gram),
@@ -1892,7 +1897,7 @@ object Dedup {
     "q_dedup_incremental" ->
       s"""WITH g AS (
         |  SELECT doc_id, md5(text) AS content_md5,
-        |         ((doc_id % $DefaultKnownModulus) + $DefaultKnownModulus) % $DefaultKnownModulus = 0 AS is_known
+        |         ${duckIsKnown("doc_id")} AS is_known
         |  FROM documents),
         |known AS (SELECT DISTINCT content_md5 FROM g WHERE is_known),
         |b AS (SELECT doc_id, content_md5 FROM g WHERE NOT is_known),
@@ -1974,25 +1979,10 @@ object Dedup {
         |LEFT JOIN keep USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin,
     "q_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(list_transform(
-        |           range(1, len(string_split(text, ' ')) - 1),
-        |           i -> concat_ws(' ', string_split(text, ' ')[i],
-        |                          string_split(text, ' ')[i+1],
-        |                          string_split(text, ' ')[i+2]))) AS shingles
-        |  FROM documents WHERE len(string_split(text, ' ')) >= 3),
-        |ex AS (
-        |  SELECT doc_id, lang, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS n_a, b.n_sh AS n_b,
-        |         count(*) AS common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.lang = b.lang
-        |                      AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3, 4)
+      s"""WITH ${duckJaccardTruthCtes()}
         |SELECT doc_a, doc_b, common,
         |       floor(CAST(common AS DOUBLE) / (n_a + n_b - common) * 10000 + 0.5) / 10000.0 AS jaccard
-        |FROM pairs
+        |FROM jpairs
         |WHERE CAST(common AS DOUBLE) / (n_a + n_b - common) >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin
   )

@@ -218,21 +218,11 @@ object Dsir {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[bucketOf]]: same fold, same constants. The
-    * `greatest(…, 0)` guard matches Spark exactly where the engines'
-    * char primitives differ on the EMPTY string (a token produced by
-    * consecutive spaces): Spark `ascii('') = 0` vs DuckDB
-    * `unicode('') = -1` — and DuckDB's `%` is sign-preserving, so the
-    * raw form would fold −1 into the hash while Spark folds 0.
-    * Codepoints of real chars are non-negative on both engines, so the
-    * guard is a no-op everywhere else.
+  /** DuckDB twin of [[bucketOf]]: the portable fold
+    * ([[graft.functions.TextHashes.duckFold]]), same constants.
     */
   private[operators] def duckBucket(tokenExpr: String, nBuckets: Int): String =
-    s"(list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split($tokenExpr, ''), " +
-      s"c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))), " +
-      s"(a, b) -> (a * 31 + b) % 2147483648) " +
-      s"* $BucketMultiplier) % $nBuckets"
+    s"(${graft.functions.TextHashes.duckFold(tokenExpr)} * $BucketMultiplier) % $nBuckets"
 
   /** The weights pipeline as a CTE chain ending in `weights` — shared by
     * the q_dsir_weights oracle and the q_dsir_sample oracle so the two

@@ -352,6 +352,23 @@ object EventAnalytics {
   // names/order and rounding must match the Spark outputs above).
   // ---------------------------------------------------------------------
 
+  /** The 30-minute-gap sessionization as DuckDB CTEs: `flagged` marks
+    * each event that opens a session, `numbered` carries the per-user
+    * running session number — the [[sessions]] family's one oracle
+    * spelling.
+    */
+  private def duckSessionCtes: String =
+    """flagged AS (
+      |  SELECT user_id, ts, event_id,
+      |         CASE WHEN lag(ts) OVER w IS NULL
+      |                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
+      |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      |numbered AS (
+      |  SELECT user_id, ts,
+      |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM flagged)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q_minute_counts_click" ->
       """SELECT date_trunc('minute', ts) AS minute_ts, count(*) AS n
@@ -387,47 +404,20 @@ object EventAnalytics {
         |       count(*) AS n
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
+      s"""WITH $duckSessionCtes
         |SELECT user_id, session_id, min(ts) AS session_start, max(ts) AS session_end,
         |       count(*) AS n_events,
         |       CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_sec
         |FROM numbered GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
     "q_sessions_stream" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
+      s"""WITH $duckSessionCtes
         |SELECT user_id, min(ts) AS session_start,
         |       max(ts) + INTERVAL 30 MINUTE AS session_end,
         |       count(*) AS n_events
         |FROM numbered GROUP BY user_id, session_id
         |ORDER BY user_id, session_start""".stripMargin,
     "q_session_stats" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged),
+      s"""WITH $duckSessionCtes,
         |sess AS (
         |  SELECT user_id, session_id, count(*) AS n_events,
         |         CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_sec

@@ -419,16 +419,7 @@ object Multimodal {
         |              THEN CAST(18446744073709551616 AS HUGEINT)
         |              ELSE CAST(0 AS HUGEINT) END AS BIGINT) AS sh
         |  FROM phu),
-        |psuniq AS MATERIALIZED (
-        |  SELECT sh, min(doc_id) AS rep FROM pssh GROUP BY sh),
-        |pschunk AS MATERIALIZED (
-        |  SELECT sh, rep, c, (sh >> (c * 16)) & 65535 AS ck
-        |  FROM psuniq, unnest(range(0, 4)) AS u(c)),
-        |psnb AS (
-        |  SELECT a.sh AS sh, min(b.rep) AS cluster_rep
-        |  FROM pschunk a JOIN pschunk b ON a.c = b.c AND a.ck = b.ck
-        |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
-        |  GROUP BY a.sh)
+        |${Dedup.duckSimhashNeighborCtes("p", "pssh")}
         |SELECT d.doc_id, n.cluster_rep, d.sh AS phash
         |FROM pssh d JOIN psnb n USING (sh)
         |ORDER BY d.doc_id""".stripMargin,

@@ -197,10 +197,29 @@ object Packing {
     "CASE lang WHEN 'en' THEN 2000 WHEN 'de' THEN 2000 WHEN 'es' THEN 2000 " +
       "WHEN 'fr' THEN 2000 WHEN 'zh' THEN 2000 ELSE 0 END"
 
+  /** DuckDB twin of the packing token count (NULL text counts 0). */
+  private def duckTokenCount: String = "coalesce(len(string_split(text, ' ')), 0)"
+
+  /** [[packSequences]]' layout as the DuckDB CTE `c`: per doc in doc_id
+    * order, its token count, start offset, first and last sequence and
+    * whether it crosses a sequence boundary.
+    */
+  private def duckPackCte: String =
+    s"""c AS (
+       |  SELECT doc_id, n_tokens, cum - n_tokens AS start_off,
+       |         (cum - n_tokens) // $DefaultSeqLen AS seq_first,
+       |         greatest((cum - n_tokens) // $DefaultSeqLen, (cum - 1) // $DefaultSeqLen) AS seq_last,
+       |         CAST(greatest((cum - n_tokens) // $DefaultSeqLen, (cum - 1) // $DefaultSeqLen)
+       |              > (cum - n_tokens) // $DefaultSeqLen AS INT) AS crosses
+       |  FROM (SELECT doc_id, $duckTokenCount AS n_tokens,
+       |               CAST(sum($duckTokenCount) OVER (ORDER BY doc_id
+       |                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+       |        FROM documents))""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q_token_budget_mix" ->
       s"""WITH t AS (
-         |  SELECT doc_id, lang, coalesce(len(string_split(text, ' ')), 0) AS n_tokens,
+         |  SELECT doc_id, lang, $duckTokenCount AS n_tokens,
          |         (${TextAnalytics.duckIdFold} * $MixMultiplier) % $DefaultNBuckets AS bucket
          |  FROM documents),
          |c AS (
@@ -212,24 +231,12 @@ object Packing {
          |WHERE cum <= $duckBudgetCase
          |ORDER BY doc_id""".stripMargin,
     "q_packing_stats" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, coalesce(len(string_split(text, ' ')), 0) AS n_tokens
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tokens,
-         |         CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-         |           AS BIGINT) AS cum
-         |  FROM t),
-         |p AS (
-         |  SELECT n_tokens,
-         |         CAST(greatest((cum - n_tokens) // $DefaultSeqLen, (cum - 1) // $DefaultSeqLen)
-         |              > (cum - n_tokens) // $DefaultSeqLen AS INT) AS crosses
-         |  FROM c),
+      s"""WITH $duckPackCte,
          |a AS (
          |  SELECT count(*) AS n_docs,
          |         CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          |         CAST(sum(crosses) AS BIGINT) AS n_crossing
-         |  FROM p)
+         |  FROM c)
          |SELECT n_docs, total_tokens, n_crossing,
          |       (total_tokens + $DefaultSeqLen - 1) // $DefaultSeqLen AS n_seqs,
          |       floor(CAST(total_tokens AS DOUBLE)
@@ -237,19 +244,8 @@ object Packing {
          |             * 10000 + 0.5) / 10000.0 AS fill_ratio
          |FROM a""".stripMargin,
     "q_pack_sequences" ->
-      s"""WITH t AS (
-        |  SELECT doc_id, coalesce(len(string_split(text, ' ')), 0) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-        |           AS BIGINT) AS cum
-        |  FROM t)
-        |SELECT doc_id, n_tokens, cum - n_tokens AS start_off,
-        |       (cum - n_tokens) // $DefaultSeqLen AS seq_first,
-        |       greatest((cum - n_tokens) // $DefaultSeqLen, (cum - 1) // $DefaultSeqLen) AS seq_last,
-        |       CAST(greatest((cum - n_tokens) // $DefaultSeqLen, (cum - 1) // $DefaultSeqLen)
-        |            > (cum - n_tokens) // $DefaultSeqLen AS INT) AS crosses
+      s"""WITH $duckPackCte
+        |SELECT doc_id, n_tokens, start_off, seq_first, seq_last, crosses
         |FROM c ORDER BY doc_id""".stripMargin
   )
 }

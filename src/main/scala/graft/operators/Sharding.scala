@@ -133,15 +133,13 @@ object Sharding {
       .orderBy("doc_id")
   }
 
-  private def duckFold(x: String): String = s"((($x) % 2147483648) + 2147483648) % 2147483648"
-
   /** DuckDB twins of the shard / order-key expressions (epoch 0, the
     * registered form), built from the SAME constants.
     */
   private def duckShard(nShards: Int): String =
-    s"((${duckFold("doc_id")} * $ShardMultiplier) % 2147483648 * $nShards) // 2147483648"
+    s"((${TextAnalytics.duckIdFold} * $ShardMultiplier) % 2147483648 * $nShards) // 2147483648"
   private def duckOrderKey: String =
-    s"(${duckFold("doc_id")} * $OrderMultiplier) % 2147483648"
+    s"(${TextAnalytics.duckIdFold} * $OrderMultiplier) % 2147483648"
 
   val oracles: Map[String, String] = Map(
     "q_shard_stats" ->

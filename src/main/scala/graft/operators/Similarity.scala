@@ -1299,12 +1299,7 @@ object Similarity {
       |              * CAST(round(CAST(e.embedding[i] AS DOUBLE) * 1000000) AS BIGINT))) AS BIGINT)
       |           AS dot_q
       |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |                               ORDER BY dot_q DESC, neighbor_id) AS rn
-      |  FROM scored)
-      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $k
-      |ORDER BY query_id, rn""".stripMargin
+      |${duckTopK(k)}""".stripMargin
 
   /** The shared quantized-vector CTE (qv) every vector oracle opens with. */
   private def duckQvCte: String =
@@ -1366,12 +1361,7 @@ object Similarity {
     for (i <- 1 to lloydIters) {
       val prev = s"c${i - 1}"
       sb.append(s""",
-        |a$i AS MATERIALIZED (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT v.vec_id, c.cell,
-        |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |             ${duckDot("v.qe", "c.qc")} DESC, c.cell) AS rn
-        |    FROM $trainSrc v CROSS JOIN $prev c) WHERE rn = 1),
+        |${duckAssignCte(s"a$i", trainSrc, prev)},
         |c$i AS MATERIALIZED (
         |  SELECT cell, list(m ORDER BY pos) AS qc FROM (
         |    SELECT a.cell, u.pos,
@@ -1397,12 +1387,7 @@ object Similarity {
       qvCte: String = duckQvCte): String = {
     val (chain, cFinal) = duckIvfCtes(nCells, lloydIters, trainModulus, qvCte)
     s"""WITH $chain,
-      |af AS MATERIALIZED (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT v.vec_id, c.cell,
-      |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |             ${duckDot("v.qe", "c.qc")} DESC, c.cell) AS rn
-      |    FROM qv v CROSS JOIN $cFinal c) WHERE rn = 1),
+      |${duckIvfAf(cFinal)},
       |probes AS (
       |  SELECT query_id, cell FROM (
       |    SELECT v.vec_id AS query_id, c.cell,
@@ -1418,24 +1403,50 @@ object Similarity {
       |  SELECT c.query_id, c.neighbor_id, ${duckDot("q.qe", "n.qe")} AS dot_q
       |  FROM cand c JOIN qv q ON q.vec_id = c.query_id
       |              JOIN qv n ON n.vec_id = c.neighbor_id),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |                               ORDER BY dot_q DESC, neighbor_id) AS rn
-      |  FROM scored)
-      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $k
-      |ORDER BY query_id, rn""".stripMargin
+      |${duckTopK(k)}""".stripMargin
   }
 
   /** The final-assignment CTE over the whole corpus (af), appended to a
     * [[duckIvfCtes]] chain — shared by every post-Lloyd oracle.
     */
-  private def duckIvfAf(cFinal: String): String =
-    s"""af AS MATERIALIZED (
+  private def duckIvfAf(cFinal: String): String = duckAssignCte("af", "qv", cFinal)
+
+  /** `name(vec_id, cell)`: each vector of `src` assigned to its nearest
+    * cell of `cells` by (dot DESC, cell ASC) — one Lloyd assignment.
+    */
+  private def duckAssignCte(name: String, src: String, cells: String): String =
+    s"""$name AS MATERIALIZED (
       |  SELECT vec_id, cell FROM (
       |    SELECT v.vec_id, c.cell,
       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
       |             ${duckDot("v.qe", "c.qc")} DESC, c.cell) AS rn
-      |    FROM qv v CROSS JOIN $cFinal c) WHERE rn = 1)""".stripMargin
+      |    FROM $src v CROSS JOIN $cells c) WHERE rn = 1)""".stripMargin
+
+  /** The ANN result tail over a `scored(query_id, neighbor_id, dot_q)`
+    * CTE: each query's top-k neighbors by (dot DESC, id ASC).
+    */
+  private def duckTopK(k: Int): String =
+    s"""ranked AS (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |                               ORDER BY dot_q DESC, neighbor_id) AS rn
+      |  FROM scored)
+      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $k
+      |ORDER BY query_id, rn""".stripMargin
+
+  /** The tuning sweeps' recall truth over `qv`: `truth(query_id,
+    * neighbor_id)`, the exact top-5 of the first 10 vectors.
+    */
+  private def duckTruthCtes: String =
+    s"""tscored AS (
+      |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+      |         ${duckDot("q.qe", "e.qe")} AS dot_q
+      |  FROM qv e, (SELECT * FROM qv WHERE vec_id < 10) q
+      |  WHERE e.vec_id <> q.vec_id),
+      |truth AS (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY query_id
+      |      ORDER BY dot_q DESC, neighbor_id) AS rn FROM tscored)
+      |  WHERE rn <= 5)""".stripMargin
 
   /** Masks of all buckets within Hamming `h` of a key over `nBits`
     * bits (the annLshProbed probe ring), as SQL VALUES rows.
@@ -1468,12 +1479,20 @@ object Similarity {
       |  JOIN qv q ON q.vec_id = kq.vec_id
       |  JOIN qv e ON e.vec_id = ke.vec_id
       |  WHERE kq.vec_id < $nQueries),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id
-      |                               ORDER BY dot_q DESC, neighbor_id) AS rn
-      |  FROM scored)
-      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $k
-      |ORDER BY query_id, rn""".stripMargin
+      |${duckTopK(k)}""".stripMargin
+
+  /** The semantic-dedup result over a [[duckSemanticCtes]] chain and a
+    * `keepers(vec_id, keeper)` CTE: every vector's keeper is its
+    * distinct-vector rep's keeper (or the rep itself).
+    */
+  private def duckKeeperTail(keepers: String): String =
+    s"""repf AS (
+      |  SELECT r.cell, r.qe, coalesce(k.keeper, r.vec_id) AS rep_keep
+      |  FROM reps r LEFT JOIN $keepers k ON k.vec_id = r.vec_id)
+      |SELECT v.vec_id, rf.rep_keep AS keep_id,
+      |       v.vec_id = rf.rep_keep AS is_keeper, rf.cell
+      |FROM qv v JOIN repf rf ON rf.qe = v.qe
+      |ORDER BY v.vec_id""".stripMargin
 
   /** The SemDeDup candidate chain — [[semanticDedupParts]] replayed:
     * IVF assignment + 16-bit sub keys + distinct-vector reps + the
@@ -1545,13 +1564,7 @@ object Similarity {
         |k4 AS (
         |  SELECT x.vec_id, coalesce(y.keeper, x.keeper) AS keeper
         |  FROM k2 x LEFT JOIN k2 y ON x.keeper = y.vec_id),
-        |repf AS (
-        |  SELECT r.cell, r.qe, coalesce(k.keeper, r.vec_id) AS rep_keep
-        |  FROM reps r LEFT JOIN k4 k ON k.vec_id = r.vec_id)
-        |SELECT v.vec_id, rf.rep_keep AS keep_id,
-        |       v.vec_id = rf.rep_keep AS is_keeper, rf.cell
-        |FROM qv v JOIN repf rf ON rf.qe = v.qe
-        |ORDER BY v.vec_id""".stripMargin
+        |${duckKeeperTail("k4")}""".stripMargin
     },
     "q_semantic_components" -> {
       val t = (0.3 * 1e12).toLong
@@ -1569,13 +1582,7 @@ object Similarity {
         |  FROM (SELECT DISTINCT a AS vec_id FROM se) n
         |  LEFT JOIN sreach r ON r.a = n.vec_id
         |  GROUP BY n.vec_id),
-        |repf AS (
-        |  SELECT r.cell, r.qe, coalesce(k.keeper, r.vec_id) AS rep_keep
-        |  FROM reps r LEFT JOIN scomp k ON k.vec_id = r.vec_id)
-        |SELECT v.vec_id, rf.rep_keep AS keep_id,
-        |       v.vec_id = rf.rep_keep AS is_keeper, rf.cell
-        |FROM qv v JOIN repf rf ON rf.qe = v.qe
-        |ORDER BY v.vec_id""".stripMargin
+        |${duckKeeperTail("scomp")}""".stripMargin
     },
     "q_ann_ivf" -> duckAnnIvfSql(10, 5, 16, 4, 2, 1),
     "q_ann_ivf_sampled" -> duckAnnIvfSql(10, 5, 16, 4, 2, IvfTrainModulus),
@@ -1692,16 +1699,7 @@ object Similarity {
         |                       THEN 1 ELSE 0 END) AS BIGINT) AS cand,
         |         count(*) AS n_cross
         |  FROM xo CROSS JOIN grid g GROUP BY g.b, g.h, g.bp),
-        |tscored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |         ${duckDot("q.qe", "e.qe")} AS dot_q
-        |  FROM qv e, (SELECT * FROM qv WHERE vec_id < 10) q
-        |  WHERE e.vec_id <> q.vec_id),
-        |truth AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_q DESC, neighbor_id) AS rn FROM tscored)
-        |  WHERE rn <= 5),
+        |$duckTruthCtes,
         |txo AS MATERIALIZED (
         |  SELECT xor(kn.key, kq.key) AS x
         |  FROM truth t JOIN keys kn ON kn.vec_id = t.neighbor_id
@@ -1768,16 +1766,7 @@ object Similarity {
         |                       THEN 1 ELSE 0 END) AS BIGINT) AS self
         |  FROM qrk r JOIN sizes s USING (cell) JOIN own o USING (query_id)
         |  CROSS JOIN grid g GROUP BY g.p),
-        |tscored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |         ${duckDot("q.qe", "e.qe")} AS dot_q
-        |  FROM qv e, (SELECT * FROM qv WHERE vec_id < 10) q
-        |  WHERE e.vec_id <> q.vec_id),
-        |truth AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_q DESC, neighbor_id) AS rn FROM tscored)
-        |  WHERE rn <= 5),
+        |$duckTruthCtes,
         |truthrk AS (
         |  SELECT t.query_id, r.rk
         |  FROM truth t JOIN af a ON a.vec_id = t.neighbor_id

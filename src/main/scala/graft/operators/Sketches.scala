@@ -331,7 +331,7 @@ object Sketches {
         |  SELECT event_type AS g, user_id AS id FROM events
         |  WHERE user_id IS NOT NULL),
         |h0 AS (
-        |  SELECT g, ((id % 2147483648) + 2147483648) % 2147483648 AS x
+        |  SELECT g, ${TextAnalytics.duckPmod31("id")} AS x
         |  FROM ids),
         |h1 AS (SELECT g, (((x * x + $HllA * x + $HllC) % $P) + $P) % $P AS x
         |       FROM h0),

@@ -722,8 +722,8 @@ object TextAnalytics {
 
   /** Winnowing parameters: token-k-grams, window of w consecutive gram
     * hashes. Guarantee (Schleimer–Wilkerson–Aiken 2003): any shared run
-    * of ≥ w + k − 1 tokens yields a shared fingerprint hash. Both are
-    * structural in the oracle SQL; the operator takes any (k, w).
+    * of ≥ w + k − 1 tokens yields a shared fingerprint hash. The oracle
+    * SQL reads both ([[duckWinnowCtes]]); the operator takes any (k, w).
     */
   val WinnowK = 3
   val WinnowW = 4
@@ -1007,7 +1007,7 @@ object TextAnalytics {
 
   /** Minimum shared fingerprints for a [[winnowMatches]] pair — 1 would
     * surface every single-gram coincidence; 2 is the classic MOSS
-    * report floor. Structural in the oracle.
+    * report floor. The oracles read it ([[duckWinnowMatchCtes]]).
     */
   val WinnowMinShared = 2
 
@@ -1022,7 +1022,8 @@ object TextAnalytics {
     * the test corpora produce (measured max df: 6 at sf0.01, 23 at
     * sf0.1 — the cap is invisible there); re-probe the df distribution
     * (the [[winnowNovelty]] rollup) before tuning it on a
-    * boilerplate-heavy crawl. Structural in the oracles.
+    * boilerplate-heavy crawl. The oracles read it
+    * ([[duckWinnowMatchCtes]]).
     */
   val WinnowMaxDf = 1000
 
@@ -1953,58 +1954,18 @@ object TextAnalytics {
       }
     }.reduce(_.unionByName(_)).orderBy("k", "w")
 
-  /** Generated DuckDB twin of one [[winnowTuning]] chain: token hashes
-    * are shared, gram CTEs per k, fp/pairs CTEs per cell.
+  /** Generated DuckDB twin of one [[winnowTuning]] chain: one
+    * [[duckWinnowMatchCtes]] chain per (k, w) cell.
     */
   private def winnowTuningSql(grid: Seq[(Int, Int)], minShared: Int): String = {
-    val gramCtes = grid.map(_._1).distinct.sorted.map { k =>
-      s"""g_$k AS (
-         |  SELECT doc_id, len(th) - ${k - 1} AS ng, p,
-         |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + ${k - 1})),
-         |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-         |          + (p - 1)) AS comb
-         |  FROM th, unnest(range(1, len(th) - ${k - 1} + 1)) AS t(p)
-         |  WHERE len(th) >= $k)""".stripMargin
-    }
-    val cellCtes = grid.map { case (k, w) =>
-      s"""fp_${k}_$w AS (
-         |  SELECT DISTINCT doc_id,
-         |         CAST(sel % 4294967296 AS BIGINT) AS pos,
-         |         CAST(sel // 4294967296 AS BIGINT) AS fp
-         |  FROM (SELECT doc_id, ng, p,
-         |               min(comb) OVER (PARTITION BY doc_id ORDER BY p
-         |                 ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS sel
-         |        FROM g_$k) x
-         |  WHERE p <= ng - ${w - 1}),
-         |fpd_${k}_$w AS (SELECT DISTINCT doc_id, fp FROM fp_${k}_$w),
-         |fpc_${k}_$w AS (
-         |  SELECT f.doc_id, f.fp FROM fpd_${k}_$w f
-         |  JOIN (SELECT fp, count(*) AS df FROM fpd_${k}_$w GROUP BY fp) d
-         |    ON d.fp = f.fp
-         |  WHERE d.df <= $WinnowMaxDf),
-         |pairs_${k}_$w AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-         |  FROM fpc_${k}_$w a JOIN fpc_${k}_$w b
-         |    ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)""".stripMargin
-    }
+    val ctes = grid.map { case (k, w) =>
+      duckWinnowMatchCtes(k, w, s"c${k}_${w}_", minShared) }
     val cells = grid.map { case (k, w) =>
       s"""SELECT $k AS k, $w AS w,
-         |       (SELECT count(*) FROM fp_${k}_$w) AS n_fingerprints,
-         |       (SELECT count(*) FROM pairs_${k}_$w WHERE n_shared >= $minShared)
-         |         AS n_pairs""".stripMargin
+         |       (SELECT count(*) FROM c${k}_${w}_fpos) AS n_fingerprints,
+         |       (SELECT count(*) FROM c${k}_${w}_pairs) AS n_pairs""".stripMargin
     }
-    s"""WITH docs AS (
-       |  SELECT doc_id, string_split(text, ' ') AS wtk
-       |  FROM documents WHERE text IS NOT NULL),
-       |th AS (
-       |  SELECT doc_id,
-       |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |           list_transform(string_split(t, ''),
-       |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-       |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-       |  FROM docs),
-       |${(gramCtes ++ cellCtes).mkString(",\n")}
+    s"""WITH ${ctes.mkString(",\n")}
        |${cells.mkString("\nUNION ALL\n")}
        |ORDER BY k, w""".stripMargin
   }
@@ -2060,31 +2021,7 @@ object TextAnalytics {
         |LEFT JOIN ssh s USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin,
     "q_winnow_novelty" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
+      s"""WITH ${duckWinnowCtes()},
         |dfreq AS (SELECT fp, count(*) AS df FROM fp GROUP BY fp)
         |SELECT doc_id, count(*) AS n_fp,
         |       CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
@@ -2093,38 +2030,7 @@ object TextAnalytics {
         |FROM fp JOIN dfreq USING (fp)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "q_winnow_source_matrix" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
-        |dfq AS (SELECT fp, count(*) AS df FROM fp GROUP BY fp),
-        |fpc AS (SELECT f.doc_id, f.fp
-        |        FROM fp f JOIN dfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |  FROM fpc a JOIN fpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      s"""WITH ${duckWinnowMatchCtes()}
         |SELECT least(da.source, db.source) AS source_a,
         |       greatest(da.source, db.source) AS source_b,
         |       count(*) AS n_pairs,
@@ -2132,7 +2038,6 @@ object TextAnalytics {
         |FROM pairs
         |JOIN documents da ON da.doc_id = doc_a
         |JOIN documents db ON db.doc_id = doc_b
-        |WHERE n_shared >= 2
         |GROUP BY 1, 2
         |ORDER BY source_a, source_b""".stripMargin,
     "q_winnow_tuning" -> winnowTuningSql(WinnowGrid, WinnowMinShared),
@@ -2145,35 +2050,9 @@ object TextAnalytics {
         |       CAST(cluster_rep = doc_id AS INT) AS is_rep
         |FROM wlab ORDER BY doc_id""".stripMargin,
     "q_winnow_incremental" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
-        |known AS (SELECT DISTINCT fp FROM fp
-        |          WHERE ((doc_id % ${Dedup.DefaultKnownModulus}) + ${Dedup.DefaultKnownModulus}) % ${Dedup.DefaultKnownModulus} = 0),
-        |b AS (SELECT doc_id, fp FROM fp
-        |      WHERE ((doc_id % ${Dedup.DefaultKnownModulus}) + ${Dedup.DefaultKnownModulus}) % ${Dedup.DefaultKnownModulus} <> 0),
+      s"""WITH ${duckWinnowCtes()},
+        |known AS (SELECT DISTINCT fp FROM fp WHERE ${Dedup.duckIsKnown("doc_id")}),
+        |b AS (SELECT doc_id, fp FROM fp WHERE NOT ${Dedup.duckIsKnown("doc_id")}),
         |sz AS (SELECT doc_id, count(*) AS n_fp FROM b GROUP BY doc_id),
         |hit AS (SELECT b.doc_id, count(*) AS n_shared
         |        FROM b JOIN known USING (fp) GROUP BY b.doc_id)
@@ -2188,134 +2067,31 @@ object TextAnalytics {
         |FROM documents d
         |LEFT JOIN sz ON sz.doc_id = d.doc_id
         |LEFT JOIN hit ON hit.doc_id = d.doc_id
-        |WHERE ((d.doc_id % ${Dedup.DefaultKnownModulus}) + ${Dedup.DefaultKnownModulus}) % ${Dedup.DefaultKnownModulus} <> 0
+        |WHERE NOT ${Dedup.duckIsKnown("d.doc_id")}
         |ORDER BY d.doc_id""".stripMargin,
     "q_split_leakage" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
-        |dfq AS (SELECT fp, count(*) AS df FROM fp GROUP BY fp),
-        |fpc AS (SELECT f.doc_id, f.fp
-        |        FROM fp f JOIN dfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |  FROM fpc a JOIN fpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      s"""WITH ${duckWinnowMatchCtes()},
         |sp AS (SELECT doc_id, $duckSplitCase AS split FROM documents)
         |SELECT doc_a, doc_b, sa.split AS split_a, sb.split AS split_b, n_shared,
-        |       floor(CAST(n_shared AS DOUBLE)
-        |             / CAST(least(za.n, zb.n) AS DOUBLE) * 10000 + 0.5)
-        |         / 10000.0 AS overlap_frac
+        |       $duckOverlapFrac AS overlap_frac
         |FROM pairs
         |JOIN sizes za ON za.doc_id = doc_a
         |JOIN sizes zb ON zb.doc_id = doc_b
         |JOIN sp sa ON sa.doc_id = doc_a
         |JOIN sp sb ON sb.doc_id = doc_b
-        |WHERE n_shared >= 2
-        |  AND ((sa.split = 'train' AND sb.split <> 'train')
-        |       OR (sb.split = 'train' AND sa.split <> 'train'))
+        |WHERE (sa.split = 'train' AND sb.split <> 'train')
+        |   OR (sb.split = 'train' AND sa.split <> 'train')
         |ORDER BY doc_a, doc_b""".stripMargin,
     "q_winnow_matches" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
-        |dfq AS (SELECT fp, count(*) AS df FROM fp GROUP BY fp),
-        |fpc AS (SELECT f.doc_id, f.fp
-        |        FROM fp f JOIN dfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |  FROM fpc a JOIN fpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_shared, sa.n AS n_a, sb.n AS n_b,
-        |       floor(CAST(n_shared AS DOUBLE)
-        |             / CAST(least(sa.n, sb.n) AS DOUBLE) * 10000 + 0.5)
-        |         / 10000.0 AS overlap_frac
+      s"""WITH ${duckWinnowMatchCtes()}
+        |SELECT doc_a, doc_b, n_shared, za.n AS n_a, zb.n AS n_b,
+        |       $duckOverlapFrac AS overlap_frac
         |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = doc_a
-        |JOIN sizes sb ON sb.doc_id = doc_b
-        |WHERE n_shared >= 2
+        |JOIN sizes za ON za.doc_id = doc_a
+        |JOIN sizes zb ON zb.doc_id = doc_b
         |ORDER BY doc_a, doc_b""".stripMargin,
     "q_winnow_matches_topk" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-        |  FROM win WHERE p <= ng - 3),
-        |dfq AS (SELECT fp, count(*) AS df FROM fp GROUP BY fp),
-        |fpc AS (SELECT f.doc_id, f.fp
-        |        FROM fp f JOIN dfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY doc_id),
-        |pairs AS MATERIALIZED (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |  FROM fpc a JOIN fpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= $WinnowMinShared),
+      s"""WITH ${duckWinnowMatchCtes()},
         |sym AS (
         |  SELECT doc_a AS doc_id, doc_b AS partner, n_shared FROM pairs
         |  UNION ALL
@@ -2326,42 +2102,16 @@ object TextAnalytics {
         |                            ORDER BY n_shared DESC, partner) AS rnk
         |  FROM sym)
         |SELECT rk.doc_id, rnk, partner, n_shared,
-        |       sa.n AS n_doc, sb.n AS n_partner,
-        |       floor(CAST(n_shared AS DOUBLE)
-        |             / CAST(least(sa.n, sb.n) AS DOUBLE) * 10000 + 0.5)
-        |         / 10000.0 AS overlap_frac
+        |       za.n AS n_doc, zb.n AS n_partner,
+        |       $duckOverlapFrac AS overlap_frac
         |FROM rk
-        |JOIN sizes sa ON sa.doc_id = rk.doc_id
-        |JOIN sizes sb ON sb.doc_id = rk.partner
+        |JOIN sizes za ON za.doc_id = rk.doc_id
+        |JOIN sizes zb ON zb.doc_id = rk.partner
         |WHERE rnk <= $WinnowTopK
         |ORDER BY rk.doc_id, rnk""".stripMargin,
     "q_winnow_fingerprints" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split(text, ' ') AS wtk
-        |  FROM documents WHERE text IS NOT NULL),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(t, ''),
-        |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-        |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-        |  FROM docs),
-        |g AS (
-        |  SELECT doc_id, len(th) - 2 AS ng, p,
-        |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-        |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
-        |          + (p - 1)) AS comb
-        |  FROM th, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-        |  WHERE len(th) >= 6),
-        |win AS (
-        |  SELECT doc_id, ng, p,
-        |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-        |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM g)
-        |SELECT DISTINCT doc_id,
-        |       CAST(sel % 4294967296 AS BIGINT) AS pos,
-        |       CAST(sel // 4294967296 AS BIGINT) AS fp
-        |FROM win WHERE p <= ng - 3
+      s"""WITH ${duckWinnowCtes()}
+        |SELECT doc_id, pos, fp FROM fpos
         |ORDER BY doc_id, pos""".stripMargin,
     "q_charset_profile" ->
       """SELECT source, count(*) AS n_docs,
@@ -2432,58 +2182,12 @@ object TextAnalytics {
          |         AS quality_ok
          |FROM documents ORDER BY doc_id""".stripMargin,
     "q_gopher_rules" ->
-      s"""WITH g AS (
-         |  SELECT doc_id,
-         |         len(string_split(text, ' ')) AS n_tokens,
-         |         floor(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS mean_token_len,
-         |         floor(CAST((length(text) - length(replace(text, '#', '')))
-         |                    + (length(text) - length(replace(text, '...', ''))) / 3
-         |                    AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS symbol_ratio,
-         |         floor(CAST(len(list_filter(string_split(text, ' '),
-         |                                    t -> regexp_matches(t, '[a-zA-Z]')))
-         |                    AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS alpha_frac,
-         |         CASE WHEN text IS NOT NULL
-         |              THEN len(list_filter($duckStopwords,
-         |                     w -> list_contains(string_split(text, ' '), w)))
-         |              END AS n_stop_hits
-         |  FROM documents)
+      s"""WITH $duckGopherCte
          |SELECT doc_id, n_tokens, mean_token_len, symbol_ratio, alpha_frac,
-         |       n_stop_hits,
-         |       CASE WHEN n_tokens BETWEEN $GopherMinTokens AND $GopherMaxTokens
-         |                 AND mean_token_len BETWEEN 3.0 AND 10.0
-         |                 AND symbol_ratio <= 0.1
-         |                 AND alpha_frac >= 0.8
-         |                 AND n_stop_hits >= $GopherRequiredHits
-         |            THEN 1 ELSE 0 END AS gopher_ok
+         |       n_stop_hits, $duckGopherOk AS gopher_ok
          |FROM g ORDER BY doc_id""".stripMargin,
     "q_gopher_funnel" ->
-      s"""WITH g AS (
-         |  SELECT doc_id, text,
-         |         len(string_split(text, ' ')) AS n_tokens,
-         |         floor(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS mean_token_len,
-         |         floor(CAST((length(text) - length(replace(text, '#', '')))
-         |                    + (length(text) - length(replace(text, '...', ''))) / 3
-         |                    AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS symbol_ratio,
-         |         floor(CAST(len(list_filter(string_split(text, ' '),
-         |                                    t -> regexp_matches(t, '[a-zA-Z]')))
-         |                    AS DOUBLE)
-         |               / len(string_split(text, ' ')) * 10000 + 0.5)
-         |           / 10000.0 AS alpha_frac,
-         |         CASE WHEN text IS NOT NULL
-         |              THEN len(list_filter($duckStopwords,
-         |                     w -> list_contains(string_split(text, ' '), w)))
-         |              END AS n_stop_hits
-         |  FROM documents)
+      s"""WITH $duckGopherCte
          |SELECT CAST(count(*) AS BIGINT) AS n_docs,
          |       CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          |         AS n_null_text,
@@ -2499,13 +2203,7 @@ object TextAnalytics {
          |            AS BIGINT) AS fail_alpha,
          |       CAST(sum(CASE WHEN n_stop_hits < $GopherRequiredHits
          |                     THEN 1 ELSE 0 END) AS BIGINT) AS fail_stopword,
-         |       CAST(sum(CASE WHEN n_tokens BETWEEN $GopherMinTokens
-         |                               AND $GopherMaxTokens
-         |                          AND mean_token_len BETWEEN 3.0 AND 10.0
-         |                          AND symbol_ratio <= 0.1
-         |                          AND alpha_frac >= 0.8
-         |                          AND n_stop_hits >= $GopherRequiredHits
-         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
+         |       CAST(sum($duckGopherOk) AS BIGINT) AS n_pass
          |FROM g""".stripMargin,
     "q_quality_sweep" ->
       s"""WITH cfg AS (
@@ -2561,87 +2259,19 @@ object TextAnalytics {
         |       floor(CAST(max(c) AS DOUBLE) / sum(c) * 10000 + 0.5) / 10000.0
         |         AS top_token_frac
         |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_ngram_repetition" -> {
-      // one SELECT per gram size: range(1, len−n+2) is empty when the
-      // doc is shorter than n, so short docs drop guard-free
-      val gramSel = RepetitionNs.map(n =>
-        s"""  SELECT doc_id, n_chars, $n AS n,
-           |         array_to_string(t[i:i+${n - 1}], ' ') AS gram
-           |  FROM (SELECT doc_id, n_chars, t,
-           |               unnest(range(1, len(t) - ${n - 2})) AS i
-           |        FROM toks)""".stripMargin).mkString("\n  UNION ALL\n")
-      s"""WITH toks AS (
-         |  SELECT doc_id, length(replace(text, ' ', '')) AS n_chars,
-         |         string_split(text, ' ') AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |grams AS (
-         |$gramSel),
-         |cnt AS (
-         |  SELECT doc_id, n_chars, n, gram, count(*) AS c
-         |  FROM grams GROUP BY doc_id, n_chars, n, gram),
-         |top AS (
-         |  SELECT doc_id, n, c, length(gram) - (n - 1) AS glen,
-         |         row_number() OVER (PARTITION BY doc_id, n
-         |                            ORDER BY c DESC, length(gram) DESC,
-         |                                     gram DESC) AS rn
-         |  FROM cnt),
-         |agg AS (
-         |  SELECT doc_id, n_chars, n, CAST(sum(c) AS BIGINT) AS n_grams,
-         |         CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
-         |           AS dup_c
-         |  FROM cnt GROUP BY doc_id, n_chars, n)
-         |SELECT a.doc_id, a.n, a.n_grams,
-         |       CASE WHEN a.n_chars > 0 THEN
-         |         floor(CAST(t.c * t.glen AS DOUBLE) / a.n_chars * 10000 + 0.5)
-         |           / 10000.0 END AS top_gram_frac,
-         |       floor(CAST(a.dup_c AS DOUBLE) / a.n_grams * 10000 + 0.5)
-         |         / 10000.0 AS dup_gram_frac
-         |FROM agg a JOIN top t ON t.doc_id = a.doc_id AND t.n = a.n
-         |                     AND t.rn = 1
-         |ORDER BY a.doc_id, a.n""".stripMargin
-    },
+    "q_ngram_repetition" ->
+      s"""WITH ${duckNgramRepCtes(RepetitionNs)}
+         |SELECT doc_id, n, n_grams, top_frac AS top_gram_frac,
+         |       dup_frac AS dup_gram_frac
+         |FROM m ORDER BY doc_id, n""".stripMargin,
     "q_repetition_gate" -> {
-      val gateNs = RepTopMax.map(_._1) :+ 5
-      val gramSel = gateNs.map(n =>
-        s"""  SELECT doc_id, n_chars, $n AS n,
-           |         array_to_string(t[i:i+${n - 1}], ' ') AS gram
-           |  FROM (SELECT doc_id, n_chars, t,
-           |               unnest(range(1, len(t) - ${n - 2})) AS i
-           |        FROM toks)""".stripMargin).mkString("\n  UNION ALL\n")
       val topCols = RepTopMax.map { case (n, _) =>
         s"max(CASE WHEN n = $n THEN top_frac END) AS top${n}_frac" }
         .mkString(",\n         ")
       val verdict = RepTopMax.map { case (n, mx) =>
         s"coalesce(w.top${n}_frac, 0) <= $mx" }
         .mkString("\n             AND ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, length(replace(text, ' ', '')) AS n_chars,
-         |         string_split(text, ' ') AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |grams AS (
-         |$gramSel),
-         |cnt AS (
-         |  SELECT doc_id, n_chars, n, gram, count(*) AS c
-         |  FROM grams GROUP BY doc_id, n_chars, n, gram),
-         |top AS (
-         |  SELECT doc_id, n, c, length(gram) - (n - 1) AS glen,
-         |         row_number() OVER (PARTITION BY doc_id, n
-         |                            ORDER BY c DESC, length(gram) DESC,
-         |                                     gram DESC) AS rn
-         |  FROM cnt),
-         |agg AS (
-         |  SELECT doc_id, n_chars, n, sum(c) AS n_grams,
-         |         sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS dup_c
-         |  FROM cnt GROUP BY doc_id, n_chars, n),
-         |m AS (
-         |  SELECT a.doc_id, a.n,
-         |         CASE WHEN a.n_chars > 0 THEN
-         |           floor(CAST(t.c * t.glen AS DOUBLE) / a.n_chars * 10000
-         |                 + 0.5) / 10000.0 END AS top_frac,
-         |         floor(CAST(a.dup_c AS DOUBLE) / a.n_grams * 10000 + 0.5)
-         |           / 10000.0 AS dup_frac
-         |  FROM agg a JOIN top t ON t.doc_id = a.doc_id AND t.n = a.n
-         |                       AND t.rn = 1),
+      s"""WITH ${duckNgramRepCtes(RepTopMax.map(_._1) :+ 5)},
          |w AS (
          |  SELECT doc_id,
          |         $topCols,
@@ -2673,46 +2303,141 @@ object TextAnalytics {
          |FROM documents ORDER BY doc_id""".stripMargin
   )
 
-  /** The winnow-components CTE chain (selection → df cap → pairs →
-    * recursive transitive closure → per-doc min-id label `wlab`), shared
-    * by the q_winnow_components oracle and the Curation passage-stage
-    * oracle. Must follow a `WITH RECURSIVE` keyword. CTE names are
-    * w-prefixed where they could collide with a composing oracle's own
-    * chain (wdocs/wlab); registered k=3, w=4 are structural.
+  /** The word-n-gram repetition metrics of [[ngramRepetition]] as
+    * DuckDB CTEs ending in `m(doc_id, n, n_grams, top_frac, dup_frac)`:
+    * one row per (doc, n) for each n in `ns` the doc is long enough for.
+    * One SELECT per gram size: range(1, len−n+2) is empty when the doc
+    * is shorter than n, so short docs drop guard-free.
     */
-  private[operators] def duckWinnowComponentCtes: String =
-    s"""wdocs AS (
-      |  SELECT doc_id, string_split(text, ' ') AS wtk
-      |  FROM documents WHERE text IS NOT NULL),
-      |wth AS (
+  private def duckNgramRepCtes(ns: Seq[Int]): String = {
+    val gramSel = ns.map(n =>
+      s"""  SELECT doc_id, n_chars, $n AS n,
+         |         array_to_string(t[i:i+${n - 1}], ' ') AS gram
+         |  FROM (SELECT doc_id, n_chars, t,
+         |               unnest(range(1, len(t) - ${n - 2})) AS i
+         |        FROM toks)""".stripMargin).mkString("\n  UNION ALL\n")
+    s"""toks AS (
+       |  SELECT doc_id, length(replace(text, ' ', '')) AS n_chars,
+       |         string_split(text, ' ') AS t
+       |  FROM documents WHERE text IS NOT NULL),
+       |grams AS (
+       |$gramSel),
+       |cnt AS (
+       |  SELECT doc_id, n_chars, n, gram, count(*) AS c
+       |  FROM grams GROUP BY doc_id, n_chars, n, gram),
+       |top AS (
+       |  SELECT doc_id, n, c, length(gram) - (n - 1) AS glen,
+       |         row_number() OVER (PARTITION BY doc_id, n
+       |                            ORDER BY c DESC, length(gram) DESC,
+       |                                     gram DESC) AS rn
+       |  FROM cnt),
+       |agg AS (
+       |  SELECT doc_id, n_chars, n, CAST(sum(c) AS BIGINT) AS n_grams,
+       |         CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
+       |           AS dup_c
+       |  FROM cnt GROUP BY doc_id, n_chars, n),
+       |m AS (
+       |  SELECT a.doc_id, a.n, a.n_grams,
+       |         CASE WHEN a.n_chars > 0 THEN
+       |           floor(CAST(t.c * t.glen AS DOUBLE) / a.n_chars * 10000
+       |                 + 0.5) / 10000.0 END AS top_frac,
+       |         floor(CAST(a.dup_c AS DOUBLE) / a.n_grams * 10000 + 0.5)
+       |           / 10000.0 AS dup_frac
+       |  FROM agg a JOIN top t ON t.doc_id = a.doc_id AND t.n = a.n
+       |                       AND t.rn = 1)""".stripMargin
+  }
+
+  /** The [[withGopherColumns]] metrics as the DuckDB CTE `g`: one row
+    * per document with its text and the five rule metrics.
+    */
+  private def duckGopherCte: String =
+    s"""g AS (
+      |  SELECT doc_id, text,
+      |         len(string_split(text, ' ')) AS n_tokens,
+      |         floor(CAST(length(replace(text, ' ', '')) AS DOUBLE)
+      |               / len(string_split(text, ' ')) * 10000 + 0.5)
+      |           / 10000.0 AS mean_token_len,
+      |         floor(CAST((length(text) - length(replace(text, '#', '')))
+      |                    + (length(text) - length(replace(text, '...', ''))) / 3
+      |                    AS DOUBLE)
+      |               / len(string_split(text, ' ')) * 10000 + 0.5)
+      |           / 10000.0 AS symbol_ratio,
+      |         floor(CAST(len(list_filter(string_split(text, ' '),
+      |                                    t -> regexp_matches(t, '[a-zA-Z]')))
+      |                    AS DOUBLE)
+      |               / len(string_split(text, ' ')) * 10000 + 0.5)
+      |           / 10000.0 AS alpha_frac,
+      |         CASE WHEN text IS NOT NULL
+      |              THEN len(list_filter($duckStopwords,
+      |                     w -> list_contains(string_split(text, ' '), w)))
+      |              END AS n_stop_hits
+      |  FROM documents)""".stripMargin
+
+  /** The five-rule Gopher verdict over [[duckGopherCte]]'s columns. */
+  private def duckGopherOk: String =
+    s"""CASE WHEN n_tokens BETWEEN $GopherMinTokens AND $GopherMaxTokens
+       |          AND mean_token_len BETWEEN 3.0 AND 10.0
+       |          AND symbol_ratio <= 0.1
+       |          AND alpha_frac >= 0.8
+       |          AND n_stop_hits >= $GopherRequiredHits
+       |     THEN 1 ELSE 0 END""".stripMargin
+
+  /** The winnow selection chain as DuckDB CTEs, every name prefixed
+    * with `pre`: `th` the per-doc token hashes (the portable fold), `g`
+    * the packed k-gram stream (gram hash · 2³² + position), `win` each
+    * w-window's minimum, `fpos` the selected (doc_id, pos, fp) set and
+    * `fp` its distinct (doc_id, fp) pairs — the oracle spelling of
+    * [[winnowGramsOf]] + [[winnowSelect]] at any (k, w).
+    */
+  private[operators] def duckWinnowCtes(k: Int = WinnowK, w: Int = WinnowW,
+      pre: String = ""): String =
+    s"""${pre}th AS (
       |  SELECT doc_id,
-      |         list_transform(wtk, t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |           list_transform(string_split(t, ''),
-      |             c -> CAST(greatest(unicode(c), 0) % 256 AS BIGINT))),
-      |           (a, b) -> (a * 31 + b) % 2147483648)) AS th
-      |  FROM wdocs),
-      |wg AS (
-      |  SELECT doc_id, len(th) - 2 AS ng, p,
-      |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + 2)),
-      |            (a, b) -> (a * 1000003 + b) % 2147483648) * 4294967296
+      |         list_transform(string_split(text, ' '), t -> ${TextHashes.duckFold("t")}) AS th
+      |  FROM documents WHERE text IS NOT NULL),
+      |${pre}g AS (
+      |  SELECT doc_id, len(th) - ${k - 1} AS ng, p,
+      |         (list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, p, p + ${k - 1})),
+      |            (a, b) -> (a * $GramMult + b) % $FoldM) * $PosPack
       |          + (p - 1)) AS comb
-      |  FROM wth, unnest(range(1, len(th) - 2 + 1)) AS t(p)
-      |  WHERE len(th) >= 6),
-      |wwin AS (
+      |  FROM ${pre}th, unnest(range(1, len(th) - ${k - 1} + 1)) AS t(p)
+      |  WHERE len(th) >= $k),
+      |${pre}win AS (
       |  SELECT doc_id, ng, p,
       |         min(comb) OVER (PARTITION BY doc_id ORDER BY p
-      |                         ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-      |  FROM wg),
-      |wfp AS (
-      |  SELECT DISTINCT doc_id, CAST(sel // 4294967296 AS BIGINT) AS fp
-      |  FROM wwin WHERE p <= ng - 3),
-      |wdfq AS (SELECT fp, count(*) AS df FROM wfp GROUP BY fp),
-      |wfpc AS (SELECT f.doc_id, f.fp
-      |         FROM wfp f JOIN wdfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
-      |wpairs AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM wfpc a JOIN wfpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared),
+      |                         ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS sel
+      |  FROM ${pre}g),
+      |${pre}fpos AS (
+      |  SELECT DISTINCT doc_id, CAST(sel % $PosPack AS BIGINT) AS pos,
+      |         CAST(sel // $PosPack AS BIGINT) AS fp
+      |  FROM ${pre}win WHERE p <= ng - ${w - 1}),
+      |${pre}fp AS (SELECT DISTINCT doc_id, fp FROM ${pre}fpos)""".stripMargin
+
+  /** [[duckWinnowCtes]] followed by the cross-doc match chain: `dfq`
+    * each fp's document frequency, `fpc` the fps under the
+    * [[WinnowMaxDf]] cap, `sizes` each doc's capped fp count and `pairs`
+    * every doc pair sharing at least `minShared` capped fps (`n_shared`).
+    */
+  private[operators] def duckWinnowMatchCtes(k: Int = WinnowK, w: Int = WinnowW,
+      pre: String = "", minShared: Int = WinnowMinShared): String =
+    s"""${duckWinnowCtes(k, w, pre)},
+      |${pre}dfq AS (SELECT fp, count(*) AS df FROM ${pre}fp GROUP BY fp),
+      |${pre}fpc AS (SELECT f.doc_id, f.fp
+      |  FROM ${pre}fp f JOIN ${pre}dfq d ON d.fp = f.fp WHERE d.df <= $WinnowMaxDf),
+      |${pre}sizes AS (SELECT doc_id, count(*) AS n FROM ${pre}fpc GROUP BY doc_id),
+      |${pre}pairs AS MATERIALIZED (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
+      |  FROM ${pre}fpc a JOIN ${pre}fpc b ON a.fp = b.fp AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2 HAVING count(*) >= $minShared)""".stripMargin
+
+  /** The winnow-components CTE chain ([[duckWinnowMatchCtes]] → recursive
+    * transitive closure → per-doc min-id label `wlab`), shared by the
+    * q_winnow_components oracle and the Curation passage-stage oracle.
+    * Must follow a `WITH RECURSIVE` keyword. CTE names are w-prefixed so
+    * they cannot collide with a composing oracle's own chain.
+    */
+  private[operators] def duckWinnowComponentCtes: String =
+    s"""${duckWinnowMatchCtes(pre = "w")},
       |we AS (SELECT doc_a AS a, doc_b AS b FROM wpairs
       |       UNION ALL SELECT doc_b, doc_a FROM wpairs),
       |wreach AS (
@@ -2726,14 +2451,23 @@ object TextAnalytics {
       |  LEFT JOIN wreach r ON r.a = n.doc_id
       |  GROUP BY n.doc_id)""".stripMargin
 
+  /** A winnow pair's overlap: shared fps over the smaller doc's capped
+    * fp count (`za`/`zb` are the two docs' `sizes` rows), 4 dp.
+    */
+  private def duckOverlapFrac: String =
+    "floor(CAST(n_shared AS DOUBLE) / CAST(least(za.n, zb.n) AS DOUBLE) " +
+      "* 10000 + 0.5) / 10000.0"
+
   private[operators] def duckStopwords: String = duckArr(stopwords)
 
-  /** DuckDB twin of Spark's pmod(doc_id, 2^31) fold: DuckDB's signed %
-    * goes negative for negative ids, where pmod does not — wrap to the
-    * non-negative residue so the engines agree on every id.
+  /** DuckDB twin of Spark's pmod(x, 2^31) fold: DuckDB's signed %
+    * goes negative for negative x, where pmod does not — wrap to the
+    * non-negative residue so the engines agree on every value.
     */
-  private[operators] def duckIdFold: String =
-    "((doc_id % 2147483648) + 2147483648) % 2147483648"
+  private[operators] def duckPmod31(x: String): String =
+    s"((($x) % 2147483648) + 2147483648) % 2147483648"
+
+  private[operators] def duckIdFold: String = duckPmod31("doc_id")
 
   /** DuckDB twin of [[splitLabelExpr]] at the default 80/10 percentages. */
   private[operators] def duckSplitCase: String =
