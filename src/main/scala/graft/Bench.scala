@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.Artifacts
+import graft.operators.{Artifacts, Curation}
 import graft.streaming.StreamingFeatures
 
 /** Benchmark main (driver contract): run every SparkEntry query on
@@ -180,24 +180,24 @@ object Bench {
       return
     }
     // r18 verdict ask #7: per-stage attribution of the curation
-    // composite — cumulative prefixes of the ONE curateComplete
-    // spelling (text chain alone / + lexical near-dup / the full
+    // composite — the cumulative prefixes of the ONE curateComplete
+    // stage list (text chain alone / + lexical near-dup / the full
     // composite), min-of-2 each against the noop sink (the suite is
     // warm here; the registered queries' own timings above are
     // untouched — this is an additive artifact field).
     val curationStagesJson = {
-      def one(stages: Int): Double = {
+      def one(gate: DataFrame => DataFrame): Double = {
         def t(): Double = {
           val t0 = System.nanoTime()
-          run(graft.operators.Curation.curateCompleteStaged(spark, sfDir, stages,
-            minCosine = graft.operators.Curation.CompleteMinCosine))
+          run(gate(Tables.documents(spark, sfDir)))
           val secs = (System.nanoTime() - t0) / 1e9
           dropBlocks(spark)
           secs
         }
         math.round(math.min(t(), t()) * 1000.0) / 1000.0
       }
-      try jsonMap(Seq("text" -> one(1), "neardup" -> one(2), "complete" -> one(3)))
+      try jsonMap(prefixes(Curation.completeStages(spark, sfDir,
+        minCosine = Curation.CompleteMinCosine)).map { case (name, gate) => name -> one(gate) })
       catch { case NonFatal(t) => errorJson(t) }
     }
     val gates = gateRateFields(spark, sfDir)
@@ -967,7 +967,8 @@ object Bench {
   }
 
   /** Per-stage attribution (r14 verdict ask #4): for each named
-    * cumulative prefix, one warm-up pass (codegen and stream init for
+    * cumulative prefix of a composite's stage list ([[prefixes]]), one
+    * warm-up pass (codegen and stream init for
     * that prefix), then the median of three (r15 advice: the marginals
     * difference CONSECUTIVE prefix rates, so single-pass noise could push
     * a cheap stage's marginal negative). Every prefix uses this one
@@ -978,6 +979,21 @@ object Bench {
       pass()
       name -> Seq.fill(3)(pass()).sorted.apply(1)
     }
+
+  /** Each cumulative prefix of a composite's stage list as one gate,
+    * keyed by the name of its last stage — the published stage keys.
+    */
+  private[graft] def prefixes(stages: Seq[(String, DataFrame => DataFrame)]) =
+    stages.indices.map(i => stages(i)._1 -> Function.chain(stages.take(i + 1).map(_._2)))
+
+  /** A staged composite's rate: `pass` of the whole stage list measured
+    * with one warm-up, carrying the [[prefixRates]] of its [[prefixes]].
+    */
+  private def stagedRate(stages: Seq[(String, DataFrame => DataFrame)])(
+      pass: (DataFrame => DataFrame) => Double): Rate = {
+    val rates = prefixRates(prefixes(stages).map { case (nm, gate) => nm -> (() => pass(gate)) })
+    measure(warmups = 1)(() => pass(Function.chain(stages.map(_._2)))).copy(stages = rates)
+  }
 
   /** One replay pass: a fresh MemoryStream with `columns`, a fresh
     * temporary checkpoint, and the writer `sink` builds on the stream
@@ -1115,30 +1131,31 @@ object Bench {
     * ([[StreamingFeatures.curateDocsFullStream]]: PII redaction →
     * static-benchmark decontam → quality gate → in-horizon dedup → split
     * label), the ingest metric's corpus twin. Its stages are the
-    * cumulative-prefix rates of [[DocsGateStages]] (r17 verdict ask #1:
+    * cumulative-prefix rates of [[docsGateStages]] (r17 verdict ask #1:
     * the docs gate was the slowest stream rate by ~19× and the only one
     * with no attribution); `replay` is the bare harness (stream → noop,
     * no gate), so "how much of the composite is harness" is a field in
     * the artifact.
     */
   private[graft] def docsGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
-    val chunks = replayDocs(spark, sfDir)._2.grouped(DocChunk).toSeq
-    val pass = (stages: Int) => () => docsGatePass(spark, chunks, stages)
-    val stages = prefixRates(DocsGateStages.zipWithIndex.map { case (nm, i) => nm -> pass(i) })
-    measure(warmups = 1)(pass(5)).copy(stages = stages)
+    val rows = replayDocs(spark, sfDir)._2
+    stagedRate(docsGateStages(spark))(docsGatePass(spark, rows, DocChunk, _))
   }
 
-  private val DocsGateStages = Seq("replay", "pii", "decontam", "quality", "dedup", "split")
+  /** [[StreamingFeatures.docsHygieneStages]] over a one-shingle
+    * benchmark, behind `replay`: the bare harness (stream → noop, no
+    * gate), whose prefix is the empty one.
+    */
+  private[graft] def docsGateStages(spark: SparkSession): Seq[(String, DataFrame => DataFrame)] =
+    ("replay", identity[DataFrame] _) +: StreamingFeatures.docsHygieneStages(
+      spark.createDataFrame(Seq(Tuple1("alpha beta gamma"))).toDF("shingle"))
 
-  /** One pass of the hygiene-chain prefix `stages` (0 = bare replay). */
-  private[graft] def docsGatePass(spark: SparkSession,
-      chunks: Seq[Seq[(Long, Timestamp, String)]], stages: Int): Double = {
+  /** One pass of a docs gate over the doc replay in `chunk`-row batches. */
+  private[graft] def docsGatePass(spark: SparkSession, rows: Seq[(Long, Timestamp, String)],
+      chunk: Int, gate: DataFrame => DataFrame): Double = {
     import spark.implicits._
-    streamPass(spark, Seq("doc_id", "ingest_time", "text"), chunks) { sdf =>
-      noop(if (stages == 0) sdf
-        else StreamingFeatures.curateDocsFullStream(
-          sdf, Seq("alpha beta gamma").toDF("shingle"), stages = stages))
-    }
+    streamPass(spark, Seq("doc_id", "ingest_time", "text"), rows.grouped(chunk).toSeq)(
+      sdf => noop(gate(sdf)))
   }
 
   /** A (doc_id, text) gate's rate over the doc replay through the noop
@@ -1229,9 +1246,9 @@ object Bench {
     * the timed passes (the nightly-export shape). Thresholds are set so
     * NO stage drops, except the quality gate's real defaults: every doc
     * pays every stage's full scoring cost. Its stages are the
-    * cumulative-prefix rates of [[AdmissionStages]], the attribution that
-    * turns "the composite is the slowest gate" into "THIS stage owns the
-    * cost" (r14 verdict ask #4).
+    * cumulative-prefix rates of [[StreamingFeatures.admissionStages]],
+    * the attribution that turns "the composite is the slowest gate" into
+    * "THIS stage owns the cost" (r14 verdict ask #4).
     */
   private[graft] def admissionGateRate(spark: SparkSession, sfDir: String): Rate = guarded {
     import spark.implicits._
@@ -1239,18 +1256,13 @@ object Bench {
     try {
       Artifacts.exportAll(spark, sfDir, artDir.toString)
       val chunks = docTexts(replayDocs(spark, sfDir)._2)
-      val pass = (stages: Int) => () => streamPass(spark, DocColumns, chunks)(sdf =>
-        noop(StreamingFeatures.admissionGateStream(sdf, spark, artDir.toString,
-          maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
-          maxTokens = Long.MaxValue,
-          decontamMinFrac = 1.1, winnowMinShared = Int.MaxValue,
-          stages = stages)))
-      val stages = prefixRates(AdmissionStages.zipWithIndex.map { case (nm, i) => nm -> pass(i + 1) })
-      measure(warmups = 1)(pass(6)).copy(stages = stages)
+      stagedRate(StreamingFeatures.admissionStages(spark, artDir.toString,
+        maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
+        maxTokens = Long.MaxValue,
+        decontamMinFrac = 1.1, winnowMinShared = Int.MaxValue))(gate =>
+        streamPass(spark, DocColumns, chunks)(sdf => noop(gate(sdf))))
     } finally Artifacts.deleteRecursively(artDir)
   }
-
-  private val AdmissionStages = Seq("quality", "bloom", "winnow", "dsir", "perplexity", "bpe")
 
   /** Standalone BPE-gate throughput: docs/s through
     * [[StreamingFeatures.bpeBudgetGateStream]] ALONE at a chosen

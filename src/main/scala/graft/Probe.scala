@@ -200,10 +200,9 @@ object Probe {
   private def docsGateBatchProfile(spark: SparkSession, sfDir: String): String =
     try {
       val rows = Bench.replayDocs(spark, sfDir)._2
-      jsonMap(Bench.prefixRates(Seq(1000, 2000, 4000, 8000).map { c =>
-        val chunks = rows.grouped(c).toSeq
-        s"b$c" -> (() => Bench.docsGatePass(spark, chunks, 5))
-      }))
+      val full = Function.chain(Bench.docsGateStages(spark).map(_._2))
+      jsonMap(Bench.prefixRates(Seq(1000, 2000, 4000, 8000).map(c =>
+        s"b$c" -> (() => Bench.docsGatePass(spark, rows, c, full)))))
     } catch { case t: Throwable => errorJson(t) }
 
   /** `admission [N]`: the composed admission gate alone (median-of-five

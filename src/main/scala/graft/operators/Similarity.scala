@@ -821,25 +821,27 @@ object Similarity {
       nQueries: Int = 10, k: Int = 5,
       nCells: Int = 16, lloydIters: Int = 2,
       trainModulus: Int = 1): DataFrame = {
-    // materializeAssigned: the assignment feeds cell sizes, the
-    // self-exclusion lookup AND the truth-neighbor cell lookup
+    // materializeAssigned: the assignment feeds the query rows (with
+    // their own cell, for self-exclusion), cell sizes AND the
+    // truth-neighbor cell lookup
     val (centroids, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
       materializeAssigned = true, trainModulus = trainModulus)
-    val emb = quantized(spark, dir)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qe").as("q_qe"))
+    // The own cell rides on the query rows: a join against the selective
+    // `vec_id < nQueries` slice would draw Spark's runtime Bloom join
+    // filter, sized for a million rows when the side has no row count,
+    // and every task of the cost aggregation would carry its 1 MiB.
+    val queries = assigned.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("qe").as("q_qe"),
+        col("cell").as("own_cell"))
     // per-query ranking of ALL cells — annIvf's probe selection verbatim
     val ranked = queries.crossJoin(broadcast(centroids))
       .withColumn("d", longDot(col("q_qe"), col("qc")))
       .withColumn("rk", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("d"), asc("cell"))))
-      .select("query_id", "cell", "rk")
+      .select("query_id", "cell", "own_cell", "rk")
       .localCheckpoint(eager = false) // cost agg + recall join both read it
     val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("csize"))
-    val own = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("cell").as("own_cell"))
     val rankedSized = ranked.join(broadcast(sizes), "cell")
-      .join(broadcast(own), "query_id")
     val grid = 1 to nCells
     val costAggs = grid.flatMap { p => Seq(
       sum(when(col("rk") <= p, col("csize")).otherwise(lit(0L))).as(s"cand_$p"),
@@ -861,7 +863,7 @@ object Similarity {
     // query rows, and the nominal denominator would break the
     // spec-pinned full-probe endpoint (scan_frac ≡ 1.0). n_cross =
     // actual queries × (N − 1), the annTuning discipline.
-    val corpusN = emb.agg(count(lit(1)).as("n_corpus"),
+    val corpusN = quantized(spark, dir).agg(count(lit(1)).as("n_corpus"),
       sum((col("vec_id") < nQueries).cast("long")).as("n_queries"))
     // one materialized row for the 16-branch fan-out (see annTuning)
     val one = cost.crossJoin(broadcast(recall)).crossJoin(broadcast(corpusN))

@@ -444,27 +444,23 @@ object StreamingFeatures {
       horizon)
 
   /** Streaming curation gate — the streaming twin of
-    * [[graft.operators.Curation.curateDocs]]'s decision chain: quality
-    * gate (the SAME shared TextAnalytics formulas, null text fails),
-    * then in-horizon content dedup ([[dedupDocsStream]]), then the
-    * map-side split label (doc_id-only, same shared expression).
+    * [[graft.operators.Curation.curateDocs]]'s decision chain: the
+    * `quality → dedup → split` tail of [[docsHygieneStages]] at its
+    * default thresholds — quality gate (the SAME shared TextAnalytics
+    * formulas, null text fails), then in-horizon content dedup
+    * ([[dedupDocsStream]]), then the map-side split label (doc_id-only,
+    * same shared expression). Other thresholds: fold that tail of the
+    * list yourself.
     * Append semantics: survivors flow through with their split; dropped
     * docs simply don't emit (a stream has no place for drop_reason rows
     * that may later be contradicted). First-occurrence-wins inside the
     * watermark horizon; whole-history exact dedup stays the batch
     * operator's job over the sink — the reference's stream+batch split.
     */
-  def curateDocsStream(docs: DataFrame, horizon: String = "10 minutes",
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    import graft.operators.TextAnalytics
-    dedupDocsStream(
-      docs.filter(
-        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1),
-      horizon)
-      .withColumn("split",
-        TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))
-  }
+  def curateDocsStream(docs: DataFrame): DataFrame =
+    // the decontam stage is dropped, so its benchmark frame is never read
+    Function.chain(docsHygieneStages(docs.sparkSession.emptyDataFrame)
+      .dropWhile(_._1 != "quality").map(_._2))(docs)
 
   /** Streaming near-dup gate — the in-horizon twin of the lexical
     * near-dup stage: the first occurrence of a SimHash fingerprint
@@ -495,13 +491,17 @@ object StreamingFeatures {
   }
 
   /** Streaming twin of [[graft.operators.Curation.curateDocsFull]] — the
-    * full hygiene gate over a document stream: PII redaction
+    * full hygiene gate over a document stream, as its named stage list
+    * `pii → decontam → quality → dedup → split`: PII redaction
     * ([[graft.operators.Pii.redacted]], map-side), decontamination
     * against a STATIC benchmark n-gram frame, then the
     * [[curateDocsStream]] chain (quality gate → in-horizon dedup →
     * split label). Survivors emit with their REDACTED text — the corpus
     * the sink ships is the scrubbed one, exactly as the batch operator
-    * digests it.
+    * digests it. [[curateDocsFullStream]] folds the whole list; the
+    * bench's per-stage attribution folds each cumulative prefix (a
+    * prefix never reads the stages after it: the benchmark shingles
+    * collect inside the decontam stage).
     *
     * The contamination stage is stateless: the benchmark (the documented
     * tiny side — an eval suite, tens of MB) is collected ONCE at plan
@@ -518,55 +518,43 @@ object StreamingFeatures {
     * dedup) preserves the batch precedence semantics: a contaminated
     * doc never claims a dedup slot.
     */
-  def curateDocsFullStream(docs: DataFrame, benchNgrams: DataFrame,
+  def docsHygieneStages(benchNgrams: DataFrame,
       horizon: String = "10 minutes",
       minTokens: Int = 10, minStopwordRatio: Double = 0.01,
       trainPct: Int = 80, valPct: Int = 10,
       n: Int = graft.operators.Decontam.DefaultN,
-      minFrac: Double = graft.operators.Decontam.DefaultMinFrac,
-      stages: Int = 5): DataFrame = {
+      minFrac: Double = graft.operators.Decontam.DefaultMinFrac)
+      : Seq[(String, DataFrame => DataFrame)] = {
     import graft.operators.TextAnalytics
-    import graft.functions.PortableRound
-    // `stages` cuts the chain after a prefix (1=pii, 2=+decontam,
-    // 3=+quality, 4=+dedup, 5=+split) — the [[admissionGateStream]]
-    // attribution device, so the bench can locate which stage owns the
-    // composite's cost. stages=5 is byte-identical to the shipped
-    // composition: the quality→dedup→split tail is the same shared
-    // spellings [[curateDocsStream]] composes.
-    require(stages >= 1 && stages <= 5,
-      s"curateDocsFullStream: stages must be in [1, 5], got $stages")
-    val pii = docs
-      .withColumn("text", graft.operators.Pii.redacted(col("text")))
-    val flagged = if (stages < 2) pii else {
-      // fused decontam (r17 verdict ask #1: the attribution probe put
-      // this stage at ~0.97 ms/row, ~90% of the composite — the
-      // interpreted shingle transform + per-row array_intersect). The
-      // static side is collected ONCE at plan time (the same sanctioned
-      // bounded device as the old per-batch one-row collect_set, minus
-      // the per-micro-batch re-aggregation) and the census+probe runs
-      // as one compiled byte-span pass. Algebra spelling retained below
-      // ([[decontamGateStreamAlgebra]]), verdict-equality spec-pinned.
-      val benchShingles: Seq[String] = benchNgrams.select(col("shingle"))
-        .filter(col("shingle").isNotNull).distinct()
-        .collect().map(_.getString(0)).toSeq
-      pii
-        .withColumn("__decon_ph", graft.functions.TextHashes
-          .shingleSetHitsCol(col("text"), n, benchShingles))
-        .withColumn("__decon_overlap_frac",
-          when(shiftrightunsigned(col("__decon_ph"), 32) > 0, PortableRound.r(
-            col("__decon_ph").bitwiseAND(lit(0xFFFFFFFFL)).cast("double")
-              / shiftrightunsigned(col("__decon_ph"), 32).cast("double"), 4))
-            .otherwise(lit(0.0)))
-        .filter(col("__decon_overlap_frac") < minFrac)
-        .drop("__decon_ph", "__decon_overlap_frac")
-    }
-    val quality = if (stages < 3) flagged else flagged.filter(
-      TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)
-    val deduped = if (stages < 4) quality else dedupDocsStream(quality, horizon)
-    if (stages < 5) deduped
-    else deduped.withColumn("split",
-      TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))
+    Seq(
+      ("pii", _.withColumn("text", graft.operators.Pii.redacted(col("text")))),
+      ("decontam", { docs =>
+        // fused decontam (r17 verdict ask #1: the attribution probe put
+        // this stage at ~0.97 ms/row, ~90% of the composite — the
+        // interpreted shingle transform + per-row array_intersect). The
+        // static side is collected ONCE at plan time (the same sanctioned
+        // bounded device as the old per-batch one-row collect_set, minus
+        // the per-micro-batch re-aggregation) and the census+probe runs
+        // as one compiled byte-span pass. Algebra spelling retained below
+        // ([[decontamGateStreamAlgebra]]), verdict-equality spec-pinned.
+        val benchShingles: Seq[String] = benchNgrams.select(col("shingle"))
+          .filter(col("shingle").isNotNull).distinct()
+          .collect().map(_.getString(0)).toSeq
+        overlapGate(docs, "__decon", graft.functions.TextHashes
+          .shingleSetHitsCol(col("text"), n, benchShingles), minFrac)
+      }),
+      ("quality", _.filter(
+        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)),
+      ("dedup", dedupDocsStream(_, horizon)),
+      ("split", _.withColumn("split",
+        TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))))
   }
+
+  /** The whole [[docsHygieneStages]] list at its default thresholds
+    * over `docs`. Other thresholds: fold the list yourself.
+    */
+  def curateDocsFullStream(docs: DataFrame, benchNgrams: DataFrame): DataFrame =
+    Function.chain(docsHygieneStages(benchNgrams).map(_._2))(docs)
 
   /** Retained algebra spelling of [[curateDocsFullStream]]'s decontam
     * stage — the pre-r18 one-row-bench-set join + interpreted shingle
@@ -627,8 +615,7 @@ object StreamingFeatures {
       minFrac: Double = graft.operators.Decontam.DefaultMinFrac,
       numBits: Long = graft.operators.Decontam.DefaultBloomBits,
       k: Int = graft.operators.Decontam.DefaultBloomK): DataFrame = {
-    import graft.operators.{Decontam, Dedup}
-    import graft.functions.PortableRound
+    import graft.operators.Decontam
     // One fixed-size batch job, once, at construction: numBits/8 bytes
     // regardless of benchmark size (the documented broadcast budget) —
     // the sanctioned one-row collect, not a per-row driver loop.
@@ -636,34 +623,38 @@ object StreamingFeatures {
       benchNgrams.select(col("shingle")).distinct()
         .select(xxhash64(col("shingle")).as("gh")), numBits, k)
       .head().getSeq[Long](0)
-    bloomShingleGate(docs, bloomWords.toArray, n, minFrac, numBits, k,
-      graft.functions.BloomFunctions.FamilyXxhash64)
+    overlapGate(docs, "__bloom", graft.functions.BloomFunctions.shingleHitsCol(
+      docs.sparkSession, col("text"), n, bloomWords.toArray, numBits, k,
+      graft.functions.BloomFunctions.FamilyXxhash64), minFrac)
   }
 
-  /** Shared tail of the two streaming Bloom gates: the fused
-    * census+probe expression ([[graft.functions.BloomFunctions
-    * .shingleHits]] — one compiled pass replacing the interpreted
-    * shingle transform plus the per-element probe HOF, r15 verdict ask
-    * #4), then the SAME rounding/threshold/null algebra as before:
-    * packed total·2³² + hits unpacks to the identical overlap_frac
-    * (shingles are distinct byte spans, exactly `array_distinct`'s
-    * set), a NULL text packs NULL and the `when` falls to 0.0 — the
-    * content-neutral pass the gates contract. Internal temporaries
-    * stay `__bloom_`-prefixed (caller-column passthrough spec).
+  /** The one overlap verdict of the exact and the Bloom decontam gates:
+    * `packed` is a fused census+probe expression
+    * ([[graft.functions.TextHashes.shingleSetHitsCol]],
+    * [[graft.functions.BloomFunctions.shingleHitsCol]] — one compiled
+    * pass replacing the interpreted shingle transform plus the
+    * per-element probe, r15 verdict ask #4) packing distinct-shingle
+    * total·2³² + hits. It unpacks to the algebra spellings' overlap_frac
+    * (shingles are distinct byte spans, exactly `array_distinct`'s set),
+    * rounded to 4 places; docs at or above `minFrac` drop. A NULL text
+    * packs NULL and a sub-n doc packs total 0: both read 0.0 and pass —
+    * the content-neutral pass the gates contract. The two temporaries
+    * are `tmp`-prefixed, so caller columns pass through untouched
+    * (caller-column passthrough spec).
     */
-  private def bloomShingleGate(docs: DataFrame, words: Array[Long], n: Int,
-      minFrac: Double, numBits: Long, k: Int, family: Int): DataFrame = {
-    import graft.functions.{BloomFunctions, PortableRound}
+  private def overlapGate(docs: DataFrame, tmp: String, packed: Column,
+      minFrac: Double): DataFrame = {
+    import graft.functions.PortableRound
+    val (ph, frac) = (s"${tmp}_ph", s"${tmp}_overlap_frac")
     docs
-      .withColumn("__bloom_ph", BloomFunctions.shingleHitsCol(
-        docs.sparkSession, col("text"), n, words, numBits, k, family))
-      .withColumn("__bloom_overlap_frac",
-        when(shiftrightunsigned(col("__bloom_ph"), 32) > 0, PortableRound.r(
-          col("__bloom_ph").bitwiseAND(lit(0xFFFFFFFFL)).cast("double")
-            / shiftrightunsigned(col("__bloom_ph"), 32).cast("double"), 4))
+      .withColumn(ph, packed)
+      .withColumn(frac,
+        when(shiftrightunsigned(col(ph), 32) > 0, PortableRound.r(
+          col(ph).bitwiseAND(lit(0xFFFFFFFFL)).cast("double")
+            / shiftrightunsigned(col(ph), 32).cast("double"), 4))
           .otherwise(lit(0.0)))
-      .filter(col("__bloom_overlap_frac") < minFrac)
-      .drop("__bloom_ph", "__bloom_overlap_frac")
+      .filter(col(frac) < minFrac)
+      .drop(ph, frac)
   }
 
   /** [[bloomDecontamGateStream]] with a PRE-BUILT filter — the
@@ -684,23 +675,24 @@ object StreamingFeatures {
       n: Int = graft.operators.Decontam.DefaultN,
       minFrac: Double = graft.operators.Decontam.DefaultMinFrac): DataFrame = {
     val bloomWords: Seq[Long] = bloom.head().getSeq[Long](0)
-    bloomShingleGate(docs, bloomWords.toArray, n, minFrac, numBits, k,
-      graft.functions.BloomFunctions.FamilyFingerprint62)
+    overlapGate(docs, "__bloom", graft.functions.BloomFunctions.shingleHitsCol(
+      docs.sparkSession, col("text"), n, bloomWords.toArray, numBits, k,
+      graft.functions.BloomFunctions.FamilyFingerprint62), minFrac)
   }
 
   /** The composed artifact-driven admission pipeline — the whole
-    * "train once (batch), serve many (stream)" story as ONE call:
-    * every frozen model loads from `artifactsDir` (written by
-    * [[graft.operators.Artifacts.exportAll]], each refusing on a
+    * "train once (batch), serve many (stream)" story — as its named
+    * stage list: every frozen model loads from `artifactsDir` (written
+    * by [[graft.operators.Artifacts.exportAll]], each refusing on a
     * hash-family or sizing mismatch), and an incoming doc must clear
     * all six gates to emit. Stage order follows the batch capstone's
     * drop precedence where an online twin exists:
-    *   1. quality (stateless formula — no model),
-    *   2. benchmark decontamination ([[bloomDecontamGateStreamLoaded]]),
-    *   3. frozen-corpus passage overlap ([[winnowGateStream]]),
-    *   4. target-likeness ([[dsirGateStream]]),
-    *   5. order-2 reference perplexity ([[perplexityGateStreamBigram]]),
-    *   6. token budget ([[bpeBudgetGateStream]]).
+    *   1. `quality` (stateless formula — no model),
+    *   2. `bloom`: benchmark decontamination ([[bloomDecontamGateStreamLoaded]]),
+    *   3. `winnow`: frozen-corpus passage overlap ([[winnowGateStream]]),
+    *   4. `dsir`: target-likeness ([[dsirGateStream]]),
+    *   5. `perplexity`: order-2 reference perplexity ([[perplexityGateStreamBigram]]),
+    *   6. `bpe`: token budget ([[bpeBudgetGateStream]]).
     * Every stage is a stateless scan-side filter over broadcast-sized
     * model state (maps/censuses/merge tables — fixed-size regardless of
     * corpus), so the composition is itself stateless: no watermark, no
@@ -711,49 +703,53 @@ object StreamingFeatures {
     * distributions (e.g. the perplexity tercile boundary, the DSIR
     * weight histogram), not from defaults.
     *
-    * `stages` truncates the composition after that many gates (1 =
-    * quality only … 6 = full) — the bench's per-stage attribution
-    * probe times each cumulative prefix to locate which gate owns the
-    * composite's cost (r14 verdict ask #4); production callers keep
-    * the default. Models load only for enabled stages (a truncated
-    * prefix must not pay — or refuse on — artifacts it never probes).
+    * [[admissionGateStream]] folds the whole list; the bench's
+    * per-stage attribution folds each cumulative prefix to locate which
+    * gate owns the composite's cost (r14 verdict ask #4). Each model
+    * loads inside its own stage, so a prefix never pays — or refuses
+    * on — an artifact it never probes.
     */
-  def admissionGateStream(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
+  def admissionStages(spark: org.apache.spark.sql.SparkSession,
       artifactsDir: String,
       maxAvgNlpMicros: Long, minWeightMicros: Long, maxTokens: Long,
       minTokens: Int = 10, minStopwordRatio: Double = 0.01,
       decontamMinFrac: Double = graft.operators.Decontam.DefaultMinFrac,
-      winnowMinShared: Int = graft.operators.TextAnalytics.WinnowMinShared,
-      stages: Int = 6): DataFrame = {
+      winnowMinShared: Int = graft.operators.TextAnalytics.WinnowMinShared)
+      : Seq[(String, DataFrame => DataFrame)] = {
     import graft.operators.{Artifacts, TextAnalytics}
-    require(stages >= 1 && stages <= 6,
-      s"admissionGateStream: stages must be in [1, 6], got $stages")
-    val quality = docs.filter(
-      TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)
-    val decontaminated = if (stages < 2) quality else {
-      val (bloom, numBits, k) = Artifacts.loadBloom(spark, s"$artifactsDir/bloom")
-      bloomDecontamGateStreamLoaded(
-        quality, bloom, numBits, k, minFrac = decontamMinFrac)
-    }
-    val novel = if (stages < 3) decontaminated else {
-      val (census, wk, ww) =
-        Artifacts.loadWinnowCensus(spark, s"$artifactsDir/winnow_census")
-      winnowGateStream(decontaminated, census, wk, ww, winnowMinShared)
-    }
-    val targetLike = if (stages < 4) novel else {
-      val (dsirModel, dsirNb) = Artifacts.loadDsirModel(spark, s"$artifactsDir/dsir")
-      dsirGateStream(novel, dsirModel, minWeightMicros, dsirNb)
-    }
-    val fluent = if (stages < 5) targetLike else {
-      val (pplModel, pplNb) = Artifacts.loadPerplexityModel(
-        spark, s"$artifactsDir/perplexity_bigram", expectOrder = 2)
-      perplexityGateStreamBigram(targetLike, pplModel, maxAvgNlpMicros, pplNb)
-    }
-    if (stages < 6) fluent else {
-      val merges = Artifacts.loadBpeMerges(spark, s"$artifactsDir/bpe_merges")
-      bpeBudgetGateStream(fluent, merges, maxTokens)
-    }
+    Seq(
+      ("quality", _.filter(
+        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)),
+      ("bloom", { docs =>
+        val (bloom, numBits, k) = Artifacts.loadBloom(spark, s"$artifactsDir/bloom")
+        bloomDecontamGateStreamLoaded(docs, bloom, numBits, k, minFrac = decontamMinFrac)
+      }),
+      ("winnow", { docs =>
+        val (census, wk, ww) =
+          Artifacts.loadWinnowCensus(spark, s"$artifactsDir/winnow_census")
+        winnowGateStream(docs, census, wk, ww, winnowMinShared)
+      }),
+      ("dsir", { docs =>
+        val (dsirModel, dsirNb) = Artifacts.loadDsirModel(spark, s"$artifactsDir/dsir")
+        dsirGateStream(docs, dsirModel, minWeightMicros, dsirNb)
+      }),
+      ("perplexity", { docs =>
+        val (pplModel, pplNb) = Artifacts.loadPerplexityModel(
+          spark, s"$artifactsDir/perplexity_bigram", expectOrder = 2)
+        perplexityGateStreamBigram(docs, pplModel, maxAvgNlpMicros, pplNb)
+      }),
+      ("bpe", docs => bpeBudgetGateStream(docs,
+        Artifacts.loadBpeMerges(spark, s"$artifactsDir/bpe_merges"), maxTokens)))
   }
+
+  /** The whole [[admissionStages]] list over `docs`, with the other
+    * knobs at their defaults. Other knobs: fold the list yourself.
+    */
+  def admissionGateStream(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
+      artifactsDir: String,
+      maxAvgNlpMicros: Long, minWeightMicros: Long, maxTokens: Long): DataFrame =
+    Function.chain(admissionStages(spark, artifactsDir,
+      maxAvgNlpMicros, minWeightMicros, maxTokens).map(_._2))(docs)
 
   /** Streaming perplexity gate — CCNet as an online filter: score each
     * incoming doc against a STATIC reference model (the

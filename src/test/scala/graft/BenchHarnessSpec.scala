@@ -114,4 +114,18 @@ class BenchHarnessSpec extends AnyFunSuite {
       """{"replay":9.5,"pii":3.0}""")
     assert(Rate(-1.0, Nil, null).stagesJson == "{}")
   }
+
+  test("published stage keys are the composites' stage lists, in order") {
+    // renaming or reordering a stage changes the artifact contract:
+    // docs_gate_stage_rows_per_sec, admission_stage_rows_per_sec and
+    // curation_stage_sec key each prefix by its last stage's name
+    assert(Bench.prefixes(Bench.docsGateStages(spark)).map(_._1).mkString(",") ==
+      "replay,pii,decontam,quality,dedup,split")
+    val admission = graft.streaming.StreamingFeatures.admissionStages(
+      spark, "unused", maxAvgNlpMicros = 0L, minWeightMicros = 0L, maxTokens = 0L)
+    assert(Bench.prefixes(admission).map(_._1).mkString(",") ==
+      "quality,bloom,winnow,dsir,perplexity,bpe")
+    assert(Bench.prefixes(graft.operators.Curation.completeStages(spark, "unused"))
+      .map(_._1).mkString(",") == "text,neardup,complete")
+  }
 }

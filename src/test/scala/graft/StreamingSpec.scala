@@ -165,8 +165,8 @@ class StreamingSpec extends AnyFunSuite {
     val redacted = docs.withColumn("text",
       graft.operators.Pii.redacted(col("text")))
     for (minFrac <- Seq(0.05, 0.1, 0.3333, 0.34, 1.1)) {
-      val fused = StreamingFeatures
-        .curateDocsFullStream(docs, bench, minFrac = minFrac, stages = 2)
+      val fused = Function.chain(StreamingFeatures
+        .docsHygieneStages(bench, minFrac = minFrac).take(2).map(_._2))(docs)
         .select("doc_id", "text").collect()
         .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
       val algebra = StreamingFeatures
@@ -1158,10 +1158,10 @@ class StreamingSpec extends AnyFunSuite {
     Artifacts.exportAll(spark, sf, artDir)
     val novel = "the zr1 zr2 zr3 zr4 zr5 zr6 zr7 zr8 zr9 zr10 zr11 zr12"
     val rows = Seq((901L, novel), (902L, "short"))
-    def gate(stages: Int) = StreamingFeatures.admissionGateStream(
-      rows.toDF("doc_id", "text"), spark, artDir,
+    def gate(prefix: Int) = Function.chain(StreamingFeatures.admissionStages(
+      spark, artDir,
       maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
-      maxTokens = 1000000L, stages = stages)
+      maxTokens = 1000000L).take(prefix).map(_._2))(rows.toDF("doc_id", "text"))
       .select("doc_id").as[Long].collect().toSet
     assert(gate(6) == Set(901L), "novel doc must pass the pre-refresh gate")
     val qualityBefore = gate(1)
@@ -1195,6 +1195,36 @@ class StreamingSpec extends AnyFunSuite {
         rows.toDF("doc_id", "text"), spark, staleRoot,
         maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
         maxTokens = 1000000L)
+    }
+    assert(e.getMessage.contains("hash family"), e.getMessage)
+  }
+
+  test("admission prefix: the quality-only prefix serves past a stale bloom artifact; the full list refuses") {
+    // a prefix must never load a later stage's model: only the bloom
+    // artifact exists here, stamped by an older hash family
+    import java.nio.file.Files
+    import graft.operators.{Artifacts, Decontam}
+    val fresh = Files.createTempDirectory("admprefix_fresh").toString
+    Artifacts.saveBloom(
+      Decontam.bloomFrom(Seq(1L, 2L, 3L).toDF("gh"), Decontam.DefaultBloomBits,
+        Decontam.DefaultBloomK),
+      s"$fresh/bloom", Decontam.DefaultBloomBits, Decontam.DefaultBloomK)
+    val staleRoot = Files.createTempDirectory("admprefix_stale").toString
+    spark.read.parquet(s"$fresh/bloom")
+      .withColumn("hash_family_version",
+        lit(graft.functions.TextHashes.HashFamilyVersion - 1))
+      .write.mode("overwrite").parquet(s"$staleRoot/bloom")
+    val novel = "the zp1 zp2 zp3 zp4 zp5 zp6 zp7 zp8 zp9 zp10 zp11 zp12"
+    val rows = Seq((901L, novel), (902L, "short")).toDF("doc_id", "text")
+    val stages = StreamingFeatures.admissionStages(spark, staleRoot,
+      maxAvgNlpMicros = Long.MaxValue, minWeightMicros = Long.MinValue,
+      maxTokens = 1000000L)
+    assert(stages.head._1 == "quality")
+    val served = Function.chain(stages.take(1).map(_._2))(rows)
+      .select("doc_id").as[Long].collect().toSet
+    assert(served == Set(901L), s"quality-only prefix verdicts wrong: $served")
+    val e = intercept[IllegalStateException] {
+      Function.chain(stages.map(_._2))(rows)
     }
     assert(e.getMessage.contains("hash family"), e.getMessage)
   }
