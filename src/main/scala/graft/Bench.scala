@@ -196,8 +196,8 @@ object Bench {
         }
         math.round(math.min(t(), t()) * 1000.0) / 1000.0
       }
-      try jsonMap(prefixes(Curation.completeStages(spark, sfDir,
-        minCosine = Curation.CompleteMinCosine)).map { case (name, gate) => name -> one(gate) })
+      try jsonMap(prefixes(Curation.completeStages(spark, sfDir))
+        .map { case (name, gate) => name -> one(gate) })
       catch { case NonFatal(t) => errorJson(t) }
     }
     val gates = gateRateFields(spark, sfDir)

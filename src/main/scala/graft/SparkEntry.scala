@@ -131,7 +131,7 @@ object SparkEntry {
     // measured (n_bits, probe_hamming) sweep behind the lsh_mp defaults
     // (round 10; rows-only, monotonicity spec-pinned)
     "q_ann_tuning" -> ((s, d) => Similarity.annTuning(s, d)),
-    // measured n_probe sweep behind the annIvf nProbe=4 default (round
+    // measured n_probe sweep behind the annIvf IvfProbe default (round
     // 11; rows-only, monotonicity + endpoint + cell≡e2e spec-pinned)
     "q_ivf_tuning" -> ((s, d) => Similarity.ivfTuning(s, d)),
     // the raw IVF assignment — the first hash-green clustering query:
@@ -143,16 +143,15 @@ object SparkEntry {
     // sample (round 11; rows-only, coverage/cap spec-pinned)
     "q_embedding_clusters" -> ((s, d) => Similarity.embeddingClusterStats(s, d)),
     "q_cluster_sample" -> ((s, d) => Similarity.clusterBalancedSample(s, d)),
-    // demo-tuned threshold/bits: see embeddingNearDups scaladoc
-    "q_embedding_neardups" -> ((s, d) => Similarity.embeddingNearDups(s, d, minCosine = 0.3, nBits = 6)),
+    // the embedding near-dup family runs at Similarity.SemanticMinCosine
+    // and NearDupBits (the demo threshold: see that constant)
+    "q_embedding_neardups" -> ((s, d) => Similarity.embeddingNearDups(s, d)),
     // two-plane-table OR variant: miss rate squares for 2x join work
     // (round 11; rows-only, superset + rescue spec-pinned)
-    "q_embedding_neardups_or" -> ((s, d) =>
-      Similarity.embeddingNearDupsOr(s, d, minCosine = 0.3, nBits = 6)),
-    // demo-tuned threshold (same rationale as q_embedding_neardups)
-    "q_semantic_dedup" -> ((s, d) => Similarity.semanticDedup(s, d, minCosine = 0.3)),
+    "q_embedding_neardups_or" -> ((s, d) => Similarity.embeddingNearDupsOr(s, d)),
+    "q_semantic_dedup" -> ((s, d) => Similarity.semanticDedup(s, d)),
     // transitive-closure drop policy over the same candidates (round 7)
-    "q_semantic_components" -> ((s, d) => Similarity.semanticComponents(s, d, minCosine = 0.3)),
+    "q_semantic_components" -> ((s, d) => Similarity.semanticComponents(s, d)),
     // snapshot-growth semantic dedup: batch vs frozen-corpus embeddings
     // (round 6; rows-only, fixture-spec pinned)
     "q_semantic_incremental" -> ((s, d) => Similarity.semanticDedupIncremental(s, d)),
@@ -243,8 +242,8 @@ object SparkEntry {
     "q_curation" -> ((s, d) => Curation.curateDocs(s, d)),
     "q_admission_report" -> ((s, d) => Curation.admissionReport(s, d)),
     "q_curation_stats" -> ((s, d) => Curation.curationStats(s, d)),
-    // + semantic stage (demo threshold, same rationale as q_semantic_dedup)
-    "q_curation_semantic" -> ((s, d) => Curation.curateWithEmbeddings(s, d, minCosine = 0.3)),
+    // + semantic stage (at q_semantic_dedup's threshold)
+    "q_curation_semantic" -> ((s, d) => Curation.curateWithEmbeddings(s, d)),
     // hygiene-integrated full pass: PII redact -> quality -> decontam ->
     // exact dedup -> split, with its funnel (round 6)
     "q_curation_full" -> ((s, d) => Curation.curateDocsFull(s, d)),
@@ -256,11 +255,9 @@ object SparkEntry {
     // similarity-stage curation that is oracle-checked end to end)
     "q_curation_passages" -> ((s, d) => Curation.curateWithPassages(s, d)),
     // THE complete chain: redact -> quality -> decontam -> exact ->
-    // neardup -> semantic (demo thresholds as q_semantic_dedup)
-    "q_curation_complete" -> ((s, d) =>
-      Curation.curateComplete(s, d, minCosine = Curation.CompleteMinCosine)),
-    "q_curation_complete_stats" -> ((s, d) =>
-      Curation.curationStatsComplete(s, d, minCosine = Curation.CompleteMinCosine)),
+    // neardup -> semantic (at q_semantic_dedup's threshold)
+    "q_curation_complete" -> ((s, d) => Curation.curateComplete(s, d)),
+    "q_curation_complete_stats" -> ((s, d) => Curation.curationStatsComplete(s, d)),
     // per-(lang, source) hygiene funnel over the full chain (round 9)
     "q_source_funnel" -> ((s, d) => Curation.sourceFunnel(s, d)),
     // Corpus hygiene + shaping (round 5): decontamination, PII scrubbing,

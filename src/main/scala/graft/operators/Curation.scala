@@ -36,11 +36,10 @@ object Curation {
 
   /** Per-document curation decision:
     * (doc_id, lang, n_tokens, split, drop_reason ∈ {quality, duplicate,
-    * NULL}, kept ∈ {0,1}).
+    * NULL}, kept ∈ {0,1}), at the registered quality gate and split
+    * ([[TextAnalytics.QualityMinTokens]], [[TextAnalytics.SplitTrainPct]], …).
     */
-  def curateDocs(spark: SparkSession, dir: String,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10): DataFrame = {
+  def curateDocs(spark: SparkSession, dir: String): DataFrame = {
     val toks = TextAnalytics.tokens(col("text"))
     val q = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
@@ -48,8 +47,7 @@ object Curation {
         // the ONE shared gate (rounded ratio, NULL text fails) — the
         // standalone scores, this pipeline, and the streaming twin all
         // consume TextAnalytics.qualityOk, so they cannot drift
-        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio)
-          .as("quality_ok"),
+        TextAnalytics.qualityOk(col("text")).as("quality_ok"),
         md5(col("text")).as("content_md5"))
       // both the keeper election and the decision join consume this frame,
       // and the quality filter on the election side defeats exchange
@@ -65,8 +63,7 @@ object Curation {
         when(col("quality_ok") === 0, "quality")
           .when(col("doc_id") =!= col("keep_id"), "duplicate"))
       .withColumn("kept", col("drop_reason").isNull.cast("int"))
-      .withColumn("split",
-        TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))
+      .withColumn("split", TextAnalytics.splitLabelExpr(col("doc_id")))
       .select("doc_id", "lang", "n_tokens", "split", "drop_reason", "kept")
       .orderBy("doc_id")
   }
@@ -84,7 +81,9 @@ object Curation {
     * twin survives in its place). If the keeper's content truly vanished
     * (quality-dropped), the member is RETAINED — conservative: keep the
     * member rather than silently losing the whole semantic group. Docs
-    * without an embedding row keep their text-stage decision.
+    * without an embedding row keep their text-stage decision. The
+    * semantic stage's cosine and cell count default to the registered
+    * [[Similarity.SemanticMinCosine]] and [[Similarity.IvfCells]].
     *
     * Oracle-checked since round 13 (the semantic stage's integer-exact
     * Lloyd made its SQL twin nestable here); the
@@ -94,7 +93,8 @@ object Curation {
     * keyed joins, nothing data-squared.
     */
   def curateWithEmbeddings(spark: SparkSession, dir: String,
-      minCosine: Double = 0.95, nCells: Int = 16): DataFrame = {
+      minCosine: Double = Similarity.SemanticMinCosine,
+      nCells: Int = Similarity.IvfCells): DataFrame = {
     // consumed twice below (decision side + keeper-representation side):
     // materialize once, as everywhere else shared frames are
     val text = curateDocs(spark, dir).localCheckpoint(eager = false)
@@ -146,33 +146,32 @@ object Curation {
     * hashes before the checkpoint if that footprint matters more than
     * exact string overlap) — and all downstream shuffles carry only
     * digests, ids, and shingle matches.
+    *
+    * The knobs are the ones fixtures vary: the quality gate, the demo
+    * benchmark modulus, the contamination fraction, and `benchNgrams` —
+    * the production form, a real benchmark n-gram frame (broadcast, as in
+    * [[Decontam.contaminationAgainst]]); None = the oracle-checkable
+    * modulus demo over the redacted corpus. Shingle width and split are
+    * the registered [[Decontam.DefaultN]] and [[TextAnalytics.SplitTrainPct]].
     */
   def curateDocsFull(spark: SparkSession, dir: String,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10,
-      n: Int = Decontam.DefaultN,
+      minTokens: Int = TextAnalytics.QualityMinTokens,
+      minStopwordRatio: Double = TextAnalytics.QualityMinRatio,
       benchModulus: Int = Decontam.DefaultBenchModulus,
       minFrac: Double = Decontam.DefaultMinFrac,
-      // production form: a real benchmark n-gram frame (broadcast, as in
-      // Decontam.contaminationAgainst); None = the oracle-checkable
-      // modulus demo over the redacted corpus
       benchNgrams: Option[DataFrame] = None): DataFrame =
     curateDocsFullDetailed(Tables.documents(spark, dir), minTokens,
-      minStopwordRatio, trainPct, valPct, n, benchModulus, minFrac, benchNgrams)
+      minStopwordRatio, benchModulus, minFrac, benchNgrams)
       .select("doc_id", "lang", "n_tokens", "split", "drop_reason", "kept")
 
-  /** [[curateDocsFull]] plus the internal columns [[curateComplete]]
-    * composes on: `content_md5` (post-nd content-survival checks) and
-    * `simhash` (fingerprints from the SAME single scan — no re-scan, no
-    * re-redaction).
+  /** [[curateDocsFull]] over a docs frame, plus the internal columns
+    * [[curateComplete]] composes on: `content_md5` (post-nd
+    * content-survival checks) and `simhash` (fingerprints from the SAME
+    * single scan — no re-scan, no re-redaction).
     */
-  private[operators] def curateDocsFullDetailed(docs: DataFrame,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10,
-      n: Int = Decontam.DefaultN,
-      benchModulus: Int = Decontam.DefaultBenchModulus,
-      minFrac: Double = Decontam.DefaultMinFrac,
-      benchNgrams: Option[DataFrame] = None): DataFrame = {
+  private def curateDocsFullDetailed(docs: DataFrame, minTokens: Int,
+      minStopwordRatio: Double, benchModulus: Int, minFrac: Double,
+      benchNgrams: Option[DataFrame]): DataFrame = {
     // ONE corpus pass computes everything derived from the redacted text
     // — token count, quality flag, digest, fingerprint, shingles — and
     // the checkpoint retains only those, never the text itself. The
@@ -188,7 +187,7 @@ object Curation {
         md5(col("text")).as("content_md5"),
         graft.functions.TextHashes.simhash62(TextAnalytics.tokens(col("text")))
           .as("simhash"),
-        Dedup.shingleArray(col("text"), n).as("shingles"))
+        Dedup.shingleArray(col("text"), Decontam.DefaultN).as("shingles"))
       .localCheckpoint(eager = false)
     val sh = base.select(col("doc_id"), col("lang"), col("shingles"))
       .filter(size(col("shingles")) > 0)
@@ -212,26 +211,17 @@ object Curation {
           .when(col("contaminated") === 1, "contaminated")
           .when(col("doc_id") =!= col("keep_id"), "duplicate"))
       .withColumn("kept", col("drop_reason").isNull.cast("int"))
-      .withColumn("split",
-        TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))
+      .withColumn("split", TextAnalytics.splitLabelExpr(col("doc_id")))
       .select("doc_id", "lang", "n_tokens", "split", "drop_reason", "kept",
         "content_md5", "simhash")
       .orderBy("doc_id")
   }
 
-  /** Funnel rollup for [[curateDocsFull]] — [[curationStats]] plus the
-    * `n_contam_drop` stage column. Passes every knob through so the
-    * production (external-benchmark) form gets a matching funnel.
+  /** Funnel rollup for [[curateDocsFull]] at its defaults —
+    * [[curationStats]] plus the `n_contam_drop` stage column.
     */
-  def curationStatsFull(spark: SparkSession, dir: String,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10,
-      n: Int = Decontam.DefaultN,
-      benchModulus: Int = Decontam.DefaultBenchModulus,
-      minFrac: Double = Decontam.DefaultMinFrac,
-      benchNgrams: Option[DataFrame] = None): DataFrame =
-    curateDocsFull(spark, dir, minTokens, minStopwordRatio, trainPct,
-      valPct, n, benchModulus, minFrac, benchNgrams)
+  def curationStatsFull(spark: SparkSession, dir: String): DataFrame =
+    curateDocsFull(spark, dir)
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("drop_reason") === "quality", 1).otherwise(0)).as("n_quality_drop"),
@@ -257,11 +247,10 @@ object Curation {
     * text side is [[curateDocs]]; cluster side shuffles distinct
     * fingerprints, not docs; composition adds two id-keyed joins.
     */
-  def curateWithNearDups(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame = {
+  def curateWithNearDups(spark: SparkSession, dir: String): DataFrame = {
     // consumed twice (decision side + rep-representation side)
     val text = curateDocs(spark, dir).localCheckpoint(eager = false)
-    val clusters = Dedup.simhashClusters(spark, dir, maxHamming)
+    val clusters = Dedup.simhashClusters(spark, dir)
       .select(col("doc_id"), col("cluster_rep"))
     val repRepresented = text.select(col("doc_id").as("cluster_rep"),
       (col("kept") === 1 || col("drop_reason") === "duplicate")
@@ -298,14 +287,10 @@ object Curation {
     * decision frame. Scale shape: [[curateDocs]] + the capped
     * component machinery, composed by id-keyed joins.
     */
-  def curateWithPassages(spark: SparkSession, dir: String,
-      k: Int = TextAnalytics.WinnowK, w: Int = TextAnalytics.WinnowW,
-      minShared: Int = TextAnalytics.WinnowMinShared,
-      maxDf: Int = TextAnalytics.WinnowMaxDf): DataFrame = {
+  def curateWithPassages(spark: SparkSession, dir: String): DataFrame = {
     // consumed twice (decision side + rep-representation side)
     val text = curateDocs(spark, dir).localCheckpoint(eager = false)
-    val clusters = TextAnalytics
-      .winnowComponents(spark, dir, k, w, minShared, maxDf)
+    val clusters = TextAnalytics.winnowComponents(spark, dir)
       .select(col("doc_id"), col("cluster_rep"))
     val repRepresented = text.select(col("doc_id").as("cluster_rep"),
       (col("kept") === 1 || col("drop_reason") === "duplicate")
@@ -321,12 +306,6 @@ object Curation {
         "drop_reason", "kept")
       .orderBy("doc_id")
   }
-
-  /** Semantic-stage cosine of the registered `q_curation_complete(_stats)`
-    * queries (the demo threshold `q_semantic_dedup` uses); the bench's
-    * per-stage attribution of [[completeStages]] times the same plan.
-    */
-  val CompleteMinCosine = 0.3
 
   /** THE complete curation pass — every stage this engine implements, as
     * the one operator a training-data owner runs end to end:
@@ -362,13 +341,16 @@ object Curation {
     * stage re-reads nothing; the semantic side is the hard-bounded
     * [[Similarity.semanticDedup]]; composition adds id/digest-keyed
     * joins only. The pass is the whole [[completeStages]] list folded
-    * over the corpus.
+    * over the corpus. Thresholds are the registered constants
+    * ([[TextAnalytics.QualityMinTokens]], [[Dedup.SimhashMaxHamming]],
+    * …); the semantic stage's cosine and IVF cell count are knobs, for
+    * fixtures unlike the registered corpus.
     */
   def curateComplete(spark: SparkSession, dir: String,
-      maxHamming: Int = 3, minCosine: Double = 0.95, nCells: Int = 16,
-      benchNgrams: Option[DataFrame] = None): DataFrame =
-    Function.chain(completeStages(spark, dir, maxHamming, minCosine, nCells,
-      benchNgrams).map(_._2))(Tables.documents(spark, dir))
+      minCosine: Double = Similarity.SemanticMinCosine,
+      nCells: Int = Similarity.IvfCells): DataFrame =
+    Function.chain(completeStages(spark, dir, minCosine, nCells).map(_._2))(
+      Tables.documents(spark, dir))
 
   /** [[curateComplete]] as its named stage list, folded over the
     * documents table: `text` (redact → quality → decontam → exact dedup,
@@ -382,13 +364,15 @@ object Curation {
     * against the noop sink, not to be consumed.
     */
   private[graft] def completeStages(spark: SparkSession, dir: String,
-      maxHamming: Int = 3, minCosine: Double = 0.95, nCells: Int = 16,
-      benchNgrams: Option[DataFrame] = None): Seq[(String, DataFrame => DataFrame)] = Seq(
-    ("text", docs => curateDocsFullDetailed(docs, benchNgrams = benchNgrams)
+      minCosine: Double = Similarity.SemanticMinCosine,
+      nCells: Int = Similarity.IvfCells): Seq[(String, DataFrame => DataFrame)] = Seq(
+    ("text", docs => curateDocsFullDetailed(docs, TextAnalytics.QualityMinTokens,
+      TextAnalytics.QualityMinRatio, Decontam.DefaultBenchModulus,
+      Decontam.DefaultMinFrac, benchNgrams = None)
       .localCheckpoint(eager = false)), // decision side + nd rep side
     ("neardup", { text =>
       val clusters = Dedup.simhashClustersFromHashes(
-        text.select(col("doc_id"), col("simhash").as("sh")), maxHamming)
+        text.select(col("doc_id"), col("simhash").as("sh")), Dedup.SimhashMaxHamming)
         .select(col("doc_id"), col("cluster_rep"))
       val repRepresented = text.select(col("doc_id").as("cluster_rep"),
         (col("kept") === 1 || col("drop_reason") === "duplicate")
@@ -426,10 +410,8 @@ object Curation {
   /** The complete-funnel rollup: every drop reason as its own column —
     * the single dashboard row-set for the whole pipeline.
     */
-  def curationStatsComplete(spark: SparkSession, dir: String,
-      maxHamming: Int = 3, minCosine: Double = 0.95, nCells: Int = 16,
-      benchNgrams: Option[DataFrame] = None): DataFrame =
-    curateComplete(spark, dir, maxHamming, minCosine, nCells, benchNgrams)
+  def curationStatsComplete(spark: SparkSession, dir: String): DataFrame =
+    curateComplete(spark, dir)
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("drop_reason") === "quality", 1).otherwise(0)).as("n_quality_drop"),
@@ -452,17 +434,13 @@ object Curation {
         sum("kept").as("n_kept"))
       .orderBy("split")
 
-  private def duckQuality: String =
-    s"""len(string_split(text, ' ')) >= 10
-       |            AND ${TextAnalytics.duckStopRatio} >= 0.01""".stripMargin
-
   /** The per-doc quality verdict, content digest and split label over
     * `relation` as the CTE `q` — the head of every curation chain.
     */
   private def duckQualityCte(relation: String): String =
     s"""q AS (
        |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
-       |         CASE WHEN $duckQuality THEN 1 ELSE 0 END AS quality_ok,
+       |         CASE WHEN ${TextAnalytics.duckQualityOk} THEN 1 ELSE 0 END AS quality_ok,
        |         md5(text) AS content_md5,
        |         ${TextAnalytics.duckSplitCase} AS split
        |  FROM $relation)""".stripMargin
@@ -542,9 +520,8 @@ object Curation {
     * my corpus" dashboard a multi-crawl training pipeline triages with:
     * every [[curateDocsFull]] decision rolled up per provenance cell,
     * plus the kept-token mass that cell actually contributes to the
-    * training mix. Reads the full chain's verdicts (same knobs passed
-    * through, so the production external-benchmark form gets a matching
-    * funnel) and joins back the slim (doc_id, source) projection —
+    * training mix. Reads the full chain's verdicts (the quality-gate
+    * knobs pass through) and joins back the slim (doc_id, source) projection —
     * `source` deliberately does NOT ride through the chain itself:
     * threading it would widen [[curateDocsFull]]'s output schema (an
     * oracle contract) for a column only this rollup wants. Exchanges
@@ -552,14 +529,9 @@ object Curation {
     * rolled-up frame is grid-sized (langs × sources).
     */
   def sourceFunnel(spark: SparkSession, dir: String,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10,
-      n: Int = Decontam.DefaultN,
-      benchModulus: Int = Decontam.DefaultBenchModulus,
-      minFrac: Double = Decontam.DefaultMinFrac,
-      benchNgrams: Option[DataFrame] = None): DataFrame =
-    curateDocsFull(spark, dir, minTokens, minStopwordRatio, trainPct,
-      valPct, n, benchModulus, minFrac, benchNgrams)
+      minTokens: Int = TextAnalytics.QualityMinTokens,
+      minStopwordRatio: Double = TextAnalytics.QualityMinRatio): DataFrame =
+    curateDocsFull(spark, dir, minTokens, minStopwordRatio)
       .join(Tables.documents(spark, dir).select("doc_id", "source"), "doc_id")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
@@ -632,11 +604,7 @@ object Curation {
     * plans (each already plan-audited); the composition adds only
     * doc_id-keyed joins of their slim per-doc outputs.
     */
-  def admissionReport(spark: SparkSession, dir: String,
-      maxAvgNlpMicros: Long = AdmissionMaxAvgNlpMicros,
-      minWeightMicros: Long = AdmissionMinWeightMicros,
-      maxTokens: Long = AdmissionMaxTokens,
-      minShared: Int = TextAnalytics.WinnowMinShared): DataFrame = {
+  def admissionReport(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val quality = docs.select(col("doc_id"),
       TextAnalytics.qualityOk(col("text")).as("pass_quality"))
@@ -659,15 +627,15 @@ object Curation {
       .select(col("doc_id"),
         col("pass_quality"),
         coalesce(col("pass_decontam"), lit(1)).as("pass_decontam"),
-        (coalesce(col("census_hits"), lit(0L)) < minShared)
+        (coalesce(col("census_hits"), lit(0L)) < TextAnalytics.WinnowMinShared)
           .cast("int").as("pass_winnow"),
         when(col("weight_micros").isNull, 0)
-          .otherwise((col("weight_micros") >= minWeightMicros).cast("int"))
+          .otherwise((col("weight_micros") >= AdmissionMinWeightMicros).cast("int"))
           .as("pass_dsir"),
         when(col("avg_nlp_micros").isNull, 0)
-          .otherwise((col("avg_nlp_micros") <= maxAvgNlpMicros).cast("int"))
+          .otherwise((col("avg_nlp_micros") <= AdmissionMaxAvgNlpMicros).cast("int"))
           .as("pass_ppl"),
-        (coalesce(col("n_bpe_tokens"), lit(0L)) <= maxTokens)
+        (coalesce(col("n_bpe_tokens"), lit(0L)) <= AdmissionMaxTokens)
           .cast("int").as("pass_budget"))
     joined.withColumn("admitted",
       (col("pass_quality") * col("pass_decontam") * col("pass_winnow")
@@ -683,7 +651,7 @@ object Curation {
     */
   private def duckAdmissionReport: String =
     s"""SELECT d.doc_id,
-      |  CAST(CASE WHEN $duckQuality THEN 1 ELSE 0 END AS INT) AS pass_quality,
+      |  CAST(CASE WHEN ${TextAnalytics.duckQualityOk} THEN 1 ELSE 0 END AS INT) AS pass_quality,
       |  CAST(1 - coalesce(cb.contaminated, 0) AS INT) AS pass_decontam,
       |  CAST(CASE WHEN coalesce(wn.n_fp - wn.n_unique, 0)
       |                 < ${TextAnalytics.WinnowMinShared}
@@ -696,7 +664,7 @@ object Curation {
       |            THEN 1 ELSE 0 END AS INT) AS pass_ppl,
       |  CAST(CASE WHEN coalesce(bt.n_bpe_tokens, 0) <= $AdmissionMaxTokens
       |       THEN 1 ELSE 0 END AS INT) AS pass_budget,
-      |  CAST((CASE WHEN $duckQuality THEN 1 ELSE 0 END)
+      |  CAST((CASE WHEN ${TextAnalytics.duckQualityOk} THEN 1 ELSE 0 END)
       |     * (1 - coalesce(cb.contaminated, 0))
       |     * (CASE WHEN coalesce(wn.n_fp - wn.n_unique, 0)
       |                  < ${TextAnalytics.WinnowMinShared}

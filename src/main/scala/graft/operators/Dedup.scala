@@ -740,6 +740,12 @@ object Dedup {
       simhashCandidateKeysOf(sh, maxHamming, 1))
       .otherwise(simhashCandidateKeys(sh, maxHamming))
 
+  /** Registered SimHash near-dup radius: pairs within this Hamming
+    * distance are near-duplicates (every simhash operator's default and
+    * the DuckDB neighbor chain).
+    */
+  val SimhashMaxHamming = 3
+
   /** SimHash near-dup pairs: 64-bit fingerprints, candidates = equal
     * combination key ([[simhashCandidateKeys]] — Manku, Jain & Sarma
     * WWW'07): any pair with Hamming distance ≤ maxHamming leaves one
@@ -750,7 +756,7 @@ object Dedup {
     * refuses an answer-quadratic invocation before the output is
     * sorted or emitted, naming the bounded twins.
     */
-  def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3,
+  def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = SimhashMaxHamming,
       pairBudget: Long = DefaultPairBudget): DataFrame = {
     val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"), TextHashes.simhash62(split(col("text"), " ")).as("sh"))
@@ -781,7 +787,7 @@ object Dedup {
     *   4. broadcast the fingerprint→cluster map back onto docs.
     * Output is one row per doc: linear, deterministic.
     */
-  def simhashClusters(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
+  def simhashClusters(spark: SparkSession, dir: String, maxHamming: Int = SimhashMaxHamming): DataFrame =
     simhashClustersFrom(Tables.documents(spark, dir), maxHamming)
 
   /** [[simhashClusters]] over an arbitrary (doc_id, text) frame. */
@@ -837,7 +843,7 @@ object Dedup {
     * partition (comp rep ≤ star rep, star clusters never split).
     */
   def simhashComponents(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame = {
+      maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"), TextHashes.simhash62(split(col("text"), " ")).as("sh"))
       .localCheckpoint(eager = false) // distinct election + final map-back
@@ -1156,7 +1162,7 @@ object Dedup {
   def neardupRecall(spark: SparkSession, dir: String,
       threshold: Double = 0.5,
       bands: Int = MinhashBands, rows: Int = MinhashRows,
-      minAgree: Double = MinhashMinAgree, maxHamming: Int = 3): DataFrame = {
+      minAgree: Double = MinhashMinAgree, maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val truth = ngramJaccardPairs(spark, dir, threshold)
       .select("doc_a", "doc_b")
       .localCheckpoint(eager = false) // one probe per method + the total
@@ -1497,9 +1503,8 @@ object Dedup {
   private def duckKeepBestCtes: String =
     s"""mq AS (
       |  SELECT doc_id,
-      |         CASE WHEN len(string_split(text, ' ')) >= 10
-      |                   AND ${TextAnalytics.duckStopRatio} >= 0.01
-      |              THEN 1 ELSE 0 END AS quality_ok,
+      |         CASE WHEN ${TextAnalytics.duckQualityOk} THEN 1 ELSE 0 END
+      |           AS quality_ok,
       |         len(string_split(text, ' ')) AS n_tokens
       |  FROM documents),
       |mranked AS (
@@ -1585,7 +1590,7 @@ object Dedup {
       |${pre}snb AS (
       |  SELECT a.sh AS sh, min(b.rep) AS cluster_rep
       |  FROM ${pre}schunk a JOIN ${pre}schunk b ON a.c = b.c AND a.ck = b.ck
-      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
+      |  WHERE bit_count(xor(a.sh, b.sh)) <= $SimhashMaxHamming
       |  GROUP BY a.sh)""".stripMargin
 
   /** The n-gram Jaccard pair chain: `jpairs(doc_a, doc_b, n_a, n_b,

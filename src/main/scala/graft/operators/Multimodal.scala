@@ -154,22 +154,18 @@ object Multimodal {
     * [[duckMediaQvCte]]);
     * spec-pinned: planted near-identical payloads co-cluster and the
     * IVF result's recall against the brute-force media truth is
-    * measured in OperatorSpec. Defaults mirror the registered text ANN
-    * (nCells 16 / nProbe 4 / 2 Lloyd iterations).
+    * measured in OperatorSpec. Runs at the registered text ANN's
+    * constants ([[Similarity.AnnQueries]], [[Similarity.IvfCells]], …).
     */
-  def mediaAnn(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 2): DataFrame =
-    Similarity.annIvfFrom(quantizedMediaVectors(spark, dir),
-      nQueries, k, nCells, nProbe, lloydIters)
+  def mediaAnn(spark: SparkSession, dir: String): DataFrame =
+    Similarity.annIvfFrom(quantizedMediaVectors(spark, dir))
 
   /** Brute-force twin of [[mediaAnn]] — the exact media-vector truth the
     * recall spec measures against (the [[Similarity.annBruteForce]]
     * baseline pointed at media vectors).
     */
-  private[graft] def mediaAnnBruteForce(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame =
-    Similarity.annBruteForceFrom(quantizedMediaVectors(spark, dir), nQueries, k)
+  private[graft] def mediaAnnBruteForce(spark: SparkSession, dir: String): DataFrame =
+    Similarity.annBruteForceFrom(quantizedMediaVectors(spark, dir))
 
   private def quantizedMediaVectors(spark: SparkSession, dir: String): DataFrame =
     mediaVectors(spark, dir).withColumn("qe",
@@ -181,13 +177,12 @@ object Multimodal {
     * recall drift is caught per round like text (r12 verdict ask #7);
     * OperatorSpec keeps the floor assertion.
     */
-  def mediaAnnRecall(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val truth = mediaAnnBruteForce(spark, dir, nQueries, k)
+  def mediaAnnRecall(spark: SparkSession, dir: String): DataFrame = {
+    val truth = mediaAnnBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
       .localCheckpoint(eager = false)
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
-    mediaAnn(spark, dir, nQueries, k)
+    mediaAnn(spark, dir)
       .select("query_id", "neighbor_id")
       .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
@@ -229,27 +224,32 @@ object Multimodal {
 
   case class FrameRow(doc_id: Long, frame_idx: Int, frame_bytes: Long, checksum: Long)
 
+  /** Registered frame geometry of [[frameSample]]: frame size in bytes,
+    * and the sampling stride in frames.
+    */
+  val FrameBytes = 64
+  val FrameEveryK = 4
+
   /** Frame sampling (the video-pipeline shape of the multimodal surface):
     * the payload is treated as a sequence of fixed-size "frames"
-    * (`frameBytes` each — a real codec would demux actual frames; the
-    * stub chunks bytes) and every `everyK`-th frame is decoded. Runs
+    * ([[FrameBytes]] each — a real codec would demux actual frames; the
+    * stub chunks bytes) and every [[FrameEveryK]]-th frame is decoded. Runs
     * scan-side per partition like [[extractFeatures]]: no shuffle, the
     * payload never moves, and only the sampled frames' derived values are
     * emitted — at 100 TB the k-fold data reduction happens before
     * anything hits the wire.
     */
-  def frameSample(media: Dataset[MediaRow],
-      frameBytes: Int = 64, everyK: Int = 4): Dataset[FrameRow] = {
+  def frameSample(media: Dataset[MediaRow]): Dataset[FrameRow] = {
     import media.sparkSession.implicits._
     // index math over the payload, no per-frame array copies: skipped
     // frames cost nothing (grouped() would materialize every frame only
-    // to discard (everyK-1)/everyK of them)
+    // to discard (FrameEveryK-1)/FrameEveryK of them)
     media.mapPartitions { rows =>
       rows.flatMap { r =>
         val p = r.payload
-        Iterator.range(0, p.length, frameBytes * everyK).map { from =>
-          val until = math.min(p.length, from + frameBytes)
-          FrameRow(r.doc_id, from / frameBytes, (until - from).toLong,
+        Iterator.range(0, p.length, FrameBytes * FrameEveryK).map { from =>
+          val until = math.min(p.length, from + FrameBytes)
+          FrameRow(r.doc_id, from / FrameBytes, (until - from).toLong,
             byteSum(p, from, until))
         }
       }
@@ -338,14 +338,13 @@ object Multimodal {
     * pinned by the shared machinery's specs plus the MultimodalSpec
     * fixture.
     */
-  def mediaNearDups(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame = {
+  def mediaNearDups(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val hashed = mediaTable(spark, dir)
       .map(r => (r.doc_id, perceptualHash(r.payload)))
       .toDF("doc_id", "sh")
       .localCheckpoint(eager = false) // election + map-back both read it
-    Dedup.simhashClustersFromHashes(hashed, maxHamming)
+    Dedup.simhashClustersFromHashes(hashed, Dedup.SimhashMaxHamming)
       .withColumnRenamed("simhash", "phash")
   }
 
@@ -395,7 +394,7 @@ object Multimodal {
 
   val oracles: Map[String, String] = Map(
     "q_media_ann" ->
-      Similarity.duckAnnIvfSql(10, 5, 16, 4, 2, 1, qvCte = duckMediaQvCte),
+      Similarity.duckAnnIvfSql(Similarity.IvfTrainAll, duckMediaQvCte),
     "q_media_neardups" ->
       s"""WITH mb AS MATERIALIZED (
         |  SELECT doc_id, hex(encode(text)) AS hx,
@@ -436,19 +435,19 @@ object Multimodal {
          |FROM documents ORDER BY doc_id""".stripMargin
     },
     "q_frame_samples" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id,
-        |         CAST(unnest(range(0, CAST(ceil(length(text) / 64.0) AS BIGINT))) AS INT)
+        |         CAST(unnest(range(0, CAST(ceil(length(text) / $FrameBytes.0) AS BIGINT))) AS INT)
         |           AS frame_idx,
         |         text
         |  FROM documents)
         |SELECT doc_id, frame_idx,
-        |       CAST(octet_length(encode(substring(text, frame_idx * 64 + 1, 64))) AS BIGINT)
+        |       CAST(octet_length(encode(substring(text, frame_idx * $FrameBytes + 1, $FrameBytes))) AS BIGINT)
         |         AS frame_bytes,
         |       CAST(coalesce(list_sum(list_transform(
-        |              string_split(substring(text, frame_idx * 64 + 1, 64), ''),
+        |              string_split(substring(text, frame_idx * $FrameBytes + 1, $FrameBytes), ''),
         |              c -> unicode(c))), 0) AS BIGINT) AS checksum
-        |FROM f WHERE frame_idx % 4 = 0
+        |FROM f WHERE frame_idx % $FrameEveryK = 0
         |ORDER BY doc_id, frame_idx""".stripMargin,
     "q_media_checksums" ->
       """SELECT doc_id, octet_length(encode(text)) AS payload_bytes,

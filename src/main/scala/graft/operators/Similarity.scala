@@ -24,6 +24,41 @@ import graft.functions.PortableRound
   */
 object Similarity {
 
+  /** The registered ANN workload: the first `AnnQueries` vector ids are
+    * the query set, each asking for its `AnnK` nearest neighbors. Every
+    * ANN path, recall tracker, tuning sweep and oracle reads these.
+    */
+  val AnnQueries = 10
+  val AnnK = 5
+
+  /** The registered IVF quantizer: `IvfCells` cells refined by
+    * `LloydIters` integer Lloyd rounds; queries probe their `IvfProbe`
+    * nearest cells. `IvfTrainAll` is the training modulus that trains on
+    * every vector (see [[ivfAssignFrom]]).
+    */
+  val IvfCells = 16
+  val IvfProbe = 4
+  val LloydIters = 2
+  val IvfTrainAll = 1
+
+  /** The cosine threshold every registered embedding near-dup query runs
+    * at (pairs, SemDeDup, components, incremental, decontamination, the
+    * curation semantic stage and the streaming gate). The synthetic
+    * embeddings are near-random unit vectors with max pairwise cosine
+    * ≈ 0.47, so real-corpus near-dup semantics (cosine ≥ 0.95, as in
+    * the SemDeDup paper) would correctly but vacuously drop nothing
+    * there; pass 0.95 on real embeddings.
+    */
+  val SemanticMinCosine = 0.3
+
+  /** Sign-LSH width of the embedding near-dup family's bucket key. */
+  val NearDupBits = 6
+
+  /** The quantized-dot threshold of a cosine: cos · (10⁶)², the scale
+    * of [[longDot]] over q6 micros.
+    */
+  private[graft] def dotThreshold(minCosine: Double): Long = (minCosine * 1e12).toLong
+
   /** Integer dot over pre-quantized vectors (the join hot loop). */
   private def longDot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.longDot(a, b)
@@ -48,12 +83,12 @@ object Similarity {
     * embeddings table — hashed-BOW cosine is exactly the n-gram-bag
     * similarity the MinHash family approximates, now in the vector
     * aisle. Scale shape: one (doc_id, bucket) count exchange, then the
-    * densify + normalize is map-side column algebra; dim is a knob, not
-    * a schema (64 default = the [[Dsir]] bucket space).
+    * densify + normalize is map-side column algebra; the width is the
+    * [[Dsir.DefaultNBuckets]] bucket space.
     */
-  def hashedBowVectors(spark: SparkSession, dir: String,
-      dim: Int = Dsir.DefaultNBuckets): DataFrame = {
-    val dense = bowCounts(spark, dir, dim)
+  def hashedBowVectors(spark: SparkSession, dir: String): DataFrame = {
+    val dim = Dsir.DefaultNBuckets
+    val dense = bowCounts(spark, dir)
       .groupBy("doc_id")
       .agg(map_from_entries(collect_list(
         struct(col("bucket"), col("cnt")))).as("m"))
@@ -74,16 +109,15 @@ object Similarity {
     * hashed-BOW family (the float normalize above is declared rows-only
     * like every vector op).
     */
-  def hashedBowCounts(spark: SparkSession, dir: String,
-      dim: Int = Dsir.DefaultNBuckets): DataFrame =
-    bowCounts(spark, dir, dim).orderBy("doc_id", "bucket")
+  def hashedBowCounts(spark: SparkSession, dir: String): DataFrame =
+    bowCounts(spark, dir).orderBy("doc_id", "bucket")
 
-  private def bowCounts(spark: SparkSession, dir: String, dim: Int): DataFrame =
+  private def bowCounts(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
         explode(transform(split(col("text"), " "),
-          t => Dsir.bucketOf(t, dim))).as("bucket"))
+          t => Dsir.bucketOf(t, Dsir.DefaultNBuckets))).as("bucket"))
       .groupBy("doc_id", "bucket").agg(count(lit(1)).as("cnt"))
 
   /** Exact hashed-BOW neighbor search — [[hashedBowVectors]] through the
@@ -95,18 +129,14 @@ object Similarity {
     * behavior stays spec-pinned; the underlying counts have their own
     * anchor (q_hashed_bow).
     */
-  def textAnnBow(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 2): DataFrame =
-    annIvfFrom(quantizedBow(spark, dir), nQueries, k, nCells, nProbe,
-      lloydIters)
+  def textAnnBow(spark: SparkSession, dir: String): DataFrame =
+    annIvfFrom(quantizedBow(spark, dir))
 
   /** Brute-force twin of [[textAnnBow]] — the exact truth its recall
     * spec measures against.
     */
-  private[graft] def textAnnBowBruteForce(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame =
-    annBruteForceFrom(quantizedBow(spark, dir), nQueries, k)
+  private[graft] def textAnnBowBruteForce(spark: SparkSession, dir: String): DataFrame =
+    annBruteForceFrom(quantizedBow(spark, dir))
 
   private def quantizedBow(spark: SparkSession, dir: String): DataFrame =
     hashedBowVectors(spark, dir).withColumn("qe",
@@ -117,13 +147,12 @@ object Similarity {
       // ~2 s for the embedding-table twin before this boundary
       .localCheckpoint(eager = false)
 
-  /** Brute-force cosine top-k: query set = first `nQueries` vectors,
+  /** Brute-force cosine top-k: query set = first [[AnnQueries]] vectors,
     * broadcast against the full corpus; rank by quantized dot (ties broken
     * by neighbor id). TakeOrdered per query via row_number window.
     */
-  def annBruteForce(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame =
-    annBruteForceFrom(quantized(spark, dir), nQueries, k)
+  def annBruteForce(spark: SparkSession, dir: String): DataFrame =
+    annBruteForceFrom(quantized(spark, dir))
 
   /** [[annBruteForce]] over an arbitrary pre-quantized (vec_id,
     * embedding, qe) frame — lets the multimodal pipeline run its media
@@ -131,7 +160,7 @@ object Similarity {
     * embeddings use.
     */
   private[graft] def annBruteForceFrom(emb: DataFrame,
-      nQueries: Int = 10, k: Int = 5): DataFrame = {
+      nQueries: Int = AnnQueries, k: Int = AnnK): DataFrame = {
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qe").as("q_qe"))
     val scored = emb.crossJoin(broadcast(queries))
@@ -167,9 +196,15 @@ object Similarity {
     * at 0.60 and [[annIvf]] at 0.96 are the registered quality paths —
     * but the baseline should at least sit on its own sweep's best cell.
     */
-  def annLsh(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nBits: Int = 4): DataFrame =
-    annLshProbed(spark, dir, nQueries, k, nBits, probeHamming = 0)
+  def annLsh(spark: SparkSession, dir: String, nBits: Int = LshBits): DataFrame =
+    annLshProbed(spark, dir, nBits, probeHamming = 0)
+
+  /** Registered single-probe key width of [[annLsh]]. */
+  val LshBits = 4
+
+  /** Registered (width, probe radius) of [[annLshProbed]]. */
+  val MultiProbeBits = 6
+  val MultiProbeHamming = 2
 
   /** Multi-probe variant (Lv et al., VLDB'07 — public recipe, fresh
     * implementation): each query also probes the buckets at Hamming
@@ -205,8 +240,8 @@ object Similarity {
     * at 0.59 scan_frac — past half the corpus, brute force wins).
     */
   def annLshProbed(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nBits: Int = 6,
-      probeHamming: Int = 2): DataFrame = {
+      nBits: Int = MultiProbeBits,
+      probeHamming: Int = MultiProbeHamming): DataFrame = {
     require(probeHamming >= 0 && probeHamming <= 2,
       "probeHamming must be 0, 1 or 2 (larger probe sets grow C(nBits, h))")
     val emb = quantized(spark, dir)
@@ -220,7 +255,7 @@ object Similarity {
           (for (i <- 0 until nBits; j <- i + 1 until nBits)
             yield lit((1L << i) | (1L << j)))
         else Seq.empty))
-    val queries = emb.filter(col("vec_id") < nQueries)
+    val queries = emb.filter(col("vec_id") < AnnQueries)
       .select(col("vec_id").as("query_id"), col("qe").as("q_qe"),
         explode(array(flips.map(col("bucket").bitwiseXOR(_)): _*)).as("q_bucket"))
     val scored = emb.join(broadcast(queries),
@@ -230,7 +265,7 @@ object Similarity {
     scored
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("dot_q"), asc("neighbor_id"))))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= AnnK)
       .select("query_id", "rn", "neighbor_id", "dot_q")
       .orderBy("query_id", "rn")
   }
@@ -266,21 +301,14 @@ object Similarity {
     * nest) — spec-pinned along both axes. Oracle-checked since round 13 (integer hyperplane dots).
     * Total cost ≈ 3 bucket-free corpus scans (truth + keys + xor),
     * independent of grid size; no pair list ever materializes beyond
-    * the corpus×nQueries cross the brute-force baseline already pays.
+    * the corpus×AnnQueries cross the brute-force baseline already pays.
     */
-  def annTuning(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5,
-      bitsGrid: Seq[Int] = Seq(4, 6, 8, 10, 12),
-      maxProbe: Int = 2): DataFrame = {
-    val maxBits = bitsGrid.max
-    require(bitsGrid.nonEmpty && bitsGrid.forall(b => b >= 1 && b <= 16),
-      s"bitsGrid must sit in [1, 16], got $bitsGrid")
-    require(maxProbe >= 0 && maxProbe <= 2, "maxProbe must be 0, 1 or 2")
-    val grid = for (b <- bitsGrid.sorted; h <- 0 to maxProbe) yield (b, h)
+  def annTuning(spark: SparkSession, dir: String): DataFrame = {
+    val grid = for (b <- AnnTuningBits; h <- 0 to AnnTuningMaxProbe) yield (b, h)
     val emb = quantized(spark, dir)
-      .withColumn("key", lshKey("embedding", maxBits))
+      .withColumn("key", lshKey("embedding", AnnTuningBits.max))
       .localCheckpoint(eager = false) // truth annotation + the xor pass
-    val queries = emb.filter(col("vec_id") < nQueries)
+    val queries = emb.filter(col("vec_id") < AnnQueries)
       .select(col("vec_id").as("query_id"), col("key").as("q_key"))
     // every grid cell's retrieval/cost predicate over one xor column
     def hit(b: Int, h: Int, x: Column): Column =
@@ -292,7 +320,7 @@ object Similarity {
       count(lit(1)).as("n_cross"),
       grid.map { case (b, h) =>
         sum(hit(b, h, col("x")).cast("long")).as(s"cand_${b}_$h") }: _*)
-    val truthXor = annBruteForce(spark, dir, nQueries, k)
+    val truthXor = annBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
       .join(queries, "query_id")
       .join(emb.select(col("vec_id").as("neighbor_id"),
@@ -326,6 +354,12 @@ object Similarity {
     }.reduce(_.unionAll(_)).orderBy("n_bits", "probe_hamming")
   }
 
+  /** The (n_bits, probe_hamming) grid of [[annTuning]]: sorted widths in
+    * [1, 16], radii 0 to `AnnTuningMaxProbe` ≤ 2.
+    */
+  val AnnTuningBits = Seq(4, 6, 8, 10, 12)
+  val AnnTuningMaxProbe = 2
+
   /** Embedding-cosine near-duplicate pairs (the fifth dedup modality of
     * the builder prompt): candidates from equal LSH sign-buckets, verified
     * by quantized cosine ≥ threshold. Quantized dot keeps the verdict
@@ -342,15 +376,9 @@ object Similarity {
     * miss rate squares for 2× the join work.
     */
   def embeddingNearDups(spark: SparkSession, dir: String,
-      minCosine: Double = 0.95, nBits: Int = 8,
+      minCosine: Double = SemanticMinCosine, nBits: Int = NearDupBits,
       pairBudget: Long = Dedup.DefaultPairBudget): DataFrame = {
-    // Defaults are real-corpus semantics (near-dup ≈ cosine ≥ 0.95). The
-    // q_embedding_neardups registration passes demo-tuned values (0.3, 6)
-    // because the synthetic embeddings are near-random unit vectors with
-    // max pairwise cosine ≈ 0.47 — the defaults would correctly but
-    // vacuously emit zero pairs there.
-    // quantized threshold on the integer dot: cos * (1e6)^2
-    val thresholdQ = (minCosine * 1e12).toLong
+    val thresholdQ = dotThreshold(minCosine)
     // both sides of the self-join read this frame: checkpoint so the
     // quantize + hyperplane-signature map work runs once (the
     // minhashLshPairs discipline; measured 2 full scans without)
@@ -394,26 +422,17 @@ object Similarity {
     * straddling-pair rescue.
     */
   def embeddingNearDupsOr(spark: SparkSession, dir: String,
-      minCosine: Double = 0.95, nBits: Int = 6,
-      offsets: Seq[Int] = Seq(0, 8),
+      minCosine: Double = SemanticMinCosine,
       pairBudget: Long = Dedup.DefaultPairBudget): DataFrame = {
-    require(offsets.nonEmpty && offsets.distinct == offsets,
-      s"offsets must be non-empty and distinct, got $offsets")
-    // tables must not share planes: overlapping stretches correlate the
-    // tables and silently void the miss-rate-squaring premise (a pair
-    // straddling a SHARED plane is missed by both) while still charging
-    // full T× join cost
-    require(offsets.sorted.sliding(2).forall(p => p.length < 2 || p(1) - p(0) >= nBits),
-      s"plane-table offsets must be >= nBits apart for independence, got $offsets at $nBits bits")
-    val thresholdQ = (minCosine * 1e12).toLong
-    val withKeys = offsets.zipWithIndex.foldLeft(quantized(spark, dir)) {
+    val thresholdQ = dotThreshold(minCosine)
+    val withKeys = OrPlaneOffsets.zipWithIndex.foldLeft(quantized(spark, dir)) {
         case (df, (off, i)) => df.withColumn(s"bucket_$i",
-          graft.functions.VectorFunctions.lshKeyCol(col("embedding"), nBits, off))
+          graft.functions.VectorFunctions.lshKeyCol(col("embedding"), NearDupBits, off))
       }
       .select(col("vec_id") +: col("qe") +:
-        offsets.indices.map(i => col(s"bucket_$i")): _*)
+        OrPlaneOffsets.indices.map(i => col(s"bucket_$i")): _*)
       .localCheckpoint(eager = false) // 2T join sides read this frame
-    val report = offsets.indices.map { i =>
+    val report = OrPlaneOffsets.indices.map { i =>
       withKeys.as("a").join(withKeys.as("b"),
           col(s"a.bucket_$i") === col(s"b.bucket_$i") &&
             col("a.vec_id") < col("b.vec_id"))
@@ -427,6 +446,14 @@ object Similarity {
       "semanticDedup (one row per vector)")
       .orderBy("vec_a", "vec_b")
   }
+
+  /** Sorted first-plane offsets of [[embeddingNearDupsOr]]'s tables, at
+    * least [[NearDupBits]] apart: tables must not share planes —
+    * overlapping stretches correlate the tables and silently void the
+    * miss-rate-squaring premise (a pair straddling a SHARED plane is
+    * missed by both) while still charging full T× join cost.
+    */
+  val OrPlaneOffsets = Seq(0, 8)
 
   /** Incremental semantic dedup — the embedding sibling of
     * [[Dedup.dedupAgainstDigests]], for the snapshot-growth refresh: a
@@ -446,8 +473,8 @@ object Similarity {
     * and the drop verdict.
     */
   def semanticDedupAgainst(batchEmb: DataFrame, corpusEmb: DataFrame,
-      minCosine: Double = 0.95, nBits: Int = 8): DataFrame = {
-    val thresholdQ = (minCosine * 1e12).toLong
+      minCosine: Double = SemanticMinCosine, nBits: Int = NearDupBits): DataFrame = {
+    val thresholdQ = dotThreshold(minCosine)
     def prep(df: DataFrame) = df
       .withColumn("qe", graft.functions.VectorFunctions.quantizeCol(col("embedding")))
       .withColumn("bucket", lshKey("embedding", nBits))
@@ -469,20 +496,16 @@ object Similarity {
   }
 
   /** Oracle-checkable demo registration: frozen corpus = vectors with
-    * `vec_id % knownModulus = 0`, batch = the rest (the
-    * [[Dedup.incrementalExact]] device). Demo threshold/bits follow the
-    * q_embedding_neardups rationale. Oracle-checked since round 13 (integer signs +
-    * float quantization); the fixture spec plants an exact twin and an
-    * orthogonal vector.
+    * `vec_id % Dedup.DefaultKnownModulus = 0`, batch = the rest (the
+    * [[Dedup.incrementalExact]] device). Oracle-checked since round 13
+    * (integer signs + float quantization); the fixture spec plants an
+    * exact twin and an orthogonal vector.
     */
-  def semanticDedupIncremental(spark: SparkSession, dir: String,
-      minCosine: Double = 0.3, nBits: Int = 6,
-      knownModulus: Int = 4): DataFrame = {
+  def semanticDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val isKnown = pmod(col("vec_id"), lit(knownModulus.toLong)) === 0
-    semanticDedupAgainst(emb.filter(!isKnown), emb.filter(isKnown),
-      minCosine, nBits)
+    val isKnown = pmod(col("vec_id"), lit(Dedup.DefaultKnownModulus.toLong)) === 0
+    semanticDedupAgainst(emb.filter(!isKnown), emb.filter(isKnown))
   }
 
   /** Semantic decontamination — the embedding member of the decontam
@@ -503,8 +526,8 @@ object Similarity {
     * cosine, and the flag.
     */
   def semanticContaminationAgainst(corpusEmb: DataFrame, benchEmb: DataFrame,
-      minCosine: Double = 0.3, nBits: Int = 6): DataFrame = {
-    val thresholdQ = (minCosine * 1e12).toLong
+      minCosine: Double = SemanticMinCosine, nBits: Int = NearDupBits): DataFrame = {
+    val thresholdQ = dotThreshold(minCosine)
     def prep(df: DataFrame) = df
       .withColumn("qe", graft.functions.VectorFunctions.quantizeCol(col("embedding")))
       .withColumn("bucket", lshKey("embedding", nBits))
@@ -526,20 +549,16 @@ object Similarity {
   }
 
   /** Demo registration of [[semanticContaminationAgainst]]: benchmark =
-    * vectors with `vec_id % benchModulus = 0` (the
-    * [[Decontam.DefaultBenchModulus]] device), corpus = the rest. Demo
-    * threshold/bits follow the q_semantic_incremental rationale.
+    * vectors with `vec_id % Decontam.DefaultBenchModulus = 0` (the
+    * [[Decontam.contamination]] device), corpus = the rest.
     * Oracle-checked since round 13; HygieneSpec
     * pins planted-twin / orthogonal fixtures and demo ≡ external form.
     */
-  def semanticContamination(spark: SparkSession, dir: String,
-      minCosine: Double = 0.3, nBits: Int = 6,
-      benchModulus: Int = Decontam.DefaultBenchModulus): DataFrame = {
+  def semanticContamination(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val isBench = pmod(col("vec_id"), lit(benchModulus.toLong)) === 0
-    semanticContaminationAgainst(emb.filter(!isBench), emb.filter(isBench),
-      minCosine, nBits)
+    val isBench = pmod(col("vec_id"), lit(Decontam.DefaultBenchModulus.toLong)) === 0
+    semanticContaminationAgainst(emb.filter(!isBench), emb.filter(isBench))
   }
 
   /** Centroid table folded to ONE array row: `cents` =
@@ -583,7 +602,7 @@ object Similarity {
     * final ASSIGNMENT still covers the full corpus. Codebook quality
     * degrades only as the sample stops representing the distribution
     * (k-means on an n/m i.i.d.-ish sample; recall spec pins m=4).
-    * Default 1 = train on everything. The sample must be non-empty (some
+    * Default [[IvfTrainAll]] = train on everything. The sample must be non-empty (some
     * vec_id divisible by m — true for any corpus with ≥ m contiguous-ish
     * ids); an empty sample empties the codebook after one Lloyd pass and
     * the assignment fails loudly on element_at.
@@ -602,7 +621,7 @@ object Similarity {
       nCells: Int, lloydIters: Int,
       materializeAssigned: Boolean,
       withSubKey: Boolean = false,
-      trainModulus: Int = 1): (DataFrame, DataFrame) =
+      trainModulus: Int = IvfTrainAll): (DataFrame, DataFrame) =
     ivfAssignFrom(quantized(spark, dir), nCells, lloydIters,
       materializeAssigned, withSubKey, trainModulus)
 
@@ -614,7 +633,7 @@ object Similarity {
       nCells: Int, lloydIters: Int,
       materializeAssigned: Boolean,
       withSubKey: Boolean = false,
-      trainModulus: Int = 1): (DataFrame, DataFrame) = {
+      trainModulus: Int = IvfTrainAll): (DataFrame, DataFrame) = {
     val trainEmb =
       if (trainModulus <= 1) emb
       else emb.filter(pmod(col("vec_id"), lit(trainModulus)) === 0)
@@ -692,9 +711,8 @@ object Similarity {
     * integer centroid means — replayed by a generated per-round CTE
     * chain (the [[Bpe]] discipline) in DuckDB.
     */
-  def ivfAssignment(spark: SparkSession, dir: String,
-      nCells: Int = 16, lloydIters: Int = 2): DataFrame = {
-    val (cents, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
+  def ivfAssignment(spark: SparkSession, dir: String): DataFrame = {
+    val (cents, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
       materializeAssigned = false)
     assigned.join(broadcast(cents), "cell")
       .select(col("vec_id"), col("cell"),
@@ -713,9 +731,8 @@ object Similarity {
     * spec-pinned. The artifact lands in a fresh per-call temp directory
     * (the query IS the round trip, not a cache).
     */
-  def ivfAssignmentFrozen(spark: SparkSession, dir: String,
-      nCells: Int = 16, lloydIters: Int = 2): DataFrame = {
-    val (cents, _) = ivfAssign(spark, dir, nCells, lloydIters,
+  def ivfAssignmentFrozen(spark: SparkSession, dir: String): DataFrame = {
+    val (cents, _) = ivfAssign(spark, dir, IvfCells, LloydIters,
       materializeAssigned = false)
     // a FRESH directory per call: loadCodebook's parquet scan is lazy,
     // so a shared fixed path would let a later call's save swap the
@@ -743,20 +760,19 @@ object Similarity {
     * itself is oracle-checked through [[ivfAssignment]]; this query's
     * probe/rank composition is oracle-checked too since round 13.
     */
-  def annIvf(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 4, lloydIters: Int = 2,
-      trainModulus: Int = 1): DataFrame =
-    annIvfFrom(quantized(spark, dir), nQueries, k, nCells, nProbe,
-      lloydIters, trainModulus)
+  def annIvf(spark: SparkSession, dir: String,
+      trainModulus: Int = IvfTrainAll): DataFrame =
+    annIvfFrom(quantized(spark, dir), trainModulus = trainModulus)
 
   /** [[annIvf]] over an arbitrary pre-quantized (vec_id, embedding, qe)
     * frame (see [[ivfAssignFrom]]).
     */
-  private[graft] def annIvfFrom(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 4, lloydIters: Int = 2,
-      trainModulus: Int = 1): DataFrame = {
+  private[graft] def annIvfFrom(emb: DataFrame,
+      nQueries: Int = AnnQueries, k: Int = AnnK,
+      nCells: Int = IvfCells, nProbe: Int = IvfProbe,
+      trainModulus: Int = IvfTrainAll): DataFrame = {
     val (centroids, assigned) =
-      ivfAssignFrom(emb, nCells, lloydIters, materializeAssigned = false,
+      ivfAssignFrom(emb, nCells, LloydIters, materializeAssigned = false,
         trainModulus = trainModulus)
     // queries probe their nProbe nearest cells
     val probes = emb.filter(col("vec_id") < nQueries)
@@ -787,7 +803,7 @@ object Similarity {
   /** Measured IVF probe sweep — recall and candidate cost per `n_probe`
     * in [1, nCells], completing the tuning trilogy (MinHash banding
     * `q_lsh_tuning`, sign-LSH grid `q_ann_tuning`, and now the IVF
-    * probe axis): the registered [[annIvf]] default `nProbe = 4` rests
+    * probe axis): the registered [[annIvf]] probe count [[IvfProbe]] rests
     * on a row of this frame, not on folklore. One row per probe count:
     *
     *   - `recall_micros` — micro-averaged recall@k against the
@@ -801,7 +817,7 @@ object Similarity {
     *   - `candidate_rows` / `scan_frac_micros` — the price: corpus
     *     vectors inside the probed cells summed over queries (self
     *     excluded, mirroring annIvf's `vec_id =!= query_id`), as count
-    *     and as the fraction of the nQueries·(N−1) cross product.
+    *     and as the fraction of the AnnQueries·(N−1) cross product.
     *
     * The quantizer runs ONCE: every probe count reads the same
     * assignment and the same per-query centroid ranking (the ranking
@@ -817,20 +833,17 @@ object Similarity {
     * ~10⁻²² of a rounding boundary — the cross-round stability of the
     * registered ivf recall (0.96 since r9) is the empirical record.
     */
-  def ivfTuning(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5,
-      nCells: Int = 16, lloydIters: Int = 2,
-      trainModulus: Int = 1): DataFrame = {
+  def ivfTuning(spark: SparkSession, dir: String): DataFrame = {
     // materializeAssigned: the assignment feeds the query rows (with
     // their own cell, for self-exclusion), cell sizes AND the
     // truth-neighbor cell lookup
-    val (centroids, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
-      materializeAssigned = true, trainModulus = trainModulus)
+    val (centroids, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
+      materializeAssigned = true)
     // The own cell rides on the query rows: a join against the selective
-    // `vec_id < nQueries` slice would draw Spark's runtime Bloom join
+    // `vec_id < AnnQueries` slice would draw Spark's runtime Bloom join
     // filter, sized for a million rows when the side has no row count,
     // and every task of the cost aggregation would carry its 1 MiB.
-    val queries = assigned.filter(col("vec_id") < nQueries)
+    val queries = assigned.filter(col("vec_id") < AnnQueries)
       .select(col("vec_id").as("query_id"), col("qe").as("q_qe"),
         col("cell").as("own_cell"))
     // per-query ranking of ALL cells — annIvf's probe selection verbatim
@@ -842,14 +855,14 @@ object Similarity {
       .localCheckpoint(eager = false) // cost agg + recall join both read it
     val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("csize"))
     val rankedSized = ranked.join(broadcast(sizes), "cell")
-    val grid = 1 to nCells
+    val grid = 1 to IvfCells
     val costAggs = grid.flatMap { p => Seq(
       sum(when(col("rk") <= p, col("csize")).otherwise(lit(0L))).as(s"cand_$p"),
       sum(when(col("rk") <= p && col("cell") === col("own_cell"), lit(1L))
         .otherwise(lit(0L))).as(s"self_$p")) }
     val cost = rankedSized.agg(costAggs.head, costAggs.tail: _*)
     // truth neighbors -> their cells -> that cell's rank for the query
-    val truthRk = annBruteForce(spark, dir, nQueries, k)
+    val truthRk = annBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
       .join(assigned.select(col("vec_id").as("neighbor_id"), col("cell")),
         "neighbor_id")
@@ -857,14 +870,14 @@ object Similarity {
     val recallAggs = count(lit(1)).cast("double").as("n_truth") +:
       grid.map(p => sum((col("rk") <= p).cast("long")).as(s"hit_$p"))
     val recall = truthRk.agg(recallAggs.head, recallAggs.tail: _*)
-    // MEASURED cross size, not the nominal nQueries·(N−1): a corpus
-    // sparse in [0, nQueries) — offset id ranges, filtered views, the
+    // MEASURED cross size, not the nominal AnnQueries·(N−1): a corpus
+    // sparse in [0, AnnQueries) — offset id ranges, filtered views, the
     // exact case ivfAssign's seeding is hardened for — fields fewer
     // query rows, and the nominal denominator would break the
     // spec-pinned full-probe endpoint (scan_frac ≡ 1.0). n_cross =
     // actual queries × (N − 1), the annTuning discipline.
     val corpusN = quantized(spark, dir).agg(count(lit(1)).as("n_corpus"),
-      sum((col("vec_id") < nQueries).cast("long")).as("n_queries"))
+      sum((col("vec_id") < AnnQueries).cast("long")).as("n_queries"))
     // one materialized row for the 16-branch fan-out (see annTuning)
     val one = cost.crossJoin(broadcast(recall)).crossJoin(broadcast(corpusN))
       .localCheckpoint(eager = false)
@@ -890,7 +903,7 @@ object Similarity {
     * since round 13: every component path (brute truth, both IVF
     * variants, both LSH variants) has an exact SQL twin, so the tracker
     * itself composes them (nested-WITH subqueries). Fully distributed — the
-    * truth frame is ≤ nQueries·k rows, checkpointed once and semi-joined
+    * truth frame is ≤ AnnQueries·AnnK rows, checkpointed once and semi-joined
     * by each method; no driver-side set arithmetic. Each method runs
     * END-TO-END (its own scan + quantize + index build) — deliberately:
     * the metric times the operators a user would actually run, so a
@@ -898,18 +911,16 @@ object Similarity {
     * variant would mask. The scan-count audit reads 8 scans on this
     * query for exactly that reason.
     */
-  def annRecall(spark: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val truth = annBruteForce(spark, dir, nQueries, k)
+  def annRecall(spark: SparkSession, dir: String): DataFrame = {
+    val truth = annBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
       .localCheckpoint(eager = false) // one probe per method + the total
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
     val methods = Seq(
-      "ivf" -> annIvf(spark, dir, nQueries, k),
-      "ivf_sampled" -> annIvf(spark, dir, nQueries, k,
-        trainModulus = IvfTrainModulus),
-      "lsh" -> annLsh(spark, dir, nQueries, k),
-      "lsh_multiprobe" -> annLshProbed(spark, dir, nQueries, k))
+      "ivf" -> annIvf(spark, dir),
+      "ivf_sampled" -> annIvf(spark, dir, IvfTrainModulus),
+      "lsh" -> annLsh(spark, dir),
+      "lsh_multiprobe" -> annLshProbed(spark, dir))
     methods.map { case (name, df) =>
       df.select("query_id", "neighbor_id")
         .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
@@ -936,11 +947,9 @@ object Similarity {
     * of the order-dependent avg-of-quotients it replaced) make every
     * value engine-exact.
     */
-  def embeddingClusterStats(spark: SparkSession, dir: String,
-      nCells: Int = 16, lloydIters: Int = 2,
-      trainModulus: Int = 1): DataFrame = {
-    val (centroids, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
-      materializeAssigned = false, trainModulus = trainModulus)
+  def embeddingClusterStats(spark: SparkSession, dir: String): DataFrame = {
+    val (centroids, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
+      materializeAssigned = false)
     assigned.join(broadcast(centroids), "cell")
       .select(col("cell"), longDot(col("qe"), col("qc")).as("dot_q"))
       .groupBy("cell")
@@ -972,11 +981,10 @@ object Similarity {
     * Oracle-checked since round 13 (integer-exact Lloyd).
     */
   def clusterBalancedSample(spark: SparkSession, dir: String,
-      perCell: Int = 32, nCells: Int = 16, lloydIters: Int = 2,
-      trainModulus: Int = 1): DataFrame = {
+      perCell: Int = SamplePerCell): DataFrame = {
     require(perCell >= 1, s"perCell must be >= 1, got $perCell")
-    val (_, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
-      materializeAssigned = false, trainModulus = trainModulus)
+    val (_, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
+      materializeAssigned = false)
     assigned
       .withColumn("rk", row_number().over(
         Window.partitionBy("cell").orderBy("vec_id")))
@@ -984,6 +992,9 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("rk"))
       .orderBy("cell", "rk")
   }
+
+  /** Registered per-cell cap of [[clusterBalancedSample]]. */
+  val SamplePerCell = 32
 
   /** SemDeDup-shape semantic deduplication (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication"
@@ -1045,16 +1056,16 @@ object Similarity {
     * documented approximation family as the cross-cell misses, tuned by
     * nCells/maxCellSize/maxAnchors. Cells under maxCellSize with
     * maxAnchors ≥ maxCellSize pair exhaustively — identical semantics to
-    * the unbounded form on benign data. The default threshold is
-    * real-corpus near-dup semantics (cosine ≥ 0.95, as in the paper); the
-    * registered demo query passes a lower value — same rationale as
-    * [[embeddingNearDups]].
+    * the unbounded form on benign data. The default threshold is the
+    * registered [[SemanticMinCosine]]; real-corpus near-dup semantics
+    * (cosine ≥ 0.95, as in the paper) is an explicit argument.
     */
-  def semanticDedup(spark: SparkSession, dir: String, minCosine: Double = 0.95,
-      nCells: Int = 16, lloydIters: Int = 2,
-      maxCellSize: Int = 256, maxAnchors: Int = 256,
-      trainModulus: Int = 1): DataFrame = {
-    val thresholdQ = (minCosine * 1e12).toLong
+  def semanticDedup(spark: SparkSession, dir: String,
+      minCosine: Double = SemanticMinCosine,
+      nCells: Int = IvfCells, lloydIters: Int = LloydIters,
+      maxCellSize: Int = MaxCellSize, maxAnchors: Int = MaxAnchors,
+      trainModulus: Int = IvfTrainAll): DataFrame = {
+    val thresholdQ = dotThreshold(minCosine)
     val parts = semanticDedupParts(spark, dir, nCells, lloydIters,
       maxCellSize, maxAnchors, trainModulus)
     val pairs = parts.candidates.filter(col("dot_q") >= thresholdQ)
@@ -1105,12 +1116,10 @@ object Similarity {
     * star form on a bridge fixture.
     */
   def semanticComponents(spark: SparkSession, dir: String,
-      minCosine: Double = 0.95, nCells: Int = 16, lloydIters: Int = 2,
-      maxCellSize: Int = 256, maxAnchors: Int = 256,
-      trainModulus: Int = 1): DataFrame = {
-    val thresholdQ = (minCosine * 1e12).toLong
-    val parts = semanticDedupParts(spark, dir, nCells, lloydIters,
-      maxCellSize, maxAnchors, trainModulus)
+      minCosine: Double = SemanticMinCosine, nCells: Int = IvfCells): DataFrame = {
+    val thresholdQ = dotThreshold(minCosine)
+    val parts = semanticDedupParts(spark, dir, nCells, LloydIters,
+      MaxCellSize, MaxAnchors)
     val comp = Graph.connectedComponents(
       parts.candidates.filter(col("dot_q") >= thresholdQ)
         .select(col("keep_cand").as("src"), col("dup_id").as("dst")))
@@ -1140,10 +1149,16 @@ object Similarity {
   private[graft] case class SemanticDedupParts(
       keyed: DataFrame, reps: DataFrame, candidates: DataFrame)
 
+  /** Registered candidate bounds of [[semanticDedup]]: distinct vectors
+    * per subcell before the sub-split, and anchors per subcell.
+    */
+  val MaxCellSize = 256
+  val MaxAnchors = 256
+
   private[graft] def semanticDedupParts(spark: SparkSession, dir: String,
       nCells: Int, lloydIters: Int,
       maxCellSize: Int, maxAnchors: Int,
-      trainModulus: Int = 1): SemanticDedupParts = {
+      trainModulus: Int = IvfTrainAll): SemanticDedupParts = {
     // materializeAssigned = false: the heavy reuse below runs through
     // `reps`, which is materialized itself — `assigned` has exactly one
     // consumer (the reps lineage), so checkpointing it would write the
@@ -1257,7 +1272,8 @@ object Similarity {
     * (correctly rounded in any engine), and the float cast rounds to
     * nearest on both sides — so the q6 micros match bit-for-bit.
     */
-  private def duckBowQvCte(dim: Int): String =
+  private def duckBowQvCte: String = {
+    val dim = Dsir.DefaultNBuckets
     s"""bowc AS MATERIALIZED (
        |  SELECT doc_id, bucket, count(*) AS cnt
        |  FROM (SELECT doc_id,
@@ -1286,14 +1302,15 @@ object Similarity {
        |         ELSE list_transform(raw, x -> ${duckQ6("CAST(x AS REAL)")})
        |         END AS qe
        |  FROM bnorm)""".stripMargin
+  }
 
   /** The brute-force cosine top-k oracle (annBruteForce verbatim) —
     * shared by q_ann_brute_force and the recall tracker's truth side.
     */
-  private def duckAnnBruteSql(nQueries: Int, k: Int): String =
+  private def duckAnnBruteSql: String =
     s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
-      |  WHERE vec_id < $nQueries),
+      |  WHERE vec_id < $AnnQueries),
       |scored AS (
       |  SELECT q.query_id, e.vec_id AS neighbor_id,
       |         CAST(list_sum(list_transform(range(1, len(e.embedding) + 1),
@@ -1301,7 +1318,7 @@ object Similarity {
       |              * CAST(round(CAST(e.embedding[i] AS DOUBLE) * 1000000) AS BIGINT))) AS BIGINT)
       |           AS dot_q
       |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-      |${duckTopK(k)}""".stripMargin
+      |$duckTopK""".stripMargin
 
   /** The shared quantized-vector CTE (qv) every vector oracle opens with. */
   private def duckQvCte: String =
@@ -1317,7 +1334,8 @@ object Similarity {
     * nBits-bit sign keys over qv.
     */
   private def duckLshKeys(nBits: Int, offset: Int = 0,
-      keysName: String = "keys", dim: Int = 64): String = {
+      keysName: String = "keys"): String = {
+    val dim = 64
     val vals = (for (p <- 0 until nBits; j <- 0 until dim) yield
       s"($p, ${j + 1}, ${graft.functions.VectorFunctions.planeNum(offset + p, j)})")
       .mkString(", ")
@@ -1347,8 +1365,8 @@ object Similarity {
     * [[ivfAssignFrom]]'s integer Lloyd. Returns (chain, final centroid
     * CTE name).
     */
-  private def duckIvfCtes(nCells: Int, lloydIters: Int,
-      trainModulus: Int = 1, qvCte: String = duckQvCte): (String, String) = {
+  private def duckIvfCtes(trainModulus: Int = IvfTrainAll,
+      qvCte: String = duckQvCte): (String, String) = {
     val trainSrc =
       if (trainModulus <= 1) "qv"
       else s"(SELECT * FROM qv WHERE ((vec_id % $trainModulus) + " +
@@ -1359,8 +1377,8 @@ object Similarity {
          |c0 AS MATERIALIZED (
          |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell,
          |         qe AS qc
-         |  FROM (SELECT vec_id, qe FROM qv ORDER BY vec_id LIMIT $nCells))""".stripMargin)
-    for (i <- 1 to lloydIters) {
+         |  FROM (SELECT vec_id, qe FROM qv ORDER BY vec_id LIMIT $IvfCells))""".stripMargin)
+    for (i <- 1 to LloydIters) {
       val prev = s"c${i - 1}"
       sb.append(s""",
         |${duckAssignCte(s"a$i", trainSrc, prev)},
@@ -1376,7 +1394,7 @@ object Similarity {
         |    GROUP BY a.cell, u.pos)
         |  GROUP BY cell)""".stripMargin)
     }
-    (sb.toString, s"c$lloydIters")
+    (sb.toString, s"c$LloydIters")
   }
 
   /** Generated IVF probe-search oracle: the full Lloyd chain + annIvf's
@@ -1384,10 +1402,9 @@ object Similarity {
     * (dot DESC, cell ASC), top-k candidates by (dot DESC, id ASC), self
     * excluded) — expressible since the integer-exact Lloyd landed.
     */
-  private[operators] def duckAnnIvfSql(nQueries: Int, k: Int, nCells: Int,
-      nProbe: Int, lloydIters: Int, trainModulus: Int,
+  private[operators] def duckAnnIvfSql(trainModulus: Int,
       qvCte: String = duckQvCte): String = {
-    val (chain, cFinal) = duckIvfCtes(nCells, lloydIters, trainModulus, qvCte)
+    val (chain, cFinal) = duckIvfCtes(trainModulus, qvCte)
     s"""WITH $chain,
       |${duckIvfAf(cFinal)},
       |probes AS (
@@ -1395,8 +1412,8 @@ object Similarity {
       |    SELECT v.vec_id AS query_id, c.cell,
       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
       |             ${duckDot("v.qe", "c.qc")} DESC, c.cell) AS rk
-      |    FROM qv v CROSS JOIN $cFinal c WHERE v.vec_id < $nQueries)
-      |  WHERE rk <= $nProbe),
+      |    FROM qv v CROSS JOIN $cFinal c WHERE v.vec_id < $AnnQueries)
+      |  WHERE rk <= $IvfProbe),
       |cand AS (
       |  SELECT p.query_id, a.vec_id AS neighbor_id
       |  FROM probes p JOIN af a USING (cell)
@@ -1405,7 +1422,7 @@ object Similarity {
       |  SELECT c.query_id, c.neighbor_id, ${duckDot("q.qe", "n.qe")} AS dot_q
       |  FROM cand c JOIN qv q ON q.vec_id = c.query_id
       |              JOIN qv n ON n.vec_id = c.neighbor_id),
-      |${duckTopK(k)}""".stripMargin
+      |$duckTopK""".stripMargin
   }
 
   /** The final-assignment CTE over the whole corpus (af), appended to a
@@ -1425,30 +1442,31 @@ object Similarity {
       |    FROM $src v CROSS JOIN $cells c) WHERE rn = 1)""".stripMargin
 
   /** The ANN result tail over a `scored(query_id, neighbor_id, dot_q)`
-    * CTE: each query's top-k neighbors by (dot DESC, id ASC).
+    * CTE: each query's top-[[AnnK]] neighbors by (dot DESC, id ASC).
     */
-  private def duckTopK(k: Int): String =
+  private def duckTopK: String =
     s"""ranked AS (
       |  SELECT *, row_number() OVER (PARTITION BY query_id
       |                               ORDER BY dot_q DESC, neighbor_id) AS rn
       |  FROM scored)
-      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $k
+      |SELECT query_id, rn, neighbor_id, dot_q FROM ranked WHERE rn <= $AnnK
       |ORDER BY query_id, rn""".stripMargin
 
   /** The tuning sweeps' recall truth over `qv`: `truth(query_id,
-    * neighbor_id)`, the exact top-5 of the first 10 vectors.
+    * neighbor_id)`, the exact top-[[AnnK]] of the first [[AnnQueries]]
+    * vectors.
     */
   private def duckTruthCtes: String =
     s"""tscored AS (
       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
       |         ${duckDot("q.qe", "e.qe")} AS dot_q
-      |  FROM qv e, (SELECT * FROM qv WHERE vec_id < 10) q
+      |  FROM qv e, (SELECT * FROM qv WHERE vec_id < $AnnQueries) q
       |  WHERE e.vec_id <> q.vec_id),
       |truth AS (
       |  SELECT query_id, neighbor_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY query_id
       |      ORDER BY dot_q DESC, neighbor_id) AS rn FROM tscored)
-      |  WHERE rn <= 5)""".stripMargin
+      |  WHERE rn <= $AnnK)""".stripMargin
 
   /** Masks of all buckets within Hamming `h` of a key over `nBits`
     * bits (the annLshProbed probe ring), as SQL VALUES rows.
@@ -1466,8 +1484,7 @@ object Similarity {
     * per query, probe own bucket ⊕ each mask, rank candidates by
     * (dot DESC, id ASC), top-k.
     */
-  private def duckAnnLshSql(nQueries: Int, k: Int, nBits: Int,
-      probeHamming: Int): String =
+  private def duckAnnLshSql(nBits: Int, probeHamming: Int): String =
     s"""WITH $duckQvCte,
       |${duckLshKeys(nBits)},
       |masks(m) AS (VALUES ${duckProbeMasks(nBits, probeHamming)}),
@@ -1480,8 +1497,8 @@ object Similarity {
       |              AND ke.vec_id <> kq.vec_id
       |  JOIN qv q ON q.vec_id = kq.vec_id
       |  JOIN qv e ON e.vec_id = ke.vec_id
-      |  WHERE kq.vec_id < $nQueries),
-      |${duckTopK(k)}""".stripMargin
+      |  WHERE kq.vec_id < $AnnQueries),
+      |$duckTopK""".stripMargin
 
   /** The semantic-dedup result over a [[duckSemanticCtes]] chain and a
     * `keepers(vec_id, keeper)` CTE: every vector's keeper is its
@@ -1501,11 +1518,10 @@ object Similarity {
     * integer-ladder sub-split + min-id anchors + thresholded pairs.
     * Ends with `pairs(keep_cand, dup_id)` and `reps(cell, qe, vec_id)`.
     */
-  private def duckSemanticCtes(thresholdQ: Long,
-      maxCellSize: Int, maxAnchors: Int): String = {
-    val (chain, cFinal) = duckIvfCtes(16, 2)
+  private def duckSemanticCtes: String = {
+    val (chain, cFinal) = duckIvfCtes()
     val ladder = (0 to 15).map(n =>
-      s"WHEN csize <= ${maxCellSize.toLong << n} THEN $n").mkString(" ")
+      s"WHEN csize <= ${MaxCellSize.toLong << n} THEN $n").mkString(" ")
     s"""$chain,
       |${duckIvfAf(cFinal)},
       |${duckLshKeys(16, 0, "sub16")},
@@ -1525,7 +1541,7 @@ object Similarity {
       |  SELECT cell, subcell, vec_id, qe FROM (
       |    SELECT *, row_number() OVER (PARTITION BY cell, subcell
       |                                 ORDER BY vec_id) AS rk
-      |    FROM split) WHERE rk <= $maxAnchors),
+      |    FROM split) WHERE rk <= $MaxAnchors),
       |spairs AS MATERIALIZED (
       |  SELECT keep_cand, dup_id FROM (
       |    SELECT a.vec_id AS keep_cand, b.vec_id AS dup_id,
@@ -1533,7 +1549,7 @@ object Similarity {
       |    FROM anch a JOIN split b
       |      ON a.cell = b.cell AND a.subcell = b.subcell
       |     AND a.vec_id < b.vec_id)
-      |  WHERE dot_q >= $thresholdQ)""".stripMargin
+      |  WHERE dot_q >= ${dotThreshold(SemanticMinCosine)})""".stripMargin
   }
 
   /** The generated Lloyd-replay oracle for the raw assignment frame —
@@ -1541,7 +1557,7 @@ object Similarity {
     * q_ivf_assign_frozen (identical result by construction).
     */
   private lazy val ivfAssignSql: String = {
-    val (chain, cFinal) = duckIvfCtes(16, 2)
+    val (chain, cFinal) = duckIvfCtes()
     s"""WITH $chain,
       |af AS (
       |  SELECT vec_id, cell, dot_q FROM (
@@ -1554,9 +1570,8 @@ object Similarity {
   }
 
   val oracles: Map[String, String] = Map(
-    "q_semantic_dedup" -> {
-      val t = (0.3 * 1e12).toLong // the registered demo threshold
-      s"""WITH ${duckSemanticCtes(t, 256, 256)},
+    "q_semantic_dedup" ->
+      s"""WITH $duckSemanticCtes,
         |k1 AS MATERIALIZED (
         |  SELECT dup_id AS vec_id, min(keep_cand) AS keeper
         |  FROM spairs GROUP BY dup_id),
@@ -1566,11 +1581,9 @@ object Similarity {
         |k4 AS (
         |  SELECT x.vec_id, coalesce(y.keeper, x.keeper) AS keeper
         |  FROM k2 x LEFT JOIN k2 y ON x.keeper = y.vec_id),
-        |${duckKeeperTail("k4")}""".stripMargin
-    },
-    "q_semantic_components" -> {
-      val t = (0.3 * 1e12).toLong
-      s"""WITH RECURSIVE ${duckSemanticCtes(t, 256, 256)},
+        |${duckKeeperTail("k4")}""".stripMargin,
+    "q_semantic_components" ->
+      s"""WITH RECURSIVE $duckSemanticCtes,
         |se AS (SELECT keep_cand AS a, dup_id AS b FROM spairs
         |       UNION ALL SELECT dup_id, keep_cand FROM spairs),
         |sreach AS (
@@ -1584,16 +1597,15 @@ object Similarity {
         |  FROM (SELECT DISTINCT a AS vec_id FROM se) n
         |  LEFT JOIN sreach r ON r.a = n.vec_id
         |  GROUP BY n.vec_id),
-        |${duckKeeperTail("scomp")}""".stripMargin
-    },
-    "q_ann_ivf" -> duckAnnIvfSql(10, 5, 16, 4, 2, 1),
-    "q_ann_ivf_sampled" -> duckAnnIvfSql(10, 5, 16, 4, 2, IvfTrainModulus),
-    "q_ann_lsh" -> duckAnnLshSql(10, 5, 4, 0),
-    "q_ann_lsh_mp" -> duckAnnLshSql(10, 5, 6, 2),
+        |${duckKeeperTail("scomp")}""".stripMargin,
+    "q_ann_ivf" -> duckAnnIvfSql(IvfTrainAll),
+    "q_ann_ivf_sampled" -> duckAnnIvfSql(IvfTrainModulus),
+    "q_ann_lsh" -> duckAnnLshSql(LshBits, 0),
+    "q_ann_lsh_mp" -> duckAnnLshSql(MultiProbeBits, MultiProbeHamming),
     "q_embedding_neardups" -> {
-      val t = (0.3 * 1e12).toLong // the registered demo threshold
+      val t = dotThreshold(SemanticMinCosine)
       s"""WITH $duckQvCte,
-        |${duckLshKeys(6)},
+        |${duckLshKeys(NearDupBits)},
         |qb AS (SELECT k.vec_id, k.key, v.qe
         |       FROM keys k JOIN qv v USING (vec_id))
         |SELECT vec_a, vec_b, dot_q FROM (
@@ -1604,7 +1616,7 @@ object Similarity {
         |ORDER BY vec_a, vec_b""".stripMargin
     },
     "q_embedding_neardups_or" -> {
-      val t = (0.3 * 1e12).toLong
+      val t = dotThreshold(SemanticMinCosine)
       def table(keys: String) =
         s"""SELECT vec_a, vec_b, dot_q FROM (
            |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -1614,21 +1626,17 @@ object Similarity {
            |  JOIN qv qb2 ON qb2.vec_id = b.vec_id)
            |WHERE dot_q >= $t""".stripMargin
       s"""WITH $duckQvCte,
-        |${duckLshKeys(6, 0, "k0")},
-        |${duckLshKeys(6, 8, "k8")}
+        |${OrPlaneOffsets.map(o => duckLshKeys(NearDupBits, o, s"k$o")).mkString(",\n")}
         |SELECT DISTINCT vec_a, vec_b, dot_q FROM (
-        |${table("k0")}
-        |UNION ALL
-        |${table("k8")})
+        |${OrPlaneOffsets.map(o => table(s"k$o")).mkString("\nUNION ALL\n")})
         |ORDER BY vec_a, vec_b""".stripMargin
     },
     "q_semantic_incremental" -> {
-      val t = (0.3 * 1e12).toLong
-      val M = 4
+      val t = dotThreshold(SemanticMinCosine)
       s"""WITH $duckQvCte,
-        |${duckLshKeys(6)},
+        |${duckLshKeys(NearDupBits)},
         |qb AS (SELECT k.vec_id, k.key, v.qe,
-        |              ((k.vec_id % $M) + $M) % $M = 0 AS is_known
+        |              ${Dedup.duckIsKnown("k.vec_id")} AS is_known
         |       FROM keys k JOIN qv v USING (vec_id)),
         |hits AS (
         |  SELECT vec_id, corpus_id, dot_q FROM (
@@ -1648,14 +1656,14 @@ object Similarity {
         |       CAST(b.corpus_id IS NOT NULL AS INT) AS dropped
         |FROM embeddings e
         |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (vec_id)
-        |WHERE ((e.vec_id % $M) + $M) % $M <> 0
+        |WHERE NOT ${Dedup.duckIsKnown("e.vec_id")}
         |ORDER BY e.vec_id""".stripMargin
     },
     "q_semantic_decontam" -> {
-      val t = (0.3 * 1e12).toLong
+      val t = dotThreshold(SemanticMinCosine)
       val M = Decontam.DefaultBenchModulus
       s"""WITH $duckQvCte,
-        |${duckLshKeys(6)},
+        |${duckLshKeys(NearDupBits)},
         |qb AS (SELECT k.vec_id, k.key, v.qe,
         |              ((k.vec_id % $M) + $M) % $M = 0 AS is_bench
         |       FROM keys k JOIN qv v USING (vec_id)),
@@ -1681,19 +1689,17 @@ object Similarity {
         |ORDER BY e.vec_id""".stripMargin
     },
     "q_ann_tuning" -> {
-      val bitsGrid = Seq(4, 6, 8, 10, 12)
-      val maxBits = bitsGrid.max
-      val gridVals = (for (b <- bitsGrid.sorted; h <- 0 to 2) yield {
+      val gridVals = (for (b <- AnnTuningBits; h <- 0 to AnnTuningMaxProbe) yield {
         val bp = 1L + (if (h >= 1) b.toLong else 0L) +
           (if (h >= 2) b.toLong * (b - 1) / 2 else 0L)
         s"($b, $h, $bp)"
       }).mkString(", ")
       s"""WITH $duckQvCte,
-        |${duckLshKeys(maxBits)},
+        |${duckLshKeys(AnnTuningBits.max)},
         |grid(b, h, bp) AS (VALUES $gridVals),
         |xo AS MATERIALIZED (
         |  SELECT xor(e.key, q.key) AS x
-        |  FROM keys e JOIN (SELECT * FROM keys WHERE vec_id < 10) q
+        |  FROM keys e JOIN (SELECT * FROM keys WHERE vec_id < $AnnQueries) q
         |    ON e.vec_id <> q.vec_id),
         |cost AS (
         |  SELECT g.b, g.h, g.bp,
@@ -1727,7 +1733,7 @@ object Similarity {
         |ORDER BY n_bits, probe_hamming""".stripMargin
     },
     "q_embedding_clusters" -> {
-      val (chain, cFinal) = duckIvfCtes(16, 2)
+      val (chain, cFinal) = duckIvfCtes()
       s"""WITH $chain,
         |${duckIvfAf(cFinal)}
         |SELECT a.cell, count(*) AS n_vectors,
@@ -1738,28 +1744,28 @@ object Similarity {
         |GROUP BY a.cell ORDER BY a.cell""".stripMargin
     },
     "q_cluster_sample" -> {
-      val (chain, cFinal) = duckIvfCtes(16, 2)
+      val (chain, cFinal) = duckIvfCtes()
       s"""WITH $chain,
         |${duckIvfAf(cFinal)}
         |SELECT vec_id, cell, rk FROM (
         |  SELECT vec_id, cell,
         |         row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rk
-        |  FROM af) WHERE rk <= 32
+        |  FROM af) WHERE rk <= $SamplePerCell
         |ORDER BY cell, rk""".stripMargin
     },
     "q_ivf_tuning" -> {
-      val (chain, cFinal) = duckIvfCtes(16, 2)
+      val (chain, cFinal) = duckIvfCtes()
       s"""WITH $chain,
         |${duckIvfAf(cFinal)},
         |qrk AS MATERIALIZED (
         |  SELECT v.vec_id AS query_id, c.cell,
         |         row_number() OVER (PARTITION BY v.vec_id ORDER BY
         |           ${duckDot("v.qe", "c.qc")} DESC, c.cell) AS rk
-        |  FROM qv v CROSS JOIN $cFinal c WHERE v.vec_id < 10),
+        |  FROM qv v CROSS JOIN $cFinal c WHERE v.vec_id < $AnnQueries),
         |sizes AS (SELECT cell, count(*) AS csize FROM af GROUP BY cell),
         |own AS (SELECT vec_id AS query_id, cell AS own_cell
-        |        FROM af WHERE vec_id < 10),
-        |grid AS (SELECT unnest(range(1, 17)) AS p),
+        |        FROM af WHERE vec_id < $AnnQueries),
+        |grid AS (SELECT unnest(range(1, ${IvfCells + 1})) AS p),
         |cost AS (
         |  SELECT g.p,
         |         CAST(sum(CASE WHEN r.rk <= g.p THEN s.csize ELSE 0 END)
@@ -1779,7 +1785,7 @@ object Similarity {
         |           AS hit
         |  FROM truthrk CROSS JOIN grid g GROUP BY g.p),
         |nn AS (SELECT count(*) AS n_corpus,
-        |              sum(CASE WHEN vec_id < 10 THEN 1 ELSE 0 END)
+        |              sum(CASE WHEN vec_id < $AnnQueries THEN 1 ELSE 0 END)
         |                AS n_queries FROM qv)
         |SELECT CAST(cost.p AS INT) AS n_probe,
         |       CASE WHEN rec.n_truth > 0
@@ -1795,8 +1801,7 @@ object Similarity {
         |FROM cost JOIN rec ON rec.p = cost.p CROSS JOIN nn
         |ORDER BY n_probe""".stripMargin
     },
-    "q_ann_bow" ->
-      duckAnnIvfSql(10, 5, 16, 4, 2, 1, qvCte = duckBowQvCte(Dsir.DefaultNBuckets)),
+    "q_ann_bow" -> duckAnnIvfSql(IvfTrainAll, duckBowQvCte),
     "q_ivf_assign" -> ivfAssignSql,
     // the frozen form re-derives the SAME frame through a disk
     // round-trip of the codebook, so it shares the oracle verbatim —
@@ -1812,13 +1817,13 @@ object Similarity {
          |               AS bucket
          |      FROM documents WHERE text IS NOT NULL)
          |GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-    "q_ann_brute_force" -> duckAnnBruteSql(10, 5),
+    "q_ann_brute_force" -> duckAnnBruteSql,
     "q_ann_recall" -> {
       val methods = Seq(
-        "ivf" -> duckAnnIvfSql(10, 5, 16, 4, 2, 1),
-        "ivf_sampled" -> duckAnnIvfSql(10, 5, 16, 4, 2, IvfTrainModulus),
-        "lsh" -> duckAnnLshSql(10, 5, 4, 0),
-        "lsh_multiprobe" -> duckAnnLshSql(10, 5, 6, 2))
+        "ivf" -> duckAnnIvfSql(IvfTrainAll),
+        "ivf_sampled" -> duckAnnIvfSql(IvfTrainModulus),
+        "lsh" -> duckAnnLshSql(LshBits, 0),
+        "lsh_multiprobe" -> duckAnnLshSql(MultiProbeBits, MultiProbeHamming))
       val mCtes = methods.map { case (name, sql) =>
         s"""m_$name AS (SELECT query_id, neighbor_id FROM (
            |$sql) sub_$name),
@@ -1834,7 +1839,7 @@ object Similarity {
       }.mkString("\nUNION ALL\n")
       s"""WITH truth AS MATERIALIZED (
         |  SELECT query_id, neighbor_id FROM (
-        |${duckAnnBruteSql(10, 5)}) bf),
+        |$duckAnnBruteSql) bf),
         |tn AS (SELECT CAST(count(*) AS DOUBLE) AS n_truth FROM truth),
         |$mCtes
         |$rows

@@ -48,6 +48,20 @@ object TextAnalytics {
           size(toks), 4))
   }
 
+  /** The registered quality gate: at least `QualityMinTokens` tokens and
+    * a rounded stopword ratio of at least `QualityMinRatio`. Every gate
+    * default and the DuckDB predicate [[duckQualityOk]] read these.
+    */
+  val QualityMinTokens = 10
+  val QualityMinRatio = 0.01
+
+  /** The registered deterministic split: buckets below `SplitTrainPct`
+    * are train, the next `SplitValPct` are val, the rest test. Read by
+    * [[splitLabelExpr]] and its DuckDB twin [[duckSplitCase]].
+    */
+  val SplitTrainPct = 80
+  val SplitValPct = 10
+
   /** THE quality gate as one shared predicate: 1 iff the doc passes,
     * 0 otherwise — including NULL text, which must FAIL explicitly (a
     * null-propagating boolean cast would let null rows sail past
@@ -61,7 +75,7 @@ object TextAnalytics {
     * retained column-algebra spelling, equality spec-pinned.
     */
   private[graft] def qualityOk(text: Column,
-      minTokens: Int = 10, minRatio: Double = 0.01): Column =
+      minTokens: Int = QualityMinTokens, minRatio: Double = QualityMinRatio): Column =
     coalesce(
       graft.functions.TextHashes.qualityVerdictCol(
         text, minTokens, minRatio, stopwords), lit(0))
@@ -70,10 +84,9 @@ object TextAnalytics {
     * independent reference implementation the fused expression is
     * spec-pinned against (the [[winnowFpArrayAlgebra]] discipline).
     */
-  private[graft] def qualityOkAlgebra(text: Column,
-      minTokens: Int = 10, minRatio: Double = 0.01): Column =
+  private[graft] def qualityOkAlgebra(text: Column): Column =
     coalesce(
-      (size(tokens(text)) >= minTokens && stopwordRatio(text) >= minRatio)
+      (size(tokens(text)) >= QualityMinTokens && stopwordRatio(text) >= QualityMinRatio)
         .cast("int"), lit(0))
 
   /** The deterministic split bucket/label of [[hashSplitDocs]] as shared
@@ -83,11 +96,10 @@ object TextAnalytics {
   private[operators] def splitBucket(docId: Column): Column =
     pmod(pmod(docId, lit(2147483648L)) * lit(2654435761L), lit(100))
 
-  private[graft] def splitLabelExpr(docId: Column,
-      trainPct: Int, valPct: Int): Column = {
+  private[graft] def splitLabelExpr(docId: Column): Column = {
     val b = splitBucket(docId)
-    when(b < trainPct, "train")
-      .when(b < trainPct + valPct, "val")
+    when(b < SplitTrainPct, "train")
+      .when(b < SplitTrainPct + SplitValPct, "val")
       .otherwise("test")
   }
 
@@ -544,13 +556,12 @@ object TextAnalytics {
     * Registered as the per-(lang, split) count rollup (small deterministic
     * output); [[hashSplitDocs]] is the per-document operator.
     */
-  def hashSplitDocs(spark: SparkSession, dir: String,
-      trainPct: Int = 80, valPct: Int = 10): DataFrame =
+  def hashSplitDocs(spark: SparkSession, dir: String): DataFrame =
     // fold the id to 31 bits BEFORE the Knuth multiply: the raw product
     // overflows Long past doc_id ≈ 3.47e9 (ANSI mode throws; the DuckDB
     // twin errors the same way) — the repo-wide 31-bit rule applies here
     Tables.documents(spark, dir)
-      .withColumn("split", splitLabelExpr(col("doc_id"), trainPct, valPct))
+      .withColumn("split", splitLabelExpr(col("doc_id")))
 
   /** Per-(lang, split) sizes of [[hashSplitDocs]] (the oracle-checkable
     * rollup). Embarrassingly parallel scan + one small-key shuffle.
@@ -641,7 +652,7 @@ object TextAnalytics {
     */
   def sampleComposition(spark: SparkSession, dir: String): DataFrame = {
     val lab = Tables.documents(spark, dir)
-      .select(col("doc_id"), splitLabelExpr(col("doc_id"), 80, 10).as("split"))
+      .select(col("doc_id"), splitLabelExpr(col("doc_id")).as("split"))
       .localCheckpoint(eager = false) // three consumers, one scan
     val corpus = lab.groupBy("split").agg(count(lit(1)).as("n_corpus"))
     def comp(sample: DataFrame, name: String): DataFrame =
@@ -1670,11 +1681,10 @@ object TextAnalytics {
     */
   def splitLeakage(spark: SparkSession, dir: String,
       k: Int = WinnowK, w: Int = WinnowW, minShared: Int = WinnowMinShared,
-      trainPct: Int = 80, valPct: Int = 10,
       maxDf: Int = WinnowMaxDf): DataFrame = {
     val splits = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        splitLabelExpr(col("doc_id"), trainPct, valPct).as("split"))
+        splitLabelExpr(col("doc_id")).as("split"))
     winnowMatches(spark, dir, k, w, minShared, maxDf)
       .join(splits.select(col("doc_id").as("doc_a"), col("split").as("split_a")), "doc_a")
       .join(splits.select(col("doc_id").as("doc_b"), col("split").as("split_b")), "doc_b")
@@ -2177,9 +2187,7 @@ object TextAnalytics {
          |       $duckStopRatio AS stopword_ratio,
          |       floor(CAST(length(text) AS DOUBLE) / len(string_split(text, ' '))
          |             * 10000 + 0.5) / 10000.0 AS avg_token_len,
-         |       CASE WHEN len(string_split(text, ' ')) >= 10
-         |            AND $duckStopRatio >= 0.01 THEN 1 ELSE 0 END
-         |         AS quality_ok
+         |       CASE WHEN $duckQualityOk THEN 1 ELSE 0 END AS quality_ok
          |FROM documents ORDER BY doc_id""".stripMargin,
     "q_gopher_rules" ->
       s"""WITH $duckGopherCte
@@ -2469,10 +2477,19 @@ object TextAnalytics {
 
   private[operators] def duckIdFold: String = duckPmod31("doc_id")
 
-  /** DuckDB twin of [[splitLabelExpr]] at the default 80/10 percentages. */
+  /** DuckDB twin of [[splitLabelExpr]]. */
   private[operators] def duckSplitCase: String =
-    s"CASE WHEN ($duckIdFold * 2654435761) % 100 < 80 THEN 'train' " +
-      s"WHEN ($duckIdFold * 2654435761) % 100 < 90 THEN 'val' ELSE 'test' END"
+    s"CASE WHEN ($duckIdFold * 2654435761) % 100 < $SplitTrainPct THEN 'train' " +
+      s"WHEN ($duckIdFold * 2654435761) % 100 < ${SplitTrainPct + SplitValPct} " +
+      "THEN 'val' ELSE 'test' END"
+
+  /** DuckDB twin of [[qualityOk]] at the registered thresholds, as a
+    * predicate over the `text` column (NULL text is NULL, which every
+    * `CASE WHEN` reads as a failure).
+    */
+  private[operators] def duckQualityOk: String =
+    s"len(string_split(text, ' ')) >= $QualityMinTokens " +
+      s"AND $duckStopRatio >= $QualityMinRatio"
 
   /** DuckDB twin of [[stopwordRatio]]. */
   private[operators] def duckStopRatio: String =

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager}
+import java.sql.DriverManager
 
 import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
 import org.apache.spark.sql.functions._
@@ -14,76 +14,20 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * `foreachBatch`/`ForeachWriter` code — sink I/O runs partition-parallel
   * on executors (unlike the reference's single-threaded driver loop in
   * `flink-jobs/redis_sink.py:131-140`, a weakness SURVEY §3 E2 calls out).
+  * The JDBC upsert is the dialect-portable UPDATE-then-INSERT pair
+  * ([[jdbcUpsertBatchPortable]]), which runs on Postgres as well as on
+  * the embedded Derby every live spec connects to.
   */
 object Sinks {
-
-  /** Generate the PostgreSQL upsert statement the JDBC batch writer
-    * executes per row batch: INSERT … ON CONFLICT (pk) DO UPDATE
-    * (`events_postgres_sink.sql:37-57` buffered-upsert semantics).
-    */
-  def upsertSql(table: String, columns: Seq[String], pk: Seq[String]): String = {
-    val collist = columns.mkString(", ")
-    val placeholders = columns.map(_ => "?").mkString(", ")
-    val nonPk = columns.filterNot(pk.contains)
-    val action =
-      if (nonPk.isEmpty) "DO NOTHING" // all-PK table: empty SET is a syntax error
-      else "DO UPDATE SET " + nonPk.map(c => s"$c = EXCLUDED.$c").mkString(", ")
-    s"INSERT INTO $table ($collist) VALUES ($placeholders) " +
-      s"ON CONFLICT (${pk.mkString(", ")}) $action"
-  }
-
-  /** Streaming JDBC upsert via foreachBatch: each micro-batch is written
-    * partition-parallel with addBatch/executeBatch flushes every
-    * `batchSize` rows — the reference's 1000-row/3 s buffered flush
-    * (`events_postgres_sink.sql:55-56`) maps to JDBC batch size + trigger
-    * interval.
-    */
-  def jdbcUpsertStream(
-      decoded: DataFrame,
-      url: String,
-      table: String,
-      pk: Seq[String],
-      checkpointDir: String,
-      batchSize: Int = 1000): DataStreamWriter[Row] = {
-    val columns = decoded.columns.toSeq
-    val sql = upsertSql(table, columns, pk)
-    decoded.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { rows: Iterator[Row] =>
-          val conn = DriverManager.getConnection(url)
-          try upsertPartition(conn, sql, columns.size, rows, batchSize)
-          finally conn.close()
-        }
-      }
-  }
-
-  private def upsertPartition(conn: Connection, sql: String, nCols: Int,
-      rows: Iterator[Row], batchSize: Int): Unit = {
-    conn.setAutoCommit(false)
-    val st = conn.prepareStatement(sql)
-    var n = 0
-    rows.foreach { r =>
-      var i = 0
-      while (i < nCols) { st.setObject(i + 1, r.get(i)); i += 1 }
-      st.addBatch()
-      n += 1
-      if (n % batchSize == 0) st.executeBatch()
-    }
-    st.executeBatch()
-    conn.commit()
-    st.close()
-  }
 
   /** Dialect-portable two-statement upsert (UPDATE, then INSERT if no row
     * matched) — the classic upsert for dialects without `INSERT … ON
     * CONFLICT` (Postgres-only syntax; Derby/older engines need MERGE or
     * this pair). Idempotent under the single-writer-per-key partitioning
     * Spark gives us (each PK lands in one task); concurrent writers on the
-    * SAME key would need the native atomic form. Requires at least one
-    * non-PK column (an all-PK table has nothing to UPDATE — use the
-    * ON CONFLICT DO NOTHING path for those).
+    * SAME key would need a native atomic form (`ON CONFLICT`/MERGE).
+    * Requires at least one non-PK column (an all-PK table has nothing to
+    * UPDATE).
     *
     * Returns (updateSql, insertSql); bind order: UPDATE takes non-PK
     * values then PK values, INSERT takes all columns in order.
@@ -98,17 +42,16 @@ object Sinks {
     (update, insert)
   }
 
-  /** Batch PK-upsert over any JDBC backend via [[updateInsertSql]] —
-    * the dialect-portable twin of [[jdbcUpsertBatch]], exercised end-to-end
-    * against embedded Derby in PipelineSpec (real driver, real bindings,
-    * real PK semantics — the round-1 gap was that the upsert writers had
-    * SQL goldens only, never a live connection).
+  /** S10: batch PK-upsert over any JDBC backend via [[updateInsertSql]]
+    * (`feature_batch_update.py:116-139` PK-upserts features_20m),
+    * exercised end-to-end against embedded Derby in PipelineSpec (real
+    * driver, real bindings, real PK semantics).
     *
     * Rows are repartitioned on the PK first: the UPDATE-then-INSERT pair
     * is only race-free when every occurrence of a key runs in ONE task —
     * two tasks holding the same absent key would both see updateCount 0
-    * and both INSERT. (The native ON CONFLICT path has no such race; this
-    * is the price of portability.) Round trips are batched: a chunk of
+    * and both INSERT. (A native ON CONFLICT statement has no such race;
+    * this is the price of portability.) Round trips are batched: a chunk of
     * UPDATEs goes out via executeBatch, and only the rows whose update
     * count came back 0 pay a second (batched) INSERT round trip.
     */
@@ -168,10 +111,11 @@ object Sinks {
     }
   }
 
-  /** Streaming twin of [[jdbcUpsertBatchPortable]]: every micro-batch is
-    * PK-upserted through the dialect-portable writer. Same at-least-once +
-    * idempotent-upsert contract as [[jdbcUpsertStream]]; proven live
-    * against embedded Derby (redelivery included) in PipelineSpec.
+  /** S5: streaming twin of [[jdbcUpsertBatchPortable]] — every
+    * micro-batch is PK-upserted through the dialect-portable writer: the
+    * reference's at-least-once delivery + idempotent PK upsert
+    * (`events_postgres_sink.sql:37-57`); proven live against embedded
+    * Derby (redelivery included) in PipelineSpec.
     */
   def jdbcUpsertStreamPortable(
       decoded: DataFrame,
@@ -198,21 +142,6 @@ object Sinks {
       base.option("partitionColumn", c).option("lowerBound", lo.toString)
         .option("upperBound", hi.toString).option("numPartitions", n.toString)
     }.load()
-  }
-
-  /** S10: batch JDBC upsert (`feature_batch_update.py:116-139` PK-upserts
-    * features_20m) — same ON CONFLICT writer as the streaming sink, run
-    * over a bounded frame partition-parallel.
-    */
-  def jdbcUpsertBatch(df: DataFrame, url: String, table: String, pk: Seq[String],
-      batchSize: Int = 1000): Unit = {
-    val columns = df.columns.toSeq
-    val sql = upsertSql(table, columns, pk)
-    df.foreachPartition { rows: Iterator[Row] =>
-      val conn = DriverManager.getConnection(url)
-      try upsertPartition(conn, sql, columns.size, rows, batchSize)
-      finally conn.close()
-    }
   }
 
   /** Key-value hash sink abstraction — the Redis `HSET` contract
@@ -292,7 +221,10 @@ object Sinks {
     * `notebooks/preprocess.ipynb` cell 11): Hive-style partition dirs,
     * rows sorted by event time within each file so downstream replay reads
     * are sequential. `repartition(partitionCols)` gives one shuffle;
-    * `sortWithinPartitions` avoids a global sort.
+    * `sortWithinPartitions` avoids a global sort. It sorts by the
+    * partition columns first: the partitioned file writer requires that
+    * order, and would otherwise re-sort each task by the partition
+    * columns alone and lose the time order within a file.
     */
   def writePartitionedSorted(
       df: DataFrame,
@@ -300,7 +232,7 @@ object Sinks {
       partitionCols: Seq[String],
       sortCol: String): Unit =
     df.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions(sortCol)
+      .sortWithinPartitions((partitionCols :+ sortCol).map(col): _*)
       .write
       .partitionBy(partitionCols: _*)
       .mode("overwrite")

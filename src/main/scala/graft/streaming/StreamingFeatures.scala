@@ -446,11 +446,11 @@ object StreamingFeatures {
   /** Streaming curation gate — the streaming twin of
     * [[graft.operators.Curation.curateDocs]]'s decision chain: the
     * `quality → dedup → split` tail of [[docsHygieneStages]] at its
-    * default thresholds — quality gate (the SAME shared TextAnalytics
-    * formulas, null text fails), then in-horizon content dedup
-    * ([[dedupDocsStream]]), then the map-side split label (doc_id-only,
-    * same shared expression). Other thresholds: fold that tail of the
-    * list yourself.
+    * default horizon — quality gate (the SAME shared TextAnalytics
+    * formula and registered thresholds, null text fails), then in-horizon
+    * content dedup ([[dedupDocsStream]]), then the map-side split label
+    * (doc_id-only, same shared expression). Another horizon: fold that
+    * tail of the list yourself.
     * Append semantics: survivors flow through with their split; dropped
     * docs simply don't emit (a stream has no place for drop_reason rows
     * that may later be contradicted). First-occurrence-wins inside the
@@ -520,8 +520,6 @@ object StreamingFeatures {
     */
   def docsHygieneStages(benchNgrams: DataFrame,
       horizon: String = "10 minutes",
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
-      trainPct: Int = 80, valPct: Int = 10,
       n: Int = graft.operators.Decontam.DefaultN,
       minFrac: Double = graft.operators.Decontam.DefaultMinFrac)
       : Seq[(String, DataFrame => DataFrame)] = {
@@ -543,11 +541,9 @@ object StreamingFeatures {
         overlapGate(docs, "__decon", graft.functions.TextHashes
           .shingleSetHitsCol(col("text"), n, benchShingles), minFrac)
       }),
-      ("quality", _.filter(
-        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)),
+      ("quality", _.filter(TextAnalytics.qualityOk(col("text")) === 1)),
       ("dedup", dedupDocsStream(_, horizon)),
-      ("split", _.withColumn("split",
-        TextAnalytics.splitLabelExpr(col("doc_id"), trainPct, valPct))))
+      ("split", _.withColumn("split", TextAnalytics.splitLabelExpr(col("doc_id")))))
   }
 
   /** The whole [[docsHygieneStages]] list at its default thresholds
@@ -712,14 +708,12 @@ object StreamingFeatures {
   def admissionStages(spark: org.apache.spark.sql.SparkSession,
       artifactsDir: String,
       maxAvgNlpMicros: Long, minWeightMicros: Long, maxTokens: Long,
-      minTokens: Int = 10, minStopwordRatio: Double = 0.01,
       decontamMinFrac: Double = graft.operators.Decontam.DefaultMinFrac,
       winnowMinShared: Int = graft.operators.TextAnalytics.WinnowMinShared)
       : Seq[(String, DataFrame => DataFrame)] = {
     import graft.operators.{Artifacts, TextAnalytics}
     Seq(
-      ("quality", _.filter(
-        TextAnalytics.qualityOk(col("text"), minTokens, minStopwordRatio) === 1)),
+      ("quality", _.filter(TextAnalytics.qualityOk(col("text")) === 1)),
       ("bloom", { docs =>
         val (bloom, numBits, k) = Artifacts.loadBloom(spark, s"$artifactsDir/bloom")
         bloomDecontamGateStreamLoaded(docs, bloom, numBits, k, minFrac = decontamMinFrac)
@@ -912,13 +906,20 @@ object StreamingFeatures {
     */
   def spanScrubGateStream(docs: DataFrame, dupGrams: DataFrame,
       n: Int = graft.operators.Dedup.DefaultCoverageN): DataFrame = {
-    val census: Array[Long] = dupGrams.select(col("gh")).distinct()
-      .agg(sort_array(collect_set("gh")).as("c"))
-      .head().getSeq[Long](0).toArray
-    val bc = docs.sparkSession.sparkContext.broadcast(census)
+    val bc = broadcastCensus(dupGrams, "gh")
     docs.withColumn("text",
       graft.functions.TextHashes.spanScrubCol(col("text"), n, bc))
   }
+
+  /** The distinct values of `census`'s Long column `c`, collected ONCE
+    * as a sorted array and broadcast — the frozen census the exact-census
+    * gates probe by O(log s) binary search.
+    */
+  private def broadcastCensus(census: DataFrame,
+      c: String): org.apache.spark.broadcast.Broadcast[Array[Long]] =
+    census.sparkSession.sparkContext.broadcast(census.select(col(c)).distinct()
+      .agg(sort_array(collect_set(c)).as("c"))
+      .head().getSeq[Long](0).toArray)
 
   /** The pre-r17 join + sliced-`exists` spelling of
     * [[spanScrubGateStream]] — the retained reference implementation
@@ -977,10 +978,7 @@ object StreamingFeatures {
     // int-cast-double division and portable rounding as the algebra
     // spelling below (retained, equality spec-pinned). NULL text packs
     // to NULL → dup_frac NULL → PASS (the content-neutral rule).
-    val census: Array[Long] = dupGrams.select(col("gh")).distinct()
-      .agg(sort_array(collect_set("gh")).as("c"))
-      .head().getSeq[Long](0).toArray
-    val bc = docs.sparkSession.sparkContext.broadcast(census)
+    val bc = broadcastCensus(dupGrams, "gh")
     val packed = graft.functions.TextHashes.ngramCensusStatsCol(col("text"), n, bc)
     docs
       .withColumn("__ncs", packed)
@@ -1043,9 +1041,10 @@ object StreamingFeatures {
     * (the documented stream+batch split).
     */
   def semanticGateStream(vecs: DataFrame, corpusEmb: DataFrame,
-      minCosine: Double = 0.95, nBits: Int = 8): DataFrame = {
+      minCosine: Double = graft.operators.Similarity.SemanticMinCosine,
+      nBits: Int = graft.operators.Similarity.NearDupBits): DataFrame = {
     import graft.functions.VectorFunctions
-    val thresholdQ = (minCosine * 1e12).toLong
+    val thresholdQ = graft.operators.Similarity.dotThreshold(minCosine)
     val buckets = corpusEmb
       .withColumn("c_qe", VectorFunctions.quantizeCol(col("embedding")))
       .withColumn("bucket", VectorFunctions.lshKeyCol(col("embedding"), nBits))
@@ -1249,10 +1248,7 @@ object StreamingFeatures {
     // join (the r16 attribution's largest remaining stage marginal).
     // NULL text has no fingerprints → 0 hits → PASS (coalesce), the
     // content-neutral rule the join spelling kept via the empty array.
-    val census: Array[Long] = frozenFps.select(col("fp")).distinct()
-      .agg(sort_array(collect_set("fp")).as("c"))
-      .head().getSeq[Long](0).toArray
-    val bc = docs.sparkSession.sparkContext.broadcast(census)
+    val bc = broadcastCensus(frozenFps, "fp")
     docs.filter(coalesce(
       graft.functions.TextHashes.winnowCensusHitsCol(col("text"), k, w, bc),
       lit(0)) < minShared)

@@ -128,4 +128,19 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(Bench.prefixes(graft.operators.Curation.completeStages(spark, "unused"))
       .map(_._1).mkString(",") == "text,neardup,complete")
   }
+
+  test("the curation attribution's whole stage list is the registered q_curation_complete plan") {
+    // Bench times completeStages at its defaults; folded whole over the
+    // documents table it must answer exactly what the registered query
+    // answers, or the attribution times a different plan
+    val sf = TestSpark.sf
+    val folded = Function.chain(graft.operators.Curation.completeStages(spark, sf)
+      .map(_._2))(Tables.documents(spark, sf)).collect().toSeq
+    val registered = SparkEntry.queries("q_curation_complete")(spark, sf).collect().toSeq
+    // the semantic stage must fire, or a threshold drift would not show
+    assert(registered.exists(_.getAs[String]("drop_reason") == "semantic"))
+    val differing = folded.zip(registered).count { case (a, b) => a != b }
+    assert(folded.length == registered.length && differing == 0,
+      s"$differing of ${registered.length} rows differ")
+  }
 }

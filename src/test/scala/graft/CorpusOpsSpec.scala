@@ -1445,13 +1445,13 @@ class CorpusOpsSpec extends AnyFunSuite {
     Seq((1L, unit(0), 0), (2L, unit(0), 0), (3L, unit(1), 0), (4L, unit(2), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    refuses(Similarity.embeddingNearDups(spark, dir, minCosine = 0.9,
+    refuses(Similarity.embeddingNearDups(spark, dir, minCosine = 0.9, nBits = 8,
       pairBudget = 0L), "semanticDedup")
     refuses(Similarity.embeddingNearDupsOr(spark, dir, minCosine = 0.9,
       pairBudget = 0L), "semanticDedup")
     // default budget: all three emit the fixture's pairs untouched
     assert(Dedup.simhashPairs(spark, dir).count() >= 1)
-    assert(Similarity.embeddingNearDups(spark, dir, minCosine = 0.9).count() >= 1)
+    assert(Similarity.embeddingNearDups(spark, dir, minCosine = 0.9, nBits = 8).count() >= 1)
     assert(Similarity.embeddingNearDupsOr(spark, dir, minCosine = 0.9).count() >= 1)
   }
 

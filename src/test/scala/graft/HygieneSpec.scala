@@ -524,7 +524,7 @@ class HygieneSpec extends AnyFunSuite {
       (12L, unit(2), "l"), (13L, unit(2), "l"))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = Curation.curateComplete(spark, dir, nCells = 2)
+    val out = Curation.curateComplete(spark, dir, minCosine = 0.95, nCells = 2)
       .select("doc_id", "drop_reason", "kept")
       .as[(Long, Option[String], Int)].collect().sortBy(_._1)
     assert(out.toSeq == Seq(

@@ -516,7 +516,7 @@ class OperatorSpec extends AnyFunSuite {
       (6L, unit(1), "l"))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = operators.Curation.curateWithEmbeddings(spark, dir, nCells = 2)
+    val out = operators.Curation.curateWithEmbeddings(spark, dir, minCosine = 0.95, nCells = 2)
       .select("doc_id", "drop_reason", "kept")
       .as[(Long, Option[String], Int)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(out(0L) == ((None, 1)))
@@ -750,7 +750,7 @@ class OperatorSpec extends AnyFunSuite {
     // an OR pair (union can only add)
     val single = Similarity.embeddingNearDups(spark, sf, minCosine = 0.3, nBits = 6)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val or = Similarity.embeddingNearDupsOr(spark, sf, minCosine = 0.3, nBits = 6)
+    val or = Similarity.embeddingNearDupsOr(spark, sf, minCosine = 0.3)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(single.subsetOf(or),
       s"single-table pairs must all appear in the OR set; missing ${(single diff or).take(3)}")
@@ -789,7 +789,7 @@ class OperatorSpec extends AnyFunSuite {
       "fixture must contain a twin split in table 0 but co-bucketed in table 1 (reseed if this ever fails)")
     val singleF = Similarity.embeddingNearDups(spark, dir, minCosine = 0.9, nBits = 6)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val orF = Similarity.embeddingNearDupsOr(spark, dir, minCosine = 0.9, nBits = 6)
+    val orF = Similarity.embeddingNearDupsOr(spark, dir, minCosine = 0.9)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val rescued = straddlers.filter(p => !singleF.contains(p) && orF.contains(p))
     // a straddler above threshold is invisible to table 0 by construction
@@ -998,14 +998,6 @@ class OperatorSpec extends AnyFunSuite {
         assert(math.abs(r.features(i) - expected) < 1e-6, s"doc ${r.doc_id} dim $i")
       }
     }
-  }
-
-  test("upsert SQL generation emits ON CONFLICT DO UPDATE on the PK") {
-    val sql = graft.sources.Sinks.upsertSql("features_20m",
-      Seq("uuid", "window_end", "click20m", "view20m"), Seq("uuid", "window_end"))
-    assert(sql == "INSERT INTO features_20m (uuid, window_end, click20m, view20m) " +
-      "VALUES (?, ?, ?, ?) ON CONFLICT (uuid, window_end) DO UPDATE SET " +
-      "click20m = EXCLUDED.click20m, view20m = EXCLUDED.view20m")
   }
 
   test("partitioned sorted writer produces hive layout sorted by time") {

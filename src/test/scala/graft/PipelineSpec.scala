@@ -139,6 +139,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(plats == Map(1L -> "1", 2L -> "1", 4L -> "2")) // 3 dropped, 2 repaired
   }
 
+  test("S15: toPartitionedLayout writes platform=/event_date= dirs of time-sorted, repaired rows") {
+    val out = java.nio.file.Files.createTempDirectory("layout").toString + "/events"
+    val day = 86400000L
+    // timestamp offset 2 ms decodes to 2016-06-14 04:00 UTC; + day is the 15th
+    val raw = Seq(
+      (1L, day + 500L, "1"), (1L, 40L, "1"), (1L, 2L, "1"),
+      (2L, 30L, "\\N"),  // known display id: repaired to platform 1
+      (3L, 20L, "7"),    // out of domain, unknown id: dropped
+      (4L, day + 9L, "2"), (4L, day + 3L, "2"), (4L, 10L, "2"))
+      .toDF("display_id", "timestamp", "platform")
+    operators.Preprocess.toPartitionedLayout(raw, out, knownDisplayIds = Seq(2L))
+    def dirs(p: String): Seq[String] =
+      new java.io.File(p).listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(dirs(out) == Seq("platform=1", "platform=2"))
+    for (p <- dirs(out))
+      assert(dirs(s"$out/$p") == Seq("event_date=2016-06-14", "event_date=2016-06-15"), p)
+    val back = spark.read.parquet(out)
+    assert(back.select("display_id", "platform").as[(Long, Int)].collect().sorted.toSeq ==
+      Seq((1L, 1), (1L, 1), (1L, 1), (2L, 1), (4L, 2), (4L, 2), (4L, 2)))
+    val byFile = back.select(input_file_name(), $"timestamp").as[(String, Long)]
+      .collect().groupBy(_._1).values.map(_.map(_._2).toSeq)
+    assert(byFile.nonEmpty && byFile.forall(ts => ts == ts.sorted), byFile.toString)
+  }
+
   test("E3 lifecycle: per-processingDate daily runs upserted day-by-day equal the all-days job") {
     // The reference job takes --processingDate (Airflow {{ ds }}) and
     // PK-upserts one day per run (`feature_batch_update.py:98-139`).

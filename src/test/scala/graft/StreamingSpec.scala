@@ -95,7 +95,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.keySet == Set(1L), s"expected only doc 1 to survive, got $out")
     // split label identical to the batch operator's shared expression
     val expected = spark.range(1, 2).select(graft.operators.TextAnalytics
-      .splitLabelExpr(col("id"), 80, 10).as("s")).head().getString(0)
+      .splitLabelExpr(col("id")).as("s")).head().getString(0)
     assert(out(1L) == expected)
   }
 
@@ -726,9 +726,9 @@ class StreamingSpec extends AnyFunSuite {
     val rows = StreamingFeatures.redisRows(StreamingFeatures.windowedCounts(
       StreamingFeatures.tagged(clicks.toDF.toDF("uuid", "event_time"),
         views.toDF.toDF("uuid", "event_time")), "20 minutes"))
-    val q = rows.writeStream.outputMode("append")
-      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("kvck").toString)
-      .foreach(new Sinks.KVForeachWriter(Sinks.InMemoryKV)).start()
+    val q = StreamingFeatures.toKVSink(rows, Sinks.InMemoryKV,
+      java.nio.file.Files.createTempDirectory("kvck").toString,
+      triggerInterval = "100 milliseconds").start()
     clicks.addData(("u1", ts("2016-06-14 00:01:00")))
     views.addData(("u1", ts("2016-06-14 00:02:00")), ("u1", ts("2016-06-14 00:03:00")))
     clicks.addData(("zz", ts("2016-06-14 05:00:00")))
