@@ -67,8 +67,7 @@ object Bench {
       SparkEntry.queries
         .filter { case (name, _) => selected(name) }
         .foreach { case (_, fn) =>
-          try run(fn(spark, warmupDir)) catch { case _: Throwable => () }
-          dropBlocks(spark)
+          try Materialize.scoped(run(fn(spark, warmupDir))) catch { case _: Throwable => () }
         }
     }
 
@@ -129,12 +128,11 @@ object Bench {
       .filter { case (name, _) => selected(name) }
       .flatMap { case (name, fn) =>
       var lastErr = "unknown"
-      def timed(): Option[Double] = {
+      // the clock stops before the scope frees the query's blocks
+      def timed(): Option[Double] = Materialize.scoped {
         val t0 = System.nanoTime()
-        val r = try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+        try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
         catch { case t: Throwable => lastErr = errorText(t); None }
-        dropBlocks(spark)
-        r
       }
       // a sample is suspect when it exceeds the prior-round band AND an
       // absolute floor (sub-second noise legitimately swings ±40%; the
@@ -187,12 +185,10 @@ object Bench {
     // untouched — this is an additive artifact field).
     val curationStagesJson = {
       def one(gate: DataFrame => DataFrame): Double = {
-        def t(): Double = {
+        def t(): Double = Materialize.scoped {
           val t0 = System.nanoTime()
           run(gate(Tables.documents(spark, sfDir)))
-          val secs = (System.nanoTime() - t0) / 1e9
-          dropBlocks(spark)
-          secs
+          (System.nanoTime() - t0) / 1e9
         }
         math.round(math.min(t(), t()) * 1000.0) / 1000.0
       }
@@ -499,23 +495,6 @@ object Bench {
   private[graft] def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Unpersists every persistent RDD of the session, waiting for the
-    * removal. Several similarity/dedup queries materialize intermediates
-    * via lazy localCheckpoint; their blocks are freed by the
-    * ContextCleaner only when the JVM gets around to GC-ing the RDD
-    * references. Under back-to-back load that lag lets dead blocks pile
-    * up and bleed block-manager/GC pressure into UNRELATED queries (r3
-    * saw untouched queries swing 5x), so measurements call this between
-    * queries to start each one from a clean block manager. Correctness
-    * is unaffected because every run builds its DataFrames (and
-    * checkpoints) anew. Blocking: the call sits OUTSIDE every
-    * timed region, so waiting is free, while async removal would run
-    * inside the next query's timed window. Only for a session that runs
-    * one query at a time.
-    */
-  private[graft] def dropBlocks(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-
   /** Multiplier over the prior full run's per-query seconds above which
     * a first sample is treated as window-inflated: re-sampled to a
     * median and, if it persists, flagged `anomalous` in the artifact
@@ -606,9 +585,9 @@ object Bench {
     * number in the artifact, not scaladoc.
     */
   private def bloomAssemblyProbe(spark: SparkSession, sfDir: String): String =
-    try {
+    try Materialize.scoped {
       val digests = graft.operators.Decontam.benchmarkDigests(spark, sfDir)
-        .localCheckpoint() // isolate assembly cost from the corpus scan
+        .transform(Materialize.now) // isolate assembly cost from the corpus scan
       def time(numBits: Long): Double = {
         val t0 = System.nanoTime()
         run(graft.operators.Decontam.bloomFrom(digests, numBits, 7))
@@ -783,7 +762,6 @@ object Bench {
             col("event_type"), col("value"), col("props"))
           .write.mode("overwrite").parquet(s"$dir/events.parquet")
         val writeSec = (System.nanoTime() - t0) / 1e9
-        dropBlocks(spark)
 
         // prior same-factor per-query band (r17 verdict ask #4): the
         // sf-suite anomaly discipline applied to the scale sections —
@@ -809,12 +787,10 @@ object Bench {
         val timed = probeNames.flatMap { name =>
           SparkEntry.queries.get(name).flatMap { fn =>
             var lastErr = "unknown"
-            def onceTimed(): Option[Double] = {
+            def onceTimed(): Option[Double] = Materialize.scoped {
               val s0 = System.nanoTime()
-              val r = try { run(fn(spark, dir)); Some((System.nanoTime() - s0) / 1e9) }
+              try { run(fn(spark, dir)); Some((System.nanoTime() - s0) / 1e9) }
               catch { case t: Throwable => lastErr = errorText(t); None }
-              dropBlocks(spark)
-              r
             }
             var times = (1 to 2).flatMap(_ => onceTimed())
             // over the same-factor band: one extra sample; persists →
@@ -833,12 +809,11 @@ object Bench {
               // pair per factor instead of clique math in a scaladoc.
               // count() re-executes the plan UNTIMED; Catalyst prunes
               // projections but never changes cardinality.
-              try {
+              try Materialize.scoped {
                 rowsScaled(name) = fn(spark, dir).count()
                 if (!baseRowsCache.contains(name))
                   baseRowsCache(name) = fn(spark, sfDir).count()
               } catch { case scala.util.control.NonFatal(_) => () }
-              dropBlocks(spark)
               Some(name -> times.min)
             }
           }
@@ -851,8 +826,7 @@ object Bench {
         def recallEntries(label: String)(
             df: => org.apache.spark.sql.DataFrame): Seq[String] =
           try {
-            val rows = df.collect()
-            dropBlocks(spark)
+            val rows = Materialize.scoped(df.collect())
             rows.map(r => JsonText.escape(r.getString(0)) + ":" + r.getLong(1)).toSeq
           } catch { case t: Throwable => errors(label) = errorText(t); Seq.empty }
         // at a big factor the text-sketch tracker is excluded: its TRUTH
@@ -944,9 +918,12 @@ object Bench {
         s""""${runsTag}_error":$errorJson"""
   }
 
-  /** `body`, or the failed [[Rate]] of whatever it throws. */
+  /** `body`, or the failed [[Rate]] of whatever it throws. Every
+    * checkpoint `body` makes (a frozen census, a model) is freed when it
+    * ends, after its last timed pass.
+    */
   private def guarded(body: => Rate): Rate =
-    try body catch { case t: Throwable => Rate(-1.0, Nil, errorText(t)) }
+    try Materialize.scoped(body) catch { case t: Throwable => Rate(-1.0, Nil, errorText(t)) }
 
   /** The discipline every stream rate shares (r9–r11): `setup` builds
     * the replay and any census or model, untimed, and yields one pass;
@@ -1194,7 +1171,7 @@ object Bench {
         spark.createDataset(base.toSeq).toDF("doc_id", "text"),
         graft.operators.Dedup.DefaultCoverageN,
         graft.operators.Dedup.DefaultCoverageMinDocs)
-        .localCheckpoint()
+        .transform(Materialize.now)
       sdf => StreamingFeatures.spanScrubGateStream(sdf, census)
     }
 
@@ -1233,7 +1210,7 @@ object Bench {
         censusDocs,
         graft.operators.TextAnalytics.WinnowK,
         graft.operators.TextAnalytics.WinnowW)
-        .select("fp").localCheckpoint()
+        .select("fp").transform(Materialize.now)
       sdf =>
         if (bloom) StreamingFeatures.winnowGateStreamBloom(sdf, census, numBits = 1L << 27)
         else StreamingFeatures.winnowGateStream(sdf, census)

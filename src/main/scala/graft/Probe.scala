@@ -75,18 +75,20 @@ object Probe {
     * partition-economics claims are AQE runtime decisions a speculative
     * plan cannot show; a sink write would plan a separate execution and
     * leave this one at isFinalPlan=false). Printed to stdout, or written
-    * to `<outDir>/<q>_<tag>.txt` when `out` is given. Every persistent
-    * RDD is dropped after each query. Returns the texts in order.
+    * to `<outDir>/<q>_<tag>.txt` when `out` is given. Each query runs in
+    * its own [[Materialize.scoped]] block, so its checkpoints are freed
+    * before the next one plans. Returns the texts in order.
     */
   private[graft] def plan(spark: SparkSession, sfDir: String, names: Seq[String],
       out: Option[(String, String)]): Seq[String] =
     names.map { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      df.queryExecution.toRdd.count()
-      val text = s"=== formatted plan ===\n$formatted\n" +
-        s"=== executed plan (AQE-final) ===\n${df.queryExecution.executedPlan}\n"
-      Bench.dropBlocks(spark)
+      val text = Materialize.scoped {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        df.queryExecution.toRdd.count()
+        s"=== formatted plan ===\n$formatted\n" +
+          s"=== executed plan (AQE-final) ===\n${df.queryExecution.executedPlan}\n"
+      }
       out match {
         case None => print(text)
         case Some((dir, tag)) =>
@@ -104,8 +106,8 @@ object Probe {
     * blind spot) carries a raw `text#`/`text_clean#` column — the
     * one-glance smells (a multi-consumer frame re-running its scan, an
     * unexpected shuffle, the corpus crossing an exchange). Queries whose
-    * first operator is a lazy localCheckpoint legitimately report 0
-    * visible scans (the scan hides behind the checkpoint boundary) —
+    * first operator is a lazy [[Materialize]] checkpoint legitimately
+    * report 0 visible scans (the scan hides behind the checkpoint boundary) —
     * read those rows as "shape asserted elsewhere", not as free. The
     * REWRITE operators (q_passage_dedup, q_dup_span_scrub and its n=50
     * variant) print "yes (answer-bearing sort)": their final range sort
@@ -119,8 +121,8 @@ object Probe {
     println(f"${"query"}%-32s scans  hashEx  rangeEx  text-in-anyEx")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          ExplainMode.fromString("formatted"))
+        val plan = Materialize.scoped(fn(spark, sfDir).queryExecution.explainString(
+          ExplainMode.fromString("formatted")))
         val lines = plan.linesIterator.toVector
         val scans = lines.count(_.matches("""\(\d+\) Scan parquet\s*"""))
         val exchanges = lines.zipWithIndex.collect {
@@ -287,36 +289,36 @@ object Probe {
       parts += s""""${tag}_error":${JsonText.escape(errorText(t))}"""
     // Bloom decontam at the registered and production bit sizings —
     // the bitset array grows 128×, the per-token probe count does not
-    val digests = try {
-      Some(graft.operators.Decontam.benchmarkDigests(spark, sfDir)
-        .localCheckpoint())
-    } catch { case NonFatal(t) => failed("bloom", t); None }
-    digests.foreach { d =>
-      Seq(20, 27).foreach { bits =>
-        val numBits = 1L << bits
-        val bloom = graft.operators.Decontam
-          .bloomFrom(d, numBits, graft.operators.Decontam.DefaultBloomK)
-          .localCheckpoint()
-        withMarginal(s"bloom_bits$bits", replayGateRate(spark, sfDir)(_ => df =>
-          StreamingFeatures.bloomDecontamGateStreamLoaded(df, bloom, numBits,
-            graft.operators.Decontam.DefaultBloomK, minFrac = 1.1)))
+    Materialize.scoped {
+      val digests = try {
+        Some(Materialize.now(graft.operators.Decontam.benchmarkDigests(spark, sfDir)))
+      } catch { case NonFatal(t) => failed("bloom", t); None }
+      digests.foreach { d =>
+        Seq(20, 27).foreach { bits =>
+          val numBits = 1L << bits
+          val bloom = Materialize.now(graft.operators.Decontam
+            .bloomFrom(d, numBits, graft.operators.Decontam.DefaultBloomK))
+          withMarginal(s"bloom_bits$bits", replayGateRate(spark, sfDir)(_ => df =>
+            StreamingFeatures.bloomDecontamGateStreamLoaded(df, bloom, numBits,
+              graft.operators.Decontam.DefaultBloomK, minFrac = 1.1)))
+        }
       }
     }
     // bigram perplexity at 256 vs 4096 model buckets — the dense model
     // array grows 16×, the per-pair bucket+lookup does not
     Seq(256, 4096).foreach { nb =>
-      try {
-        val model = graft.operators.Perplexity
-          .referenceNlpBigram(spark, sfDir, nBuckets = nb).localCheckpoint()
+      try Materialize.scoped {
+        val model = Materialize.now(graft.operators.Perplexity
+          .referenceNlpBigram(spark, sfDir, nBuckets = nb))
         withMarginal(s"perplexity_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
           StreamingFeatures.perplexityGateStreamBigram(df, model, Long.MaxValue, nb)))
       } catch { case NonFatal(t) => failed(s"perplexity_buckets$nb", t) }
     }
     // DSIR at 256 vs 4096 model buckets — same dense-array shape
     Seq(256, 4096).foreach { nb =>
-      try {
-        val model = graft.operators.Dsir
-          .logRatios(spark, sfDir, nBuckets = nb).localCheckpoint()
+      try Materialize.scoped {
+        val model = Materialize.now(graft.operators.Dsir
+          .logRatios(spark, sfDir, nBuckets = nb))
         withMarginal(s"dsir_buckets$nb", replayGateRate(spark, sfDir)(_ => df =>
           StreamingFeatures.dsirGateStream(df, model, Long.MinValue, nb)))
       } catch { case NonFatal(t) => failed(s"dsir_buckets$nb", t) }

@@ -359,7 +359,7 @@ object Artifacts {
         Decontam.DefaultBloomBits, Decontam.DefaultBloomK),
       s"$outDir/bloom", Decontam.DefaultBloomBits, Decontam.DefaultBloomK)
     val (cents, _) = Similarity.ivfAssign(spark, corpusDir,
-      nCells = 16, lloydIters = 2, materializeAssigned = false)
+      nCells = 16, lloydIters = 2)
     saveCodebook(cents, s"$outDir/ivf_codebook")
     saveBpeMerges(Bpe.learnMerges(spark, corpusDir, nMerges),
       s"$outDir/bpe_merges")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Byte-pair-encoding tokenizer induction — learn the merge table from
   * the corpus (public recipe: Sennrich, Haddow & Birch 2016, "Neural
@@ -18,7 +18,8 @@ import graft.Tables
   * over that TYPE frame (unique words — orders of magnitude smaller
   * than the corpus), as `nMerges` bounded rounds of
   * pair-count → 1-row argmax → symbol-fold, with an eager
-  * localCheckpoint per round to truncate the iterative lineage (the
+  * [[graft.Materialize.now]] per round to truncate the iterative
+  * lineage, the superseded round released at once (the
   * [[Similarity]] Lloyd-rounds discipline; the driver holds exactly one
   * row per round). Segmentation never re-walks documents per token:
   * token counts come from JOINING doc tokens to the merged vocabulary
@@ -176,7 +177,7 @@ object Bpe {
     */
   private def learn(spark: SparkSession, dir: String,
       nMerges: Int): (Seq[Merge], DataFrame) = {
-    var voc = vocab(spark, dir).localCheckpoint()
+    var voc = Materialize.now(vocab(spark, dir))
     val merges = Seq.newBuilder[Merge]
     var r = 1
     var exhausted = false
@@ -198,8 +199,8 @@ object Bpe {
         val mergedSyms = accepted.foldLeft(col("syms")) {
           case (c, (a, b, _)) => applyMerge(c, a, b)
         }
-        voc = voc.select(col("cnt"), mergedSyms.as("syms")).localCheckpoint()
-        prev.unpersist()
+        voc = Materialize.now(voc.select(col("cnt"), mergedSyms.as("syms")))
+        Materialize.release(prev)
       }
     }
     (merges.result(), voc)

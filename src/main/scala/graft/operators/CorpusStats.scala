@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.PortableRound
 
 /** Corpus-composition statistics per language — the profile a data owner
@@ -144,7 +144,7 @@ object CorpusStats {
       .filter(col("text").isNotNull)
       .select(col("source"), explode(TextAnalytics.tokens(col("text"))).as("tok"))
       .distinct()
-      .localCheckpoint(eager = false) // sizes + both join sides read it
+      .transform(Materialize(_)) // sizes + both join sides read it
     val sizes = st.groupBy("source").agg(count(lit(1)).as("n"))
     val inter = st.as("a")
       .join(st.as("b"),
@@ -195,7 +195,7 @@ object CorpusStats {
       .filter(col("text").isNotNull)
       .select(col("source"), explode(TextAnalytics.tokens(col("text"))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // totals + both join sides read it
+      .transform(Materialize(_)) // totals + both join sides read it
     val totals = d.groupBy("source").agg(sum(col("c")).as("tot"))
     val da = d.join(broadcast(totals), "source")
     val pa = col("ca").cast("double") / col("tot_a").cast("double")
@@ -249,7 +249,7 @@ object CorpusStats {
       .filter(col("text").isNotNull)
       .select(col("source"), explode(TextAnalytics.tokens(col("text"))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // totals + term pass read it
+      .transform(Materialize(_)) // totals + term pass read it
     val totals = d.groupBy("source")
       .agg(sum(col("c")).as("tot"), count(lit(1)).as("v"))
     val p = col("c").cast("double") / col("tot").cast("double")
@@ -312,7 +312,7 @@ object CorpusStats {
     * checkable — while the shuffle carries m+1 rows per task instead of
     * the full vocabulary (the 100 TB wordcount killer). Two corpus scans
     * by design; the sketch frame and the m+1-row aggregate are
-    * localCheckpointed so neither re-runs.
+    * checkpointed so neither re-runs.
     */
   def heavyHitters(spark: SparkSession, dir: String,
       m: Int = DefaultMgCounters): DataFrame = {
@@ -326,7 +326,7 @@ object CorpusStats {
       .join(broadcast(cands), Seq("token"), "left")
       .groupBy(when(col("is_cand"), col("token")).as("token"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // total + filtered both read it
+      .transform(Materialize(_)) // total + filtered both read it
     val total = grouped.agg(sum(col("n")).as("n_corpus"))
     grouped.filter(col("token").isNotNull)
       .crossJoin(broadcast(total))
@@ -432,7 +432,7 @@ object CorpusStats {
     // totals derive from the histogram, not a second corpus scan
     val hist = Tables.documents(spark, dir)
       .groupBy("source", "n_chars").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val w = Window.partitionBy("source").orderBy("n_chars")
     val cum = hist
       .withColumn("cum_end", sum(col("c")).over(w))
@@ -530,7 +530,7 @@ object CorpusStats {
       .join(broadcast(cands), Seq("lang", "token"), "left")
       .groupBy(col("lang"), when(col("is_cand"), col("token")).as("token"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // totals + filtered both read it
+      .transform(Materialize(_)) // totals + filtered both read it
     val totals = grouped.groupBy("lang").agg(sum(col("n")).as("n_lang"))
     grouped.filter(col("token").isNotNull)
       .join(broadcast(totals), "lang")
@@ -579,7 +579,7 @@ object CorpusStats {
       .join(broadcast(cands), Seq("window_end", "token"), "left")
       .groupBy(col("window_end"), when(col("is_cand"), col("token")).as("token"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // totals + filtered both read it
+      .transform(Materialize(_)) // totals + filtered both read it
     val totals = grouped.groupBy("window_end").agg(sum(col("n")).as("n_window"))
     grouped.filter(col("token").isNotNull)
       .join(broadcast(totals), "window_end")

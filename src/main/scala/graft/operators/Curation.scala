@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** End-to-end corpus curation — the composition a training-data pipeline
   * actually runs over raw documents, as one operator: quality gate →
@@ -54,8 +54,8 @@ object Curation {
       // reuse — without materialization the corpus is scanned and
       // TOKENIZED twice (verified: 2 FileScans, 0 ReusedExchange). The
       // frame is slim (text already projected away), so one lazy
-      // localCheckpoint halves the expensive map work.
-      .localCheckpoint(eager = false)
+      // checkpoint halves the expensive map work.
+      .transform(Materialize(_))
     val keepers = q.filter(col("quality_ok") === 1)
       .groupBy("content_md5").agg(min("doc_id").as("keep_id"))
     q.join(keepers, Seq("content_md5"), "left")
@@ -97,7 +97,7 @@ object Curation {
       nCells: Int = Similarity.IvfCells): DataFrame = {
     // consumed twice below (decision side + keeper-representation side):
     // materialize once, as everywhere else shared frames are
-    val text = curateDocs(spark, dir).localCheckpoint(eager = false)
+    val text = Materialize(curateDocs(spark, dir))
     val sem = Similarity.semanticDedup(spark, dir, minCosine, nCells)
       .select(col("vec_id").as("doc_id"), col("keep_id"))
     // a keeper's CONTENT survives if the keeper itself was kept, or if
@@ -188,7 +188,7 @@ object Curation {
         graft.functions.TextHashes.simhash62(TextAnalytics.tokens(col("text")))
           .as("simhash"),
         Dedup.shingleArray(col("text"), Decontam.DefaultN).as("shingles"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val sh = base.select(col("doc_id"), col("lang"), col("shingles"))
       .filter(size(col("shingles")) > 0)
     val bench = benchNgrams
@@ -201,7 +201,7 @@ object Curation {
       .withColumn("contaminated", coalesce(col("contaminated"), lit(0)))
       // feeds the keeper election AND the decision join — the same
       // two-consumer materialization as curateDocs' q frame
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val keepers = dec
       .filter(col("quality_ok") === 1 && col("contaminated") === 0)
       .groupBy("content_md5").agg(min("doc_id").as("keep_id"))
@@ -249,7 +249,7 @@ object Curation {
     */
   def curateWithNearDups(spark: SparkSession, dir: String): DataFrame = {
     // consumed twice (decision side + rep-representation side)
-    val text = curateDocs(spark, dir).localCheckpoint(eager = false)
+    val text = Materialize(curateDocs(spark, dir))
     val clusters = Dedup.simhashClusters(spark, dir)
       .select(col("doc_id"), col("cluster_rep"))
     val repRepresented = text.select(col("doc_id").as("cluster_rep"),
@@ -289,7 +289,7 @@ object Curation {
     */
   def curateWithPassages(spark: SparkSession, dir: String): DataFrame = {
     // consumed twice (decision side + rep-representation side)
-    val text = curateDocs(spark, dir).localCheckpoint(eager = false)
+    val text = Materialize(curateDocs(spark, dir))
     val clusters = TextAnalytics.winnowComponents(spark, dir)
       .select(col("doc_id"), col("cluster_rep"))
     val repRepresented = text.select(col("doc_id").as("cluster_rep"),
@@ -369,7 +369,7 @@ object Curation {
     ("text", docs => curateDocsFullDetailed(docs, TextAnalytics.QualityMinTokens,
       TextAnalytics.QualityMinRatio, Decontam.DefaultBenchModulus,
       Decontam.DefaultMinFrac, benchNgrams = None)
-      .localCheckpoint(eager = false)), // decision side + nd rep side
+      .transform(Materialize(_))), // decision side + nd rep side
     ("neardup", { text =>
       val clusters = Dedup.simhashClustersFromHashes(
         text.select(col("doc_id"), col("simhash").as("sh")), Dedup.SimhashMaxHamming)
@@ -384,7 +384,7 @@ object Curation {
             col("cluster_rep") =!= col("doc_id") &&
             col("rep_represented"), "neardup")))
         .withColumn("kept", col("drop_reason").isNull.cast("int"))
-        .localCheckpoint(eager = false) // 3 consumers below
+        .transform(Materialize(_)) // 3 consumers below
     }),
     ("complete", { nd =>
       val sem = Similarity.semanticDedup(spark, dir, minCosine, nCells)

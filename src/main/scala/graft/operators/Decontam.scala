@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.PortableRound
 
 /** Benchmark decontamination — the training-data hygiene pass that flags
@@ -112,14 +112,14 @@ object Decontam {
 
   /** The shingle frame feeds three consumers (benchmark distinct in the
     * modulus form, the exploded probe, the per-doc size projection); a
-    * lazy localCheckpoint computes the expensive split+transform+distinct
-    * map work ONCE, and its blocks are ContextCleaner-released when the
-    * query's frames go out of scope — the exact discipline (and rationale
-    * comment) of [[Dedup.ngramJaccardPairs]]. Without it q_decontam was
-    * the suite's slowest query: three full-corpus tokenization passes.
+    * lazy [[graft.Materialize]] checkpoint computes the expensive
+    * split+transform+distinct map work ONCE — the exact discipline (and
+    * rationale comment) of [[Dedup.ngramJaccardPairs]]. Without it
+    * q_decontam was the suite's slowest query: three full-corpus
+    * tokenization passes.
     */
   private def sharedShingles(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Dedup.shingled(spark, dir, n).localCheckpoint(eager = false)
+    Materialize(Dedup.shingled(spark, dir, n))
 
   /** Shared tail: per-doc scores, metadata join, report columns. Docs with
     * fewer than n words (absent from `sh`) carry explicit zeros.
@@ -351,7 +351,7 @@ object Decontam {
       minAgree: Double = Dedup.MinhashMinAgree): DataFrame = {
     val k = bands * rows
     val sig = Dedup.minhashSignaturesFrom(sharedShingles(spark, dir, n), k)
-      .localCheckpoint(eager = false) // corpus side + benchmark side
+      .transform(Materialize(_)) // corpus side + benchmark side
     val bench = bandedSig(sig.filter(
       pmod(col("doc_id"), lit(benchModulus.toLong)) === 0), bands, rows)
     fuzzyReport(spark, dir, bandedSig(sig, bands, rows), bench, k, minAgree)

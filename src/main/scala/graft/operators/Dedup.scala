@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.{PortableRound, TextHashes}
 
 /** Deduplication suite over the `documents` table — exact, MinHash+LSH,
@@ -98,14 +98,14 @@ object Dedup {
   /** Oracle-checkable demo registration of [[dedupAgainstDigests]]: the
     * frozen snapshot is the docs with `doc_id % knownModulus = 0`, the
     * batch is everything else. One scan computes every digest (lazy
-    * localCheckpoint — the frame feeds the known projection, the batch
+    * checkpoint — the frame feeds the known projection, the batch
     * side, and the keeper election).
     */
   def incrementalExact(spark: SparkSession, dir: String,
       knownModulus: Int = DefaultKnownModulus): DataFrame = {
     val digests = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(col("text")).as("content_md5"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val isKnown = pmod(col("doc_id"), lit(knownModulus)) === 0
     dedupAgainstDigests(
       digests.filter(!isKnown),
@@ -251,7 +251,7 @@ object Dedup {
   private[operators] def pairBudgetGuard(pairs: DataFrame, budget: Long,
       caller: String, twins: String): DataFrame = {
     if (budget == Long.MaxValue) return pairs
-    val counted = pairs.localCheckpoint(eager = false)
+    val counted = Materialize(pairs)
     val guard = counted.agg(count(lit(1)).as("__n_pairs"))
       .select(when(col("__n_pairs") > budget,
         raise_error(concat(lit(s"$caller: pair output "),
@@ -273,18 +273,19 @@ object Dedup {
       pairBudget: Long = DefaultPairBudget): DataFrame = {
     // The shingle and prefix frames feed both sides of the self-join plus
     // the two verify joins; without materialization the per-doc shingling
-    // lineage recomputes ~5x. A lazy localCheckpoint computes each frame
-    // ONCE on first use (the downstream plan references one shared RDD,
-    // not a re-derived logical subtree) and — unlike persist(), which
-    // registers in the session CacheManager and lives until an explicit
-    // unpersist — its blocks are released by the ContextCleaner as soon as
-    // the query's frames go out of scope. Round 1 leaked these caches
-    // across the whole bench suite (47 queries × warmup+2 runs).
+    // lineage recomputes ~5x. A lazy [[graft.Materialize]] checkpoint
+    // computes each frame ONCE on first use (the downstream plan
+    // references one shared RDD, not a re-derived logical subtree) and —
+    // unlike persist(), which registers in the session CacheManager and
+    // lives until an explicit unpersist — its blocks are freed when the
+    // caller's scope closes, or by the ContextCleaner once the query's
+    // frames are garbage. Round 1 leaked persist() caches across the
+    // whole bench suite (47 queries × warmup+2 runs).
     val sh = shingled(spark, dir).select(
       col("doc_id"), col("lang"), col("shingles"),
       expr("transform(shingles, s -> xxhash64(s))").as("hashes"),
       size(col("shingles")).as("n_sh"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     // Join/frequency keys are 8-byte xxhash64 digests of the shingles, not
     // the shingle strings: every shuffle below (document frequency, prefix
     // ranking, candidate self-join) moves longs, and the strings never
@@ -304,7 +305,7 @@ object Dedup {
         Window.partitionBy("doc_id").orderBy(col("df"), col("sh_h"))))
       .filter(col("rk") <= prefixLen)
       .select("doc_id", "lang", "sh_h", "n_sh", "rk")
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     // J >= t needs overlap >= t/(1+t)·(n_a+n_b) exactly (lossless form)
     val overlapNeeded = lit(threshold / (1 + threshold)) * (col("a.n_sh") + col("b.n_sh"))
     // Size filtering (also lossless): J >= t forces t·|A| <= |B| <= |A|/t.
@@ -420,13 +421,13 @@ object Dedup {
     val k = bands * rows
     val sig = minhashSignatures(spark, dir, k)
     val bandCols = bandKeys(bands, rows)
-    // Materialized once (lazy localCheckpoint — see ngramJaccardPairs):
+    // Materialized once (lazy checkpoint — see ngramJaccardPairs):
     // both sides of the self-join otherwise recompute the full shingling +
     // k minhash transforms, and persist() would leak session-lifetime cache.
     val banded = sig.select(col("doc_id"),
       array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"),
       explode(array(bandCols: _*)).as("bk"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val cand = banded.as("a")
       .join(banded.as("b"),
         col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
@@ -475,7 +476,7 @@ object Dedup {
     // AND the edge join: checkpoint so signatures compute once
     val banded = sig.select(col("doc_id"),
         explode(array(bandKeys(bands, rows): _*)).as("bk"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val mins = banded.groupBy("bk").agg(min(col("doc_id")).as("rep"))
     val edges = banded.join(mins, "bk")
       .filter(col("doc_id") =!= col("rep"))
@@ -514,7 +515,7 @@ object Dedup {
     // joined frame once so the election agg and the flag join don't
     // recompute it (the banded-frame discipline above)
     val joined = comps.join(quality, Seq("doc_id"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     // NULL n_tokens (null text) sorts below every real count via the
     // explicit −1 — both engines, no null-ordering dialect dependence
     val best = joined.groupBy("cluster_rep")
@@ -799,7 +800,7 @@ object Dedup {
     // cheapest checkpoint in the repo (measured: 3 corpus scans without)
     simhashClustersFromHashes(docs.select(col("doc_id"),
       TextHashes.simhash62(split(col("text"), " ")).as("sh"))
-      .localCheckpoint(eager = false), maxHamming)
+      .transform(Materialize(_)), maxHamming)
 
   /** [[simhashClusters]] from pre-computed (doc_id, sh) fingerprints —
     * lets [[Curation.curateComplete]] cluster the 8-byte fingerprints its
@@ -808,7 +809,7 @@ object Dedup {
   private[operators] def simhashClustersFromHashes(hashed: DataFrame,
       maxHamming: Int): DataFrame = {
     val uniq = hashed.groupBy("sh").agg(min("doc_id").as("rep"))
-      .localCheckpoint(eager = false) // scheme count + candidate explode read it
+      .transform(Materialize(_)) // scheme count + candidate explode read it
     val nfp = uniq.agg(count(lit(1)).as("__nfp"))
     val chunked = uniq.crossJoin(broadcast(nfp))
       .select(col("sh"), col("rep"),
@@ -846,11 +847,11 @@ object Dedup {
       maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"), TextHashes.simhash62(split(col("text"), " ")).as("sh"))
-      .localCheckpoint(eager = false) // distinct election + final map-back
+      .transform(Materialize(_)) // distinct election + final map-back
     // (sh, rep) feeds the chunked self-join, the isolated-node union,
     // and the per-component rep election
     val uniq = hashed.groupBy("sh").agg(min("doc_id").as("rep"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val nfp = uniq.agg(count(lit(1)).as("__nfp"))
     val chunked = uniq.crossJoin(broadcast(nfp))
       .select(col("sh"),
@@ -945,7 +946,7 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(passagesOf(col("text"), window)).as(Seq("idx", "passage")))
       .select(col("doc_id"), col("idx"), xxhash64(col("passage")).as("ph"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val dup = ex.groupBy("ph").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minDupCount).select("ph")
     val dropIdx = ex.join(dup, "ph")
@@ -983,7 +984,7 @@ object Dedup {
       .select(posexplode(passagesOf(col("text"), window)).as(Seq("idx", "passage")))
       .select(xxhash64(col("passage")).as("ph"))
       .groupBy("ph").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // total + duplicated aggregates
+      .transform(Materialize(_)) // total + duplicated aggregates
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val totals = grouped.agg(coalesce(sum(col("n")), lit(0L)).as("n_passages"))
     val dups = grouped.filter(col("n") >= minDupCount)
@@ -1077,7 +1078,7 @@ object Dedup {
     // happens; within-doc repeats are gone before the exchange.
     val arr = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), ngramHashes(col("text"), n).as("g"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val dup = arr.select(explode(array_distinct(col("g"))).as("gh"))
       .groupBy("gh").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= minDocs).select("gh")
@@ -1114,10 +1115,10 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val arr = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), ngramHashes(col("text"), n).as("g"))
-      .localCheckpoint(eager = false) // census + totals + coverage
+      .transform(Materialize(_)) // census + totals + coverage
     val census = arr.select(explode(array_distinct(col("g"))).as("gh"))
       .groupBy("gh").agg(count(lit(1)).as("nd"))
-      .localCheckpoint(eager = false) // dup filter + nothing else big
+      .transform(Materialize(_)) // dup filter + nothing else big
     val dup = census.filter(col("nd") >= minDocs).select("gh")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val totals = arr.agg(coalesce(sum(size(col("g"))), lit(0L)).as("n_grams"))
@@ -1165,7 +1166,7 @@ object Dedup {
       minAgree: Double = MinhashMinAgree, maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val truth = ngramJaccardPairs(spark, dir, threshold)
       .select("doc_a", "doc_b")
-      .localCheckpoint(eager = false) // one probe per method + the total
+      .transform(Materialize(_)) // one probe per method + the total
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
 
     val k = bands * rows
@@ -1248,17 +1249,17 @@ object Dedup {
       s"sweep varies the SPLIT of a fixed k=$k budget; got $configs")
     val truth = ngramJaccardPairs(spark, dir, threshold)
       .select("doc_a", "doc_b")
-      .localCheckpoint(eager = false) // one predicate pass per config
+      .transform(Materialize(_)) // one predicate pass per config
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
     val sig = minhashSignatures(spark, dir, k)
       .select(col("doc_id"), array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"))
-      .localCheckpoint(eager = false) // truth annotation + per-config buckets
+      .transform(Materialize(_)) // truth annotation + per-config buckets
     // truth pairs annotated with both signatures ONCE; each config's
     // predicate is then a pure column expression over the sig arrays
     val joined = truth
       .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val agreeOk =
       expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($k as double)") >= minAgree
     configs.map { case (bands, rows) =>
@@ -1357,7 +1358,7 @@ object Dedup {
     // [[dupNgramCoverage]] (see the shuffle note there)
     val arr = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), ngramHashes(col("text"), n).as("g"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val dup = arr.select(explode(array_distinct(col("g"))).as("gh"))
       .groupBy("gh").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= minDocs).select("gh")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** DSIR-style importance weighting — score every corpus document by how
   * much it looks like a target (reference) distribution, using hashed
@@ -21,7 +21,7 @@ import graft.Tables
   * ratio itself is a mirrored IEEE chain over integer inputs.
   *
   * Scale shape: one pass computes per-doc bucket arrays scan-side (the
-  * expensive map work — tokenize + hash); a lazy localCheckpoint holds
+  * expensive map work — tokenize + hash); a lazy checkpoint holds
   * the DERIVED arrays (never text) because two consumers read them —
   * the bucket-distribution aggregate and the per-doc scorer (the
   * [[Decontam.sharedShingles]] / [[Dedup.ngramJaccardPairs]] discipline).
@@ -70,7 +70,7 @@ object Dsir {
       .select(col("doc_id"), col("lang"),
         transform(split(col("text"), " "), t => bucketOf(t, nBuckets))
           .as("buckets"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
 
   /** Per-document importance weights against an arbitrary target-corpus
     * frame (`doc_id`, `text`): (doc_id, lang, n_tokens, weight_micros).

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import graft.Materialize
 
 /** Distributed exact connected components — the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected
@@ -23,10 +24,11 @@ import org.apache.spark.sql.functions._
   * edge frame — hash shuffles of (long, long) pairs only, nothing wider.
   * The paper proves O(log n) rounds to a forest of stars even on path
   * graphs (plain min-label propagation needs O(diameter)); near-dup
-  * graphs converge in 2-3. Each round materializes via an EAGER
-  * localCheckpoint: iterative self-reference otherwise stacks the whole
-  * loop into one lineage (exponential re-execution under retry), and the
-  * convergence test needs an action anyway. Convergence is detected by
+  * graphs converge in 2-3. Each round materializes eagerly
+  * ([[graft.Materialize.now]]) and the superseded round is released as
+  * soon as the next one is compared: iterative self-reference otherwise
+  * stacks the whole loop into one lineage (exponential re-execution
+  * under retry), and the convergence test needs an action anyway. Convergence is detected by
   * a (count, sum of row-hashes) checksum of the directed edge multiset,
   * CONFIRMED exactly: a checksum collision on an unequal multiset would
   * exit the loop at a non-fixpoint forest (wrong component labels — the
@@ -49,25 +51,9 @@ object Graph {
     * or round count.
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    // r19 (verdict ask #1 — the q_simhash_components in-suite blow-up):
-    // every round eagerly checkpoints a fresh edge frame, and the
-    // SUPERSEDED round's blocks previously lingered until the
-    // ContextCleaner GC'd the dead Dataset reference — under mid-suite
-    // block-manager/GC pressure those dead blocks bleed into the live
-    // rounds (the exact r3 cross-query pattern, here WITHIN one query's
-    // iteration). Each round's checkpointed RDD is the one under the
-    // checkpointed Dataset's own LogicalRDD, and it is dropped the
-    // moment the next round is materialized and compared. Taken from
-    // that plan, never from the context's persistent-RDD set, so a
-    // concurrent query on the same session keeps its own blocks.
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val cp = df.localCheckpoint()
-      (cp, cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
-    }
-
     // canonical start: point every edge from the larger to the smaller
     // id, as a directed (u > v) frame
-    var (dir, dirRdds) = checkpointTracked(edges
+    var dir = Materialize.now(edges
       .select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
@@ -108,7 +94,7 @@ object Graph {
     var it = 0
     var sig = checksum(dir)
     while (!converged && it < maxIters) {
-      val (next, nextRdds) = checkpointTracked(smallStar(largeStar(dir)))
+      val next = Materialize.now(smallStar(largeStar(dir)))
       val nextSig = checksum(next)
       // checksum equality triggers the exact confirmation; counts match
       // inside the checksum, so one exceptAll direction proves multiset
@@ -116,11 +102,11 @@ object Graph {
       converged = nextSig == sig && next.exceptAll(dir).isEmpty
       sig = nextSig
       // the superseded round is dead once `next` is materialized and
-      // compared — free its blocks now instead of waiting on the
-      // cleaner (non-blocking: nothing reads them again)
-      dirRdds.foreach(_.unpersist(blocking = false))
+      // compared: free its blocks now instead of waiting on the cleaner
+      // (under mid-suite block-manager/GC pressure dead rounds bleed
+      // into the live ones)
+      Materialize.release(dir)
       dir = next
-      dirRdds = nextRdds
       it += 1
     }
     require(converged, s"connectedComponents did not converge in $maxIters rounds")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Multimodal-column plumbing (builder-prompt extension): treat
   * image/audio/video payloads as opaque `binary` columns with typed
@@ -180,7 +180,7 @@ object Multimodal {
   def mediaAnnRecall(spark: SparkSession, dir: String): DataFrame = {
     val truth = mediaAnnBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
     mediaAnn(spark, dir)
       .select("query_id", "neighbor_id")
@@ -343,7 +343,7 @@ object Multimodal {
     val hashed = mediaTable(spark, dir)
       .map(r => (r.doc_id, perceptualHash(r.payload)))
       .toDF("doc_id", "sh")
-      .localCheckpoint(eager = false) // election + map-back both read it
+      .transform(Materialize(_)) // election + map-back both read it
     Dedup.simhashClustersFromHashes(hashed, Dedup.SimhashMaxHamming)
       .withColumnRenamed("simhash", "phash")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Order-dependent corpus shaping: token-budget mixing and sequence
   * packing — the two training-data operations whose DEFINITION is a
@@ -112,7 +112,7 @@ object Packing {
       .select(col("doc_id"), col("lang"), nTokens,
         pmod(pmod(col("doc_id"), lit(2147483648L)) * lit(MixMultiplier),
           lit(nBuckets.toLong)).as("bucket"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val totals = base.groupBy("lang", "bucket")
       .agg(sum("n_tokens").as("bsum"))
     val classified = withBucketPrefix(totals, Seq("lang"))
@@ -157,7 +157,7 @@ object Packing {
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), nTokens,
         expr(s"doc_id div $bucketWidth").as("bucket"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val totals = base.groupBy("bucket").agg(sum("n_tokens").as("bsum"))
     val pref = withBucketPrefix(totals, Seq.empty).select("bucket", "bprefix")
     base.join(pref, "bucket")

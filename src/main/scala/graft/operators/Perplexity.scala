@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Reference-LM perplexity bucketing — the CCNet recipe (Wenzek et al.
   * 2020): score every document by a language model trained on a clean
@@ -186,7 +186,7 @@ object Perplexity {
     graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         bigramBuckets(col("text"), nBuckets).as("buckets"))
-      .localCheckpoint(eager = false) // model pass + scorer pass
+      .transform(Materialize(_)) // model pass + scorer pass
 
   /** The trained order-2 reference model as a broadcastable frame —
     * [[referenceNlp]] over bigram buckets, sentinel row included: the
@@ -210,7 +210,7 @@ object Perplexity {
       nBuckets: Int = DefaultBigramBuckets,
       refModulus: Int = Dsir.DefaultTargetModulus): DataFrame = {
     val scores = perplexityScoresBigram(spark, dir, nBuckets, refModulus)
-      .localCheckpoint(eager = false) // threshold pass + labeling join
+      .transform(Materialize(_)) // threshold pass + labeling join
     labeled(scores, exactThresholds(scores))
   }
 
@@ -228,7 +228,7 @@ object Perplexity {
       refModulus: Int = Dsir.DefaultTargetModulus,
       accuracy: Int = DefaultApproxAccuracy): DataFrame = {
     val scores = perplexityScoresBigram(spark, dir, nBuckets, refModulus)
-      .localCheckpoint(eager = false) // threshold pass + labeling join
+      .transform(Materialize(_)) // threshold pass + labeling join
     labeled(scores, approxThresholds(scores, accuracy))
   }
 
@@ -241,7 +241,7 @@ object Perplexity {
       nBuckets: Int = Dsir.DefaultNBuckets,
       refModulus: Int = Dsir.DefaultTargetModulus): DataFrame = {
     val scores = perplexityScores(spark, dir, nBuckets, refModulus)
-      .localCheckpoint(eager = false) // threshold pass + labeling join
+      .transform(Materialize(_)) // threshold pass + labeling join
     labeled(scores, exactThresholds(scores))
   }
 
@@ -283,7 +283,7 @@ object Perplexity {
       refModulus: Int = Dsir.DefaultTargetModulus,
       accuracy: Int = DefaultApproxAccuracy): DataFrame = {
     val scores = perplexityScores(spark, dir, nBuckets, refModulus)
-      .localCheckpoint(eager = false) // threshold pass + labeling join
+      .transform(Materialize(_)) // threshold pass + labeling join
     labeled(scores, approxThresholds(scores, accuracy))
   }
 
@@ -301,7 +301,7 @@ object Perplexity {
     */
   private def approxGuaranteeFrom(scores0: DataFrame,
       accuracy: Int): DataFrame = {
-    val scores = scores0.localCheckpoint(eager = false)
+    val scores = Materialize(scores0)
     val th = approxThresholds(scores, accuracy)
     val eps = 1.0 / accuracy
     val counted = scores.join(th, "lang")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Lexical retrieval over the `documents` table — BM25 query search and
   * whole-corpus TF-IDF term salience. The training-data use cases: pull
@@ -132,7 +132,7 @@ object Retrieval {
       .select(col("doc_id"), col("dl"), explode(termStructs).as("c"))
       .select(col("doc_id"), col("dl"), col("c.term"), col("c.tf"))
       .filter(col("tf") > 0)
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
 
     val df = cand.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = broadcast(
@@ -179,7 +179,7 @@ object Retrieval {
     val tf = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
 
     // N = total documents — a metadata-only parquet count, not a third
     // pass over the exploded tokens (and the semantically right idf N)

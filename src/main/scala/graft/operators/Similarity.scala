@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.PortableRound
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -145,7 +145,7 @@ object Similarity {
       // frame repeatedly (train/assign/query/candidate sides) and the
       // count pipeline re-ran for each consumer — measured 11.2 s vs
       // ~2 s for the embedding-table twin before this boundary
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
 
   /** Brute-force cosine top-k: query set = first [[AnnQueries]] vectors,
     * broadcast against the full corpus; rank by quantized dot (ties broken
@@ -307,7 +307,7 @@ object Similarity {
     val grid = for (b <- AnnTuningBits; h <- 0 to AnnTuningMaxProbe) yield (b, h)
     val emb = quantized(spark, dir)
       .withColumn("key", lshKey("embedding", AnnTuningBits.max))
-      .localCheckpoint(eager = false) // truth annotation + the xor pass
+      .transform(Materialize(_)) // truth annotation + the xor pass
     val queries = emb.filter(col("vec_id") < AnnQueries)
       .select(col("vec_id").as("query_id"), col("key").as("q_key"))
     // every grid cell's retrieval/cost predicate over one xor column
@@ -336,7 +336,7 @@ object Similarity {
     // grid — 2 truth-side scans × 15 branches — against the documented
     // 3); with it the whole upstream runs once and the 15 selects read
     // a cached single row, making the scaladoc's scan count true.
-    val one = cost.crossJoin(broadcast(recall)).localCheckpoint(eager = false)
+    val one = Materialize(cost.crossJoin(broadcast(recall)))
     grid.map { case (b, h) =>
       val probed = 1L + (if (h >= 1) b.toLong else 0L) +
         (if (h >= 2) b.toLong * (b - 1) / 2 else 0L)
@@ -385,7 +385,7 @@ object Similarity {
     val emb = quantized(spark, dir)
       .withColumn("bucket", lshKey("embedding", nBits))
       .select("vec_id", "bucket", "qe")
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     val report = emb.as("a")
       .join(emb.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
@@ -431,7 +431,7 @@ object Similarity {
       }
       .select(col("vec_id") +: col("qe") +:
         OrPlaneOffsets.indices.map(i => col(s"bucket_$i")): _*)
-      .localCheckpoint(eager = false) // 2T join sides read this frame
+      .transform(Materialize(_)) // 2T join sides read this frame
     val report = OrPlaneOffsets.indices.map { i =>
       withKeys.as("a").join(withKeys.as("b"),
           col(s"a.bucket_$i") === col(s"b.bucket_$i") &&
@@ -607,11 +607,6 @@ object Similarity {
     * ids); an empty sample empties the codebook after one Lloyd pass and
     * the assignment fails loudly on element_at.
     *
-    * `materializeAssigned`: lazily localCheckpoint the full-corpus
-    * assignment — ONLY for callers that consume it more than once
-    * (semanticDedup's joins); a single-consumer caller (annIvf)
-    * would pay a full corpus materialization for zero reuse.
-    *
     * `withSubKey`: also carry `sub`, the 16-bit hyperplane sign key of the
     * raw embedding ([[lshKey]]) — computed in the same map-side scan, 8
     * bytes per row. [[semanticDedup]] uses its bit-prefixes to sub-split
@@ -619,11 +614,9 @@ object Similarity {
     */
   private[graft] def ivfAssign(spark: SparkSession, dir: String,
       nCells: Int, lloydIters: Int,
-      materializeAssigned: Boolean,
       withSubKey: Boolean = false,
       trainModulus: Int = IvfTrainAll): (DataFrame, DataFrame) =
-    ivfAssignFrom(quantized(spark, dir), nCells, lloydIters,
-      materializeAssigned, withSubKey, trainModulus)
+    ivfAssignFrom(quantized(spark, dir), nCells, lloydIters, withSubKey, trainModulus)
 
   /** [[ivfAssign]] over an arbitrary pre-quantized (vec_id, embedding,
     * qe) frame — the modality-neutral core: text embeddings and media
@@ -631,7 +624,6 @@ object Similarity {
     */
   private[graft] def ivfAssignFrom(emb: DataFrame,
       nCells: Int, lloydIters: Int,
-      materializeAssigned: Boolean,
       withSubKey: Boolean = false,
       trainModulus: Int = IvfTrainAll): (DataFrame, DataFrame) = {
     val trainEmb =
@@ -674,17 +666,14 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
         .select(col("cell"), expr("transform(ps, p -> p.m)").as("qc"))
     }
-    // centroids materialize once (lazy localCheckpoint, see Dedup): their
+    // centroids materialize once (lazy checkpoint, see Dedup): their
     // lineage is the whole Lloyd loop and every consumer would re-run it
-    val centroidsM = centroids.localCheckpoint(eager = false)
+    val centroidsM = Materialize(centroids)
     val subCols =
       if (withSubKey) Seq(lshKey("embedding", 16).as("sub")) else Seq.empty
-    val assignedRaw = emb.crossJoin(broadcast(centArr(centroidsM)))
+    val assigned = emb.crossJoin(broadcast(centArr(centroidsM)))
       .withColumn("cell", nearestCell(col("qe"), col("cents")))
       .select(col("vec_id") +: col("qe") +: col("cell") +: subCols: _*)
-    val assigned =
-      if (materializeAssigned) assignedRaw.localCheckpoint(eager = false)
-      else assignedRaw
     (centroidsM, assigned)
   }
 
@@ -712,8 +701,7 @@ object Similarity {
     * chain (the [[Bpe]] discipline) in DuckDB.
     */
   def ivfAssignment(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
-      materializeAssigned = false)
+    val (cents, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters)
     assigned.join(broadcast(cents), "cell")
       .select(col("vec_id"), col("cell"),
         longDot(col("qe"), col("qc")).as("dot_q"))
@@ -732,8 +720,7 @@ object Similarity {
     * (the query IS the round trip, not a cache).
     */
   def ivfAssignmentFrozen(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, _) = ivfAssign(spark, dir, IvfCells, LloydIters,
-      materializeAssigned = false)
+    val (cents, _) = ivfAssign(spark, dir, IvfCells, LloydIters)
     // a FRESH directory per call: loadCodebook's parquet scan is lazy,
     // so a shared fixed path would let a later call's save swap the
     // artifact under an earlier call's un-executed plan (and two JVMs
@@ -743,7 +730,7 @@ object Similarity {
     val path = Artifacts.scratchDir("graft_ivf_codebook_frozen") + "/cb"
     Artifacts.saveCodebook(cents, path)
     val loaded = Artifacts.loadCodebook(spark, path)
-      .localCheckpoint(eager = false) // assignment probe + dot-score join
+      .transform(Materialize(_)) // assignment probe + dot-score join
     assignWithCodebook(quantized(spark, dir), loaded)
       .join(broadcast(loaded), "cell")
       .select(col("vec_id"), col("cell"),
@@ -772,8 +759,7 @@ object Similarity {
       nCells: Int = IvfCells, nProbe: Int = IvfProbe,
       trainModulus: Int = IvfTrainAll): DataFrame = {
     val (centroids, assigned) =
-      ivfAssignFrom(emb, nCells, LloydIters, materializeAssigned = false,
-        trainModulus = trainModulus)
+      ivfAssignFrom(emb, nCells, LloydIters, trainModulus = trainModulus)
     // queries probe their nProbe nearest cells
     val probes = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qe").as("q_qe"))
@@ -834,11 +820,10 @@ object Similarity {
     * registered ivf recall (0.96 since r9) is the empirical record.
     */
   def ivfTuning(spark: SparkSession, dir: String): DataFrame = {
-    // materializeAssigned: the assignment feeds the query rows (with
-    // their own cell, for self-exclusion), cell sizes AND the
-    // truth-neighbor cell lookup
-    val (centroids, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
-      materializeAssigned = true)
+    // the assignment feeds the query rows (with their own cell, for
+    // self-exclusion), cell sizes AND the truth-neighbor cell lookup
+    val (centroids, assignedRaw) = ivfAssign(spark, dir, IvfCells, LloydIters)
+    val assigned = Materialize(assignedRaw)
     // The own cell rides on the query rows: a join against the selective
     // `vec_id < AnnQueries` slice would draw Spark's runtime Bloom join
     // filter, sized for a million rows when the side has no row count,
@@ -852,7 +837,7 @@ object Similarity {
       .withColumn("rk", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("d"), asc("cell"))))
       .select("query_id", "cell", "own_cell", "rk")
-      .localCheckpoint(eager = false) // cost agg + recall join both read it
+      .transform(Materialize(_)) // cost agg + recall join both read it
     val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("csize"))
     val rankedSized = ranked.join(broadcast(sizes), "cell")
     val grid = 1 to IvfCells
@@ -880,7 +865,7 @@ object Similarity {
       sum((col("vec_id") < AnnQueries).cast("long")).as("n_queries"))
     // one materialized row for the 16-branch fan-out (see annTuning)
     val one = cost.crossJoin(broadcast(recall)).crossJoin(broadcast(corpusN))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     grid.map { p =>
       val cand = col(s"cand_$p") - col(s"self_$p")
       val nCross = (col("n_queries") * (col("n_corpus") - 1)).cast("double")
@@ -914,7 +899,7 @@ object Similarity {
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val truth = annBruteForce(spark, dir)
       .select("query_id", "neighbor_id")
-      .localCheckpoint(eager = false) // one probe per method + the total
+      .transform(Materialize(_)) // one probe per method + the total
     val truthN = truth.agg(count(lit(1)).cast("double").as("n_truth"))
     val methods = Seq(
       "ivf" -> annIvf(spark, dir),
@@ -948,8 +933,7 @@ object Similarity {
     * value engine-exact.
     */
   def embeddingClusterStats(spark: SparkSession, dir: String): DataFrame = {
-    val (centroids, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
-      materializeAssigned = false)
+    val (centroids, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters)
     assigned.join(broadcast(centroids), "cell")
       .select(col("cell"), longDot(col("qe"), col("qc")).as("dot_q"))
       .groupBy("cell")
@@ -983,8 +967,7 @@ object Similarity {
   def clusterBalancedSample(spark: SparkSession, dir: String,
       perCell: Int = SamplePerCell): DataFrame = {
     require(perCell >= 1, s"perCell must be >= 1, got $perCell")
-    val (_, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters,
-      materializeAssigned = false)
+    val (_, assigned) = ivfAssign(spark, dir, IvfCells, LloydIters)
     assigned
       .withColumn("rk", row_number().over(
         Window.partitionBy("cell").orderBy("vec_id")))
@@ -1076,14 +1059,14 @@ object Similarity {
     // join) would re-execute four times through compose(compose(k1)).
     val k1 = pairs.groupBy(col("dup_id").as("vec_id"))
       .agg(min("keep_cand").as("keeper"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     // pointer-jump twice (f -> f∘f -> f⁴): chains ≤ 5 fully resolve
     def compose(m: DataFrame): DataFrame =
       m.as("x").join(
           m.select(col("vec_id").as("mid"), col("keeper").as("mid_keeper")).as("y"),
           col("x.keeper") === col("y.mid"), "left")
         .select(col("x.vec_id"), coalesce(col("mid_keeper"), col("x.keeper")).as("keeper"))
-    val resolved = compose(compose(k1).localCheckpoint(eager = false))
+    val resolved = compose(Materialize(compose(k1)))
     // rep-level final keeper, then every vector (exact copies included)
     // inherits its representative's keeper through the 128-bit content key
     val repFinal = parts.reps
@@ -1159,13 +1142,8 @@ object Similarity {
       nCells: Int, lloydIters: Int,
       maxCellSize: Int, maxAnchors: Int,
       trainModulus: Int = IvfTrainAll): SemanticDedupParts = {
-    // materializeAssigned = false: the heavy reuse below runs through
-    // `reps`, which is materialized itself — `assigned` has exactly one
-    // consumer (the reps lineage), so checkpointing it would write the
-    // full (qe, cell, sub) corpus to block storage for zero reuse.
     val (_, assigned) = ivfAssign(spark, dir, nCells, lloydIters,
-      materializeAssigned = false, withSubKey = true,
-      trainModulus = trainModulus)
+      withSubKey = true, trainModulus = trainModulus)
     // 128-bit content key: two differently seeded xxhash64 digests of the
     // quantized vector, computed map-side on each join side — the final
     // mapping join shuffles 16-byte keys, never the embedding twice.
@@ -1194,7 +1172,7 @@ object Similarity {
       .agg(min("vec_id").as("vec_id"), min("sub").as("sub"))
       .select(col("cell"), col("qe"), col("vec_id"), col("sub"),
         h1(col("qe")).as("h1"), h2(col("qe")).as("h2"))
-      .localCheckpoint(eager = false)
+      .transform(Materialize(_))
     // (2) per-cell distinct-vector counts -> sub-split bit width (nCells
     // rows: broadcast back). nbits caps at the 16 sign bits available;
     // a cell needing more is the tight-cluster case bound (3) handles.

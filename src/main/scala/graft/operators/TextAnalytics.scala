@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.PortableRound
 import graft.functions.TextHashes
 
@@ -653,7 +653,7 @@ object TextAnalytics {
   def sampleComposition(spark: SparkSession, dir: String): DataFrame = {
     val lab = Tables.documents(spark, dir)
       .select(col("doc_id"), splitLabelExpr(col("doc_id")).as("split"))
-      .localCheckpoint(eager = false) // three consumers, one scan
+      .transform(Materialize(_)) // three consumers, one scan
     val corpus = lab.groupBy("split").agg(count(lit(1)).as("n_corpus"))
     def comp(sample: DataFrame, name: String): DataFrame =
       corpus.join(
@@ -953,7 +953,7 @@ object TextAnalytics {
       .select(tokens(col("text")).as("w"))
     val uni = toks.select(explode(col("w")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // N + both join sides read it
+      .transform(Materialize(_)) // N + both join sides read it
     val nTotal = uni.agg(sum("c").as("n_total"))
     val bi = toks.filter(size(col("w")) >= 2)
       .select(explode(transform(sequence(lit(0), size(col("w")) - 2),
@@ -1200,7 +1200,7 @@ object TextAnalytics {
       .withColumn("mrn", row_number().over(byId))
       .filter(col("mrn") <= topK + 1).drop("mrn", "m")
     val short = shortSmall.unionAll(shortBig)
-      .localCheckpoint(eager = false) // cross + self candidate sides read it
+      .transform(Materialize(_)) // cross + self candidate sides read it
     val symH = hp.select(col("dg_a").as("dg"), col("dg_b").as("pdg"), col("n_shared"))
       .unionAll(hp.select(col("dg_b").as("dg"), col("dg_a").as("pdg"), col("n_shared")))
     val crossCand = symH
@@ -1269,10 +1269,10 @@ object TextAnalytics {
   private def cappedFps(fingerprints: DataFrame, maxDf: Int): DataFrame = {
     val raw = fingerprints
       .select(col("doc_id"), col("fp")).distinct()
-      .localCheckpoint(eager = false) // df rollup + capped join read it
+      .transform(Materialize(_)) // df rollup + capped join read it
     val dfreq = raw.groupBy("fp").agg(count(lit(1)).as("df"))
     raw.join(dfreq.filter(col("df") <= maxDf).select("fp"), "fp")
-      .localCheckpoint(eager = false) // sizes + both join sides read it
+      .transform(Materialize(_)) // sizes + both join sides read it
   }
 
   /** The ≥ minShared match-pair list over a capped fingerprint frame
@@ -1440,18 +1440,18 @@ object TextAnalytics {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"), md5(col("text")).as("tdg"))
     val tmemb = docs.select("doc_id", "tdg")
-      .localCheckpoint(eager = false) // pile stats + membership + light expansion
+      .transform(Materialize(_)) // pile stats + membership + light expansion
     val tpiles = tmemb.groupBy("tdg").agg(count(lit(1)).as("tm"))
     val repTexts = docs.groupBy("tdg").agg(first(col("text")).as("text"))
       .select(col("tdg").as("doc_id"), col("text"))
     val tfp = winnowFpsOf(repTexts, k, w)
       .select(col("doc_id").as("tdg"), col("fp"))
-      .localCheckpoint(eager = false) // df rollup + capped join read it
+      .transform(Materialize(_)) // df rollup + capped join read it
     val dfreq = tfp.join(tpiles, "tdg")
       .groupBy("fp").agg(sum("tm").as("df")) // exact document frequency
     val tfpCapped = tfp.join(dfreq.filter(col("df") <= maxDf), Seq("fp"))
       .select(col("tdg"), col("fp"), col("df"))
-      .localCheckpoint(eager = false) // stats rollup + heavy/light sides read it
+      .transform(Materialize(_)) // stats rollup + heavy/light sides read it
     // per text pile: capped size + the canonical HEAVY-set digest
     // (collect_list skips the when()'s nulls — light/unique fps stay out)
     val tstats = tfpCapped.groupBy("tdg")
@@ -1460,30 +1460,30 @@ object TextAnalytics {
           transform(sort_array(collect_list(
             when(col("df") >= heavyDf, col("fp")))),
             _.cast("string")))).as("hdg"))
-      .localCheckpoint(eager = false) // membership + pile election read it
+      .transform(Materialize(_)) // membership + pile election read it
     val byDigest = tmemb.join(tstats, "tdg")
       .select("doc_id", "hdg", "n_fp")
-      .localCheckpoint(eager = false) // pile election + remapped membership
+      .transform(Materialize(_)) // pile election + remapped membership
     // elect the pile id (min member) per digest, then retire the digest
     val pileIds = byDigest.groupBy("hdg")
       .agg(min("doc_id").as("dg"), count(lit(1)).as("m"))
-      .localCheckpoint(eager = false) // membership remap + piles read it
+      .transform(Materialize(_)) // membership remap + piles read it
     val membership = byDigest.join(pileIds.select("hdg", "dg"), "hdg")
       .select("doc_id", "dg", "n_fp")
-      .localCheckpoint(eager = false) // every caller expansion reads it
+      .transform(Materialize(_)) // every caller expansion reads it
     val piles = pileIds.select("dg", "m")
     val pileFps = tfpCapped.filter(col("df") >= heavyDf)
       .join(tstats.select("tdg", "hdg"), "tdg")
       .join(pileIds.select("hdg", "dg"), "hdg")
       .select("dg", "fp").distinct()
-      .localCheckpoint(eager = false) // |H| rollup + both pair-join sides read it
+      .transform(Materialize(_)) // |H| rollup + both pair-join sides read it
     val pileShared = pileFps.groupBy("dg").agg(count(lit(1)).as("r"))
-      .localCheckpoint(eager = false) // self piles + H-lookups read it
+      .transform(Materialize(_)) // self piles + H-lookups read it
     val lightFps = tfpCapped
       .filter(col("df") >= 2 && col("df") < heavyDf)
       .join(tmemb, "tdg")
       .select("doc_id", "fp")
-      .localCheckpoint(eager = false) // both light-join sides read it
+      .transform(Materialize(_)) // both light-join sides read it
     WinnowPiles(membership, piles, pileFps, pileShared, lightFps)
   }
 
@@ -1566,7 +1566,7 @@ object TextAnalytics {
       minShared: Int, maxDf: Int, topK: Int): DataFrame = {
     val fp = cappedFps(fingerprints, maxDf)
     val sizes = fp.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // both endpoint-size joins read it
+      .transform(Materialize(_)) // both endpoint-size joins read it
     val pairs = pairsFromCapped(fp, minShared)
     val sym = pairs
       .select(col("doc_a").as("doc_id"), col("doc_b").as("partner"), col("n_shared"))
@@ -1622,7 +1622,7 @@ object TextAnalytics {
       k: Int = WinnowK, w: Int = WinnowW): DataFrame = {
     val fp = winnowFingerprints(spark, dir, k, w)
       .select(col("doc_id"), col("fp")).distinct()
-      .localCheckpoint(eager = false) // df rollup + doc rollup read it
+      .transform(Materialize(_)) // df rollup + doc rollup read it
     val dfreq = fp.groupBy("fp").agg(count(lit(1)).as("df"))
     fp.join(dfreq, "fp")
       .groupBy("doc_id")
@@ -1812,7 +1812,7 @@ object TextAnalytics {
       k: Int = WinnowK, w: Int = WinnowW,
       minShared: Int = WinnowMinShared): DataFrame = {
     val fp = winnowFpsOf(batchDocs, k, w)
-      .localCheckpoint(eager = false) // sizes + census probe read it
+      .transform(Materialize(_)) // sizes + census probe read it
     val census = frozenFps.select(col("fp")).distinct()
     val hits = fp.join(census, Seq("fp"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
@@ -1902,10 +1902,10 @@ object TextAnalytics {
       grid: Seq[(Int, Int)] = WinnowGrid,
       minShared: Int = WinnowMinShared): DataFrame =
     grid.groupBy(_._1).toSeq.flatMap { case (k, cells) =>
-      val grams = winnowGrams(spark, dir, k).localCheckpoint(eager = false)
+      val grams = Materialize(winnowGrams(spark, dir, k))
       cells.map { case (_, w) =>
         val fp = winnowSelect(grams, w)
-          .localCheckpoint(eager = false) // count + pair side read it
+          .transform(Materialize(_)) // count + pair side read it
         tuningCell(fp, k, w, minShared)
       }
     }.reduce(_.unionByName(_)).orderBy("k", "w")
@@ -1939,9 +1939,9 @@ object TextAnalytics {
     grid.groupBy(_._1).toSeq.flatMap { case (k, cells) =>
       val ws = cells.map(_._2).sorted
       if (!ws.zip(ws.tail).forall { case (a, b) => b == 2 * a }) {
-        val grams = winnowGrams(spark, dir, k).localCheckpoint(eager = false)
+        val grams = Materialize(winnowGrams(spark, dir, k))
         ws.map { w =>
-          tuningCell(winnowSelect(grams, w).localCheckpoint(eager = false),
+          tuningCell(Materialize(winnowSelect(grams, w)),
             k, w, minShared)
         }
       } else {
@@ -1951,14 +1951,14 @@ object TextAnalytics {
         val cascaded = ws.zip(ws.tail).foldLeft(base) { case (d, (wp, w)) =>
           d.withColumn(s"sel$w",
             least(col(s"sel$wp"), lead(col(s"sel$wp"), wp).over(wspec))) }
-          .localCheckpoint(eager = false) // every w cell reads it
+          .transform(Materialize(_)) // every w cell reads it
         cells.map { case (_, w) =>
           val fp = cascaded.filter(col("pidx") <= col("ng") - w)
             .select(col("doc_id"),
               pmod(col(s"sel$w"), lit(PosPack)).as("pos"),
               expr(s"sel$w div $PosPack").as("fp"))
             .distinct()
-            .localCheckpoint(eager = false) // count + pair side read it
+            .transform(Materialize(_)) // count + pair side read it
           tuningCell(fp, k, w, minShared)
         }
       }

@@ -63,7 +63,7 @@ class ArtifactSpec extends AnyFunSuite {
       .withColumn("qe", graft.functions.VectorFunctions.quantizeCol(col("embedding")))
       .select("vec_id", "qe")
     val (cents, assigned) = Similarity.ivfAssign(spark, sf, nCells = 8,
-      lloydIters = 2, materializeAssigned = false)
+      lloydIters = 2)
     val dir = Files.createTempDirectory("cbart").toString + "/cb"
     Artifacts.saveCodebook(cents, dir)
     val loaded = Artifacts.loadCodebook(spark, dir)

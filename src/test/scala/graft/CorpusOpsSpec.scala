@@ -392,6 +392,20 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(few.count() == 2)
   }
 
+  test("bpe learning releases each superseded round's vocabulary") {
+    // every merge round checkpoints a fresh vocabulary eagerly; the
+    // round it replaces is dead and must be freed then, not left to GC
+    // (Dataset.unpersist frees nothing of a checkpoint)
+    Materialize.scoped {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val vocab = Bpe.bpeVocab(spark, sf, nMerges = 64).collect()
+      assert(vocab.nonEmpty)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size <= 1,
+        s"BPE left ${added.size} persisted RDDs behind (want <= 1, the returned vocabulary): $added")
+    }
+  }
+
   /** External-target form: the same fixture scored against an explicit
     * reference frame (not the modulus), including a target token the
     * corpus never uses (its bucket mass must only shift the smoothing

@@ -53,14 +53,14 @@ class GraphSpec extends AnyFunSuite {
     // in-suite pressure source). A 64-node path forces several
     // alternating-star rounds; afterwards only the FINAL round's
     // checkpoint may remain persisted from the loop.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = components((0L until 63L).map(i => (i, i + 1)))
-    assert(got == (0L to 63L).map(_ -> 0L).toMap, got.toString)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 1,
-      s"CC left ${added.size} persisted RDDs behind (want <= 1, the final round): $added")
-    added.foreach(id => spark.sparkContext.getPersistentRDDs
-      .get(id).foreach(_.unpersist(blocking = false)))
+    Materialize.scoped {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val got = components((0L until 63L).map(i => (i, i + 1)))
+      assert(got == (0L to 63L).map(_ -> 0L).toMap, got.toString)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size <= 1,
+        s"CC left ${added.size} persisted RDDs behind (want <= 1, the final round): $added")
+    }
   }
 
   /** Min-id component labels by union-find, for every node of `edges`

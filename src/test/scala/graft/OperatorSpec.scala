@@ -593,9 +593,8 @@ class OperatorSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val vecs = Multimodal.mediaVectors(spark, dir)
       .withColumn("qe", graft.functions.VectorFunctions.quantizeCol(col("embedding")))
-    val (_, assigned) = Similarity.ivfAssignFrom(vecs, nCells = 2,
-      lloydIters = 2, materializeAssigned = true)
-    val cells = assigned.select("vec_id", "cell")
+    val (_, assigned) = Similarity.ivfAssignFrom(vecs, nCells = 2, lloydIters = 2)
+    val cells = Materialize(assigned).select("vec_id", "cell")
       .as[(Long, Int)].collect().toMap
     assert(cells(0L) == cells(1L),
       s"near-identical payloads split across IVF cells: $cells")

@@ -82,7 +82,7 @@ class PlanSpec extends AnyFunSuite {
     // include vec_id. A regression to the old crossJoin+row_number plan
     // would put vec_id into a hashpartitioning Exchange and fail here.
     val (_, assigned) = graft.operators.Similarity.ivfAssign(
-      spark, sf, nCells = 8, lloydIters = 2, materializeAssigned = false)
+      spark, sf, nCells = 8, lloydIters = 2)
     val plan = assigned.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val lines = plan.linesIterator.toVector
@@ -361,14 +361,13 @@ class PlanSpec extends AnyFunSuite {
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       // release only what this query's planning persisted: other suites'
       // blocks on the shared session are not this test's to drop
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
-      val hasGlobalWindow = plan.collectFirst {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty => w
-      }.isDefined
-      (spark.sparkContext.getPersistentRDDs.keySet -- before).foreach(id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      val hasGlobalWindow = Materialize.scoped {
+        val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+        plan.collectFirst {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+              if w.partitionSpec.isEmpty => w
+        }.isDefined
+      }
       if (hasGlobalWindow) Some(name) else None
     }.toSet
     assert(offenders == pinned,
