@@ -1101,7 +1101,7 @@ object Bench {
       import spark.implicits._
       val chunks = replayEvents(spark, sfDir).grouped(50000).toSeq
       () => streamPass(spark, EventColumns, chunks)(sdf =>
-        noop(StreamingFeatures.windowedCounts(sdf, "20 minutes")))
+        noop(StreamingFeatures.windowedCounts(sdf, StreamingFeatures.FeatureWindow)))
     }
 
   /** Streaming-hygiene throughput: docs/s through the FULL corpus gate
@@ -1263,31 +1263,24 @@ object Bench {
 
   /** End-to-end feature-pipeline replay (r10 verdict ask #8) — the E2
     * lifecycle of SURVEY §3 as a MEASURED number instead of a spec: the
-    * time-ordered event replay driven through the complete 20-min
-    * feature pipeline (tag → watermark → window → union-pivot) into BOTH
-    * reference sinks per micro-batch — the Postgres-twin PK-upsert (live
-    * embedded Derby, the portable UPDATE-then-INSERT writer) and the
-    * Redis-twin KV hash write (partition-parallel HSET), in 10k-row
-    * chunks, two warm-ups (the ingest discipline), rows/s over the full
-    * replay INCLUDING the final watermark flush. Each pass writes its own
-    * Derby database; the last one is kept for `matched`: the Derby table
-    * and the KV store read back and compared EXACTLY against the
-    * registered batch `q_features_20m` frame
-    * ([[graft.operators.FeatureJobs.windowedFeatures]]) while the replay
-    * holds the whole click/view table, else against the same aggregation
-    * of exactly the replayed rows.
+    * time-ordered event replay driven through
+    * [[StreamingFeatures.featurePipeline]] (tag → watermark → window →
+    * union-pivot) into BOTH reference sinks per micro-batch — the
+    * Postgres-twin PK-upsert (live embedded Derby) and the Redis-twin KV
+    * hash write (partition-parallel HSET), in 10k-row chunks, two warm-ups
+    * (the ingest discipline), rows/s over the full replay INCLUDING the
+    * final watermark flush. Each pass writes its own Derby database; the
+    * last one is kept for `matched`: the Derby table and the KV store read
+    * back and compared EXACTLY against the same windowed count over
+    * exactly the replayed rows, applied to a static frame.
     *
     * Windows close deterministically: replay order is (ts, event_id) —
     * monotone event time — and a far-future sentinel, the uncounted flush
     * chunk, advances the watermark past every real window at close (the
     * ReplayE2ESpec device); the sentinel's own window never closes, so it
-    * never reaches a sink. `window_end` ships to Derby as the
-    * `yyyyMMddHHmm` key string (the Redis key grammar) — timezone-proof
-    * across the JDBC round trip, and the same PK identity as a TIMESTAMP
-    * column.
+    * never reaches a sink.
     */
   private def featurePipelineRate(spark: SparkSession, sfDir: String): Rate = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val rate = guarded {
       System.setProperty("derby.stream.error.file", "/tmp/derby.log")
@@ -1298,6 +1291,7 @@ object Bench {
         val sentinel = ("__sentinel__",
           new Timestamp(maxTs + 30L * 24 * 3600 * 1000), "click")
         val chunks = rows.grouped(10000).toSeq
+        val kv = graft.sources.Sinks.InMemoryKV
         var passN = 0
         def dropDb(n: Int): Unit =
           try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:graftfeat$n;drop=true")
@@ -1305,72 +1299,25 @@ object Bench {
         val timed = medianOfFive(warmups = 2) { () =>
           passN += 1
           val url = s"jdbc:derby:memory:graftfeat$passN;create=true"
-          val conn = java.sql.DriverManager.getConnection(url)
-          try conn.createStatement().execute(
-            """CREATE TABLE features_20m (uuid VARCHAR(64) NOT NULL,
-              | window_key VARCHAR(12) NOT NULL, clicks BIGINT, views BIGINT,
-              | PRIMARY KEY (uuid, window_key))""".stripMargin)
-          finally conn.close()
-          graft.sources.Sinks.InMemoryKV.clear()
-          val r = streamPass(spark, EventColumns, chunks, flush = Seq(sentinel)) { sdf =>
-            StreamingFeatures.windowedCounts(sdf, "20 minutes")
-              .writeStream.outputMode("append")
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                // both reference sinks per micro-batch, off one closed-window
-                // frame: PK-upsert (idempotent under redelivery) + KV HSET
-                graft.sources.Sinks.jdbcUpsertBatchPortable(
-                  batch.select(col("uuid"),
-                    date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
-                    col("clicks"), col("views")),
-                  url, "features_20m", Seq("uuid", "window_key"))
-                StreamingFeatures.redisRows(batch)
-                  .foreachPartition { it: Iterator[Row] =>
-                    val kv = graft.sources.Sinks.InMemoryKV
-                    it.foreach(r =>
-                      kv.hset(r.getString(0), r.getMap[String, String](1).toMap))
-                  }
-              }
-          }
+          StreamingFeatures.createFeatureTable(url, "features_20m")
+          kv.clear()
+          val r = streamPass(spark, EventColumns, chunks, flush = Seq(sentinel))(
+            StreamingFeatures.featurePipeline(_, url, "features_20m", kv))
           if (passN <= 6) dropDb(passN) // keep the LAST pass's DB for the check
           r
         }
-        // Under the cap the expectation is the registered q_features_20m
-        // frame (the r10 verdict's batch≡streaming check); over it, the
-        // SAME aggregation over exactly the replayed rows (the window
-        // straddling the cutoff carries partial counts in both sides
-        // equally, so equality — including the KV map — still holds on a
-        // correct pipeline).
-        val expectedDf =
-          if (rows.length < EventReplayRows)
-            graft.operators.FeatureJobs.windowedFeatures(spark, sfDir, "20 minutes")
-              .select(col("user_id").cast("string").as("uuid"),
-                col("window_end"), col("clicks"), col("views"))
-          else
-            spark.createDataset(rows).toDF(EventColumns: _*)
-              .groupBy(window(col("event_time"), "20 minutes").as("w"), col("uuid"))
-              .agg(count(when(col("tag") === "click", 1)).as("clicks"),
-                count(when(col("tag") === "view", 1)).as("views"))
-              .select(col("uuid"), col("w.end").as("window_end"),
-                col("clicks"), col("views"))
-        val expected = expectedDf
-          .select(col("uuid"),
-            date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
-            col("clicks"), col("views"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-          .toSet
-        val derby = graft.sources.Sinks.jdbcTable(spark,
-            s"jdbc:derby:memory:graftfeat$passN", "features_20m")
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-          .toSet
-        val expectedKv = expected.map { case (u, w, c, v) =>
-          s"feat:user:{$u}:$w" ->
-            Map("click20m" -> c.toString, "view20m" -> v.toString)
-        }.toMap
-        val kv = graft.sources.Sinks.InMemoryKV.data.toMap
+        val expected = StreamingFeatures.windowedCounts(
+          spark.createDataset(rows).toDF(EventColumns: _*), StreamingFeatures.FeatureWindow)
+        def tuples(df: DataFrame): Set[(String, String, Long, Long)] = df.collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+        val derby = tuples(graft.sources.Sinks.jdbcTable(spark,
+          s"jdbc:derby:memory:graftfeat$passN", "features_20m"))
+        val expectedKv = StreamingFeatures.redisRows(expected).collect()
+          .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
+        val matched = derby == tuples(StreamingFeatures.featureRows(expected)) &&
+          kv.data.toMap == expectedKv
         dropDb(passN)
-        timed.copy(matched = Some(derby == expected && kv == expectedKv))
+        timed.copy(matched = Some(matched))
       }
     }
     rate.copy(matched = Some(rate.matched.contains(true)))

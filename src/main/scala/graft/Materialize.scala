@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one owner of graft's intermediates: it computes a frame once and
@@ -22,6 +22,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * on one thread or on several, never free each other's blocks. Outside
   * every scope nothing is recorded and the ContextCleaner frees a
   * frame's blocks once the frame is garbage.
+  *
+  * Blocks are freed through the context, not `RDD.unpersist`: that call
+  * only adds a WARN per locally checkpointed RDD ("its lineage has been
+  * truncated") and a storage-level reset, and a checkpoint this module
+  * frees is by design never read again.
   *
   * A frame whose scope has closed must not be read again: a lazy frame
   * that was computed inside its scope then fails with Spark's
@@ -46,7 +51,7 @@ object Materialize {
     try body
     finally {
       open.set(open.get.tail)
-      made.foreach(_.unpersist(blocking = true))
+      made.foreach(GraftShim.unpersist(_, blocking = true))
     }
   }
 
@@ -54,7 +59,7 @@ object Materialize {
     * round of an iterative loop, which nothing reads again (so the
     * removal does not wait).
     */
-  def release(df: DataFrame): Unit = rdds(df).foreach(_.unpersist(blocking = false))
+  def release(df: DataFrame): Unit = rdds(df).foreach(GraftShim.unpersist(_, blocking = false))
 
   private def rdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }

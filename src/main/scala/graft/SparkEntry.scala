@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.streaming.StreamingFeatures.FeatureWindow
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -66,7 +67,7 @@ object SparkEntry {
     "q_funnel" -> ((s, d) => TemporalJoins.funnelStages(s, d)),
     "q_revenue_attribution" -> ((s, d) => TemporalJoins.revenueAttribution(s, d)),
     // Feature jobs (SURVEY §2.4 A1-A7, §2.3 J1/J2 as union-pivot)
-    "q_features_20m" -> ((s, d) => FeatureJobs.windowedFeatures(s, d, "20 minutes")),
+    "q_features_20m" -> ((s, d) => FeatureJobs.windowedFeatures(s, d, FeatureWindow)),
     "q_features_5m" -> ((s, d) => FeatureJobs.windowedFeatures(s, d, "5 minutes")),
     "q_features_daily" -> ((s, d) => FeatureJobs.dailyFeatures(s, d)),
     "q_active_users_5m" -> ((s, d) => FeatureJobs.activeUsers5m(s, d)),

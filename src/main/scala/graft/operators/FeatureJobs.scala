@@ -4,12 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.StreamingFeatures
+import graft.streaming.StreamingFeatures.{ClickField, FeatureWindow, FeatureWindowSeconds, ViewField}
 
 /** The reference's feature-engineering jobs — tumbling-window per-user
   * click/view counts for a Redis feature store (`flink-jobs/redis_sink.py:75-129`,
   * `flink-jobs/redis_sink copy.sql:64-182`) and the daily batch backfill
   * (`flink-jobs/feature_batch_update.py:85-113`) — as batch Spark jobs.
-  * Streaming twins live in [[graft.streaming.StreamingFeatures]].
+  * The windowed jobs ARE the streaming jobs of
+  * [[graft.streaming.StreamingFeatures]] applied to a static frame (the
+  * watermark drops out of a batch plan), so batch and stream share one
+  * count, one window and one key grammar.
   *
   * The reference computes clicks and views as two windowed aggregates and
   * LEFT-OUTER-joins them on (uuid, window_end) (J1). We use the union-pivot
@@ -39,12 +44,8 @@ object FeatureJobs {
     */
   private[operators] def windowedFeaturesUnordered(
       spark: SparkSession, dir: String, windowLen: String): DataFrame =
-    clicksViews(spark, dir)
-      .groupBy(window(col("ts"), windowLen).as("w"), col("user_id"))
-      .agg(
-        count(when(col("event_type") === "click", 1)).as("clicks"),
-        count(when(col("event_type") === "view", 1)).as("views"))
-      .select(col("user_id"), col("w.end").as("window_end"), col("clicks"), col("views"))
+    StreamingFeatures.windowedCounts(clicksViews(spark, dir), windowLen,
+      key = "user_id", time = "ts", tag = "event_type")
 
   /** Daily batch feature backfill (`feature_batch_update.py:85-113`, J2/A7).
     * Reference labels the whole-day count with `window_end = day_start +
@@ -53,13 +54,7 @@ object FeatureJobs {
     * + COALESCE-on-keys.
     */
   def dailyFeatures(spark: SparkSession, dir: String): DataFrame =
-    clicksViews(spark, dir)
-      .groupBy(col("user_id"),
-        (date_trunc("day", col("ts")) + expr("INTERVAL 20 MINUTES")).as("window_end"))
-      .agg(
-        count(when(col("event_type") === "click", 1)).as("click20m"),
-        count(when(col("event_type") === "view", 1)).as("view20m"))
-      .orderBy("user_id", "window_end")
+    daily(clicksViews(spark, dir))
 
   /** The reference job's actual contract: one processing day per run.
     * `feature_batch_update.py:98-109` filters `[processingDate,
@@ -73,13 +68,17 @@ object FeatureJobs {
     */
   def dailyFeatures(spark: SparkSession, dir: String, processingDate: String): DataFrame = {
     val dayStart = to_timestamp(lit(processingDate), "yyyy-MM-dd")
-    clicksViews(spark, dir)
-      .filter(col("ts") >= dayStart && col("ts") < dayStart + expr("INTERVAL 1 DAY"))
+    daily(clicksViews(spark, dir)
+      .filter(col("ts") >= dayStart && col("ts") < dayStart + expr("INTERVAL 1 DAY")))
+  }
+
+  /** The one aggregation of both [[dailyFeatures]] forms. */
+  private def daily(clicksViews: DataFrame): DataFrame = {
+    val (clicks, views) = StreamingFeatures.clickViewCounts(col("event_type"))
+    clicksViews
       .groupBy(col("user_id"),
         (date_trunc("day", col("ts")) + expr("INTERVAL 20 MINUTES")).as("window_end"))
-      .agg(
-        count(when(col("event_type") === "click", 1)).as("click20m"),
-        count(when(col("event_type") === "view", 1)).as("view20m"))
+      .agg(clicks.as(ClickField), views.as(ViewField))
       .orderBy("user_id", "window_end")
   }
 
@@ -87,11 +86,9 @@ object FeatureJobs {
     * `redis_sink copy.sql:81-95`): doc id from the JSON `props.k`.
     */
   def docCounts5m(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.eventsEnriched(spark, dir)
-      .filter(col("event_type").isin("click", "view"))
-      .groupBy(window(col("ts"), "5 minutes").as("w"), col("doc_id"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("doc_id"), col("w.end").as("window_end"), col("cnt"))
+    StreamingFeatures.windowedCountsBy(
+      Tables.eventsEnriched(spark, dir).filter(col("event_type").isin("click", "view")),
+      "doc_id", "5 minutes", timeCol = "ts")
       .orderBy("doc_id", "window_end")
 
   /** Distinct active users per 5-min window over the UNION ALL of both
@@ -109,93 +106,77 @@ object FeatureJobs {
       .orderBy("window_end")
   }
 
-  /** Redis feature-hash rows: key grammar `feat:user:{<uuid>}:<yyyyMMddHHmm>`
-    * (`redis_sink copy.sql:174`, `redis_sink.py:121-126`; F3/F4/F5). Values
-    * stringified as the MAP<STRING,STRING> hash would be (F7); emitted as
-    * columns here so the oracle can compare — the MAP form is exercised in
-    * [[redisHashRows]] / the streaming sink.
+  /** Redis feature-hash rows: the [[StreamingFeatures.featureKey]] grammar
+    * `feat:user:{<uuid>}:<yyyyMMddHHmm>` (`redis_sink copy.sql:174`,
+    * `redis_sink.py:121-126`; F3/F4/F5). Values stringified as the
+    * MAP<STRING,STRING> hash would be (F7); emitted as columns here so the
+    * oracle can compare — the MAP form is [[StreamingFeatures.redisRows]],
+    * which the streaming sink writes.
     */
   def redisFeatureKeys(spark: SparkSession, dir: String): DataFrame =
-    windowedFeatures(spark, dir, "20 minutes")
+    windowedFeatures(spark, dir, FeatureWindow)
       .select(
-        concat(lit("feat:user:{"), col("user_id").cast("string"), lit("}:"),
-          date_format(col("window_end"), "yyyyMMddHHmm")).as("redis_key"),
-        col("clicks").cast("string").as("click20m"),
-        col("views").cast("string").as("view20m"))
+        StreamingFeatures.featureKey("user", Some(col("user_id").cast("string")),
+          Some(col("window_end"))).as("redis_key"),
+        col("clicks").cast("string").as(ClickField),
+        col("views").cast("string").as(ViewField))
       .orderBy("redis_key")
-
-  /** The literal (key, MAP<STRING,STRING>) shape the Redis connector sink
-    * consumes (`redis_sink copy.sql:45-48,172-182`). Not oracle-comparable
-    * (map hashing is engine-specific) — covered by ScalaTest instead.
-    */
-  def redisHashRows(spark: SparkSession, dir: String): DataFrame =
-    windowedFeatures(spark, dir, "20 minutes")
-      .select(
-        concat(lit("feat:user:{"), col("user_id").cast("string"), lit("}:"),
-          date_format(col("window_end"), "yyyyMMddHHmm")).as("redis_key"),
-        map(
-          lit("click20m"), col("clicks").cast("string"),
-          lit("view20m"), col("views").cast("string")).as("redis_hash"))
 
   // ---------------------------------------------------------------------
   // DuckDB oracle twins. Spark tumbling windows are epoch-aligned:
   // window_end = floor(epoch/len)*len + len, reproduced with integer math.
   // ---------------------------------------------------------------------
 
+  /** End of the epoch-aligned `seconds`-long tumbling window holding `ts`. */
+  private[operators] def duckWindowEnd(seconds: Long): String =
+    s"to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // $seconds) * $seconds + $seconds) AT TIME ZONE 'UTC'"
+
+  /** Twin of [[StreamingFeatures.clickViewCounts]], named. */
+  private def duckClickViewCounts(clicks: String, views: String): String =
+    s"count(*) FILTER (WHERE event_type = 'click') AS $clicks, " +
+      s"count(*) FILTER (WHERE event_type = 'view') AS $views"
+
+  /** Twin of [[windowedFeaturesUnordered]]: (user_id, window_end, clicks,
+    * views), unsorted.
+    */
+  private[operators] def duckWindowFeatures(seconds: Long): String =
+    s"""SELECT user_id, ${duckWindowEnd(seconds)} AS window_end,
+       |       ${duckClickViewCounts("clicks", "views")}
+       |FROM events WHERE event_type IN ('click','view')
+       |GROUP BY 1, 2""".stripMargin
+
   private def windowOracle(seconds: Long): String =
-    s"""WITH bucketed AS (
-       |  SELECT user_id,
-       |         to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // $seconds) * $seconds + $seconds)
-       |           AT TIME ZONE 'UTC' AS window_end,
-       |         event_type
-       |  FROM events WHERE event_type IN ('click','view'))
-       |SELECT user_id, window_end,
-       |       count(*) FILTER (WHERE event_type = 'click') AS clicks,
-       |       count(*) FILTER (WHERE event_type = 'view') AS views
-       |FROM bucketed GROUP BY user_id, window_end ORDER BY user_id, window_end""".stripMargin
+    s"${duckWindowFeatures(seconds)} ORDER BY user_id, window_end"
 
   val oracles: Map[String, String] = Map(
-    "q_features_20m" -> windowOracle(1200),
+    "q_features_20m" -> windowOracle(FeatureWindowSeconds),
     "q_features_5m" -> windowOracle(300),
     "q_features_daily" ->
-      """SELECT user_id,
-        |       date_trunc('day', ts) + INTERVAL 20 MINUTE AS window_end,
-        |       count(*) FILTER (WHERE event_type = 'click') AS click20m,
-        |       count(*) FILTER (WHERE event_type = 'view') AS view20m
-        |FROM events WHERE event_type IN ('click','view')
-        |GROUP BY 1, 2 ORDER BY user_id, window_end""".stripMargin,
+      s"""SELECT user_id,
+         |       date_trunc('day', ts) + INTERVAL 20 MINUTE AS window_end,
+         |       ${duckClickViewCounts(ClickField, ViewField)}
+         |FROM events WHERE event_type IN ('click','view')
+         |GROUP BY 1, 2 ORDER BY user_id, window_end""".stripMargin,
     "q_doc_counts_5m" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS doc_id,
-        |       to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 + 300)
-        |         AT TIME ZONE 'UTC' AS window_end,
-        |       count(*) AS cnt
-        |FROM events WHERE event_type IN ('click','view')
-        |GROUP BY 1, 2 ORDER BY doc_id, window_end""".stripMargin,
+      s"""SELECT CAST(json_extract_string(props, '$$.k') AS BIGINT) AS doc_id,
+         |       ${duckWindowEnd(300)} AS window_end,
+         |       count(*) AS cnt
+         |FROM events WHERE event_type IN ('click','view')
+         |GROUP BY 1, 2 ORDER BY doc_id, window_end""".stripMargin,
     "q_active_users_5m" ->
-      """WITH unioned AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'click'
-        |  UNION ALL
-        |  SELECT user_id, ts FROM events WHERE event_type = 'view')
-        |SELECT to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 + 300)
-        |         AT TIME ZONE 'UTC' AS window_end,
-        |       count(DISTINCT user_id) AS n_users
-        |FROM unioned GROUP BY 1 ORDER BY window_end""".stripMargin,
+      s"""WITH unioned AS (
+         |  SELECT user_id, ts FROM events WHERE event_type = 'click'
+         |  UNION ALL
+         |  SELECT user_id, ts FROM events WHERE event_type = 'view')
+         |SELECT ${duckWindowEnd(300)} AS window_end,
+         |       count(DISTINCT user_id) AS n_users
+         |FROM unioned GROUP BY 1 ORDER BY window_end""".stripMargin,
     "q_redis_feature_keys" ->
-      """WITH bucketed AS (
-        |  SELECT user_id,
-        |         to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // 1200) * 1200 + 1200)
-        |           AT TIME ZONE 'UTC' AS window_end,
-        |         event_type
-        |  FROM events WHERE event_type IN ('click','view')),
-        |feats AS (
-        |  SELECT user_id, window_end,
-        |         count(*) FILTER (WHERE event_type = 'click') AS clicks,
-        |         count(*) FILTER (WHERE event_type = 'view') AS views
-        |  FROM bucketed GROUP BY user_id, window_end)
-        |SELECT concat('feat:user:{', CAST(user_id AS VARCHAR), '}:',
-        |              strftime(window_end, '%Y%m%d%H%M')) AS redis_key,
-        |       CAST(clicks AS VARCHAR) AS click20m,
-        |       CAST(views AS VARCHAR) AS view20m
-        |FROM feats ORDER BY redis_key""".stripMargin
+      s"""WITH feats AS (${duckWindowFeatures(FeatureWindowSeconds)})
+         |SELECT concat('feat:user:{', CAST(user_id AS VARCHAR), '}:',
+         |              strftime(window_end, '%Y%m%d%H%M')) AS redis_key,
+         |       CAST(clicks AS VARCHAR) AS $ClickField,
+         |       CAST(views AS VARCHAR) AS $ViewField
+         |FROM feats ORDER BY redis_key""".stripMargin
   )
 }

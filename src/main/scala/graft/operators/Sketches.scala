@@ -65,13 +65,9 @@ object Sketches {
     */
   val HllRhoMax: Int = 31 - HllB + 1
 
-  /** CW bucket of a 31-bit hash under row j: ((a_j·h + b_j) mod P) mod w. */
-  private def cmsBucket(h: Column, j: Int): Column =
-    cmsBucketW(h, j, CmsWidth.toLong)
-
-  /** Width-parameterized form of [[cmsBucket]] — the production-sizing
-    * probe raises only the outer modulus; the CW row family is
-    * width-agnostic.
+  /** CW bucket of a 31-bit hash under row j at width w:
+    * ((a_j·h + b_j) mod P) mod w — the production-sizing probe raises only
+    * the outer modulus; the CW row family is width-agnostic.
     */
   private def cmsBucketW(h: Column, j: Int, width: Long): Column =
     pmod(pmod(lit(CmsA(j)) * h + lit(CmsB(j)), lit(P)), lit(width))

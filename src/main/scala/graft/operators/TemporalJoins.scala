@@ -382,14 +382,11 @@ object TemporalJoins {
          |         AS attributed_cents
          |FROM att GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_asof_features" ->
-      s"""WITH snaps AS (
-         |  SELECT user_id,
-         |         to_timestamp((CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 + 300)
-         |           AT TIME ZONE 'UTC' AS feat_end,
-         |         count(*) FILTER (WHERE event_type = 'click') AS feat_clicks,
-         |         count(*) FILTER (WHERE event_type = 'view') AS feat_views
-         |  FROM events WHERE event_type IN ('click','view')
-         |  GROUP BY 1, 2),
+      s"""WITH feats AS (${FeatureJobs.duckWindowFeatures(300)}),
+         |snaps AS (
+         |  SELECT user_id, window_end AS feat_end, clicks AS feat_clicks,
+         |         views AS feat_views
+         |  FROM feats),
          |clicks AS (
          |  SELECT user_id, event_id, ts AS click_ts FROM events
          |  WHERE event_type = 'click'),

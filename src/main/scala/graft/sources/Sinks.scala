@@ -2,7 +2,7 @@ package graft.sources
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * The reference's exactly-once-ish story is at-least-once delivery +
   * idempotent PK upserts (`page_views_postgres_sink.sql:47`, README.md:43-47).
   * Spark has no native streaming JDBC/Redis sink, so both are
-  * `foreachBatch`/`ForeachWriter` code — sink I/O runs partition-parallel
+  * `foreachBatch` code — sink I/O runs partition-parallel
   * on executors (unlike the reference's single-threaded driver loop in
   * `flink-jobs/redis_sink.py:131-140`, a weakness SURVEY §3 E2 calls out).
   * The JDBC upsert is the dialect-portable UPDATE-then-INSERT pair
@@ -42,6 +42,9 @@ object Sinks {
     (update, insert)
   }
 
+  /** Rows per batched UPDATE (and INSERT) round trip of the upsert. */
+  private val UpsertBatchRows = 1000
+
   /** S10: batch PK-upsert over any JDBC backend via [[updateInsertSql]]
     * (`feature_batch_update.py:116-139` PK-upserts features_20m),
     * exercised end-to-end against embedded Derby in PipelineSpec (real
@@ -56,7 +59,7 @@ object Sinks {
     * count came back 0 pay a second (batched) INSERT round trip.
     */
   def jdbcUpsertBatchPortable(df: DataFrame, url: String, table: String,
-      pk: Seq[String], batchSize: Int = 1000): Unit = {
+      pk: Seq[String]): Unit = {
     val columns = df.columns.toSeq
     val nonPk = columns.filterNot(pk.contains)
     val (updateSql, insertSql) = updateInsertSql(table, columns, pk)
@@ -76,7 +79,7 @@ object Sinks {
             var i = 0
             (nonPkIdx ++ pkIdx).foreach { c => up.setObject(i + 1, r.get(c)); i += 1 }
           }
-          rows.grouped(batchSize).foreach { chunk =>
+          rows.grouped(UpsertBatchRows).foreach { chunk =>
             // duplicate keys inside one chunk collapse last-wins (the same
             // outcome sequential upserts produce); without this, two absent
             // rows with the same key would both batch an INSERT
@@ -147,7 +150,8 @@ object Sinks {
   /** Key-value hash sink abstraction — the Redis `HSET` contract
     * (`redis_sink copy.sql:45-59`): row = (key string, field→value map).
     * Implementations: real Redis client in production, [[InMemoryKV]] in
-    * tests. Partition-parallel via ForeachWriter (S7), unlike the
+    * tests. Written partition-parallel by
+    * [[graft.streaming.StreamingFeatures.featurePipeline]] (S7), unlike the
     * reference's driver-side collect loop (S8).
     */
   trait KVStore extends Serializable {
@@ -166,16 +170,6 @@ object Sinks {
         case None => Some(hash)
       }
     def clear(): Unit = data.clear()
-  }
-
-  /** ForeachWriter over (redis_key: String, redis_hash: Map[String,String])
-    * rows — one connection per partition epoch, pipelined HSETs.
-    */
-  class KVForeachWriter(store: KVStore) extends ForeachWriter[Row] {
-    override def open(partitionId: Long, epochId: Long): Boolean = true
-    override def process(row: Row): Unit =
-      store.hset(row.getString(0), row.getMap[String, String](1).toMap)
-    override def close(errorOrNull: Throwable): Unit = ()
   }
 
   /** File-based PK upsert (T4/T7 upsert semantics without a database):

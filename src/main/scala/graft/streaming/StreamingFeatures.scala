@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 import graft.sources.Sinks
 
@@ -32,44 +32,129 @@ object StreamingFeatures {
       .unionByName(
         views.select(col(uuidCol).as("uuid"), col(timeCol).as("event_time"), lit("view").as("tag")))
 
+  /** The reference's feature window, 20 minutes (`redis_sink.py:83,100`). */
+  val FeatureWindowSeconds = 1200L
+  val FeatureWindow = s"${FeatureWindowSeconds / 60} minutes"
+
+  /** The Redis hash fields of a user's click and view counts
+    * (`redis_sink copy.sql:172-182`) — also the daily backfill's columns.
+    */
+  val ClickField = "click20m"
+  val ViewField = "view20m"
+
+  /** Per-user click and view counts over a `tag` column holding "click" or
+    * "view": one conditional count per stream (the union-pivot), left
+    * unnamed for the caller to name.
+    */
+  def clickViewCounts(tag: Column): (Column, Column) =
+    (count(when(tag === "click", 1)), count(when(tag === "view", 1)))
+
   /** Windowed per-user click/view counts over the tagged union — the
     * 20-min feature job (`redis_sink.py:75-129`, A1/A2/J1) or the 5-min
     * SQL twin (`redis_sink copy.sql:64-78`, A3) depending on `windowLen`.
     * Append mode: rows emit once, when the watermark passes window end —
-    * matching Flink's on-close window firing.
+    * matching Flink's on-close window firing. On a static frame it is the
+    * batch feature job ([[graft.operators.FeatureJobs.windowedFeatures]],
+    * which names its own `key`/`time`/`tag` columns): the watermark drops
+    * out of a batch plan.
     */
-  def windowedCounts(taggedUnion: DataFrame, windowLen: String): DataFrame =
-    taggedUnion
-      .withWatermark("event_time", WatermarkDelay)
-      .groupBy(window(col("event_time"), windowLen).as("w"), col("uuid"))
-      .agg(
-        count(when(col("tag") === "click", 1)).as("clicks"),
-        count(when(col("tag") === "view", 1)).as("views"))
-      .select(col("uuid"), col("w.end").as("window_end"), col("clicks"), col("views"))
+  def windowedCounts(taggedUnion: DataFrame, windowLen: String, key: String = "uuid",
+      time: String = "event_time", tag: String = "tag"): DataFrame = {
+    val (clicks, views) = clickViewCounts(col(tag))
+    windowedCountsBy(taggedUnion, key, windowLen,
+      Seq(clicks.as("clicks"), views.as("views")), time)
+  }
+
+  /** The window half of every feature key: the window end as
+    * `yyyyMMddHHmm` in the session zone (`redis_sink copy.sql:174`) — also
+    * the features table's `window_key`, timezone-proof across JDBC.
+    */
+  def windowKey(windowEnd: Column): Column = date_format(windowEnd, "yyyyMMddHHmm")
+
+  /** The Redis key grammar `feat:<family>:{<id>}:<window>`
+    * (`redis_sink copy.sql:174,186,193`): the geo families key on the id
+    * alone (`:200,211`), the global family on the window alone (`:222`).
+    */
+  def featureKey(family: String, id: Option[Column], windowEnd: Option[Column]): Column = {
+    val head = s"feat:$family"
+    (id, windowEnd.map(windowKey)) match {
+      case (Some(i), Some(w)) => concat(lit(s"$head:{"), i, lit("}:"), w)
+      case (Some(i), None) => concat(lit(s"$head:{"), i, lit("}"))
+      case (None, Some(w)) => concat(lit(s"$head:"), w)
+      case (None, None) => lit(head)
+    }
+  }
 
   /** Redis feature rows (S7): key `feat:user:{<uuid>}:<yyyyMMddHHmm>`
     * (`redis_sink copy.sql:174`), hash MAP (F7).
     */
-  def redisRows(features: DataFrame, clickField: String = "click20m",
-      viewField: String = "view20m"): DataFrame =
+  def redisRows(features: DataFrame): DataFrame =
     features.select(
-      concat(lit("feat:user:{"), col("uuid"), lit("}:"),
-        date_format(col("window_end"), "yyyyMMddHHmm")).as("redis_key"),
+      featureKey("user", Some(col("uuid")), Some(col("window_end"))).as("redis_key"),
       map(
-        lit(clickField), col("clicks").cast("string"),
-        lit(viewField), col("views").cast("string")).as("redis_hash"))
+        lit(ClickField), col("clicks").cast("string"),
+        lit(ViewField), col("views").cast("string")).as("redis_hash"))
+
+  /** The features table's row of a [[windowedCounts]] row:
+    * (uuid, window_key, clicks, views).
+    */
+  def featureRows(features: DataFrame): DataFrame =
+    features.select(col("uuid"), windowKey(col("window_end")).as("window_key"),
+      col("clicks"), col("views"))
+
+  /** Primary key of the features table. */
+  private val FeatureTableKey = Seq("uuid", "window_key")
+
+  /** Creates the features table [[featurePipeline]] upserts into, the
+    * Postgres `features_20m` (`feature_batch_update.py:116-139`).
+    */
+  def createFeatureTable(url: String, table: String): Unit = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute(
+      s"""CREATE TABLE $table (uuid VARCHAR(64) NOT NULL,
+         | window_key VARCHAR(12) NOT NULL, clicks BIGINT, views BIGINT,
+         | PRIMARY KEY (${FeatureTableKey.mkString(", ")}))""".stripMargin)
+    finally conn.close()
+  }
+
+  /** The reference's sink stage (`redis_sink.py:75-140`,
+    * `feature_batch_update.py:116-139`): the [[FeatureWindow]]
+    * [[windowedCounts]] of a tagged union, each micro-batch of closed
+    * windows written by one `foreachBatch` to both stores — PK-upserted as
+    * [[featureRows]] into `table` (the portable upsert, idempotent under
+    * redelivery) and HSET as [[redisRows]] into `store`, partition-parallel
+    * (S7; the reference's driver-side loop, S8, is not reproduced). The
+    * trigger and the checkpoint location are set on the returned writer;
+    * the reference triggers every 10 s.
+    */
+  def featurePipeline(events: DataFrame, url: String, table: String,
+      store: Sinks.KVStore): DataStreamWriter[Row] =
+    windowedCounts(events, FeatureWindow).writeStream
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        Sinks.jdbcUpsertBatchPortable(featureRows(batch), url, table, FeatureTableKey)
+        redisRows(batch).foreachPartition { (rows: Iterator[Row]) =>
+          rows.foreach(r => store.hset(r.getString(0), r.getMap[String, String](1).toMap))
+        }
+      }
 
   /** Watermarked per-key windowed counts — the one shape behind the
-    * per-doc and per-display A5 families: changing the window/watermark
-    * semantics here moves both Redis families in lockstep.
+    * per-user features, the per-doc and the per-display A5 families:
+    * changing the window/watermark semantics here moves every family in
+    * lockstep. `counts` are named aggregates; the output is (key,
+    * window_end, counts…).
     */
-  private def windowedCountsBy(events: DataFrame, keyCol: String,
-      windowLen: String): DataFrame =
-    events
-      .withWatermark("event_time", WatermarkDelay)
-      .groupBy(window(col("event_time"), windowLen).as("w"), col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col(keyCol), col("w.end").as("window_end"), col("cnt"))
+  private[graft] def windowedCountsBy(events: DataFrame, keyCol: String, windowLen: String,
+      counts: Seq[Column] = Seq(count(lit(1)).as("cnt")),
+      timeCol: String = "event_time"): DataFrame = {
+    val agg = events
+      .withWatermark(timeCol, WatermarkDelay)
+      .groupBy(window(col(timeCol), windowLen).as("w"), col(keyCol))
+      .agg(counts.head, counts.tail: _*)
+    // the aggregate's columns are its two grouping keys, then `counts`
+    agg.select(col(keyCol) +: col("w.end").as("window_end") +:
+      agg.columns.toSeq.drop(2).map(col): _*)
+  }
 
   /** Per-doc windowed counts (A5, declared/commented
     * `redis_sink copy.sql:81-95`).
@@ -135,8 +220,8 @@ object StreamingFeatures {
   private def countKeyRows(counts: DataFrame, idCol: String,
       family: String, field: String): DataFrame =
     counts.select(
-      concat(lit(s"feat:$family:{"), col(idCol).cast("string"), lit("}:"),
-        date_format(col("window_end"), "yyyyMMddHHmm")).as("redis_key"),
+      featureKey(family, Some(col(idCol).cast("string")), Some(col("window_end")))
+        .as("redis_key"),
       map(lit(field), col("cnt").cast("string")).as("redis_hash"))
 
   def docKeyRows(docCounts: DataFrame): DataFrame =
@@ -147,9 +232,9 @@ object StreamingFeatures {
 
   def geoKeyRows(geoTop: DataFrame, family: String): DataFrame =
     geoTop.select(
-      concat(lit(s"feat:$family:{"), col("top_geo"), lit("}")).as("redis_key"),
+      featureKey(family, Some(col("top_geo")), None).as("redis_key"),
       map(
-        lit("win_end"), date_format(col("window_end"), "yyyyMMddHHmm"),
+        lit("win_end"), windowKey(col("window_end")),
         lit("total"), col("total").cast("string")).as("redis_hash"))
 
   /** `feat:global:5m` (J5, `redis_sink copy.sql:220-230`): geo-top per
@@ -161,8 +246,7 @@ object StreamingFeatures {
   def globalFeature(geoTop: DataFrame, activeUsers: DataFrame): DataFrame =
     geoTop.join(activeUsers, Seq("window_end"), "inner")
       .select(
-        concat(lit("feat:global:5m:"),
-          date_format(col("window_end"), "yyyyMMddHHmm")).as("redis_key"),
+        featureKey("global:5m", None, Some(col("window_end"))).as("redis_key"),
         map(
           lit("top_geo"), col("top_geo"),
           lit("geo_total"), col("total").cast("string"),
@@ -1487,15 +1571,4 @@ object StreamingFeatures {
     */
   def rawSinkProjection(decoded: DataFrame): DataFrame =
     decoded.withColumn("act_load_time", current_timestamp())
-
-  /** Wire a feature stream to a KV (Redis-shaped) sink, partition-parallel
-    * (S7; the driver-collect S8 anti-pattern deliberately not reproduced).
-    */
-  def toKVSink(redisRows: DataFrame, store: Sinks.KVStore,
-      checkpointDir: String, triggerInterval: String = "10 seconds"): DataStreamWriter[Row] =
-    redisRows.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreach(new Sinks.KVForeachWriter(store))
 }

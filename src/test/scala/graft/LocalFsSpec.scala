@@ -3,7 +3,7 @@ package graft
 import java.net.URI
 import java.nio.file.{Files, Paths, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
-import java.sql.{DriverManager, Timestamp}
+import java.sql.Timestamp
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
@@ -15,9 +15,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileSystem,
   LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{GraftLocalFileSystem, GraftLocalFs, GraftRawLocalFileSystem, Sinks}
@@ -198,76 +197,54 @@ class LocalFsSpec extends AnyFunSuite {
     }.toSet
 
   test("a checkpointed feature pipeline spawns no Hadoop shell process and restarts exactly") {
-    val url = "jdbc:derby:memory:localfs;create=true"
-    val conn = DriverManager.getConnection(url)
-    try conn.createStatement().execute(
-      """CREATE TABLE features_20m (uuid VARCHAR(64) NOT NULL,
-        | window_key VARCHAR(12) NOT NULL, clicks BIGINT, views BIGINT,
-        | PRIMARY KEY (uuid, window_key))""".stripMargin)
-    finally conn.close()
     Sinks.InMemoryKV.clear()
     val ckpt = tempDir("localfs_ckpt").toString
     val stream = MemoryStream[Click](spark)
-    def start() = StreamingFeatures.windowedCounts(stream.toDF().toDF("uuid", "event_time", "tag"),
-      "20 minutes").writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Sinks.jdbcUpsertBatchPortable(batch.select(col("uuid"),
-          date_format(col("window_end"), "yyyyMMddHHmm").as("window_key"),
-          col("clicks"), col("views")), url, "features_20m", Seq("uuid", "window_key"))
-        StreamingFeatures.redisRows(batch).foreachPartition { (it: Iterator[Row]) =>
-          it.foreach(r => Sinks.InMemoryKV.hset(r.getString(0), r.getMap[String, String](1).toMap))
-        }
-      }.start()
-    // the far-future row closes every window of the three batches
-    val sentinel: Click = ("__sentinel__", new Timestamp(Start + 90L * 86400000), "click")
+    TestSpark.withFeatureTable("localfs") { url =>
+      def start() = StreamingFeatures.featurePipeline(
+        stream.toDF().toDF("uuid", "event_time", "tag"), url, TestSpark.FeatureTable,
+        Sinks.InMemoryKV).option("checkpointLocation", ckpt).start()
+      // the far-future row closes every window of the three batches
+      val sentinel: Click = ("__sentinel__", new Timestamp(Start + 90L * 86400000), "click")
 
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    val (events, marker) = try {
-      val q1 = start()
-      try Seq(0, 1).foreach { b => stream.addData(clicks(b)); q1.processAllAvailable() }
-      finally q1.stop() // the restart: batches 0 and 1 are committed in ckpt
-      stream.addData(clicks(2) :+ sentinel)
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      // a control: one stock chmod, which the recording must see
-      val marker = Files.createTempFile("spawn_marker", "")
-      val stock = new RawLocalFileSystem
-      stock.initialize(Root, new Configuration())
-      stock.setPermission(new Path(marker.toUri.toString), new FsPermission(0x1c0.toShort))
-      rec.stop()
-      val f = Files.createTempFile("spawns", ".jfr")
-      rec.dump(f)
-      (RecordingFile.readAllEvents(f).asScala.toSeq, marker.getFileName.toString)
-    } finally rec.close()
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val (events, marker) = try {
+        val q1 = start()
+        try Seq(0, 1).foreach { b => stream.addData(clicks(b)); q1.processAllAvailable() }
+        finally q1.stop() // the restart: batches 0 and 1 are committed in ckpt
+        stream.addData(clicks(2) :+ sentinel)
+        val q2 = start()
+        try q2.processAllAvailable() finally q2.stop()
+        // a control: one stock chmod, which the recording must see
+        val marker = Files.createTempFile("spawn_marker", "")
+        val stock = new RawLocalFileSystem
+        stock.initialize(Root, new Configuration())
+        stock.setPermission(new Path(marker.toUri.toString), new FsPermission(0x1c0.toShort))
+        rec.stop()
+        val f = Files.createTempFile("spawns", ".jfr")
+        rec.dump(f)
+        (RecordingFile.readAllEvents(f).asScala.toSeq, marker.getFileName.toString)
+      } finally rec.close()
 
-    def viaShell(e: jdk.jfr.consumer.RecordedEvent) = Option(e.getStackTrace).exists(
-      _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell"))
-    val (control, during) = events.filter(_.getEventType.getName == "jdk.ProcessStart")
-      .partition(_.getString("command").contains(marker))
-    assert(control.exists(viaShell), "the recording saw no spawn from the stock chmod")
-    val spawned = during.filter(viaShell).map(_.getString("command"))
-    val nSpawned = spawned.size
-    assert(nSpawned == 0, s"Hadoop shell spawns, e.g. ${spawned.take(3)}")
+      def viaShell(e: jdk.jfr.consumer.RecordedEvent) = Option(e.getStackTrace).exists(
+        _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell"))
+      val (control, during) = events.filter(_.getEventType.getName == "jdk.ProcessStart")
+        .partition(_.getString("command").contains(marker))
+      assert(control.exists(viaShell), "the recording saw no spawn from the stock chmod")
+      val spawned = during.filter(viaShell).map(_.getString("command"))
+      val nSpawned = spawned.size
+      assert(nSpawned == 0, s"Hadoop shell spawns, e.g. ${spawned.take(3)}")
 
-    val want = expected((0 to 2).flatMap(clicks))
-    val derby = {
-      val c = DriverManager.getConnection("jdbc:derby:memory:localfs")
-      try {
-        val rs = c.createStatement().executeQuery("SELECT uuid, window_key, clicks, views FROM features_20m")
-        Iterator.continually(rs).takeWhile(_.next())
-          .map(r => (r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSet
-      } finally c.close()
+      val want = expected((0 to 2).flatMap(clicks))
+      val derby = TestSpark.featureTableRows(url)
+      assert(derby == want, s"derby ${derby.size} rows vs ${want.size}: ${(derby diff want).take(3)}")
+      val kv = Sinks.InMemoryKV.data.toMap
+      assert(kv == want.map { case (u, w, c, v) =>
+        s"feat:user:{$u}:$w" -> Map("click20m" -> c.toString, "view20m" -> v.toString)
+      }.toMap, s"kv ${kv.size} keys vs ${want.size}")
+      Sinks.InMemoryKV.clear()
     }
-    assert(derby == want, s"derby ${derby.size} rows vs ${want.size}: ${(derby diff want).take(3)}")
-    val kv = Sinks.InMemoryKV.data.toMap
-    assert(kv == want.map { case (u, w, c, v) =>
-      s"feat:user:{$u}:$w" -> Map("click20m" -> c.toString, "view20m" -> v.toString)
-    }.toMap, s"kv ${kv.size} keys vs ${want.size}")
-    Sinks.InMemoryKV.clear()
-    try DriverManager.getConnection("jdbc:derby:memory:localfs;drop=true")
-    catch { case _: java.sql.SQLException => () } // a dropped in-memory DB reports 08006
   }
 }

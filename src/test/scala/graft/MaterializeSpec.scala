@@ -4,6 +4,12 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -94,5 +100,40 @@ class MaterializeSpec extends AnyFunSuite {
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .map(String.valueOf(_)).mkString("\n")
     assert(chain.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"), chain)
+  }
+
+  test("freeing checkpoints logs no per-RDD lineage warning") {
+    // Spark's RDD.unpersist warns once per locally checkpointed RDD; the
+    // appender sees every WARN of the RDD loggers while the three ways
+    // out of Materialize (release, a closing scope, eager and lazy) run
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("materialize-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val name = "org.apache.spark.rdd"
+    val rddLogs = new LoggerConfig(name, Level.WARN, true)
+    rddLogs.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, rddLogs)
+    ctx.updateLoggers()
+    val ids = try Materialize.scoped {
+      val eager = Materialize.now(spark.range(20).select((col("id") + 1).as("a")))
+      val released = rddIds(eager)
+      Materialize.release(eager)
+      val lazyDf = Materialize(spark.range(20).select((col("id") * 5).as("b")))
+      assert(lazyDf.count() == 20)
+      val scopedNow = Materialize.now(spark.range(20).select((col("id") - 1).as("c")))
+      released ++ rddIds(lazyDf) ++ rddIds(scopedNow)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(ids.size == 3 && ids.forall(!spark.sparkContext.getPersistentRDDs.contains(_)),
+      s"checkpoints left persisted: $ids")
+    val lineage = seen.asScala.filter(_.contains("locally checkpointed"))
+    assert(lineage.isEmpty, s"${lineage.size} lineage warnings, e.g. ${lineage.headOption}")
   }
 }

@@ -13,7 +13,7 @@ import graft.streaming.{Replay, StreamingFeatures}
   * replay (events + page_views interleaved in timestamp order, paced in
   * rate-controlled chunks like the producer's scaled sleeps) driven through
   * the complete streaming feature pipeline (decode shape → tag → watermark
-  * → 20-min windows → union-pivot → redis rows → KV sink), asserting the
+  * → 20-min windows → union-pivot → both sinks), asserting the
   * feature-store contents at window boundaries against an independently
   * computed expectation.
   */
@@ -31,30 +31,30 @@ class ReplayE2ESpec extends AnyFunSuite {
     val stream = MemoryStream[(String, Long, String)](spark)
     val decoded = stream.toDF.toDF("uuid", "timestamp", "stream")
       .withColumn("event_time", EventCodec.eventTime(col("timestamp")))
-    val features = StreamingFeatures.windowedCounts(
-      StreamingFeatures.tagged(
-        decoded.filter($"stream" === "events"),
-        decoded.filter($"stream" === "page_views")), "20 minutes")
-    val q = StreamingFeatures.redisRows(features)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("replay-e2e").toString)
-      .foreach(new Sinks.KVForeachWriter(Sinks.InMemoryKV))
-      .start()
+    TestSpark.withFeatureTable("replaye2e") { url =>
+      val q = StreamingFeatures.featurePipeline(
+        StreamingFeatures.tagged(
+          decoded.filter($"stream" === "events"),
+          decoded.filter($"stream" === "page_views")),
+        url, TestSpark.FeatureTable, Sinks.InMemoryKV)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("replay-e2e").toString)
+        .start()
 
-    // Rate control: the producer sleeps Δt·scale between sends
-    // (`kafka_stream_producer.py:213-229`); under test that pacing becomes
-    // chunked addData with a bounded pause — arrival order preserved.
-    chunks.foreach { chunk =>
-      stream.addData(chunk.toSeq.map(r =>
-        (r.getString(0), r.getLong(1), r.getString(2))))
-      Thread.sleep(20)
+      // Rate control: the producer sleeps Δt·scale between sends
+      // (`kafka_stream_producer.py:213-229`); under test that pacing becomes
+      // chunked addData with a bounded pause — arrival order preserved.
+      chunks.foreach { chunk =>
+        stream.addData(chunk.toSeq.map(r =>
+          (r.getString(0), r.getLong(1), r.getString(2))))
+        Thread.sleep(20)
+        q.processAllAvailable()
+      }
+      // Advance the watermark far past the data so every window closes.
+      stream.addData(("zz", 100L * 86400 * 1000, "events"))
       q.processAllAvailable()
+      q.stop()
     }
-    // Advance the watermark far past the data so every window closes.
-    stream.addData(("zz", 100L * 86400 * 1000, "events"))
-    q.processAllAvailable()
-    q.stop()
 
     // Independent expectation: batch recompute of per-user per-window counts.
     val expected = events.select($"uuid", $"event_time").withColumn("tag", lit("click"))

@@ -723,18 +723,19 @@ class StreamingSpec extends AnyFunSuite {
     Sinks.InMemoryKV.clear()
     val clicks = MemoryStream[(String, Timestamp)](spark)
     val views = MemoryStream[(String, Timestamp)](spark)
-    val rows = StreamingFeatures.redisRows(StreamingFeatures.windowedCounts(
-      StreamingFeatures.tagged(clicks.toDF.toDF("uuid", "event_time"),
-        views.toDF.toDF("uuid", "event_time")), "20 minutes"))
-    val q = StreamingFeatures.toKVSink(rows, Sinks.InMemoryKV,
-      java.nio.file.Files.createTempDirectory("kvck").toString,
-      triggerInterval = "100 milliseconds").start()
-    clicks.addData(("u1", ts("2016-06-14 00:01:00")))
-    views.addData(("u1", ts("2016-06-14 00:02:00")), ("u1", ts("2016-06-14 00:03:00")))
-    clicks.addData(("zz", ts("2016-06-14 05:00:00")))
-    views.addData(("zz", ts("2016-06-14 05:00:00")))
-    q.processAllAvailable()
-    q.stop()
+    TestSpark.withFeatureTable("kvsink") { url =>
+      val q = StreamingFeatures.featurePipeline(
+        StreamingFeatures.tagged(clicks.toDF.toDF("uuid", "event_time"),
+          views.toDF.toDF("uuid", "event_time")), url, TestSpark.FeatureTable, Sinks.InMemoryKV)
+        .option("checkpointLocation", java.nio.file.Files.createTempDirectory("kvck").toString)
+        .start()
+      clicks.addData(("u1", ts("2016-06-14 00:01:00")))
+      views.addData(("u1", ts("2016-06-14 00:02:00")), ("u1", ts("2016-06-14 00:03:00")))
+      clicks.addData(("zz", ts("2016-06-14 05:00:00")))
+      views.addData(("zz", ts("2016-06-14 05:00:00")))
+      q.processAllAvailable()
+      q.stop()
+    }
     val hash = Sinks.InMemoryKV.data.get("feat:user:{u1}:201606140020")
     assert(hash.contains(Map("click20m" -> "1", "view20m" -> "2")))
   }
@@ -785,35 +786,44 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming windowed counts equal the batch feature job on replayed data") {
-    val ev = Tables.events(spark, TestSpark.sf)
+    // the reference pipeline, stopped halfway and restarted from its
+    // checkpoint, against the registered batch queries: the features table
+    // holds q_features_20m in window_key form, the KV store holds
+    // q_redis_feature_keys as hashes
+    val rows = Tables.events(spark, TestSpark.sf)
       .filter(col("event_type").isin("click", "view"))
-      .select(col("user_id").cast("string").as("uuid"), col("ts").as("event_time"),
-        col("event_type"))
-    val clicksB = ev.filter($"event_type" === "click").drop("event_type")
-    val viewsB = ev.filter($"event_type" === "view").drop("event_type")
-
+      .select(col("user_id").cast("string"), col("ts"), col("event_type"))
+      .orderBy("ts").as[(String, Timestamp, String)].collect()
     val stream = MemoryStream[(String, Timestamp, String)](spark)
     val sdf = stream.toDF.toDF("uuid", "event_time", "event_type")
-    val features = StreamingFeatures.windowedCounts(StreamingFeatures.tagged(
-      sdf.filter($"event_type" === "click"), sdf.filter($"event_type" === "view")),
-      "20 minutes")
-    val q = features.writeStream.outputMode("append").format("memory")
-      .queryName("replay20m").start()
-    val rows = ev.orderBy("event_time").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getString(2)))
-    rows.grouped(200).foreach { chunk => stream.addData(chunk.toSeq); q.processAllAvailable() }
+    val tagged = StreamingFeatures.tagged(
+      sdf.filter($"event_type" === "click"), sdf.filter($"event_type" === "view"))
+    val ckpt = java.nio.file.Files.createTempDirectory("replay20m").toString
     // Push watermark far past the last event so every window closes.
-    stream.addData(("zz", ts("2030-01-01 00:00:00"), "click"))
-    q.processAllAvailable()
-    q.stop()
+    val sentinel = ("zz", ts("2030-01-01 00:00:00"), "click")
+    val chunks = rows.grouped(200).toSeq
+    val (first, rest) = chunks.splitAt(chunks.size / 2)
+    Sinks.InMemoryKV.clear()
+    val derby = TestSpark.withFeatureTable("replay20m") { url =>
+      Seq(first, rest :+ Array(sentinel)).foreach { part =>
+        val q = StreamingFeatures.featurePipeline(tagged, url, TestSpark.FeatureTable,
+          Sinks.InMemoryKV).option("checkpointLocation", ckpt).start()
+        try part.foreach { chunk => stream.addData(chunk.toSeq); q.processAllAvailable() }
+        finally q.stop()
+      }
+      TestSpark.featureTableRows(url)
+    }
 
-    val streamed = spark.table("replay20m").filter($"uuid" =!= "zz")
-      .select("uuid", "window_end", "clicks", "views").collect().toSet
-    val batch = graft.operators.FeatureJobs
-      .windowedFeatures(spark, TestSpark.sf, "20 minutes")
-      .select(col("user_id").cast("string"), col("window_end"),
-        col("clicks"), col("views")).collect().toSet
-    assert(streamed == batch)
+    val batch = SparkEntry.queries("q_features_20m")(spark, TestSpark.sf)
+      .select(col("user_id").cast("string"),
+        date_format(col("window_end"), "yyyyMMddHHmm"), col("clicks"), col("views"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    assert(batch.nonEmpty && derby == batch,
+      s"derby ${derby.size} rows vs ${batch.size}: ${(derby diff batch).take(3)}")
+    val keys = SparkEntry.queries("q_redis_feature_keys")(spark, TestSpark.sf).collect()
+      .map(r => r.getString(0) -> Map("click20m" -> r.getString(1), "view20m" -> r.getString(2)))
+      .toMap
+    assert(Sinks.InMemoryKV.data.toMap == keys)
   }
 
   test("streaming winnow gate drops frozen-passage sharers, passes novel and short docs") {
